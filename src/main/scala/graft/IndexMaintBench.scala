@@ -89,72 +89,54 @@ object IndexMaintBench {
       .select((col("doc_id") + 1000000000L).as("doc_id"), col("text"))
     val run = if (only.isEmpty) Ops else Ops.filter(only)
 
-    if (run.contains("simhash")) {
-      val root = s"$base/sh"
-      val (b, _) = timed {
-        IndexLifecycle.installSimhashPostings(spark, root, 1L,
-          DedupQueries.textSimhashSigs(spark, dir)); 0L
-      }
-      val bs = DedupQueries.textSimhashSigsFor(batchDocs)
-      report("simhash", b,
-        minOf(IndexLifecycle.simhashPairsFromStore(spark, root).count()),
-        minOf(IndexLifecycle.simhashBatchPairs(spark, root, bs).count()))
-    }
-    if (run.contains("minhash")) {
-      val root = s"$base/mh"
-      val (b, _) = timed {
-        IndexLifecycle.installMinhashPostings(spark, root, 1L,
-          DedupQueries.minhashSignatures(spark, dir)); 0L
-      }
-      val bs = DedupQueries.minhashSignaturesFor(batchDocs)
-      report("minhash", b,
-        minOf(IndexLifecycle.minhashPairsFromStore(spark, root).count()),
-        minOf(IndexLifecycle.minhashBatchPairs(spark, root, bs).count()))
-    }
-    if (run.contains("lsh")) {
-      val root = s"$base/lsh"
-      val n = Tables.parquetRowCount(spark, dir, "embeddings")
-      val bits = SimilarityQueries.codeBits(n)
-      val (b, _) = timed {
-        IndexLifecycle.installLshPostings(spark, root, 1L,
-          DedupQueries.normVecs(spark, dir), bits); 0L
-      }
-      val bv = DedupQueries.normVecs(spark, dir).orderBy("vec_id").limit(64)
-        .select((col("vec_id") + 1000000000L).as("vec_id"), col("v"),
-          col("nrm"))
-      report("lsh", b,
-        minOf(IndexLifecycle.lshPairsFromStore(spark, root, dir).count()),
-        minOf(IndexLifecycle.lshBatchPairs(spark, root, dir, bv).count()))
-      // the confirm-mass guard's reading at this decade — the number the
-      // SCALE x100 row reports instead of a surprise wall-clock
+    def guard(root: String): Unit = {
       val g = IndexLifecycle.lshConfirmGuard(spark, root)
       println(s"INDEXMAINT $label lsh_guard mass=${g.mass} " +
         s"buckets=${g.buckets} max_bucket_pairs=${g.maxBucketPairs} " +
         s"over_budget=${g.overBudget}")
+    }
+    val vecs = DedupQueries.normVecs(spark, dir)
+    val lshCfg = Seq(SimilarityQueries.codeBits(
+      Tables.parquetRowCount(spark, dir, "embeddings")).toLong,
+      DedupQueries.LshTables.toLong)
+    val media = Tables.documents(spark, dir)
+      .select(col("doc_id"), MultimodalQueries.mediaPayload.as("payload"))
+    val capCfg = Seq(DedupQueries.MaxBucket.toLong)
+    // per postings pillar: (op, descriptor, corpus input, cfg, the FIXED
+    // 64-row batch under fresh ids)
+    val postings = Seq(
+      ("simhash", IndexLifecycle.SimhashPostings,
+        DedupQueries.textSimhashSigs(spark, dir), capCfg,
+        DedupQueries.textSimhashSigsFor(batchDocs)),
+      ("minhash", IndexLifecycle.MinhashPostings,
+        DedupQueries.minhashSignatures(spark, dir), capCfg,
+        DedupQueries.minhashSignaturesFor(batchDocs)),
+      ("lsh", IndexLifecycle.LshPostings(dir), vecs, lshCfg,
+        vecs.orderBy("vec_id").limit(64)
+          .select((col("vec_id") + 1000000000L).as("vec_id"), col("v"),
+            col("nrm"))),
+      ("cdc", IndexLifecycle.CdcPostings, media, capCfg,
+        media.orderBy("doc_id").limit(64)
+          .select((col("doc_id") + 1000000000L).as("doc_id"), col("payload"))))
+    postings.filter(p => run.contains(p._1)).foreach {
+      case (op, p, input, cfg, batch) =>
+        val root = s"$base/$op"
+        val (b, _) = timed {
+          IndexLifecycle.installPostings(spark, root, 1L, p, input, cfg); 0L
+        }
+        report(op, b,
+          minOf(IndexLifecycle.pairsFromStore(spark, root, p).count()),
+          minOf(IndexLifecycle.batchPairs(spark, root, p, batch).count()))
+        // the confirm-mass guard's reading at this decade — the number the
+        // SCALE x100 row reports instead of a surprise wall-clock
+        if (op == "lsh") guard(root)
     }
     if (run.contains("lshguard") && !run.contains("lsh")) {
       // the guard reading alone (no serve timing): install + one audit agg
       val root = s"$base/lshg"
-      val n = Tables.parquetRowCount(spark, dir, "embeddings")
-      IndexLifecycle.installLshPostings(spark, root, 1L,
-        DedupQueries.normVecs(spark, dir), SimilarityQueries.codeBits(n))
-      val g = IndexLifecycle.lshConfirmGuard(spark, root)
-      println(s"INDEXMAINT $label lsh_guard mass=${g.mass} " +
-        s"buckets=${g.buckets} max_bucket_pairs=${g.maxBucketPairs} " +
-        s"over_budget=${g.overBudget}")
-    }
-    if (run.contains("cdc")) {
-      val root = s"$base/cdc"
-      val media = Tables.documents(spark, dir)
-        .select(col("doc_id"), MultimodalQueries.mediaPayload.as("payload"))
-      val (b, _) = timed {
-        IndexLifecycle.installCdcPostings(spark, root, 1L, media); 0L
-      }
-      val bm = media.orderBy("doc_id").limit(64)
-        .select((col("doc_id") + 1000000000L).as("doc_id"), col("payload"))
-      report("cdc", b,
-        minOf(IndexLifecycle.cdcPairsFromStore(spark, root).count()),
-        minOf(IndexLifecycle.cdcBatchPairs(spark, root, bm).count()))
+      IndexLifecycle.installPostings(spark, root, 1L,
+        IndexLifecycle.LshPostings(dir), vecs, lshCfg)
+      guard(root)
     }
     if (run.contains("pq")) {
       // append ≪ rebuild: v1 installs on the corpus minus its last 64
@@ -194,8 +176,9 @@ object IndexMaintBench {
       // compaction, then retention prune
       val root = s"$base/storeecon"
       val rootP = java.nio.file.Paths.get(root)
-      IndexLifecycle.installSimhashPostings(spark, root, 1L,
-        DedupQueries.textSimhashSigs(spark, dir))
+      IndexLifecycle.installPostings(spark, root, 1L,
+        IndexLifecycle.SimhashPostings,
+        DedupQueries.textSimhashSigs(spark, dir), Seq(DedupQueries.MaxBucket))
       val installBytes = bytesUnder(rootP)
       var appendSecs = 0.0
       var appendBytes = 0L
@@ -206,18 +189,22 @@ object IndexMaintBench {
               col("text")))
         val pre = bytesUnder(rootP)
         val (t, _) = timed {
-          IndexLifecycle.appendSimhashPostings(spark, root, b); 0L }
+          IndexLifecycle.appendPostings(spark, root,
+            IndexLifecycle.SimhashPostings, b); 0L }
         appendSecs += t
         appendBytes += bytesUnder(rootP) - pre
       }
       val servePre =
-        IndexLifecycle.simhashPairsFromStore(spark, root).count()
+        IndexLifecycle.pairsFromStore(spark, root,
+          IndexLifecycle.SimhashPostings).count()
       val filesBefore = parquetFilesUnder(rootP)
       val diskBefore = bytesUnder(rootP)
-      IndexLifecycle.compactSimhashPostings(spark, root)
+      IndexLifecycle.compactPostings(spark, root,
+        IndexLifecycle.SimhashPostings)
       IndexLifecycle.pruneVersions(root, keep = 1)
       val servePost =
-        IndexLifecycle.simhashPairsFromStore(spark, root).count()
+        IndexLifecycle.pairsFromStore(spark, root,
+          IndexLifecycle.SimhashPostings).count()
       println(f"INDEXMAINT $label store install_bytes=$installBytes " +
         f"append8_secs=$appendSecs%.3f append8_commit_bytes=$appendBytes " +
         f"files_after_appends=$filesBefore " +
@@ -239,9 +226,12 @@ object IndexMaintBench {
       val pqDir = s"$base/npqcorpus"
       val sigs = DedupQueries.textSimhashSigs(spark, dir)
       val batch = DedupQueries.textSimhashSigsFor(batchDocs)
-      IndexLifecycle.installSimhashPostings(spark, shRoot, 1L, sigs)
-      IndexLifecycle.installMinhashPostings(spark, mhRoot, 1L,
-        DedupQueries.minhashSignatures(spark, dir))
+      IndexLifecycle.installPostings(spark, shRoot, 1L,
+        IndexLifecycle.SimhashPostings, sigs, Seq(DedupQueries.MaxBucket))
+      IndexLifecycle.installPostings(spark, mhRoot, 1L,
+        IndexLifecycle.MinhashPostings,
+        DedupQueries.minhashSignatures(spark, dir),
+        Seq(DedupQueries.MaxBucket))
       val vecs = Tables.embeddings(spark, dir)
       val maxId = vecs.agg(max(col("vec_id"))).head.getLong(0)
       vecs.filter(col("vec_id") <= maxId - 64)
@@ -251,8 +241,10 @@ object IndexMaintBench {
         SimilarityQueries.pqCodebookFixed(spark, pqDir), pqDir)
       vecs.write.mode("overwrite").parquet(s"$pqDir/embeddings.parquet")
       val pillars = Seq(
-        IndexLifecycle.SimhashPillar("sh", shRoot, Some(batch)),
-        IndexLifecycle.MinhashPillar("mh", mhRoot, dir),
+        IndexLifecycle.PostingsPillar("sh", shRoot,
+          IndexLifecycle.SimhashPostings, (), Some(batch)),
+        IndexLifecycle.PostingsPillar("mh", mhRoot,
+          IndexLifecycle.MinhashPostings, dir),
         IndexLifecycle.PqPillar("pq", pqRoot, pqDir,
           k = SimilarityQueries.fixedCents(spark, pqDir).count().toInt))
       def pass(): (Double, Seq[String]) = {

@@ -132,8 +132,10 @@ object StreamBench {
       // bootstrap-frame read + initial-state load + one 64-doc batch
       val root = s"$base/mhpillar"
       val bt0 = System.nanoTime()
-      IndexLifecycle.installMinhashPostings(spark, root, 1L,
-        DedupQueries.minhashSignatures(spark, dir))
+      IndexLifecycle.installPostings(spark, root, 1L,
+        IndexLifecycle.MinhashPostings,
+        DedupQueries.minhashSignatures(spark, dir),
+        Seq(DedupQueries.MaxBucket))
       val installSec = (System.nanoTime() - bt0) / 1e9
       val batch = DedupQueries.minhashSigKeysFor(
           Tables.documents(spark, dir).orderBy("doc_id").limit(64)
@@ -227,8 +229,8 @@ object StreamBench {
           IngestPipeline.processBatch(spark, df, i.toLong, evalW50,
             Long.MaxValue, b, snapEvery = snap)
           if (compact && (i + 1) % 8 == 0)
-            graft.operators.IndexLifecycle
-              .compactSimhashPostings(spark, s"$b/pillar")
+            graft.operators.IndexLifecycle.compactPostings(spark,
+              s"$b/pillar", graft.operators.IndexLifecycle.SimhashPostings)
           (System.nanoTime() - t0) / 1e9
         }
       drive(s"$base/ingest50_warm", 8, compact = false, 10) // JIT warmup

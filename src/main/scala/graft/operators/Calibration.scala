@@ -20,31 +20,17 @@ object Calibration {
   /** (param, value, recall_ppm, floor_ppm) — one row per calibrated
     * operating parameter, ordered by param name. */
   def manifest(s: SparkSession, dir: String): DataFrame = {
-    def chosenOf(dial: DataFrame, param: String, valueCol: String,
-                 floor: Long): DataFrame =
-      dial.filter(col("chosen")).select(lit(param).as("param"),
-        col(valueCol).as("value"), col("recall_ppm"),
-        lit(floor).as("floor_ppm"))
-    val n = Tables.parquetRowCount(s, dir, "embeddings")
-    val bits = SimilarityQueries.codeBits(n)
     val media = Tables.documents(s, dir)
       .select(col("doc_id"), MultimodalQueries.mediaPayload.as("payload"))
-    chosenOf(SimilarityQueries.probeDepthDial(s, dir),
-        "ivf_probes", "probes", SimilarityQueries.ProbeRecallFloorPpm)
-      .unionAll(chosenOf(
-        DedupQueries.bucketCapDial(DedupQueries.textSimhashSigs(s, dir)),
-        "simhash_cap_text", "cap", DedupQueries.CapRecallFloorPpm))
-      .unionAll(chosenOf(
-        DedupQueries.bucketCapDial(MultimodalQueries.byteSimhashSigs(media)),
-        "simhash_cap_media", "cap", DedupQueries.CapRecallFloorPpm))
-      .unionAll(chosenOf(
-        DedupQueries.lshTableDial(DedupQueries.normVecs(s, dir), bits, n),
-        "lsh_tables", "tables", DedupQueries.LshTableFloorPpm))
-      .unionAll(chosenOf(DedupQueries.minhashCapDial(s, dir),
-        "minhash_cap", "cap", DedupQueries.CapRecallFloorPpm))
-      .unionAll(chosenOf(MultimodalQueries.cdcCapDial(media),
-        "cdc_cap", "cap", DedupQueries.CapRecallFloorPpm))
-      .orderBy("param")
+    import IndexLifecycle.{CdcCapDial, MinhashCapDial, ProbesDial,
+      SimhashCapDial, TablesDial}
+    rows(Seq(
+      ProbesDial.frame(s, dir),
+      SimhashCapDial.frame(s, DedupQueries.textSimhashSigs(s, dir)),
+      SimhashCapDial.frame(s, MultimodalQueries.byteSimhashSigs(media)),
+      TablesDial.frame(s, dir),
+      MinhashCapDial.frame(s, dir),
+      CdcCapDial.frame(s, media)).map(_.filter(col("chosen"))))
   }
 
   /** [[manifest]] read from the INSTALLED state instead of recomputed —
@@ -59,37 +45,11 @@ object Calibration {
   def manifestFromStore(s: SparkSession, probesRoot: String,
                         capTextRoot: String, capMediaRoot: String,
                         tablesRoot: String, capMinhashRoot: String,
-                        capCdcRoot: String): DataFrame = {
-    def row(param: String, value: Long, baseline: DataFrame, valueCol: String,
-            floor: Long): DataFrame =
-      baseline.filter(col("chosen") && col(valueCol) === value)
-        .select(lit(param).as("param"), col(valueCol).as("value"),
-          col("recall_ppm"), lit(floor).as("floor_ppm"))
-    row("ivf_probes", IndexLifecycle.readProbes(s, probesRoot).toLong,
-        IndexLifecycle.readProbesBaseline(s, probesRoot), "probes",
-        SimilarityQueries.ProbeRecallFloorPpm)
-      .unionAll(row("simhash_cap_text",
-        IndexLifecycle.readCap(s, capTextRoot).toLong,
-        IndexLifecycle.readCapBaseline(s, capTextRoot), "cap",
-        DedupQueries.CapRecallFloorPpm))
-      .unionAll(row("simhash_cap_media",
-        IndexLifecycle.readCap(s, capMediaRoot).toLong,
-        IndexLifecycle.readCapBaseline(s, capMediaRoot), "cap",
-        DedupQueries.CapRecallFloorPpm))
-      .unionAll(row("lsh_tables",
-        IndexLifecycle.readLshTables(s, tablesRoot).toLong,
-        IndexLifecycle.readLshTablesBaseline(s, tablesRoot), "tables",
-        DedupQueries.LshTableFloorPpm))
-      .unionAll(row("minhash_cap",
-        IndexLifecycle.readCap(s, capMinhashRoot).toLong,
-        IndexLifecycle.readCapBaseline(s, capMinhashRoot), "cap",
-        DedupQueries.CapRecallFloorPpm))
-      .unionAll(row("cdc_cap",
-        IndexLifecycle.readCap(s, capCdcRoot).toLong,
-        IndexLifecycle.readCapBaseline(s, capCdcRoot), "cap",
-        DedupQueries.CapRecallFloorPpm))
-      .orderBy("param")
-  }
+                        capCdcRoot: String): DataFrame =
+    manifestAt(s, Seq(probesRoot, capTextRoot, capMediaRoot, tablesRoot,
+        capMinhashRoot, capCdcRoot)
+      .map(r => r -> IndexLifecycle.latestVersion(r).getOrElse(
+        throw new IllegalStateException(s"no committed dial under $r"))))
 
   /** [[manifestFromStore]] with every pillar resolved through ONE
     * release ([[IndexLifecycle.readRelease]]) — the coherent form: a
@@ -99,30 +59,36 @@ object Calibration {
     * the manifest's param names. */
   def manifestFromRelease(s: SparkSession, relRoot: String): DataFrame = {
     val pins = IndexLifecycle.readRelease(relRoot)
-    def row(param: String, value: Long, baseline: DataFrame, valueCol: String,
-            floor: Long): DataFrame =
-      baseline.filter(col("chosen") && col(valueCol) === value)
-        .select(lit(param).as("param"), col(valueCol).as("value"),
-          col("recall_ppm"), lit(floor).as("floor_ppm"))
-    def capRow(param: String): DataFrame = {
-      val (root, v) = pins(param)
-      row(param, IndexLifecycle.readCapAt(s, root, v).toLong,
-        IndexLifecycle.readCapBaselineAt(s, root, v), "cap",
-        DedupQueries.CapRecallFloorPpm)
-    }
-    val (pRoot, pV) = pins("ivf_probes")
-    val (tRoot, tV) = pins("lsh_tables")
-    row("ivf_probes", IndexLifecycle.readProbesAt(s, pRoot, pV).toLong,
-        IndexLifecycle.readProbesBaselineAt(s, pRoot, pV), "probes",
-        SimilarityQueries.ProbeRecallFloorPpm)
-      .unionAll(capRow("simhash_cap_text"))
-      .unionAll(capRow("simhash_cap_media"))
-      .unionAll(row("lsh_tables",
-        IndexLifecycle.readLshTablesAt(s, tRoot, tV).toLong,
-        IndexLifecycle.readLshTablesBaselineAt(s, tRoot, tV), "tables",
-        DedupQueries.LshTableFloorPpm))
-      .unionAll(capRow("minhash_cap"))
-      .unionAll(capRow("cdc_cap"))
-      .orderBy("param")
+    manifestAt(s, Installed.map { case (param, _, _) => pins(param) })
   }
+
+  /** The manifest's (param, dial pillar, recall floor) rows. */
+  private val Installed: Seq[(String, IndexLifecycle.Dial[_], Long)] = Seq(
+    ("ivf_probes", IndexLifecycle.ProbesDial,
+      SimilarityQueries.ProbeRecallFloorPpm),
+    ("simhash_cap_text", IndexLifecycle.SimhashCapDial,
+      DedupQueries.CapRecallFloorPpm),
+    ("simhash_cap_media", IndexLifecycle.SimhashCapDial,
+      DedupQueries.CapRecallFloorPpm),
+    ("lsh_tables", IndexLifecycle.TablesDial, DedupQueries.LshTableFloorPpm),
+    ("minhash_cap", IndexLifecycle.MinhashCapDial,
+      DedupQueries.CapRecallFloorPpm),
+    ("cdc_cap", IndexLifecycle.CdcCapDial, DedupQueries.CapRecallFloorPpm))
+
+  /** Each row's installed value at its (store root, version), with the
+    * `chosen` row of the dial evidence installed alongside it. */
+  private def manifestAt(s: SparkSession,
+                         at: Seq[(String, Long)]): DataFrame =
+    rows(Installed.zip(at).map { case ((_, d, _), (root, v)) =>
+      IndexLifecycle.readDialBaselineAt(s, root, d, v).filter(col("chosen") &&
+        col(d.valueCol) === IndexLifecycle.readDialAt(s, root, d, v).toLong)
+    })
+
+  /** One manifest row per [[Installed]] entry from its chosen dial row. */
+  private def rows(chosen: Seq[DataFrame]): DataFrame =
+    Installed.zip(chosen).map { case ((param, d, floor), dial) =>
+      dial.select(lit(param).as("param"), col(d.valueCol).as("value"),
+        col("recall_ppm"), lit(floor).as("floor_ppm"))
+    }.reduce(_ unionAll _)
+      .orderBy("param")
 }

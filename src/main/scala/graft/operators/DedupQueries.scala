@@ -2118,7 +2118,7 @@ object DedupQueries {
         "O(0.2·n²), so table recalibration stays a nightly pass at any " +
         "corpus size. Same one-pass min_tbl grading, same floor, same " +
         "minimal-count choice rule; the store pillar " +
-        "(installLshTables/recalibrateLshTablesIfSagging) accepts either " +
+        "(installDial/recalibrateDial on TablesDial) accepts either " +
         "dial's reading — the absolute form is what a 100 TB deployment " +
         "feeds it."
     ) { (s, dir) =>
@@ -2166,17 +2166,18 @@ object DedupQueries {
       val root = RelationalQueries.staged(s, "shlife",
         Tables.fingerprint(s, s"$dir/documents.parquet")) { out =>
         val sigs = textSimhashSigs(s, dir)
-        IndexLifecycle.installSimhashPostings(s, out, 1L,
-          sigs.filter(col("doc_id") % 7 >= 3))
+        IndexLifecycle.installPostings(s, out, 1L,
+          IndexLifecycle.SimhashPostings,
+          sigs.filter(col("doc_id") % 7 >= 3), Seq(MaxBucket))
         (0 until 3).foreach { m =>
-          IndexLifecycle.appendSimhashPostings(s, out,
+          IndexLifecycle.appendPostings(s, out, IndexLifecycle.SimhashPostings,
             sigs.filter(col("doc_id") % 7 === m))
         }
-        IndexLifecycle.compactSimhashPostings(s, out)
+        IndexLifecycle.compactPostings(s, out, IndexLifecycle.SimhashPostings)
         IndexLifecycle.pruneVersions(out, keep = 1)
         ()
       }
-      IndexLifecycle.simhashPairsFromStore(s, root)
+      IndexLifecycle.pairsFromStore(s, root, IndexLifecycle.SimhashPostings)
     }
 
   /** q293 — q67's pair set served under the confirm-mass guard. */
@@ -2195,7 +2196,7 @@ object DedupQueries {
         "(mass, buckets, max_bucket) reading against the budget, and " +
         "persists it beside the pillar; a past-budget reading routes " +
         "to the TABLE DIAL (lshGuardedMaintenance -> " +
-        "recalibrateLshPostingsTables), the knob that shrinks mass. " +
+        "recalibratePostings), the knob that shrinks mass. " +
         "The guard REPORTS, never drops: the served pair set is " +
         "bit-identical to q285/q67 — which is exactly what this " +
         "query's shared oracle proves hash-green (a guard that " +
@@ -2209,9 +2210,10 @@ object DedupQueries {
     ) { (s, dir) =>
       val root = RelationalQueries.staged(s, "lshguard",
         Tables.fingerprint(s, s"$dir/embeddings.parquet")) { out =>
-        IndexLifecycle.installLshPostings(s, out, 1L, normVecs(s, dir),
-          SimilarityQueries.codeBits(
-            Tables.parquetRowCount(s, dir, "embeddings")))
+        IndexLifecycle.installPostings(s, out, 1L,
+          IndexLifecycle.LshPostings(dir), normVecs(s, dir),
+          Seq(SimilarityQueries.codeBits(
+            Tables.parquetRowCount(s, dir, "embeddings")), LshTables))
         val g = IndexLifecycle.lshConfirmGuard(s, out)
         s.range(1).select(lit(g.mass).as("mass"),
             lit(g.buckets).as("buckets"),
@@ -2220,7 +2222,7 @@ object DedupQueries {
           .write.mode("overwrite").parquet(s"$out/guard")
         ()
       }
-      IndexLifecycle.lshPairsFromStore(s, root, dir)
+      IndexLifecycle.pairsFromStore(s, root, IndexLifecycle.LshPostings(dir))
     }
 
   /** q289 — incremental batch admission against the stored SimHash
@@ -2252,15 +2254,16 @@ object DedupQueries {
       val sigs = textSimhashSigs(s, dir)
       val root = RelationalQueries.staged(s, "shadmit",
         Tables.fingerprint(s, s"$dir/documents.parquet")) { out =>
-        IndexLifecycle.installSimhashPostings(s, out, 1L,
-          sigs.filter(col("doc_id") % 7 =!= 0))
+        IndexLifecycle.installPostings(s, out, 1L,
+          IndexLifecycle.SimhashPostings,
+          sigs.filter(col("doc_id") % 7 =!= 0), Seq(MaxBucket))
         ()
       }
       // the batch's signature walk staged once: inside the probe it feeds
       // the band keys AND both confirm-join sides (three evaluations in
       // the single-plan form; the streaming twin gets the same effect from
       // its per-epoch signature frame)
-      IndexLifecycle.simhashBatchPairs(s, root,
+      IndexLifecycle.batchPairs(s, root, IndexLifecycle.SimhashPostings,
         Staging.stage(sigs.filter(col("doc_id") % 7 === 0)))
     }
 
@@ -2286,13 +2289,14 @@ object DedupQueries {
       val sigs = minhashSignatures(s, dir)
       val root = RelationalQueries.staged(s, "mhadmit",
         Tables.fingerprint(s, s"$dir/documents.parquet")) { out =>
-        IndexLifecycle.installMinhashPostings(s, out, 1L,
-          sigs.filter(col("doc_id") % 7 =!= 0))
+        IndexLifecycle.installPostings(s, out, 1L,
+          IndexLifecycle.MinhashPostings,
+          sigs.filter(col("doc_id") % 7 =!= 0), Seq(MaxBucket))
         ()
       }
       // staged for the same reason as q289: one 64-way signature walk of
       // the batch, not three
-      IndexLifecycle.minhashBatchPairs(s, root,
+      IndexLifecycle.batchPairs(s, root, IndexLifecycle.MinhashPostings,
         Staging.stage(sigs.filter(col("doc_id") % 7 === 0)))
     }
 
@@ -2320,11 +2324,12 @@ object DedupQueries {
         Tables.parquetRowCount(s, dir, "embeddings"))
       val root = RelationalQueries.staged(s, "lshadmit",
         Tables.fingerprint(s, s"$dir/embeddings.parquet")) { out =>
-        IndexLifecycle.installLshPostings(s, out, 1L,
-          vecs.filter(col("vec_id") % 7 =!= 0), bits)
+        IndexLifecycle.installPostings(s, out, 1L,
+          IndexLifecycle.LshPostings(dir),
+          vecs.filter(col("vec_id") % 7 =!= 0), Seq(bits, LshTables))
         ()
       }
-      IndexLifecycle.lshBatchPairs(s, root, dir,
+      IndexLifecycle.batchPairs(s, root, IndexLifecycle.LshPostings(dir),
         vecs.filter(col("vec_id") % 7 === 0))
     }
 
@@ -2392,7 +2397,7 @@ object DedupQueries {
       Some(s"$replayShinglePrologueSql, $simhashBandTailSql"),
       "q40 served FROM the installed SimHash postings pillar — the " +
         "near-dup analogue of q281's build/serve split: " +
-        "IndexLifecycle.installSimhashPostings persists the signature " +
+        "IndexLifecycle.installPostings(SimhashPostings) persists the signature " +
         "frame (8 bytes/doc) and its 7-block pigeonhole posting lists " +
         "PARTITIONED BY band as a versioned ATOMIC_MOVE artifact, and " +
         "the serve path reconstructs exactly q40's pair set from those " +
@@ -2403,7 +2408,7 @@ object DedupQueries {
         "install, so steady-state reads are index-sized: posting rows " +
         "are 20-byte (doc_id, key, band) triples, Σ bucket² is capped " +
         "before any expansion, and a new batch admits against these " +
-        "lists batch-side (simhashBatchPairs — no corpus re-scan; " +
+        "lists batch-side (batchPairs — no corpus re-scan; " +
         "IndexLifecycleSpec pins batch == full-rebuild-on-union). The " +
         "install memoizes per corpus fingerprint (q78's staging " +
         "discipline), so the bench measures the serve path, exactly " +
@@ -2413,11 +2418,12 @@ object DedupQueries {
     ) { (s, dir) =>
       val root = RelationalQueries.staged(s, "simhashpost",
         Tables.fingerprint(s, s"$dir/documents.parquet")) { out =>
-        IndexLifecycle.installSimhashPostings(s, out, 1L,
-          textSimhashSigs(s, dir))
+        IndexLifecycle.installPostings(s, out, 1L,
+          IndexLifecycle.SimhashPostings, textSimhashSigs(s, dir),
+          Seq(MaxBucket))
         ()
       }
-      IndexLifecycle.simhashPairsFromStore(s, root)
+      IndexLifecycle.pairsFromStore(s, root, IndexLifecycle.SimhashPostings)
     }
 
   /** q284 — q39's pair set served FROM the stored postings pillar. */
@@ -2437,7 +2443,7 @@ object DedupQueries {
         "GPL-scale dedup pipelines actually operate (persisted MinHash " +
         "index, nightly batch admission): a new batch signs ITSELF, " +
         "probes the stored lists, and appends as v=N+1 with signatures " +
-        "recomputed for nobody (appendMinhashPostings — the q234 " +
+        "recomputed for nobody (appendPostings — the q234 " +
         "incremental discipline; IndexLifecycleSpec pins batch-admit == " +
         "full-rebuild-on-union and append == rebuild). Install is " +
         "memoized per corpus fingerprint so steady state measures the " +
@@ -2446,11 +2452,12 @@ object DedupQueries {
     ) { (s, dir) =>
       val root = RelationalQueries.staged(s, "minhashpost",
         Tables.fingerprint(s, s"$dir/documents.parquet")) { out =>
-        IndexLifecycle.installMinhashPostings(s, out, 1L,
-          minhashSignatures(s, dir))
+        IndexLifecycle.installPostings(s, out, 1L,
+          IndexLifecycle.MinhashPostings, minhashSignatures(s, dir),
+          Seq(MaxBucket))
         ()
       }
-      IndexLifecycle.minhashPairsFromStore(s, root)
+      IndexLifecycle.pairsFromStore(s, root, IndexLifecycle.MinhashPostings)
     }
 
   /** q285 — q67's pair set served FROM the stored postings pillar. */
@@ -2470,20 +2477,21 @@ object DedupQueries {
         "ONLY the re-check join (q281's re-rank discipline); the 4×8 " +
         "hyperplane signature computation (the build) never re-runs. A " +
         "new embedding batch codes ITSELF with the INSTALLED planes and " +
-        "admits against the stored lists (lshBatchPairs/" +
-        "appendLshPostings — IndexLifecycleSpec pins batch == " +
+        "admits against the stored lists (batchPairs/" +
+        "appendPostings — IndexLifecycleSpec pins batch == " +
         "full-rebuild-on-union). Install memoized per corpus " +
         "fingerprint; same oracle text as q67 — one index either way, " +
         "pinned by stored==live twins."
     ) { (s, dir) =>
       val root = RelationalQueries.staged(s, "lshpost",
         Tables.fingerprint(s, s"$dir/embeddings.parquet")) { out =>
-        IndexLifecycle.installLshPostings(s, out, 1L, normVecs(s, dir),
-          SimilarityQueries.codeBits(
-            Tables.parquetRowCount(s, dir, "embeddings")))
+        IndexLifecycle.installPostings(s, out, 1L,
+          IndexLifecycle.LshPostings(dir), normVecs(s, dir),
+          Seq(SimilarityQueries.codeBits(
+            Tables.parquetRowCount(s, dir, "embeddings")), LshTables))
         ()
       }
-      IndexLifecycle.lshPairsFromStore(s, root, dir)
+      IndexLifecycle.pairsFromStore(s, root, IndexLifecycle.LshPostings(dir))
     }
 
   /** (doc_id, i, g) — every stride-1 rolling 4-token window of every

@@ -833,338 +833,148 @@ object IndexLifecycle {
       .map((_, "rebuild"))
       .orElse(appendPqIndex(s, root, dir).map((_, "append")))
 
-  // ---------- near-dup cap pillar ----------
-
-  /** The latest committed bucket cap — the near-dup index's operating
-    * parameter, versioned with the same discipline as the vector pillars
-    * (a cap is an index artifact the moment it gates which pairs exist:
-    * two readers on different caps disagree about the corpus). */
-  def readCap(s: SparkSession, root: String): Int = {
-    val v = latestVersion(root).getOrElse(
-      throw new IllegalStateException(s"no committed cap under $root"))
-    s.read.parquet(s"$root/v=$v/capcfg").head.getLong(0).toInt
-  }
-
-  /** The latest committed install-time dial frame (cap, exact_cnt, hits,
-    * recall_ppm, meets_floor, chosen) — the recall evidence the installed
-    * cap was chosen on. */
-  def readCapBaseline(s: SparkSession, root: String): DataFrame = {
-    val v = latestVersion(root).getOrElse(
-      throw new IllegalStateException(s"no committed cap under $root"))
-    s.read.parquet(s"$root/v=$v/capdial")
-  }
-
-  /** Install `cap` as `version`, recording the q265 dial of `sigs` under
-    * the full sweep as the install-time baseline. Same atomicity /
-    * idempotence contract as [[install]]. */
-  def installCap(s: SparkSession, root: String, version: Long, cap: Int,
-                 sigs: DataFrame,
-                 interpose: String => Unit = _ => ()): Boolean =
-    installVersion(root, version, interpose) { staging =>
-      s.range(1).select(lit(cap.toLong).as("cap"))
-        .write.mode("overwrite").parquet(staging.resolve("capcfg").toString)
-      DedupQueries.bucketCapDial(sigs)
-        .write.mode("overwrite").parquet(staging.resolve("capdial").toString)
-    }
-
-  /** The installed cap's health on the CURRENT corpus: the q265 dial
-    * recomputed over `sigs`, each row marked `installed` (is this the
-    * shipped cap) and `recalibrate` (the shipped cap no longer meets the
-    * floor — the corpus drifted into bucket saturation the way media
-    * envelopes or boilerplate prose do). Green right after a
-    * recalibration by construction. */
-  def capDriftAudit(s: SparkSession, root: String, sigs: DataFrame): DataFrame = {
-    val cap = readCap(s, root).toLong
-    DedupQueries.bucketCapDial(sigs)
-      .withColumn("installed", col("cap") === cap)
-      .withColumn("recalibrate", col("cap") === cap && !col("meets_floor"))
-  }
-
-  /** The closed loop for the cap pillar: audit the installed cap against
-    * `sigs`; if it no longer meets the recall floor, install the dial's
-    * newly chosen cap as the next version atomically. Returns the new
-    * version when a recalibration happened. */
-  def recalibrateCapIfSagging(s: SparkSession, root: String,
-                              sigs: DataFrame): Option[Long] = {
-    val audit = capDriftAudit(s, root, sigs).collect()
-    if (!audit.exists(_.getBoolean(audit.head.fieldIndex("recalibrate")))) None
-    else {
-      val chosen = audit.filter(_.getBoolean(audit.head.fieldIndex("chosen")))
-        .head.getLong(0).toInt
-      val next = latestVersion(root).getOrElse(0L) + 1
-      installCap(s, root, next, chosen, sigs)
-      Some(next)
-    }
-  }
-
-  /** q40's near-dup pairs through the installed cap — the store is the
-    * only path by which a recalibration changes what readers see. */
-  def nearDupThroughStore(s: SparkSession, root: String,
-                          sigs: DataFrame): DataFrame =
-    DedupQueries.simhashNearDupPairsUnsorted(sigs, readCap(s, root))
-      .orderBy("doc_a", "doc_b")
-
-  // ---------- MinHash cap pillar ----------
+  // ---------- dial pillars ----------
   //
-  // The q273 dial chooses the MinHash index's bucket cap; the pillar gives
-  // that choice the same install/audit/rollback discipline as the SimHash
-  // cap — `capcfg`/`capdial` layout is shared with [[installCap]] (and so
-  // are [[readCap]]/[[readCapBaseline]]); only the dial that produces the
-  // evidence differs.
+  // A dial pillar versions ONE serving scalar — the SimHash, MinHash and
+  // CDC bucket caps, the IVF probe depth, the LSH table count — with the
+  // vector pillars' discipline: the scalar is an index artifact the
+  // moment it gates which pairs or neighbors a reader sees, so it is
+  // installed with the dial frame that chose it (the recall evidence),
+  // audited against the current corpus, recalibrated when it sags, and
+  // read through the store. The five pillars differ only in their
+  // [[Dial]] descriptor.
 
-  /** Install `cap` as `version`, recording the q273 dial over the corpus
-    * at `dir` as the install-time baseline. Same atomicity / idempotence
-    * contract as [[install]]. */
-  def installMinhashCap(s: SparkSession, root: String, version: Long,
-                        cap: Int, dir: String,
-                        interpose: String => Unit = _ => ()): Boolean =
-    installVersion(root, version, interpose) { staging =>
-      s.range(1).select(lit(cap.toLong).as("cap"))
-        .write.mode("overwrite").parquet(staging.resolve("capcfg").toString)
-      DedupQueries.minhashCapDial(s, dir)
-        .write.mode("overwrite").parquet(staging.resolve("capdial").toString)
-    }
+  /** A dial pillar: the `cfg` artifact holding the one `valueCol`
+    * scalar, the `dial` artifact holding the install-time dial frame
+    * (value, exact_cnt, hits, recall_ppm, meets_floor, chosen), the dial
+    * frame over a corpus input `A`, and the read the installed value
+    * serves — the store is the only path by which a recalibration
+    * changes what readers see. */
+  final case class Dial[A](cfg: String, dial: String, valueCol: String,
+                           frame: (SparkSession, A) => DataFrame,
+                           serve: (SparkSession, A, Int) => DataFrame)
 
-  /** The installed MinHash cap's health on the CURRENT corpus — q273's
-    * dial recomputed, rows marked `installed`/`recalibrate` exactly as
-    * [[capDriftAudit]]. */
-  def minhashCapDriftAudit(s: SparkSession, root: String,
-                           dir: String): DataFrame = {
-    val cap = readCap(s, root).toLong
-    DedupQueries.minhashCapDial(s, dir)
-      .withColumn("installed", col("cap") === cap)
-      .withColumn("recalibrate", col("cap") === cap && !col("meets_floor"))
-  }
+  /** The SimHash bucket cap: q265's dial over a signature frame, serving
+    * q40's near-dup pairs. */
+  val SimhashCapDial: Dial[DataFrame] = Dial("capcfg", "capdial", "cap",
+    (_, sigs) => DedupQueries.bucketCapDial(sigs),
+    (_, sigs, cap) => DedupQueries.simhashNearDupPairsUnsorted(sigs, cap)
+      .orderBy("doc_a", "doc_b"))
 
-  /** The closed loop for the MinHash cap pillar — [[recalibrateCapIfSagging]]
-    * with q273's dial as the evidence source. */
-  def recalibrateMinhashCapIfSagging(s: SparkSession, root: String,
-                                     dir: String): Option[Long] = {
-    val audit = minhashCapDriftAudit(s, root, dir).collect()
-    if (!audit.exists(_.getBoolean(audit.head.fieldIndex("recalibrate")))) None
-    else {
-      val chosen = audit.filter(_.getBoolean(audit.head.fieldIndex("chosen")))
-        .head.getLong(0).toInt
-      val next = latestVersion(root).getOrElse(0L) + 1
-      installMinhashCap(s, root, next, chosen, dir)
-      Some(next)
-    }
-  }
+  /** The MinHash bucket cap: q273's dial over the corpus at a dir,
+    * serving q39's near-dup pairs. */
+  val MinhashCapDial: Dial[String] = Dial("capcfg", "capdial", "cap",
+    (s, dir) => DedupQueries.minhashCapDial(s, dir),
+    (s, dir, cap) => DedupQueries.minhashPairs(s, dir, cap)
+      .orderBy("doc_a", "doc_b"))
 
-  /** q39's near-dup pairs through the installed cap — the store is the
-    * only path by which a recalibration changes what readers see. */
-  def minhashNearDupThroughStore(s: SparkSession, root: String,
-                                 dir: String): DataFrame =
-    DedupQueries.minhashPairs(s, dir, readCap(s, root))
-      .orderBy("doc_a", "doc_b")
+  /** The CDC chunk cap: q276's dial over a media frame, serving q253's
+    * containment pairs. */
+  val CdcCapDial: Dial[DataFrame] = Dial("capcfg", "capdial", "cap",
+    (_, media) => MultimodalQueries.cdcCapDial(media),
+    (_, media, cap) => MultimodalQueries.cdcContainmentPairs(media, cap))
 
-  // ---------- CDC chunk cap pillar ----------
-  //
-  // The q276 dial chooses the chunk index's bucket cap; the pillar gives
-  // that choice the same install/audit/rollback discipline as the other
-  // cap pillars — `capcfg`/`capdial` layout is shared with [[installCap]]
-  // (and so are [[readCap]]/[[readCapBaseline]]); only the dial that
-  // produces the evidence differs.
+  /** The IVF probe depth: q251's dial over the corpus at a dir, serving
+    * q66's search. */
+  val ProbesDial: Dial[String] = Dial("probescfg", "probesdial", "probes",
+    (s, dir) => SimilarityQueries.probeDepthDial(s, dir),
+    (s, dir, probes) => SimilarityQueries.ivfTopK(s, dir, probes))
 
-  /** Install `cap` as `version`, recording the q276 dial over `media`
-    * as the install-time baseline. Same atomicity / idempotence contract
-    * as [[install]]. */
-  def installCdcCap(s: SparkSession, root: String, version: Long, cap: Int,
-                    media: DataFrame,
-                    interpose: String => Unit = _ => ()): Boolean =
-    installVersion(root, version, interpose) { staging =>
-      s.range(1).select(lit(cap.toLong).as("cap"))
-        .write.mode("overwrite").parquet(staging.resolve("capcfg").toString)
-      MultimodalQueries.cdcCapDial(media)
-        .write.mode("overwrite").parquet(staging.resolve("capdial").toString)
-    }
-
-  /** The installed CDC cap's health on the CURRENT corpus — q276's dial
-    * recomputed, rows marked `installed`/`recalibrate` exactly as
-    * [[capDriftAudit]]. */
-  def cdcCapDriftAudit(s: SparkSession, root: String,
-                       media: DataFrame): DataFrame = {
-    val cap = readCap(s, root).toLong
-    MultimodalQueries.cdcCapDial(media)
-      .withColumn("installed", col("cap") === cap)
-      .withColumn("recalibrate", col("cap") === cap && !col("meets_floor"))
-  }
-
-  /** The closed loop for the CDC cap pillar — [[recalibrateCapIfSagging]]
-    * with q276's dial as the evidence source. */
-  def recalibrateCdcCapIfSagging(s: SparkSession, root: String,
-                                 media: DataFrame): Option[Long] = {
-    val audit = cdcCapDriftAudit(s, root, media).collect()
-    if (!audit.exists(_.getBoolean(audit.head.fieldIndex("recalibrate")))) None
-    else {
-      val chosen = audit.filter(_.getBoolean(audit.head.fieldIndex("chosen")))
-        .head.getLong(0).toInt
-      val next = latestVersion(root).getOrElse(0L) + 1
-      installCdcCap(s, root, next, chosen, media)
-      Some(next)
-    }
-  }
-
-  /** q253's containment pairs through the installed cap — the store is
-    * the only path by which a recalibration changes what readers see. */
-  def cdcThroughStore(s: SparkSession, root: String,
-                      media: DataFrame): DataFrame =
-    MultimodalQueries.cdcContainmentPairs(media, readCap(s, root))
-
-  // ---------- probe-depth pillar ----------
-  //
-  // q251's dial chooses the IVF probe depth, but until now the choice was
-  // recomputed per call (`calibratedProbes`) — a nightly recalibration had
-  // no install/audit/rollback path. Same discipline as the cap pillar: the
-  // scalar is an index artifact the moment it gates which neighbors a
-  // reader sees, so it is versioned, installed with its dial evidence, and
-  // read through the store.
-
-  /** The latest committed probe depth. */
-  def readProbes(s: SparkSession, root: String): Int = {
-    val v = latestVersion(root).getOrElse(
-      throw new IllegalStateException(s"no committed probe depth under $root"))
-    s.read.parquet(s"$root/v=$v/probescfg").head.getLong(0).toInt
-  }
-
-  /** The latest committed install-time dial frame (probes, exact_cnt,
-    * hits, recall_ppm, meets_floor, chosen) — the recall evidence the
-    * installed depth was chosen on. */
-  def readProbesBaseline(s: SparkSession, root: String): DataFrame = {
-    val v = latestVersion(root).getOrElse(
-      throw new IllegalStateException(s"no committed probe depth under $root"))
-    s.read.parquet(s"$root/v=$v/probesdial")
-  }
-
-  /** Install `probes` as `version`, recording the q251 dial over the
-    * corpus at `dir` as the install-time baseline. Same atomicity /
-    * idempotence contract as [[install]]. */
-  def installProbes(s: SparkSession, root: String, version: Long, probes: Int,
-                    dir: String,
-                    interpose: String => Unit = _ => ()): Boolean =
-    installVersion(root, version, interpose) { staging =>
-      s.range(1).select(lit(probes.toLong).as("probes"))
-        .write.mode("overwrite").parquet(staging.resolve("probescfg").toString)
-      SimilarityQueries.probeDepthDial(s, dir)
-        .write.mode("overwrite").parquet(staging.resolve("probesdial").toString)
-    }
-
-  /** The installed depth's health on the CURRENT corpus: the q251 dial
-    * recomputed, each row marked `installed` and `recalibrate` (the
-    * shipped depth no longer meets the recall floor — the corpus drifted
-    * so queries' true neighbors spread across more cells than the depth
-    * reaches). Green right after a recalibration by construction. */
-  def probesDriftAudit(s: SparkSession, root: String, dir: String): DataFrame = {
-    val p = readProbes(s, root).toLong
-    SimilarityQueries.probeDepthDial(s, dir)
-      .withColumn("installed", col("probes") === p)
-      .withColumn("recalibrate", col("probes") === p && !col("meets_floor"))
-  }
-
-  /** The closed loop for the probe pillar: audit the installed depth; if
-    * it sags under the floor, install the dial's newly chosen depth as
-    * the next version atomically. */
-  def recalibrateProbesIfSagging(s: SparkSession, root: String,
-                                 dir: String): Option[Long] = {
-    val audit = probesDriftAudit(s, root, dir).collect()
-    if (!audit.exists(_.getBoolean(audit.head.fieldIndex("recalibrate")))) None
-    else {
-      val chosen = audit.filter(_.getBoolean(audit.head.fieldIndex("chosen")))
-        .head.getLong(0).toInt
-      val next = latestVersion(root).getOrElse(0L) + 1
-      installProbes(s, root, next, chosen, dir)
-      Some(next)
-    }
-  }
-
-  /** q66's IVF search at the INSTALLED probe depth — the store is the
-    * only path by which a probe recalibration changes what readers see. */
-  def searchAtInstalledProbes(s: SparkSession, root: String,
-                              dir: String): DataFrame =
-    SimilarityQueries.ivfTopK(s, dir, readProbes(s, root))
-
-  // ---------- LSH table-count pillar ----------
-  //
-  // q268's dial chooses the sign-LSH table count — the embedding near-dup
-  // index's linear cost knob. Versioned identically: the count gates which
-  // near-dup pairs exist, so readers take it from the store.
-
-  /** The latest committed table count. */
-  def readLshTables(s: SparkSession, root: String): Int = {
-    val v = latestVersion(root).getOrElse(
-      throw new IllegalStateException(s"no committed table count under $root"))
-    s.read.parquet(s"$root/v=$v/tablescfg").head.getLong(0).toInt
-  }
-
-  /** The latest committed install-time dial frame (tables, exact_cnt,
-    * hits, recall_ppm, meets_floor, chosen). */
-  def readLshTablesBaseline(s: SparkSession, root: String): DataFrame = {
-    val v = latestVersion(root).getOrElse(
-      throw new IllegalStateException(s"no committed table count under $root"))
-    s.read.parquet(s"$root/v=$v/tablesdial")
-  }
-
-  /** Install `tables` as `version`, recording the q268 dial over the
-    * corpus at `dir` as the install-time baseline. */
-  def installLshTables(s: SparkSession, root: String, version: Long,
-                       tables: Int, dir: String,
-                       interpose: String => Unit = _ => ()): Boolean =
-    installVersion(root, version, interpose) { staging =>
-      s.range(1).select(lit(tables.toLong).as("tables"))
-        .write.mode("overwrite").parquet(staging.resolve("tablescfg").toString)
+  /** The sign-LSH table count — the embedding near-dup index's linear
+    * cost knob: q268's dial over the corpus at a dir, serving q67's
+    * pairs. */
+  val TablesDial: Dial[String] = Dial("tablescfg", "tablesdial", "tables",
+    { (s, dir) =>
       val n = graft.Tables.parquetRowCount(s, dir, "embeddings")
       DedupQueries.lshTableDial(DedupQueries.normVecs(s, dir),
-          SimilarityQueries.codeBits(n), n)
-        .write.mode("overwrite").parquet(staging.resolve("tablesdial").toString)
-    }
-
-  /** The installed table count's health on the CURRENT corpus — q268
-    * recomputed, `installed`/`recalibrate` marked. A sagging count means
-    * new near-dup mass sits just past the probe radius of the installed
-    * tables (q264's miss_max_cos-near-threshold diagnostic). */
-  def lshTablesDriftAudit(s: SparkSession, root: String,
-                          dir: String): DataFrame = {
-    val t = readLshTables(s, root).toLong
-    val n = graft.Tables.parquetRowCount(s, dir, "embeddings")
-    DedupQueries.lshTableDial(DedupQueries.normVecs(s, dir),
         SimilarityQueries.codeBits(n), n)
-      .withColumn("installed", col("tables") === t)
-      .withColumn("recalibrate", col("tables") === t && !col("meets_floor"))
-  }
+    },
+    { (s, dir, tables) =>
+      val n = graft.Tables.parquetRowCount(s, dir, "embeddings")
+      DedupQueries.lshNearDupPairsFrom(DedupQueries.normVecs(s, dir),
+          SimilarityQueries.codeBits(n), tables)
+        .orderBy("vec_a", "vec_b")
+    })
 
-  /** The closed loop for the table pillar. */
-  def recalibrateLshTablesIfSagging(s: SparkSession, root: String,
-                                    dir: String): Option[Long] = {
-    val audit = lshTablesDriftAudit(s, root, dir).collect()
-    if (!audit.exists(_.getBoolean(audit.head.fieldIndex("recalibrate")))) None
-    else {
-      val chosen = audit.filter(_.getBoolean(audit.head.fieldIndex("chosen")))
-        .head.getLong(0).toInt
-      val next = latestVersion(root).getOrElse(0L) + 1
-      installLshTables(s, root, next, chosen, dir)
-      Some(next)
+  /** The serving value of a SPECIFIC pillar version. */
+  def readDialAt(s: SparkSession, root: String, d: Dial[_], v: Long): Int =
+    scalarsAt(s, root, v, d.cfg, s"${d.valueCol} BIGINT").head.toInt
+
+  /** The latest committed serving value. */
+  def readDial(s: SparkSession, root: String, d: Dial[_]): Int =
+    readDialAt(s, root, d, latestIndex(root))
+
+  /** A SPECIFIC version's install-time dial frame — the recall evidence
+    * its value was chosen on. */
+  def readDialBaselineAt(s: SparkSession, root: String, d: Dial[_],
+                         v: Long): DataFrame =
+    s.read.parquet(s"$root/v=$v/${d.dial}")
+
+  /** The latest committed install-time dial frame. */
+  def readDialBaseline(s: SparkSession, root: String, d: Dial[_]): DataFrame =
+    readDialBaselineAt(s, root, d, latestIndex(root))
+
+  /** Install `value` as `version`, recording the dial over `input` as
+    * the install-time baseline. Same atomicity / idempotence contract as
+    * [[install]]. */
+  def installDial[A](s: SparkSession, root: String, version: Long, d: Dial[A],
+                     value: Int, input: A,
+                     interpose: String => Unit = _ => ()): Boolean =
+    installVersion(root, version, interpose) { staging =>
+      writeScalars(s, staging, d.cfg, Seq(d.valueCol), Seq(value.toLong))
+      d.frame(s, input)
+        .write.mode("overwrite").parquet(staging.resolve(d.dial).toString)
     }
-  }
 
-  /** q67's near-dup pairs through the INSTALLED table count. */
-  def lshNearDupThroughStore(s: SparkSession, root: String,
-                             dir: String): DataFrame = {
-    val n = graft.Tables.parquetRowCount(s, dir, "embeddings")
-    DedupQueries.lshNearDupPairsFrom(DedupQueries.normVecs(s, dir),
-        SimilarityQueries.codeBits(n), readLshTables(s, root))
-      .orderBy("vec_a", "vec_b")
-  }
+  /** The installed value's health on the CURRENT corpus: the dial
+    * recomputed over `input`, each row marked `installed` (is this the
+    * shipped value) and `recalibrate` (the shipped value no longer meets
+    * the recall floor). Green right after a recalibration by
+    * construction. */
+  def dialDriftAudit[A](s: SparkSession, root: String, d: Dial[A],
+                        input: A): DataFrame =
+    marked(d.frame(s, input), d.valueCol, readDial(s, root, d).toLong)
+
+  /** The closed loop: audit the installed value against `input`; if it
+    * sags under the floor, install the dial's newly chosen value as the
+    * next version atomically. Returns the new version when a
+    * recalibration happened. */
+  def recalibrateDial[A](s: SparkSession, root: String, d: Dial[A],
+                         input: A): Option[Long] =
+    chosenIfSagging(dialDriftAudit(s, root, d, input), d.valueCol).map { c =>
+      val next = latestVersion(root).getOrElse(0L) + 1
+      installDial(s, root, next, d, c, input)
+      next
+    }
+
+  /** The descriptor's read of `input` at the INSTALLED value. */
+  def serveDial[A](s: SparkSession, root: String, d: Dial[A],
+                   input: A): DataFrame =
+    d.serve(s, input, readDial(s, root, d))
+
+  /** A dial frame with its `installed` and `recalibrate` marks. */
+  private def marked(dial: DataFrame, valueCol: String,
+                     installed: Long): DataFrame =
+    dial.withColumn("installed", col(valueCol) === installed)
+      .withColumn("recalibrate",
+        col(valueCol) === installed && !col("meets_floor"))
+
+  /** One-row scalar artifact (cfg) written into a staging dir. */
+  private def writeScalars(s: SparkSession, staging: Path, artifact: String,
+                           cols: Seq[String], values: Seq[Long]): Unit =
+    s.range(1).select(cols.zip(values).map { case (c, v) => lit(v).as(c) }: _*)
+      .write.mode("overwrite").parquet(staging.resolve(artifact).toString)
 
   // ---------- stored postings pillars: the banded near-dup indexes ----------
   //
   // The near-dup analogue of the PQ-index pillar (VERDICT r13 item 1):
-  // the cap/table pillars above version the OPERATING PARAMETER, but
-  // every *ThroughStore read still re-derives signatures and banded
-  // buckets from the corpus — the pay-the-index-build-per-read pattern
-  // the PQ-index pillar exists to end. These pillars persist the
-  // signature frame AND the banded posting lists (PARTITIONED BY
-  // band/tbl/bkt) next to the cap they are served at, under the same
-  // ATOMIC_MOVE v=N discipline, so
+  // the dial pillars above version the OPERATING PARAMETER, but every
+  // dial serve still re-derives signatures and banded buckets from the
+  // corpus — the pay-the-index-build-per-read pattern the PQ-index
+  // pillar exists to end. These pillars persist the signature frame AND
+  // the banded posting lists (PARTITIONED BY band/tbl/bkt) next to the
+  // parameter they are served at, under the same ATOMIC_MOVE v=N
+  // discipline, so
   //   (a) a reader serves the q40/q39/q67/q253 pair sets from the stored
   //       index — no text/payload/embedding re-scan, no signature
   //       recompute; the only corpus touch left is LSH's id-bounded
@@ -1179,12 +989,15 @@ object IndexLifecycle {
   // At 100 TB the stored posting lists are the index's own size (8-byte
   // ids against small keys), the serve-path windows and joins shuffle
   // only those rows, and install cost amortizes exactly as q281's.
+  //
+  // The four pillars (SimHash, MinHash, sign-LSH, CDC chunks) differ
+  // only in their [[Postings]] descriptor; every verb below is written
+  // once over it.
 
   private val SimhashSigsSchema = "doc_id BIGINT, sim BIGINT"
   private val MinhashSigsSchema = "doc_id BIGINT, sig ARRAY<BIGINT>"
   private val BandPostingsSchema = "doc_id BIGINT, key BIGINT, band INT"
   private val LshCodesSchema = "vec_id BIGINT, code INT, tbl INT"
-  private val LshCfgSchema = "bits BIGINT, tables BIGINT"
   private val CdcChunksSchema = "doc_id BIGINT, cfp BIGINT, bkt BIGINT"
   // Probe-ready serve layouts (r17, guide §6 "layout determines how well
   // readers skip data"): derived WHOLLY from the version's base artifact
@@ -1193,7 +1006,7 @@ object IndexLifecycle {
   // Hamming-1-expanded, [2, MaxBucket]-bounded bucket id-lists; `buckets`/
   // `doccnt` hold the CDC serve's df-annotated member lists and per-doc
   // df-census, both df-bounded at the dial sweep's max so a zero-byte cap
-  // swap (capOnlyVersion) can CARRY them for any servable cap.
+  // swap can CARRY them for any servable cap.
   private val LshBallsSchema = "band INT, key INT, ids ARRAY<BIGINT>"
   private val CdcBucketsSchema =
     "cfp BIGINT, df BIGINT, ds ARRAY<BIGINT>, bkt BIGINT"
@@ -1204,32 +1017,211 @@ object IndexLifecycle {
   // cap swap carries the segment for any servable cap.
   private val BandBallsSchema =
     "band INT, key BIGINT, bsz BIGINT, ids ARRAY<BIGINT>"
-  private val BandBallsArt = ("balls", BandBallsSchema, Seq("band"))
 
-  // each pillar's big artifacts as (name, schema, partition cols) — the
-  // shared descriptor the takedown and compaction verbs operate over
-  private val SimhashArts = Seq(
-    ("sigs", SimhashSigsSchema, Seq.empty[String]),
-    ("postings", BandPostingsSchema, Seq("band")))
-  private val MinhashArts = Seq(
-    ("sigs", MinhashSigsSchema, Seq.empty[String]),
-    ("postings", BandPostingsSchema, Seq("band")))
-  private val LshArts = Seq(
-    ("codes", LshCodesSchema, Seq("tbl")),
-    // derived serve layout: always a single segment (rebuilt whole at
-    // every codes-changing commit), so compaction carries it by reference
-    ("balls", LshBallsSchema, Seq("band")))
-  private val CdcArts = Seq(
-    ("chunks", CdcChunksSchema, Seq("bkt")),
-    ("buckets", CdcBucketsSchema, Seq("bkt")),
-    ("doccnt", CdcDocCntSchema, Seq.empty[String]))
-  private val PqArts = Seq(
-    ("codes", PqCodesSchema, Seq("cent_id")),
-    ("centroids", PqCentsSchema, Seq.empty[String]),
-    ("codebook", PqBookSchema, Seq.empty[String]))
+  /** A stored artifact: name, DDL schema (explicit — an empty pillar has
+    * file-less segments that inference cannot read) and partition
+    * columns. */
+  final case class Art(name: String, schema: String, parts: Seq[String])
+
+  /** What a postings pillar keeps on disk: base artifacts keyed by `id`
+    * (the first is the signature grain, every append writes a delta
+    * segment of each), derived probe-ready serve layouts (rebuilt whole
+    * at every commit that changes the base, optional in versions older
+    * writers committed), and the one-row `cfg` artifact whose columns
+    * are `cfgCols` — the last one is the value the pillar's dial
+    * chooses. */
+  final case class Layout(id: String, base: Seq[Art], derived: Seq[Art],
+                          cfg: String, cfgCols: Seq[String]) {
+    private[IndexLifecycle] def art(name: String): Art =
+      (base ++ derived).find(_.name == name).get
+    private[IndexLifecycle] def cfgSchema: String =
+      cfgCols.map(c => s"$c BIGINT").mkString(", ")
+  }
+
+  /** One committed version of a postings pillar, resolved ONCE: every
+    * artifact and the cfg scalars come from the same v=N manifest, so a
+    * concurrent commit can never mix two versions into one read. */
+  final class PostingsIndex private[IndexLifecycle] (
+      val s: SparkSession, val root: String, val version: Long,
+      val layout: Layout) {
+    private val frames = scala.collection.mutable.Map.empty[String, DataFrame]
+
+    /** One artifact: its per-segment scans unioned. */
+    def apply(artifact: String): DataFrame = frames.getOrElseUpdate(artifact,
+      readArtifact(s, root, version, artifact, layout.art(artifact).schema))
+
+    /** Whether this version carries `artifact` (derived layouts are
+      * optional). */
+    def has(artifact: String): Boolean = hasArtifact(root, version, artifact)
+
+    /** The cfg scalars, in [[Layout.cfgCols]] order. */
+    lazy val cfg: Seq[Long] =
+      scalarsAt(s, root, version, layout.cfg, layout.cfgSchema)
+  }
+
+  /** A postings pillar: its [[Layout]] plus the functions the generic
+    * verbs compose.
+    *  - `rows`: an install/append input → rows at the first base
+    *    artifact's grain;
+    *  - `fresh`: those rows whose id the version does not hold yet (a
+    *    replayed batch has none);
+    *  - `encode`: rows → the first base artifact, under the cfg;
+    *  - `keys`: the banded pillars' posting rows from their written
+    *    signature rows (the second base artifact);
+    *  - `derive`: the derived layouts, in [[Layout.derived]] order, from
+    *    the version's FULL base frames;
+    *  - `serve`: the stored pair set; `admit`: every pair of the union
+    *    corpus that touches a batch's fresh rows;
+    *  - `dial`: the dial frame auditing the cfg's last value, over an
+    *    input `A`;
+    *  - `rebuild`: the full input to re-encode from when the dial value
+    *    shapes the stored artifacts (LSH tables); None when it binds at
+    *    serve time (the caps) and a recalibration carries the artifacts. */
+  final case class Postings[A](
+      layout: Layout,
+      rows: DataFrame => DataFrame,
+      fresh: (PostingsIndex, DataFrame) => DataFrame,
+      encode: (DataFrame, Seq[Long]) => DataFrame,
+      keys: Option[DataFrame => DataFrame],
+      derive: (String => DataFrame, Seq[Long]) => Seq[DataFrame],
+      serve: PostingsIndex => DataFrame,
+      admit: (PostingsIndex, DataFrame) => DataFrame,
+      dial: (PostingsIndex, A) => DataFrame,
+      rebuild: Option[PostingsIndex => DataFrame])
+
+  /** The banded pillars: a signature frame `sigs(doc_id, sigCol)`, its
+    * posting rows partitioned by band, their bsz-annotated `balls`, and
+    * the serving cap. */
+  private def bandedPostings[A](sigSchema: String, sigCol: String,
+                                keysOf: DataFrame => DataFrame,
+                                confirm: (DataFrame, DataFrame) => DataFrame,
+                                dial: (PostingsIndex, A) => DataFrame)
+      : Postings[A] = Postings(
+    Layout("doc_id",
+      Seq(Art("sigs", sigSchema, Nil),
+        Art("postings", BandPostingsSchema, Seq("band"))),
+      Seq(Art("balls", BandBallsSchema, Seq("band"))),
+      "capcfg", Seq("cap")),
+    rows = identity,
+    fresh = (ix, sigs) =>
+      sigs.join(ix("sigs").select("doc_id"), Seq("doc_id"), "left_anti"),
+    encode = (sigs, _) => sigs.select("doc_id", sigCol),
+    keys = Some(keysOf),
+    derive = (base, _) => Seq(bandBallsOf(base("postings"))),
+    serve = ix => confirm(bandPairs(ix), ix("sigs")),
+    admit = (ix, fresh) => confirm(
+      bandedBatchPairs(ix("postings"), keysOf(fresh), ix.cfg.head.toInt,
+        "doc_a", "doc_b"),
+      ix("sigs").unionByName(fresh.select("doc_id", sigCol))),
+    dial = dial,
+    rebuild = None)
+
+  /** q40's index: 7-block pigeonhole posting lists of `sigs(doc_id,
+    * sim)`; pairs re-checked by stored-signature Hamming distance. Its
+    * cap dial (q265) needs nothing but the stored signatures. */
+  val SimhashPostings: Postings[Unit] = bandedPostings[Unit](
+    SimhashSigsSchema, "sim",
+    DedupQueries.simhashBandKeys(_).select("doc_id", "key", "band"),
+    simhashConfirm, (ix, _) => DedupQueries.bucketCapDial(ix("sigs")))
+
+  /** q39's index: 16 band-key posting lists of `sigs(doc_id, sig[64])`;
+    * pairs scored by stored-signature agreement. Its cap dial (q273)
+    * needs the corpus shingles at a dir. */
+  val MinhashPostings: Postings[String] = bandedPostings[String](
+    MinhashSigsSchema, "sig", minhashPostingsOf, minhashConfirm,
+    (ix, dir) => DedupQueries.minhashCapDial(ix.s, dir))
+
+  /** q67's index layout: per-table BASE codes partitioned by table, the
+    * probe-ready `balls` lists (r17 — the raw probed expansion would 9×
+    * the artifact, but the BOUNDED bucket lists drop singleton and
+    * over-cap mass, and storing them removes the expansion AND the
+    * bucket-count window from every serve; measured −50% on q285/q293),
+    * and `lshcfg(bits, tables)`. The float vectors are NOT stored. */
+  val LshLayout: Layout = Layout("vec_id",
+    Seq(Art("codes", LshCodesSchema, Seq("tbl"))),
+    Seq(Art("balls", LshBallsSchema, Seq("band"))),
+    "lshcfg", Seq("bits", "tables"))
+
+  /** q67's index over the corpus at `dir`: the exact cosine re-check is
+    * an id-bounded lookup into that corpus (q281's re-rank discipline),
+    * and its table count (q268's dial) SHAPES the codes, so a
+    * recalibration honestly re-codes the corpus. Versions committed by
+    * older writers (no balls) serve by deriving the same frame from
+    * codes. */
+  def LshPostings(dir: String): Postings[Unit] = Postings(
+    LshLayout,
+    rows = identity,
+    fresh = (ix, vecs) => vecs.join(ix("codes").select("vec_id").distinct(),
+      Seq("vec_id"), "left_anti"),
+    encode = (vecs, cfg) => lshCodeRows(vecs, cfg(0).toInt, cfg(1).toInt)
+      .select(col("vec_id"), col("code"), col("tbl")),
+    keys = None,
+    derive = (base, cfg) => Seq(lshBallsOf(base("codes"), cfg(0).toInt)),
+    serve = { ix =>
+      val balls =
+        if (ix.has("balls")) ix("balls")
+        else lshBallsOf(ix("codes"), ix.cfg(0).toInt)
+      lshConfirm(pairsOfBalls(balls, "vec_a", "vec_b"),
+        DedupQueries.normVecs(ix.s, dir))
+    },
+    // codes computed batch-side with the INSTALLED planes/width; a truly
+    // new vector's floats exist only in the batch until it is appended,
+    // so the confirm side unions both (dedup by id covers re-offered
+    // batches whose rows already landed at `dir`)
+    admit = { (ix, vecs) =>
+      val bits = ix.cfg(0).toInt
+      // batch-sized, staged: the batch's code walk and the confirm union
+      // side read one evaluation. Safe to stage here (unlike the banded
+      // pillars, which the streaming ingest calls per micro-batch and
+      // where an unreleasable checkpoint per epoch would accumulate):
+      // LSH admission is batch-only — q291 and IndexMaintBench.
+      val fresh = graft.Staging.stage(vecs)
+      def banded(codes: DataFrame) = lshProbed(codes, bits)
+        .withColumnRenamed("tbl", "band").withColumnRenamed("code", "key")
+        .withColumnRenamed("vec_id", "doc_id")
+      lshConfirm(
+        bandedBatchPairs(banded(ix("codes")),
+          banded(lshCodeRows(fresh, bits, ix.cfg(1).toInt)),
+          DedupQueries.MaxBucket, "vec_a", "vec_b"),
+        DedupQueries.normVecs(ix.s, dir)
+          .unionByName(fresh.select("vec_id", "v", "nrm"))
+          .dropDuplicates("vec_id"))
+    },
+    dial = { (ix, _) =>
+      val n = graft.Tables.parquetRowCount(ix.s, dir, "embeddings")
+      DedupQueries.lshTableDial(DedupQueries.normVecs(ix.s, dir),
+        ix.cfg(0).toInt, n)
+    },
+    rebuild = Some(ix => DedupQueries.normVecs(ix.s, dir)))
+
+  /** q253's index: each doc's DISTINCT chunk fingerprints (ONE payload
+    * walk, at install/append only) partitioned by a 16-way fingerprint
+    * bucket, plus the df-annotated `buckets` lists and `doccnt` census.
+    * `df` is deliberately NOT stored on the chunks — document frequency
+    * is a property of the whole corpus, so an append never serves stale
+    * frequencies. Its cap dial (q276) reads a media frame. */
+  val CdcPostings: Postings[DataFrame] = Postings(
+    Layout("doc_id",
+      Seq(Art("chunks", CdcChunksSchema, Seq("bkt"))),
+      Seq(Art("buckets", CdcBucketsSchema, Seq("bkt")),
+        Art("doccnt", CdcDocCntSchema, Nil)),
+      "capcfg", Seq("cap")),
+    rows = MultimodalQueries.cdcDocChunks,
+    fresh = (ix, chunks) => chunks.join(
+      ix("chunks").select("doc_id").distinct(), Seq("doc_id"), "left_anti"),
+    encode = (chunks, _) => chunks.withColumn("bkt", pmod(col("cfp"), lit(16L))),
+    keys = None,
+    derive = (base, _) => cdcServeLayout(base("chunks").select("doc_id", "cfp")),
+    serve = cdcServe,
+    admit = cdcAdmit,
+    dial = (_, media) => MultimodalQueries.cdcCapDial(media),
+    rebuild = None)
 
   private def noIndex(root: String): Nothing =
-    throw new IllegalStateException(s"no committed postings index under $root")
+    throw new IllegalStateException(s"no committed index under $root")
+
+  private def latestIndex(root: String): Long =
+    latestVersion(root).getOrElse(noIndex(root))
 
   /** One-row config artifacts (caps, dials, meta) are IMMUTABLE once
     * their version directory commits — memoized per (root, version,
@@ -1257,31 +1249,265 @@ object IndexLifecycle {
     })
   }
 
-  // ----- SimHash text postings (q40's index) -----
+  /** A SPECIFIC committed version of a postings pillar. */
+  def readPostingsAt(s: SparkSession, root: String, layout: Layout,
+                     v: Long): PostingsIndex =
+    new PostingsIndex(s, root, v, layout)
 
-  /** Install the SimHash near-dup index: the signature frame
-    * `sigs(doc_id, sim)`, its 7-block pigeonhole posting lists
-    * partitioned by band, and the bucket cap they are served at.
-    * Postings derive from the STAGED signature copy (the install rule). */
-  def installSimhashPostings(s: SparkSession, root: String, version: Long,
-                             sigs: DataFrame,
-                             cap: Int = DedupQueries.MaxBucket,
-                             interpose: String => Unit = _ => ()): Boolean =
+  /** The latest committed version of a postings pillar. */
+  def readPostings(s: SparkSession, root: String,
+                   layout: Layout): PostingsIndex =
+    readPostingsAt(s, root, layout, latestIndex(root))
+
+  /** Install a postings index built from `input` and served at `cfg`
+    * (in [[Layout.cfgCols]] order). Every later artifact derives from
+    * the WRITTEN segments of the earlier ones (the install rule: the
+    * recorded artifact provably describes what is being installed). */
+  def installPostings(s: SparkSession, root: String, version: Long,
+                      p: Postings[_], input: DataFrame, cfg: Seq[Long],
+                      interpose: String => Unit = _ => ()): Boolean =
     installVersion(root, version, interpose) { staging =>
-      val sigSeg = writeSegment(root, "sigs")(p =>
-        sigs.write.mode("overwrite").parquet(p.toString))
-      val st = s.read.schema(SimhashSigsSchema).parquet(s"$root/$sigSeg")
-      val postSeg = writeSegment(root, "postings")(p =>
-        DedupQueries.simhashBandKeys(st).select("doc_id", "key", "band")
-          .write.mode("overwrite").partitionBy("band")
-          .parquet(p.toString))
-      val ballSeg = writeBandBalls(s, root,
-        s.read.schema(BandPostingsSchema).parquet(s"$root/$postSeg"))
-      s.range(1).select(lit(cap.toLong).as("cap"))
-        .write.mode("overwrite").parquet(staging.resolve("capcfg").toString)
-      writeManifest(staging,
-        Seq("sigs" -> sigSeg, "postings" -> postSeg, "balls" -> ballSeg))
+      val segs = writeBase(s, root, p, p.encode(p.rows(input), cfg))
+      val derived = writeDerived(root, p, segFrames(s, root, p.layout, segs), cfg)
+      writeScalars(s, staging, p.layout.cfg, p.layout.cfgCols, cfg)
+      writeManifest(staging, segs ++ derived)
     }
+
+  /** The stored pair set of the latest version. */
+  def pairsFromStore(s: SparkSession, root: String,
+                     p: Postings[_]): DataFrame =
+    pairsFromStoreAt(s, root, p, latestIndex(root))
+
+  /** [[pairsFromStore]] pinned to a SPECIFIC store version — the seam
+    * release-resolved serves read through, so a concurrent append or
+    * swap can never move a pinned reader. */
+  def pairsFromStoreAt(s: SparkSession, root: String, p: Postings[_],
+                       v: Long): DataFrame =
+    p.serve(readPostingsAt(s, root, p.layout, v))
+
+  /** Admit a NEW batch (its signatures computed batch-side — the store's
+    * corpus is never re-scanned): every pair of the union corpus that
+    * TOUCHES the batch, decided under union-bucket capping exactly as a
+    * full rebuild would. Rows already in the store are ignored
+    * (admission is of new arrivals; a replay admits nothing). */
+  def batchPairs(s: SparkSession, root: String, p: Postings[_],
+                 batch: DataFrame): DataFrame =
+    batchPairsAt(s, root, p, latestIndex(root), batch)
+
+  /** [[batchPairs]] pinned to a SPECIFIC store version — the
+    * replay-determinism seam: an ingest batch that recorded the version
+    * it admitted against re-derives the same decisions on replay even
+    * though the pillar has advanced since. */
+  def batchPairsAt(s: SparkSession, root: String, p: Postings[_], v: Long,
+                   batch: DataFrame): DataFrame = {
+    val ix = readPostingsAt(s, root, p.layout, v)
+    p.admit(ix, p.fresh(ix, p.rows(batch)))
+  }
+
+  /** Commit stored ∪ batch as v=N+1 — signatures recomputed for nobody
+    * and the stored artifacts carried by MANIFEST REFERENCE (zero bytes):
+    * the commit writes one delta-sized segment per base artifact and
+    * rebuilds the derived layouts over stored ∪ delta (bucket sizes and
+    * df are whole-index properties). Returns the new version, or None
+    * ONLY when the batch brings no new ids (the replay no-op); a lost
+    * commit race re-resolves and re-drives. */
+  def appendPostings(s: SparkSession, root: String, p: Postings[_],
+                     batch: DataFrame): Option[Long] =
+    retryVersionRace() { () =>
+      val ix = readPostings(s, root, p.layout)
+      val fresh = p.fresh(ix, p.rows(batch))
+      if (fresh.limit(1).count() == 0) Right(None)
+      else {
+        val segs = writeBase(s, root, p, p.encode(fresh, ix.cfg))
+        val delta = segFrames(s, root, p.layout, segs)
+        val derived = writeDerived(root, p,
+          a => ix(a).unionByName(delta(a)), ix.cfg)
+        commitNext(ix, carriedRefs(root, ix.version,
+          p.layout.base.map(_.name)) ++ segs ++ derived)
+      }
+    }
+
+  /** Remove `deleted(<id>)` from the pillar — v=N+1 writes ONE
+    * consolidated survivor segment per base artifact (id-only
+    * anti-joins, no signature or key recompute; a takedown doubles as a
+    * compaction), rebuilds the derived layouts from the survivors (a
+    * deletion moves bucket sizes and df, which no per-list anti-join can
+    * see), and carries the cfg. None only when nothing stored is
+    * deleted; lost races re-drive. */
+  def takedownPostings(s: SparkSession, root: String, p: Postings[_],
+                       deleted: DataFrame): Option[Long] =
+    retryVersionRace() { () =>
+      val ix = readPostings(s, root, p.layout)
+      val id = p.layout.id
+      val del = deleted.select(col(id)).distinct()
+      val hit = ix(p.layout.base.head.name)
+        .join(del, Seq(id), "left_semi").limit(1).count() > 0
+      if (!hit) Right(None)
+      else {
+        val segs = p.layout.base.map(a =>
+          writeArt(root, a, ix(a.name).join(del, Seq(id), "left_anti")))
+        commitNext(ix, segs ++ writeDerived(root, p,
+          segFrames(s, root, p.layout, segs), ix.cfg))
+      }
+    }
+
+  /** Compact the pillar's delta segments (see [[compactPillar]]). None
+    * when every artifact already resolves to one segment. */
+  def compactPostings(s: SparkSession, root: String,
+                      p: Postings[_]): Option[Long] =
+    compactPillar(s, root,
+      v => p.layout.base ++ presentDerived(root, v, p.layout),
+      Seq(p.layout.cfg))
+
+  /** The serve at a release's pinned version of pillar `pin`. */
+  def pairsAtRelease(s: SparkSession, relRoot: String, p: Postings[_],
+                     pin: String): DataFrame = {
+    val (root, v) = readRelease(relRoot)(pin)
+    pairsFromStoreAt(s, root, p, v)
+  }
+
+  // ----- serving-parameter lifecycle for the postings pillars -----
+  //
+  // Each postings pillar serves at an operating parameter recorded in
+  // its own version (capcfg / lshcfg), and the dial pillars' audit /
+  // recalibrate discipline applies here too — the difference is WHAT a
+  // recalibration rewrites: the cap families' artifacts are
+  // cap-INDEPENDENT (the cap binds at serve time), so a cap swap commits
+  // v=N+1 with the SAME segments by reference and only a new capcfg; the
+  // LSH table count shapes the code artifact itself, so its
+  // recalibration is the one that honestly re-codes. Every
+  // recalibration resolves its version ONCE and audits, carries and
+  // commits against that same v=N directory — two `latestVersion` reads
+  // around a concurrent install would audit v=N and carry v=N+1's files
+  // (the r13 drift-audit race, pre-empted here).
+
+  /** The installed serving parameter's health — the descriptor's dial
+    * over `input`, rows marked `installed`/`recalibrate` exactly as
+    * [[dialDriftAudit]]. */
+  def postingsAudit[A](s: SparkSession, root: String, p: Postings[A],
+                       input: A): DataFrame =
+    postingsAuditAt(readPostings(s, root, p.layout), p, input)
+
+  private def postingsAuditAt[A](ix: PostingsIndex, p: Postings[A],
+                                 input: A): DataFrame =
+    marked(p.dial(ix, input), p.layout.cfgCols.last, ix.cfg.last)
+
+  /** Closed loop for the serving parameter: a sagging value commits the
+    * dial's new choice as v=N+1 ([[reinstall]]). */
+  def recalibratePostings[A](s: SparkSession, root: String, p: Postings[A],
+                             input: A): Option[Long] =
+    retryVersionRace() { () =>
+      val ix = readPostings(s, root, p.layout)
+      chosenIfSagging(postingsAuditAt(ix, p, input), p.layout.cfgCols.last)
+        .map(reinstall(ix, p, _)).getOrElse(Right(None))
+    }
+
+  /** v=N+1 serving dial value `value`, pinned to the audited version: a
+    * pillar whose dial shapes its artifacts re-encodes from its full
+    * input; otherwise the artifacts carry by MANIFEST REFERENCE under a
+    * new cfg — zero data bytes. */
+  private def reinstall(ix: PostingsIndex, p: Postings[_],
+                        value: Long): Either[Unit, Option[Long]] = {
+    val cfg = ix.cfg.init :+ value
+    val done = p.rebuild match {
+      case Some(input) =>
+        installPostings(ix.s, ix.root, ix.version + 1, p, input(ix), cfg)
+      case None =>
+        installVersion(ix.root, ix.version + 1, _ => ()) { staging =>
+          writeScalars(ix.s, staging, p.layout.cfg, p.layout.cfgCols, cfg)
+          writeManifest(staging, carriedRefs(ix.root, ix.version,
+            (p.layout.base ++ presentDerived(ix.root, ix.version, p.layout))
+              .map(_.name)))
+        }
+    }
+    if (done) Right(Some(ix.version + 1)) else Left(())
+  }
+
+  /** The dial's chosen value when the INSTALLED row sags — None when the
+    * audit reads green, when the sweep flags a sag but elects no viable
+    * replacement (every swept value misses the floor — the r14
+    * advisory: "no viable value" is a verdict, not a crash), and when
+    * the chosen value EQUALS the installed one (the sweep's fallback
+    * choice — reinstalling the same value would commit a new version
+    * every nightly pass forever, pure version churn; the caller keeps
+    * serving the installed value and the audit keeps flagging — the
+    * [[chosenOver]] rule [[lshGuardedMaintenance]] applies too).
+    * Shared by every recalibration; the ≤sweep-sized collect is the
+    * sanctioned control-plane read. */
+  private def chosenIfSagging(audit: DataFrame,
+                              valueCol: String): Option[Int] = {
+    val rows = audit.collect()
+    if (!rows.exists(r => r.getBoolean(r.fieldIndex("recalibrate")))) None
+    else chosenOver(rows, valueCol)
+  }
+
+  /** A marked audit's chosen value, unless it is the installed one. */
+  private def chosenOver(rows: Array[org.apache.spark.sql.Row],
+                         valueCol: String): Option[Int] = {
+    def value(r: org.apache.spark.sql.Row) =
+      r.getLong(r.fieldIndex(valueCol)).toInt
+    val installed =
+      rows.find(r => r.getBoolean(r.fieldIndex("installed"))).map(value)
+    rows.find(r => r.getBoolean(r.fieldIndex("chosen"))).map(value)
+      .filter(c => !installed.contains(c))
+  }
+
+  // ----- the generic commit pieces -----
+
+  /** Write `df` as one immutable segment of artifact `a`. */
+  private def writeArt(root: String, a: Art,
+                       df: DataFrame): (String, String) =
+    a.name -> writeSegment(root, a.name) { p =>
+      val w = df.write.mode("overwrite")
+      (if (a.parts.nonEmpty) w.partitionBy(a.parts: _*) else w)
+        .parquet(p.toString)
+    }
+
+  /** Segments of the base artifacts: the first from `rows`, the banded
+    * pillars' postings from the WRITTEN signature segment. */
+  private def writeBase(s: SparkSession, root: String, p: Postings[_],
+                        rows: DataFrame): Seq[(String, String)] = {
+    val first = writeArt(root, p.layout.base.head, rows)
+    first +: p.keys.toSeq.map(k => writeArt(root, p.layout.base(1),
+      k(segFrames(s, root, p.layout, Seq(first))(first._1))))
+  }
+
+  /** Segments of the derived layouts, built from the full base frames. */
+  private def writeDerived(root: String, p: Postings[_],
+                           base: String => DataFrame,
+                           cfg: Seq[Long]): Seq[(String, String)] =
+    p.layout.derived.zip(p.derive(base, cfg))
+      .map { case (a, df) => writeArt(root, a, df) }
+
+  /** Frames of freshly written segments, by artifact name. */
+  private def segFrames(s: SparkSession, root: String, layout: Layout,
+                        segs: Seq[(String, String)]): String => DataFrame = {
+    val m = segs.toMap
+    name => s.read.schema(layout.art(name).schema).parquet(s"$root/${m(name)}")
+  }
+
+  /** The derived layouts v=N actually carries. They are optional — a
+    * version an older writer committed lacks them — so a carry includes
+    * one ONLY when present, never as a phantom `v=N/<artifact>`
+    * reference to a directory that does not exist. */
+  private def presentDerived(root: String, v: Long,
+                             layout: Layout): Seq[Art] =
+    layout.derived.filter(a => hasArtifact(root, v, a.name))
+
+  /** Commit v=N+1 with `entries` as its manifest and v=N's cfg carried
+    * by KB copy. */
+  private def commitNext(ix: PostingsIndex, entries: Seq[(String, String)])
+      : Either[Unit, Option[Long]] = {
+    val cfg = ix.layout.cfg
+    val done = installVersion(ix.root, ix.version + 1, _ => ()) { staging =>
+      copyTree(Paths.get(s"${ix.root}/v=${ix.version}/$cfg"),
+        staging.resolve(cfg))
+      writeManifest(staging, entries)
+    }
+    if (done) Right(Some(ix.version + 1)) else Left(())
+  }
+
+  // ----- per-pillar frame math -----
 
   /** The banded pillars' probe-ready layout: per-(band, key) sorted
     * member lists with their bucket size, bounded at the dial sweep's
@@ -1302,54 +1528,20 @@ object IndexLifecycle {
       .select("band", "key", "bsz", "ids")
   }
 
-  private def writeBandBalls(s: SparkSession, root: String,
-                             postings: DataFrame): String =
-    writeSegment(root, "balls")(p =>
-      bandBallsOf(postings)
-        .write.mode("overwrite").partitionBy("band").parquet(p.toString))
+  /** The banded serve's candidate pairs: the stored bucket lists under a
+    * pushed bsz <= cap filter when present and servable at the cap —
+    * no bucket-count window per read — else the legacy window-derive
+    * from the postings. */
+  private def bandPairs(ix: PostingsIndex): DataFrame = {
+    val cap = ix.cfg.head.toInt
+    if (cap <= DedupQueries.CapSweep.max && ix.has("balls"))
+      pairsOfBalls(ix("balls").filter(col("bsz") <= cap), "doc_a", "doc_b")
+    else pairsOfBuckets(boundedBuckets(ix("postings"), cap), "doc_a", "doc_b")
+  }
 
-  /** Stored bucket lists when present and servable at `cap`; None sends
-    * the caller down the legacy window-derive path. */
-  private def bandBallsAt(s: SparkSession, root: String, v: Long,
-                          cap: Int): Option[DataFrame] =
-    if (cap <= DedupQueries.CapSweep.max && hasArtifact(root, v, "balls"))
-      Some(readArtifact(s, root, v, "balls", BandBallsSchema)
-        .filter(col("bsz") <= cap))
-    else None
-
-  /** The SimHash index artifacts at a SPECIFIC version: (sigs,
-    * postings, cap) — all three resolved from ONE version manifest. */
-  def readSimhashIndexAt(s: SparkSession, root: String, v: Long)
-      : (DataFrame, DataFrame, Int) =
-    (readArtifact(s, root, v, "sigs", SimhashSigsSchema),
-      readArtifact(s, root, v, "postings", BandPostingsSchema),
-      scalarsAt(s, root, v, "capcfg", "cap BIGINT").head.toInt)
-
-  /** The latest committed SimHash index: (sigs, postings, cap). */
-  def readSimhashIndex(s: SparkSession, root: String)
-      : (DataFrame, DataFrame, Int) =
-    readSimhashIndexAt(s, root, latestVersion(root).getOrElse(noIndex(root)))
-
-  /** q40's pair set served FROM the stored posting lists: union-bucket
-    * window bound, id-only in-bucket pairing, stored-signature Hamming
-    * re-check — no document text, no shingle walk, no signature
-    * recompute anywhere in the plan. */
-  def simhashPairsFromStore(s: SparkSession, root: String): DataFrame =
-    simhashPairsFromStoreAt(s, root,
-      latestVersion(root).getOrElse(noIndex(root)))
-
-  /** [[simhashPairsFromStore]] pinned to a SPECIFIC store version — the
-    * seam release-resolved serves read through, so a concurrent append
-    * or swap can never move a pinned reader. */
-  def simhashPairsFromStoreAt(s: SparkSession, root: String,
-                              v: Long): DataFrame = {
-    val (sigs, postings, cap) = readSimhashIndexAt(s, root, v)
-    // stored probe-ready lists when present (r17): the serve pairs them
-    // under a pushed bsz <= cap filter — no bucket-count window per read
-    bandBallsAt(s, root, v, cap)
-      .map(balls => pairsOfBalls(balls, "doc_a", "doc_b"))
-      .getOrElse(
-        pairsOfBuckets(boundedBuckets(postings, cap), "doc_a", "doc_b"))
+  /** q40's confirm: stored-signature Hamming re-check. */
+  private def simhashConfirm(pairs: DataFrame, sigs: DataFrame): DataFrame =
+    pairs
       .join(sigs.select(col("doc_id").as("doc_a"), col("sim").as("sim_a")), "doc_a")
       .join(sigs.select(col("doc_id").as("doc_b"), col("sim").as("sim_b")), "doc_b")
       .withColumn("hamming",
@@ -1357,105 +1549,6 @@ object IndexLifecycle {
       .filter(col("hamming") <= 6)
       .select("doc_a", "doc_b", "hamming")
       .orderBy("doc_a", "doc_b")
-  }
-
-  /** Admit a NEW batch (its signatures computed batch-side — the store's
-    * corpus is never re-scanned): every q40 pair of the union corpus
-    * that TOUCHES the batch, decided under union-bucket capping exactly
-    * as a full rebuild would. Docs already in the store are ignored
-    * (admission is of new arrivals; a replay admits nothing). */
-  def simhashBatchPairs(s: SparkSession, root: String,
-                        batchSigs: DataFrame): DataFrame =
-    simhashBatchPairsAt(s, root,
-      latestVersion(root).getOrElse(noIndex(root)), batchSigs)
-
-  /** [[simhashBatchPairs]] pinned to a SPECIFIC store version — the
-    * replay-determinism seam: an ingest batch that recorded the version
-    * it admitted against re-derives the same decisions on replay even
-    * though the pillar has advanced since. */
-  def simhashBatchPairsAt(s: SparkSession, root: String, v: Long,
-                          batchSigs: DataFrame): DataFrame = {
-    val sigs = readArtifact(s, root, v, "sigs", SimhashSigsSchema)
-    val postings = readArtifact(s, root, v, "postings", BandPostingsSchema)
-    val cap = scalarsAt(s, root, v, "capcfg", "cap BIGINT").head.toInt
-    val fresh = batchSigs.join(sigs.select("doc_id"), Seq("doc_id"), "left_anti")
-    val keys = DedupQueries.simhashBandKeys(fresh)
-      .select("doc_id", "key", "band")
-    val allSigs = sigs.unionByName(fresh.select("doc_id", "sim"))
-    bandedBatchPairs(postings, keys, cap, "doc_a", "doc_b")
-      .join(allSigs.select(col("doc_id").as("doc_a"), col("sim").as("sim_a")), "doc_a")
-      .join(allSigs.select(col("doc_id").as("doc_b"), col("sim").as("sim_b")), "doc_b")
-      .withColumn("hamming",
-        bit_count(col("sim_a").bitwiseXOR(col("sim_b"))).cast("long"))
-      .filter(col("hamming") <= 6)
-      .select("doc_a", "doc_b", "hamming")
-      .orderBy("doc_a", "doc_b")
-  }
-
-  /** Commit stored ∪ batch as v=N+1 — signatures recomputed for nobody
-    * and the stored artifacts carried by MANIFEST REFERENCE (zero bytes;
-    * the r14 file copy is gone): the commit writes one delta-sized sig
-    * segment and one delta-sized postings segment, the delta's postings
-    * derived from its written sig segment (the install rule). Returns
-    * the new version, or None ONLY when the batch brings no new doc_ids
-    * (the replay no-op); a lost commit race re-resolves and re-drives. */
-  def appendSimhashPostings(s: SparkSession, root: String,
-                            batchSigs: DataFrame): Option[Long] =
-    retryVersionRace() { () =>
-      val v = latestVersion(root).getOrElse(noIndex(root))
-      val sigs = readArtifact(s, root, v, "sigs", SimhashSigsSchema)
-      val fresh = batchSigs
-        .join(sigs.select("doc_id"), Seq("doc_id"), "left_anti")
-      if (fresh.limit(1).count() == 0) Right(None)
-      else {
-        val sigSeg = writeSegment(root, "sigs")(p =>
-          fresh.select("doc_id", "sim").write.mode("overwrite")
-            .parquet(p.toString))
-        val sd = s.read.schema(SimhashSigsSchema).parquet(s"$root/$sigSeg")
-        val postSeg = writeSegment(root, "postings")(p =>
-          DedupQueries.simhashBandKeys(sd).select("doc_id", "key", "band")
-            .write.mode("overwrite").partitionBy("band")
-            .parquet(p.toString))
-        // bucket sizes are a union property — the probe-ready lists
-        // rebuild whole over stored ∪ delta postings
-        val ballSeg = writeBandBalls(s, root,
-          readArtifact(s, root, v, "postings", BandPostingsSchema)
-            .unionByName(s.read.schema(BandPostingsSchema)
-              .parquet(s"$root/$postSeg")))
-        val done = installVersion(root, v + 1, _ => ()) { staging =>
-          copyTree(Paths.get(s"$root/v=$v/capcfg"), staging.resolve("capcfg"))
-          writeManifest(staging,
-            carriedRefs(root, v, Seq("sigs", "postings")) ++
-              Seq("sigs" -> sigSeg, "postings" -> postSeg,
-                "balls" -> ballSeg))
-        }
-        if (done) Right(Some(v + 1)) else Left(())
-      }
-    }
-
-  // ----- MinHash postings (q39's index) -----
-
-  /** Install the MinHash near-dup index: `sigs(doc_id, sig[64])`, its 16
-    * band-key posting lists partitioned by band, and the serving cap. */
-  def installMinhashPostings(s: SparkSession, root: String, version: Long,
-                             sigs: DataFrame,
-                             cap: Int = DedupQueries.MaxBucket,
-                             interpose: String => Unit = _ => ()): Boolean =
-    installVersion(root, version, interpose) { staging =>
-      val sigSeg = writeSegment(root, "sigs")(p =>
-        sigs.write.mode("overwrite").parquet(p.toString))
-      val st = s.read.schema(MinhashSigsSchema).parquet(s"$root/$sigSeg")
-      val postSeg = writeSegment(root, "postings")(p =>
-        minhashPostingsOf(st)
-          .write.mode("overwrite").partitionBy("band")
-          .parquet(p.toString))
-      val ballSeg = writeBandBalls(s, root,
-        s.read.schema(BandPostingsSchema).parquet(s"$root/$postSeg"))
-      s.range(1).select(lit(cap.toLong).as("cap"))
-        .write.mode("overwrite").parquet(staging.resolve("capcfg").toString)
-      writeManifest(staging,
-        Seq("sigs" -> sigSeg, "postings" -> postSeg, "balls" -> ballSeg))
-    }
 
   /** The 16 band-key posting rows of a MinHash signature frame — one
     * definition shared by install, append and batch admission. */
@@ -1464,36 +1557,7 @@ object IndexLifecycle {
       .select(col("doc_id"), explode(DedupQueries.bandKeys(col("sig"))).as("bk"))
       .select(col("doc_id"), col("bk.key").as("key"), col("bk.band").as("band"))
 
-  /** The MinHash index artifacts at a SPECIFIC version. */
-  def readMinhashIndexAt(s: SparkSession, root: String, v: Long)
-      : (DataFrame, DataFrame, Int) =
-    (readArtifact(s, root, v, "sigs", MinhashSigsSchema),
-      readArtifact(s, root, v, "postings", BandPostingsSchema),
-      scalarsAt(s, root, v, "capcfg", "cap BIGINT").head.toInt)
-
-  /** The latest committed MinHash index: (sigs, postings, cap). */
-  def readMinhashIndex(s: SparkSession, root: String)
-      : (DataFrame, DataFrame, Int) =
-    readMinhashIndexAt(s, root, latestVersion(root).getOrElse(noIndex(root)))
-
-  /** q39's pair set served FROM the stored posting lists — id-only
-    * pairing, stored-signature agreement score, no shingle walk. */
-  def minhashPairsFromStore(s: SparkSession, root: String): DataFrame =
-    minhashPairsFromStoreAt(s, root,
-      latestVersion(root).getOrElse(noIndex(root)))
-
-  /** [[minhashPairsFromStore]] pinned to a SPECIFIC store version. */
-  def minhashPairsFromStoreAt(s: SparkSession, root: String,
-                              v: Long): DataFrame = {
-    val (sigs, postings, cap) = readMinhashIndexAt(s, root, v)
-    minhashConfirm(
-      bandBallsAt(s, root, v, cap)
-        .map(balls => pairsOfBalls(balls, "doc_a", "doc_b"))
-        .getOrElse(
-          pairsOfBuckets(boundedBuckets(postings, cap), "doc_a", "doc_b")),
-      sigs)
-  }
-
+  /** q39's confirm: stored-signature agreement score. */
   private def minhashConfirm(pairs: DataFrame, sigs: DataFrame): DataFrame =
     pairs
       .join(sigs.select(col("doc_id").as("doc_a"), col("sig").as("sa")), "doc_a")
@@ -1505,123 +1569,23 @@ object IndexLifecycle {
         (col("n_match") * lit(15625L)).as("est_jaccard_ppm"))
       .orderBy("doc_a", "doc_b")
 
-  /** Admit a NEW batch against the stored MinHash postings — every q39
-    * pair of the union corpus touching the batch, union-bucket capped. */
-  def minhashBatchPairs(s: SparkSession, root: String,
-                        batchSigs: DataFrame): DataFrame =
-    minhashBatchPairsAt(s, root,
-      latestVersion(root).getOrElse(noIndex(root)), batchSigs)
-
-  /** [[minhashBatchPairs]] pinned to a SPECIFIC store version — the
-    * replay-determinism seam, [[simhashBatchPairsAt]]'s MinHash twin. */
-  def minhashBatchPairsAt(s: SparkSession, root: String, v: Long,
-                          batchSigs: DataFrame): DataFrame = {
-    val (sigs, postings, cap) = readMinhashIndexAt(s, root, v)
-    val fresh = batchSigs.join(sigs.select("doc_id"), Seq("doc_id"), "left_anti")
-    minhashConfirm(
-      bandedBatchPairs(postings, minhashPostingsOf(fresh), cap,
-        "doc_a", "doc_b"),
-      sigs.unionByName(fresh.select("doc_id", "sig")))
-  }
-
-  /** Commit stored ∪ batch MinHash signatures as v=N+1 — manifest-
-    * reference carry + delta-only segment writes,
-    * [[appendSimhashPostings]]'s discipline (None only for a true
-    * no-new-doc_ids no-op; lost races re-drive). */
-  def appendMinhashPostings(s: SparkSession, root: String,
-                            batchSigs: DataFrame): Option[Long] =
-    retryVersionRace() { () =>
-      val v = latestVersion(root).getOrElse(noIndex(root))
-      val sigs = readArtifact(s, root, v, "sigs", MinhashSigsSchema)
-      val fresh = batchSigs
-        .join(sigs.select("doc_id"), Seq("doc_id"), "left_anti")
-      if (fresh.limit(1).count() == 0) Right(None)
-      else {
-        val sigSeg = writeSegment(root, "sigs")(p =>
-          fresh.select("doc_id", "sig").write.mode("overwrite")
-            .parquet(p.toString))
-        val sd = s.read.schema(MinhashSigsSchema).parquet(s"$root/$sigSeg")
-        val postSeg = writeSegment(root, "postings")(p =>
-          minhashPostingsOf(sd)
-            .write.mode("overwrite").partitionBy("band")
-            .parquet(p.toString))
-        // bucket sizes are a union property — the probe-ready lists
-        // rebuild whole over stored ∪ delta postings
-        val ballSeg = writeBandBalls(s, root,
-          readArtifact(s, root, v, "postings", BandPostingsSchema)
-            .unionByName(s.read.schema(BandPostingsSchema)
-              .parquet(s"$root/$postSeg")))
-        val done = installVersion(root, v + 1, _ => ()) { staging =>
-          copyTree(Paths.get(s"$root/v=$v/capcfg"), staging.resolve("capcfg"))
-          writeManifest(staging,
-            carriedRefs(root, v, Seq("sigs", "postings")) ++
-              Seq("sigs" -> sigSeg, "postings" -> postSeg,
-                "balls" -> ballSeg))
-        }
-        if (done) Right(Some(v + 1)) else Left(())
-      }
-    }
-
-  // ----- sign-LSH postings (q67's index) -----
-
-  /** Install the embedding LSH index: per-table BASE codes partitioned
-    * by table, plus (bits, tables), plus the probe-ready `balls` lists
-    * (r17 — the raw probed expansion would 9× the artifact, but the
-    * BOUNDED bucket lists drop singleton and over-cap mass, and storing
-    * them removes the expansion AND the bucket-count window from every
-    * serve; measured −50% on q285/q293). The float vectors are NOT
-    * stored: the exact re-check is an id-bounded corpus lookup, exactly
-    * q281's re-rank discipline. */
-  def installLshPostings(s: SparkSession, root: String, version: Long,
-                         vecs: DataFrame, bits: Int,
-                         tables: Int = DedupQueries.LshTables,
-                         interpose: String => Unit = _ => ()): Boolean =
-    installVersion(root, version, interpose) { staging =>
-      val codeSeg = writeSegment(root, "codes")(p =>
-        DedupQueries.lshSigCodes(vecs, bits, tables)
-          .select(col("vec_id"), posexplode(col("codes")).as(Seq("tbl", "code")))
-          .select(col("vec_id"), col("code"), col("tbl"))
-          .write.mode("overwrite").partitionBy("tbl")
-          .parquet(p.toString))
-      val ballSeg = writeLshBalls(s, root,
-        s.read.schema(LshCodesSchema).parquet(s"$root/$codeSeg"), bits)
-      s.range(1).select(lit(bits.toLong).as("bits"),
-          lit(tables.toLong).as("tables"))
-        .write.mode("overwrite").parquet(staging.resolve("lshcfg").toString)
-      writeManifest(staging, Seq("codes" -> codeSeg, "balls" -> ballSeg))
-    }
+  /** Per-table sign-LSH codes (vec_id, tbl, code) of `vecs`. */
+  private def lshCodeRows(vecs: DataFrame, bits: Int, tables: Int): DataFrame =
+    DedupQueries.lshSigCodes(vecs, bits, tables)
+      .select(col("vec_id"), posexplode(col("codes")).as(Seq("tbl", "code")))
 
   /** The LSH serve's probe-ready layout, derived from a version's FULL
     * code set: Hamming-1 probe balls expanded, buckets bounded to the
-    * serve's own [2, MaxBucket], ids collected sorted — the rows
-    * [[lshPairsFromStoreAt]] pairs directly, with no per-serve expansion
-    * or bucket-count window. Bucket membership is a whole-index property
-    * (a takedown can pull an over-cap bucket back under the bound), so
-    * every codes-changing commit rebuilds this segment whole; a cap/dial
-    * carry or compaction references it unchanged. */
+    * serve's own [2, MaxBucket], ids collected sorted — rows the serve
+    * pairs directly, with no per-serve expansion or bucket-count window.
+    * Bucket membership is a whole-index property (a batch member can
+    * push a stored bucket past the bound, a takedown can pull one back
+    * under it), so every codes-changing commit rebuilds it whole. */
   private def lshBallsOf(codes: DataFrame, bits: Int): DataFrame =
     ballsOfBounded(boundedBuckets(lshProbed(codes, bits)
       .withColumnRenamed("tbl", "band")
       .withColumnRenamed("code", "key")
       .withColumnRenamed("vec_id", "doc_id"), DedupQueries.MaxBucket))
-
-  private def writeLshBalls(s: SparkSession, root: String,
-                            codes: DataFrame, bits: Int): String =
-    writeSegment(root, "balls")(p =>
-      lshBallsOf(codes, bits)
-        .write.mode("overwrite").partitionBy("band").parquet(p.toString))
-
-  /** The LSH index artifacts at a SPECIFIC version. */
-  def readLshIndexAt(s: SparkSession, root: String,
-                     v: Long): (DataFrame, Int, Int) = {
-    val cfg = scalarsAt(s, root, v, "lshcfg", LshCfgSchema)
-    (readArtifact(s, root, v, "codes", LshCodesSchema),
-      cfg(0).toInt, cfg(1).toInt)
-  }
-
-  /** The latest committed LSH index: (codes, bits, tables). */
-  def readLshIndex(s: SparkSession, root: String): (DataFrame, Int, Int) =
-    readLshIndexAt(s, root, latestVersion(root).getOrElse(noIndex(root)))
 
   /** Symmetric Hamming-1 multi-probe expansion of a stored code frame —
     * the read-side twin of [[DedupQueries.lshBoundedKeys]]'s expansion. */
@@ -1631,33 +1595,7 @@ object IndexLifecycle {
         (0 until bits).map(b => col("code").bitwiseXOR(lit(1 << b))): _*))
         .as("code"))
 
-  /** q67's pair set served FROM the stored codes: probe expansion and
-    * bucket capping over the index artifact, exact cosine re-check via
-    * an id-bounded lookup into the corpus at `dir` — the embeddings scan
-    * feeds ONLY the re-check join, never a signature computation. */
-  def lshPairsFromStore(s: SparkSession, root: String, dir: String): DataFrame =
-    lshPairsFromStoreAt(s, root,
-      latestVersion(root).getOrElse(noIndex(root)), dir)
-
-  /** [[lshPairsFromStore]] pinned to a SPECIFIC store version. The
-    * candidate side reads the stored probe-ready `balls` lists (r17):
-    * no Hamming-1 re-expansion and no bucket-count window in the serve
-    * plan — stored rows pair directly, then the exact cosine re-check
-    * runs as before. Versions committed by older writers (no balls
-    * artifact) fall back to deriving the same frame from codes. */
-  def lshPairsFromStoreAt(s: SparkSession, root: String, v: Long,
-                          dir: String): DataFrame = {
-    val balls =
-      if (hasArtifact(root, v, "balls"))
-        readArtifact(s, root, v, "balls", LshBallsSchema)
-      else {
-        val (codes, bits, _) = readLshIndexAt(s, root, v)
-        lshBallsOf(codes, bits)
-      }
-    lshConfirm(pairsOfBalls(balls, "vec_a", "vec_b"),
-      DedupQueries.normVecs(s, dir))
-  }
-
+  /** q67's confirm: exact cosine over the id-bounded corpus lookup `e`. */
   private def lshConfirm(pairs: DataFrame, e: DataFrame): DataFrame = {
     import graft.functions.VectorFunctions.dotd
     pairs
@@ -1671,38 +1609,105 @@ object IndexLifecycle {
       .orderBy("vec_a", "vec_b")
   }
 
-  /** Admit a NEW embedding batch against the stored LSH postings: codes
-    * computed batch-side with the INSTALLED planes/width, probe balls
-    * meet the stored lists, exact re-check over the id-bounded corpus
-    * lookup at `dir` ∪ `batchVecs(vec_id, v, nrm)` itself — a truly new
-    * vector's floats exist only in the batch until it is appended, so
-    * the confirm side must union both (dedup by id covers re-offered
-    * batches whose rows already landed at `dir`). */
-  def lshBatchPairs(s: SparkSession, root: String, dir: String,
-                    batchVecs: DataFrame): DataFrame = {
-    val (codes, bits, tables) = readLshIndex(s, root)
-    // batch-sized, staged: the batch's code walk and the confirm union
-    // side read one evaluation. Safe to stage here (unlike the simhash/
-    // minhash twins, which the streaming ingest calls per micro-batch and
-    // where an unreleasable checkpoint per epoch would accumulate): this
-    // verb is batch-only — q291 and IndexMaintBench.
-    val fresh = graft.Staging.stage(
-      batchVecs.join(codes.select("vec_id").distinct(),
-        Seq("vec_id"), "left_anti"))
-    val keys = lshProbed(
-      DedupQueries.lshSigCodes(fresh, bits, tables)
-        .select(col("vec_id"), posexplode(col("codes")).as(Seq("tbl", "code"))),
-      bits)
-      .withColumnRenamed("tbl", "band").withColumnRenamed("code", "key")
-      .withColumnRenamed("vec_id", "doc_id")
-    val stored = lshProbed(codes, bits)
-      .withColumnRenamed("tbl", "band").withColumnRenamed("code", "key")
-      .withColumnRenamed("vec_id", "doc_id")
-    lshConfirm(
-      bandedBatchPairs(stored, keys, DedupQueries.MaxBucket, "vec_a", "vec_b"),
-      DedupQueries.normVecs(s, dir)
-        .unionByName(fresh.select("vec_id", "v", "nrm"))
-        .dropDuplicates("vec_id"))
+  /** Every serving cap the CDC pillar can carry its probe-ready layout
+    * for: the dial sweep's max. df above this bound never reaches any
+    * servable universe, so the stored lists and census can omit it —
+    * which is what keeps a corpus-wide boilerplate chunk from storing an
+    * n-doc id list. A custom cap past the bound serves via the fallback
+    * (df re-priced from chunks). */
+  private val CdcStoredDfBound: Int = DedupQueries.CapSweep.max
+
+  /** The CDC serve's probe-ready layout, derived from a version's FULL
+    * chunk set and CAP-INDEPENDENT (both frames carry `df`, bounded at
+    * [[CdcStoredDfBound]], so any servable cap binds at read by a pushed
+    * df filter and a zero-byte cap swap carries the segments):
+    *  - `buckets(cfp, df, ds)` — per-fingerprint sorted member lists for
+    *    df ∈ [2, bound], the rows the serve pairs directly;
+    *  - `doccnt(doc_id, df, cnt)` — per-doc census of chunk df values,
+    *    whose df ≤ cap partial sums are exactly the serve's per-doc
+    *    surviving sizes.
+    * df is a whole-corpus property, so every chunks-changing commit
+    * rebuilds both whole — the one-window pass a single serve used to
+    * pay, paid once per commit instead. */
+  private def cdcServeLayout(chunks: DataFrame): Seq[DataFrame] = {
+    import org.apache.spark.sql.expressions.Window
+    val withDf = chunks
+      .withColumn("df", count(lit(1)).over(Window.partitionBy("cfp")))
+    Seq(
+      withDf.filter(col("df").between(2, CdcStoredDfBound))
+        .groupBy("cfp", "df")
+        .agg(sort_array(collect_list(col("doc_id"))).as("ds"))
+        .withColumn("bkt", pmod(col("cfp"), lit(16L))),
+      withDf.filter(col("df") <= CdcStoredDfBound)
+        .groupBy("doc_id", "df").agg(count(lit(1)).as("cnt")))
+  }
+
+  /** q253's containment pairs served FROM the stored chunk postings: the
+    * stored member lists pair directly under a pushed df ≤ cap filter
+    * and per-doc sizes come from the stored census — no corpus-wide df
+    * window and no per-doc size window in the serve plan. Legacy
+    * versions (or a custom cap past the stored bound) fall back to
+    * re-pricing df from the chunk rows. */
+  private def cdcServe(ix: PostingsIndex): DataFrame = {
+    import org.apache.spark.sql.expressions.Window
+    val cap = ix.cfg.head.toInt
+    if (cap <= CdcStoredDfBound && ix.has("buckets") && ix.has("doccnt")) {
+      val buckets = ix("buckets").filter(col("df") <= cap)
+      val sizes = ix("doccnt").filter(col("df") <= cap)
+        .groupBy("doc_id").agg(sum(col("cnt")).as("n"))
+      MultimodalQueries.cdcContainmentPairsOfBuckets(buckets, sizes)
+        .orderBy("doc_a", "doc_b")
+    } else
+      MultimodalQueries.cdcContainmentPairsOfChunks(
+        ix("chunks").select("doc_id", "cfp").withColumn("df",
+          count(lit(1)).over(Window.partitionBy("cfp"))),
+        cap)
+        .orderBy("doc_a", "doc_b")
+  }
+
+  /** Admit a NEW media batch's chunks against the stored chunk postings:
+    * df, surviving per-doc sizes and shared counts are priced over the
+    * stored ∪ batch union (index-level), and every union pair touching
+    * the batch is graded by exactly q253's containment rule. */
+  private def cdcAdmit(ix: PostingsIndex, batchChunks: DataFrame): DataFrame = {
+    import org.apache.spark.sql.expressions.Window
+    val chunks = ix("chunks").select("doc_id", "cfp")
+    val cap = ix.cfg.head.toInt
+    // batch-sized, staged: the union, the batch-membership flag and the
+    // touched-bucket census all read the batch's payload chunk walk once
+    // (batch-only verb — q292 and IndexMaintBench — so the staged block
+    // cannot accumulate per streaming epoch)
+    val fresh = graft.Staging.stage(batchChunks)
+    val union = chunks.unionByName(fresh)
+      .withColumn("df", count(lit(1)).over(Window.partitionBy("cfp")))
+    val surv = union.filter(col("df") <= cap)
+      .withColumn("n", count(lit(1)).over(Window.partitionBy("doc_id")))
+      .join(fresh.select("doc_id").distinct().withColumn("isb", lit(true)),
+        Seq("doc_id"), "left")
+      .withColumn("isb", coalesce(col("isb"), lit(false)))
+    // candidate buckets: only fingerprints a batch doc owns can seed a
+    // pair touching the batch, and every shared chunk of such a pair IS
+    // batch-owned — the restriction is lossless for touching pairs
+    val hit = fresh.select("cfp").distinct()
+    surv.filter(col("df") >= 2).join(hit, Seq("cfp"))
+      .groupBy("cfp")
+      .agg(sort_array(collect_list(struct(col("doc_id"), col("n"),
+        col("isb")))).as("ds"))
+      .select(explode(flatten(transform(col("ds"), (a, i) =>
+        transform(slice(col("ds"), i + 2, size(col("ds"))), b =>
+          struct(a("doc_id").as("doc_a"), b("doc_id").as("doc_b"),
+            a("n").as("na"), b("n").as("nb"),
+            (a("isb") || b("isb")).as("touch")))))).as("p"))
+      .filter(col("p.touch"))
+      .select(col("p.doc_a"), col("p.doc_b"), col("p.na"), col("p.nb"))
+      .groupBy("doc_a", "doc_b")
+      .agg(count(lit(1)).as("shared"),
+        first(col("na")).as("na"), first(col("nb")).as("nb"))
+      .withColumn("containment_ppm",
+        expr("1000000 * shared div least(na, nb)"))
+      .filter(col("containment_ppm") >= MultimodalQueries.CdcContainmentFloorPpm)
+      .select(col("doc_a"), col("doc_b"), col("shared"), col("containment_ppm"))
+      .orderBy("doc_a", "doc_b")
   }
 
   // ----- candidate-budget guard on the LSH confirm path -----
@@ -1740,21 +1745,18 @@ object IndexLifecycle {
     * audit prices exactly the work the serve does. */
   def lshConfirmAudit(s: SparkSession, root: String,
                       bucketBudgetPairs: Long = Long.MaxValue): DataFrame = {
-    val v = latestVersion(root).getOrElse(noIndex(root))
+    val ix = readPostings(s, root, LshLayout)
     // the audit prices exactly the serve's buckets — which the store now
     // keeps probe-ready, so the reading is a scan of bucket-sized rows
     // (legacy versions derive the same frame from codes)
     val sized =
-      if (hasArtifact(root, v, "balls"))
-        readArtifact(s, root, v, "balls", LshBallsSchema)
-          .select(col("band").as("tbl"), col("key").as("code"),
-            size(col("ids")).cast("long").as("bsz"))
-      else {
-        val (codes, bits, _) = readLshIndexAt(s, root, v)
-        lshProbed(codes, bits)
+      if (ix.has("balls"))
+        ix("balls").select(col("band").as("tbl"), col("key").as("code"),
+          size(col("ids")).cast("long").as("bsz"))
+      else
+        lshProbed(ix("codes"), ix.cfg(0).toInt)
           .groupBy("tbl", "code").agg(count(lit(1)).as("bsz"))
           .filter(col("bsz").between(2, DedupQueries.MaxBucket))
-      }
     sized
       .withColumn("cand_pairs",
         (col("bsz") * (col("bsz") - 1)).divide(2).cast("long"))
@@ -1790,436 +1792,12 @@ object IndexLifecycle {
     val reading = lshConfirmGuard(s, root, budgetPairs)
     if (!reading.overBudget) (reading, None)
     else (reading, retryVersionRace() { () =>
-      val v = latestVersion(root).getOrElse(noIndex(root))
-      val rows = lshPostingsTablesAuditAt(s, root, v, dir).collect()
-      def at(r: org.apache.spark.sql.Row, c: String) =
-        r.getLong(rows.head.fieldIndex(c))
-      val installed = rows.find(r =>
-        r.getBoolean(r.fieldIndex("installed"))).map(at(_, "tables"))
-      rows.find(r => r.getBoolean(r.fieldIndex("chosen")))
-        .map(at(_, "tables")) match {
-        case Some(c) if installed.forall(_ != c) =>
-          val bits = scalarsAt(s, root, v, "lshcfg", LshCfgSchema)(0).toInt
-          if (installLshPostings(s, root, v + 1,
-            DedupQueries.normVecs(s, dir), bits, c.toInt)) Right(Some(v + 1))
-          else Left(())
-        case _ => Right(None) // no cheaper viable count: keep flagging
-      }
+      val p = LshPostings(dir)
+      val ix = readPostings(s, root, p.layout)
+      // no cheaper viable count: keep flagging
+      chosenOver(postingsAuditAt(ix, p, ()).collect(), "tables")
+        .map(reinstall(ix, p, _)).getOrElse(Right(None))
     })
-  }
-
-  /** Commit stored ∪ batch LSH codes as v=N+1 — batch codes derive from
-    * the INSTALLED planes/width so old and new rows address one code
-    * family; manifest-reference carry + one delta-sized code segment
-    * (None only for a true no-new-vec_ids no-op; lost races re-drive). */
-  def appendLshPostings(s: SparkSession, root: String,
-                        batchVecs: DataFrame): Option[Long] =
-    retryVersionRace() { () =>
-      val v = latestVersion(root).getOrElse(noIndex(root))
-      val cfg = scalarsAt(s, root, v, "lshcfg", LshCfgSchema)
-      val (bits, tables) = (cfg(0).toInt, cfg(1).toInt)
-      val codes = readArtifact(s, root, v, "codes", LshCodesSchema)
-      val fresh = batchVecs.join(codes.select("vec_id").distinct(),
-        Seq("vec_id"), "left_anti")
-      if (fresh.limit(1).count() == 0) Right(None)
-      else {
-        val codeSeg = writeSegment(root, "codes")(p =>
-          DedupQueries.lshSigCodes(fresh, bits, tables)
-            .select(col("vec_id"), posexplode(col("codes")).as(Seq("tbl", "code")))
-            .select(col("vec_id"), col("code"), col("tbl"))
-            .write.mode("overwrite").partitionBy("tbl")
-            .parquet(p.toString))
-        // probe-ready balls rebuild whole over stored ∪ delta: bucket
-        // membership under the [2, cap] bound is a union property, not a
-        // per-segment one (a batch member can push a stored bucket into —
-        // or past — the bound)
-        val ballSeg = writeLshBalls(s, root, codes.unionByName(
-          s.read.schema(LshCodesSchema).parquet(s"$root/$codeSeg")), bits)
-        val done = installVersion(root, v + 1, _ => ()) { staging =>
-          copyTree(Paths.get(s"$root/v=$v/lshcfg"), staging.resolve("lshcfg"))
-          writeManifest(staging,
-            carriedRefs(root, v, Seq("codes")) :+ ("codes" -> codeSeg)
-              :+ ("balls" -> ballSeg))
-        }
-        if (done) Right(Some(v + 1)) else Left(())
-      }
-    }
-
-  // ----- CDC chunk postings (q253's index) -----
-
-  /** Install the CDC chunk index: each doc's DISTINCT chunk fingerprints
-    * (ONE payload walk, at install time only) partitioned by a 16-way
-    * fingerprint bucket, plus the serving cap. `df` is deliberately NOT
-    * stored — document frequency is a property of the whole corpus,
-    * recomputed index-level at read so an append never serves stale
-    * frequencies. */
-  def installCdcPostings(s: SparkSession, root: String, version: Long,
-                         media: DataFrame,
-                         cap: Int = DedupQueries.MaxBucket,
-                         interpose: String => Unit = _ => ()): Boolean =
-    installVersion(root, version, interpose) { staging =>
-      val chunkSeg = writeSegment(root, "chunks")(p =>
-        MultimodalQueries.cdcDocChunks(media)
-          .withColumn("bkt", pmod(col("cfp"), lit(16L)))
-          .write.mode("overwrite").partitionBy("bkt")
-          .parquet(p.toString))
-      val derived = writeCdcServeLayout(s, root,
-        s.read.schema(CdcChunksSchema).parquet(s"$root/$chunkSeg")
-          .select("doc_id", "cfp"))
-      s.range(1).select(lit(cap.toLong).as("cap"))
-        .write.mode("overwrite").parquet(staging.resolve("capcfg").toString)
-      writeManifest(staging, ("chunks" -> chunkSeg) +: derived)
-    }
-
-  /** Every serving cap the CDC pillar can carry its probe-ready layout
-    * for: the dial sweep's max. df above this bound never reaches any
-    * servable universe, so the stored lists and census can omit it —
-    * which is what keeps a corpus-wide boilerplate chunk from storing an
-    * n-doc id list. A custom cap past the bound serves via the fallback
-    * (df re-priced from chunks). */
-  private val CdcStoredDfBound: Int = DedupQueries.CapSweep.max
-
-  /** The CDC serve's probe-ready layout, derived from a version's FULL
-    * chunk set and CAP-INDEPENDENT (both frames carry `df`, bounded at
-    * [[CdcStoredDfBound]], so any servable cap binds at read by a pushed
-    * df filter and a zero-byte cap swap carries the segments):
-    *  - `buckets(cfp, df, ds)` — per-fingerprint sorted member lists for
-    *    df ∈ [2, bound], the rows the serve pairs directly;
-    *  - `doccnt(doc_id, df, cnt)` — per-doc census of chunk df values,
-    *    whose df ≤ cap partial sums are exactly the serve's per-doc
-    *    surviving sizes (previously a full-posting window per serve).
-    * df is a whole-corpus property, so every chunks-changing commit
-    * rebuilds both segments whole — the same one-window pass a single
-    * serve used to pay, paid once per commit instead. */
-  private def writeCdcServeLayout(s: SparkSession, root: String,
-                                  chunks: DataFrame): Seq[(String, String)] = {
-    import org.apache.spark.sql.expressions.Window
-    val withDf = chunks
-      .withColumn("df", count(lit(1)).over(Window.partitionBy("cfp")))
-    val bucketSeg = writeSegment(root, "buckets")(p =>
-      withDf.filter(col("df").between(2, CdcStoredDfBound))
-        .groupBy("cfp", "df")
-        .agg(sort_array(collect_list(col("doc_id"))).as("ds"))
-        .withColumn("bkt", pmod(col("cfp"), lit(16L)))
-        .write.mode("overwrite").partitionBy("bkt").parquet(p.toString))
-    val cntSeg = writeSegment(root, "doccnt")(p =>
-      withDf.filter(col("df") <= CdcStoredDfBound)
-        .groupBy("doc_id", "df").agg(count(lit(1)).as("cnt"))
-        .write.mode("overwrite").parquet(p.toString))
-    Seq("buckets" -> bucketSeg, "doccnt" -> cntSeg)
-  }
-
-  /** The CDC index artifacts at a SPECIFIC version. */
-  def readCdcIndexAt(s: SparkSession, root: String,
-                     v: Long): (DataFrame, Int) =
-    (readArtifact(s, root, v, "chunks", CdcChunksSchema)
-      .select("doc_id", "cfp"),
-      scalarsAt(s, root, v, "capcfg", "cap BIGINT").head.toInt)
-
-  /** The latest committed CDC index: (chunks, cap). */
-  def readCdcIndex(s: SparkSession, root: String): (DataFrame, Int) =
-    readCdcIndexAt(s, root, latestVersion(root).getOrElse(noIndex(root)))
-
-  /** q253's containment pairs served FROM the stored chunk postings —
-    * df and per-doc sizes recomputed index-level, no payload anywhere. */
-  def cdcPairsFromStore(s: SparkSession, root: String): DataFrame =
-    cdcPairsFromStoreAt(s, root,
-      latestVersion(root).getOrElse(noIndex(root)))
-
-  /** [[cdcPairsFromStore]] pinned to a SPECIFIC store version. The serve
-    * reads the stored probe-ready layout (r17): member lists pair
-    * directly under a pushed df ≤ cap filter and per-doc sizes come from
-    * the stored census — no corpus-wide df window and no per-doc size
-    * window in the serve plan. Legacy versions (or a custom cap past the
-    * stored bound) fall back to re-pricing df from the chunk rows. */
-  def cdcPairsFromStoreAt(s: SparkSession, root: String,
-                          v: Long): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val cap = scalarsAt(s, root, v, "capcfg", "cap BIGINT").head.toInt
-    if (cap <= CdcStoredDfBound && hasArtifact(root, v, "buckets") &&
-      hasArtifact(root, v, "doccnt")) {
-      val buckets = readArtifact(s, root, v, "buckets", CdcBucketsSchema)
-        .filter(col("df") <= cap)
-      val sizes = readArtifact(s, root, v, "doccnt", CdcDocCntSchema)
-        .filter(col("df") <= cap)
-        .groupBy("doc_id").agg(sum(col("cnt")).as("n"))
-      MultimodalQueries.cdcContainmentPairsOfBuckets(buckets, sizes)
-        .orderBy("doc_a", "doc_b")
-    } else {
-      val (chunks, _) = readCdcIndexAt(s, root, v)
-      MultimodalQueries.cdcContainmentPairsOfChunks(
-        chunks.withColumn("df",
-          count(lit(1)).over(Window.partitionBy("cfp"))),
-        cap)
-        .orderBy("doc_a", "doc_b")
-    }
-  }
-
-  /** Admit a NEW media batch against the stored chunk postings: the
-    * batch's chunks come from ITS payload walk only; df, surviving
-    * per-doc sizes and shared counts are priced over the stored ∪ batch
-    * union (index-level), and every union pair touching the batch is
-    * graded by exactly q253's containment rule. */
-  def cdcBatchPairs(s: SparkSession, root: String,
-                    batchMedia: DataFrame): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val (chunks, cap) = readCdcIndex(s, root)
-    // batch-sized, staged: the union, the batch-membership flag and the
-    // touched-bucket census all read the batch's payload chunk walk once
-    // (batch-only verb — q292 and IndexMaintBench — so the staged block
-    // cannot accumulate per streaming epoch)
-    val fresh = graft.Staging.stage(
-      MultimodalQueries.cdcDocChunks(batchMedia)
-        .join(chunks.select("doc_id").distinct(), Seq("doc_id"), "left_anti"))
-    val union = chunks.unionByName(fresh)
-      .withColumn("df", count(lit(1)).over(Window.partitionBy("cfp")))
-    val surv = union.filter(col("df") <= cap)
-      .withColumn("n", count(lit(1)).over(Window.partitionBy("doc_id")))
-      .join(fresh.select("doc_id").distinct().withColumn("isb", lit(true)),
-        Seq("doc_id"), "left")
-      .withColumn("isb", coalesce(col("isb"), lit(false)))
-    // candidate buckets: only fingerprints a batch doc owns can seed a
-    // pair touching the batch, and every shared chunk of such a pair IS
-    // batch-owned — the restriction is lossless for touching pairs
-    val hit = fresh.select("cfp").distinct()
-    surv.filter(col("df") >= 2).join(hit, Seq("cfp"))
-      .groupBy("cfp")
-      .agg(sort_array(collect_list(struct(col("doc_id"), col("n"),
-        col("isb")))).as("ds"))
-      .select(explode(flatten(transform(col("ds"), (a, i) =>
-        transform(slice(col("ds"), i + 2, size(col("ds"))), b =>
-          struct(a("doc_id").as("doc_a"), b("doc_id").as("doc_b"),
-            a("n").as("na"), b("n").as("nb"),
-            (a("isb") || b("isb")).as("touch")))))).as("p"))
-      .filter(col("p.touch"))
-      .select(col("p.doc_a"), col("p.doc_b"), col("p.na"), col("p.nb"))
-      .groupBy("doc_a", "doc_b")
-      .agg(count(lit(1)).as("shared"),
-        first(col("na")).as("na"), first(col("nb")).as("nb"))
-      .withColumn("containment_ppm",
-        expr("1000000 * shared div least(na, nb)"))
-      .filter(col("containment_ppm") >= MultimodalQueries.CdcContainmentFloorPpm)
-      .select(col("doc_a"), col("doc_b"), col("shared"), col("containment_ppm"))
-      .orderBy("doc_a", "doc_b")
-  }
-
-  /** Commit stored ∪ batch chunk postings as v=N+1 — the stored side
-    * carries by manifest reference (zero bytes), the batch side is one
-    * batch-local payload walk written as one delta-sized segment (None
-    * only for a true no-new-doc_ids no-op; lost races re-drive). */
-  def appendCdcPostings(s: SparkSession, root: String,
-                        batchMedia: DataFrame): Option[Long] =
-    retryVersionRace() { () =>
-      val v = latestVersion(root).getOrElse(noIndex(root))
-      val chunks = readArtifact(s, root, v, "chunks", CdcChunksSchema)
-        .select("doc_id", "cfp")
-      val fresh = MultimodalQueries.cdcDocChunks(batchMedia)
-        .join(chunks.select("doc_id").distinct(), Seq("doc_id"), "left_anti")
-      if (fresh.limit(1).count() == 0) Right(None)
-      else {
-        val chunkSeg = writeSegment(root, "chunks")(p =>
-          fresh.withColumn("bkt", pmod(col("cfp"), lit(16L)))
-            .write.mode("overwrite").partitionBy("bkt")
-            .parquet(p.toString))
-        // df is a whole-corpus property: the probe-ready layout rebuilds
-        // over stored ∪ delta (the same window pass one un-staged serve
-        // used to pay per read)
-        val derived = writeCdcServeLayout(s, root, chunks.unionByName(
-          s.read.schema(CdcChunksSchema).parquet(s"$root/$chunkSeg")
-            .select("doc_id", "cfp")))
-        val done = installVersion(root, v + 1, _ => ()) { staging =>
-          copyTree(Paths.get(s"$root/v=$v/capcfg"), staging.resolve("capcfg"))
-          writeManifest(staging,
-            (carriedRefs(root, v, Seq("chunks")) :+
-              ("chunks" -> chunkSeg)) ++ derived)
-        }
-        if (done) Right(Some(v + 1)) else Left(())
-      }
-    }
-
-  // ----- serving-parameter lifecycle for the postings pillars -----
-  //
-  // Each postings pillar serves at an operating parameter recorded in
-  // its own version (capcfg / lshcfg), and the standalone dial pillars'
-  // audit/recalibrate discipline applies here too — the difference is
-  // WHAT a recalibration rewrites: the cap families' signature/posting
-  // artifacts are cap-INDEPENDENT (the cap binds at serve time), so a
-  // cap swap commits v=N+1 with the SAME files by copy and only a new
-  // capcfg; the LSH table count shapes the code artifact itself, so its
-  // recalibration is the one that honestly re-codes.
-
-  // Every recalibration resolves its version ONCE and audits, carries
-  // and commits against that same v=N directory — two `latestVersion`
-  // reads around a concurrent install would audit v=N and carry v=N+1's
-  // files (the r13 drift-audit race, pre-empted here).
-
-  /** The installed SimHash postings pillar's serving-cap health — the
-    * q265 dial over the STORED signature frame (the pillar carries
-    * everything this dial needs: no corpus access at all), rows marked
-    * `installed`/`recalibrate` exactly as [[capDriftAudit]]. */
-  def simhashPostingsCapAudit(s: SparkSession, root: String): DataFrame =
-    simhashPostingsCapAuditAt(s, root,
-      latestVersion(root).getOrElse(noIndex(root)))
-
-  private def simhashPostingsCapAuditAt(s: SparkSession, root: String,
-                                        v: Long): DataFrame = {
-    val sigs = readArtifact(s, root, v, "sigs", SimhashSigsSchema)
-    val cap = scalarsAt(s, root, v, "capcfg", "cap BIGINT").head
-    DedupQueries.bucketCapDial(sigs)
-      .withColumn("installed", col("cap") === cap)
-      .withColumn("recalibrate", col("cap") === cap && !col("meets_floor"))
-  }
-
-  /** Closed loop for the SimHash postings pillar's cap: a sagging cap
-    * commits the dial's new choice as v=N+1 with sigs/postings carried
-    * by manifest reference — a serve-parameter swap never rewrites (or
-    * copies) the index. */
-  def recalibrateSimhashPostingsCap(s: SparkSession,
-                                    root: String): Option[Long] =
-    retryVersionRace() { () =>
-      val v = latestVersion(root).getOrElse(noIndex(root))
-      chosenIfSagging(simhashPostingsCapAuditAt(s, root, v), "cap") match {
-        case None => Right(None)
-        case Some(cap) =>
-          capOnlyVersion(s, root, v, Seq("sigs", "postings") ++
-            Seq("balls").filter(hasArtifact(root, v, _)), cap)
-            .map(n => Some(n)).toRight(())
-      }
-    }
-
-  /** The installed MinHash postings pillar's serving-cap health — q273's
-    * dial (ground truth needs the corpus shingles at `dir`) read against
-    * the stored cap. */
-  def minhashPostingsCapAudit(s: SparkSession, root: String,
-                              dir: String): DataFrame =
-    minhashPostingsCapAuditAt(s, root,
-      latestVersion(root).getOrElse(noIndex(root)), dir)
-
-  private def minhashPostingsCapAuditAt(s: SparkSession, root: String,
-                                        v: Long, dir: String): DataFrame = {
-    val cap = scalarsAt(s, root, v, "capcfg", "cap BIGINT").head
-    DedupQueries.minhashCapDial(s, dir)
-      .withColumn("installed", col("cap") === cap)
-      .withColumn("recalibrate", col("cap") === cap && !col("meets_floor"))
-  }
-
-  /** Closed loop for the MinHash postings pillar's cap — reference-carry. */
-  def recalibrateMinhashPostingsCap(s: SparkSession, root: String,
-                                    dir: String): Option[Long] =
-    retryVersionRace() { () =>
-      val v = latestVersion(root).getOrElse(noIndex(root))
-      chosenIfSagging(minhashPostingsCapAuditAt(s, root, v, dir), "cap") match {
-        case None => Right(None)
-        case Some(cap) =>
-          capOnlyVersion(s, root, v, Seq("sigs", "postings") ++
-            Seq("balls").filter(hasArtifact(root, v, _)), cap)
-            .map(n => Some(n)).toRight(())
-      }
-    }
-
-  /** The installed CDC postings pillar's serving-cap health — q276's
-    * dial over `media` read against the stored cap. */
-  def cdcPostingsCapAudit(s: SparkSession, root: String,
-                          media: DataFrame): DataFrame =
-    cdcPostingsCapAuditAt(s, root,
-      latestVersion(root).getOrElse(noIndex(root)), media)
-
-  private def cdcPostingsCapAuditAt(s: SparkSession, root: String, v: Long,
-                                    media: DataFrame): DataFrame = {
-    val cap = scalarsAt(s, root, v, "capcfg", "cap BIGINT").head
-    MultimodalQueries.cdcCapDial(media)
-      .withColumn("installed", col("cap") === cap)
-      .withColumn("recalibrate", col("cap") === cap && !col("meets_floor"))
-  }
-
-  /** Closed loop for the CDC postings pillar's cap — reference-carry. */
-  def recalibrateCdcPostingsCap(s: SparkSession, root: String,
-                                media: DataFrame): Option[Long] =
-    retryVersionRace() { () =>
-      val v = latestVersion(root).getOrElse(noIndex(root))
-      chosenIfSagging(cdcPostingsCapAuditAt(s, root, v, media), "cap") match {
-        case None => Right(None)
-        case Some(cap) =>
-          // the probe-ready layout is cap-independent (df-bounded at the
-          // sweep max), so a cap swap carries it by reference too —
-          // guarded on presence so a legacy version doesn't mint a
-          // phantom reference
-          capOnlyVersion(s, root, v, Seq("chunks") ++
-            Seq("buckets", "doccnt").filter(hasArtifact(root, v, _)), cap)
-            .map(n => Some(n)).toRight(())
-      }
-    }
-
-  /** The installed LSH postings pillar's table-count health — q268's
-    * dial read against the stored count. */
-  def lshPostingsTablesAudit(s: SparkSession, root: String,
-                             dir: String): DataFrame =
-    lshPostingsTablesAuditAt(s, root,
-      latestVersion(root).getOrElse(noIndex(root)), dir)
-
-  private def lshPostingsTablesAuditAt(s: SparkSession, root: String,
-                                       v: Long, dir: String): DataFrame = {
-    val cfg = scalarsAt(s, root, v, "lshcfg", LshCfgSchema)
-    val n = graft.Tables.parquetRowCount(s, dir, "embeddings")
-    DedupQueries.lshTableDial(DedupQueries.normVecs(s, dir), cfg(0).toInt, n)
-      .withColumn("installed", col("tables") === cfg(1))
-      .withColumn("recalibrate",
-        col("tables") === cfg(1) && !col("meets_floor"))
-  }
-
-  /** Closed loop for the LSH table count: unlike the cap families, the
-    * table count SHAPES the code artifact, so a recalibration honestly
-    * re-codes the corpus at the chosen count (bits carried from the
-    * audited version). */
-  def recalibrateLshPostingsTables(s: SparkSession, root: String,
-                                   dir: String): Option[Long] =
-    retryVersionRace() { () =>
-      val v = latestVersion(root).getOrElse(noIndex(root))
-      chosenIfSagging(lshPostingsTablesAuditAt(s, root, v, dir), "tables") match {
-        case None => Right(None)
-        case Some(t) =>
-          val bits = scalarsAt(s, root, v, "lshcfg", LshCfgSchema)(0).toInt
-          if (installLshPostings(s, root, v + 1,
-            DedupQueries.normVecs(s, dir), bits, t)) Right(Some(v + 1))
-          else Left(())
-      }
-    }
-
-  /** The dial's chosen value when the INSTALLED row sags — None when the
-    * audit reads green, when the sweep flags a sag but elects no viable
-    * replacement (every swept value misses the floor — the r14
-    * advisory: "no viable value" is a verdict, not a crash), and when
-    * the chosen value EQUALS the installed one (the sweep's fallback
-    * choice — reinstalling the same value would commit a new version
-    * every nightly pass forever, pure version churn; the caller keeps
-    * serving the installed value and the audit keeps flagging, exactly
-    * [[lshGuardedMaintenance]]'s `installed.forall(_ != c)` rule).
-    * Shared by every postings-pillar recalibration; the ≤sweep-sized
-    * collect is the sanctioned control-plane read. */
-  private def chosenIfSagging(audit: DataFrame,
-                              valueCol: String): Option[Int] = {
-    val rows = audit.collect()
-    val installed = rows
-      .find(r => r.getBoolean(r.fieldIndex("installed")))
-      .map(_.getLong(rows.head.fieldIndex(valueCol)).toInt)
-    if (!rows.exists(r => r.getBoolean(r.fieldIndex("recalibrate")))) None
-    else rows.find(r => r.getBoolean(r.fieldIndex("chosen")))
-      .map(_.getLong(rows.head.fieldIndex(valueCol)).toInt)
-      .filter(c => !installed.contains(c))
-  }
-
-  /** v+1 carrying `carried` artifacts of version `v` by MANIFEST
-    * REFERENCE with only a new serving cap — the cap-independent
-    * pillars' recalibration commit writes ZERO data bytes (same
-    * segments, new capcfg), pinned to the audited version. */
-  private def capOnlyVersion(s: SparkSession, root: String, v: Long,
-                             carried: Seq[String], cap: Int): Option[Long] = {
-    val done = installVersion(root, v + 1, _ => ()) { staging =>
-      s.range(1).select(lit(cap.toLong).as("cap"))
-        .write.mode("overwrite").parquet(staging.resolve("capcfg").toString)
-      writeManifest(staging, carriedRefs(root, v, carried))
-    }
-    if (done) Some(v + 1) else None
   }
 
   // ---------- cross-pillar coherent release ----------
@@ -2282,31 +1860,6 @@ object IndexLifecycle {
   def readCodebookAt(s: SparkSession, root: String, v: Long): DataFrame =
     s.read.parquet(s"$root/v=$v/codebook")
 
-  /** The serving cap of a SPECIFIC pillar version. */
-  def readCapAt(s: SparkSession, root: String, v: Long): Int =
-    scalarsAt(s, root, v, "capcfg", "cap BIGINT").head.toInt
-
-  /** A SPECIFIC version's install-time cap dial. */
-  def readCapBaselineAt(s: SparkSession, root: String, v: Long): DataFrame =
-    s.read.parquet(s"$root/v=$v/capdial")
-
-  /** The probe depth of a SPECIFIC pillar version. */
-  def readProbesAt(s: SparkSession, root: String, v: Long): Int =
-    scalarsAt(s, root, v, "probescfg", "probes BIGINT").head.toInt
-
-  /** A SPECIFIC version's install-time probe dial. */
-  def readProbesBaselineAt(s: SparkSession, root: String, v: Long): DataFrame =
-    s.read.parquet(s"$root/v=$v/probesdial")
-
-  /** The LSH table count of a SPECIFIC pillar version. */
-  def readLshTablesAt(s: SparkSession, root: String, v: Long): Int =
-    scalarsAt(s, root, v, "tablescfg", "tables BIGINT").head.toInt
-
-  /** A SPECIFIC version's install-time table dial. */
-  def readLshTablesBaselineAt(s: SparkSession, root: String,
-                              v: Long): DataFrame =
-    s.read.parquet(s"$root/v=$v/tablesdial")
-
   /** q249's two-pillar search with BOTH quantizer frames resolved from
     * ONE release — a concurrent centroid or codebook swap cannot serve
     * this reader a mixed pair; it serves the pinned pair until the next
@@ -2335,43 +1888,13 @@ object IndexLifecycle {
 
   // ----- release-resolved near-dup serves (VERDICT r15 item 2) -----
   //
-  // The four postings-pair serves read latest-version only until this
-  // round — a mid-swap reader of the one genuinely MULTI-pillar
-  // consumer (q260's cross-modal consensus, which composes the text AND
-  // media SimHash pillars) could see text pairs from v=N and media
-  // pairs from v=N+1, exactly the mix releases exist to prevent. Each
-  // serve below resolves its pillar version(s) through ONE release pin,
-  // so pillar installs keep landing underneath without ever moving a
-  // released reader.
-
-  /** q40's stored-pair serve at a release's pinned version. */
-  def simhashPairsAtRelease(s: SparkSession, relRoot: String,
-                            pillar: String = "simhash"): DataFrame = {
-    val (root, v) = readRelease(relRoot)(pillar)
-    simhashPairsFromStoreAt(s, root, v)
-  }
-
-  /** q39's stored-pair serve at a release's pinned version. */
-  def minhashPairsAtRelease(s: SparkSession, relRoot: String,
-                            pillar: String = "minhash"): DataFrame = {
-    val (root, v) = readRelease(relRoot)(pillar)
-    minhashPairsFromStoreAt(s, root, v)
-  }
-
-  /** q67's stored-pair serve at a release's pinned version. */
-  def lshPairsAtRelease(s: SparkSession, relRoot: String, dir: String,
-                        pillar: String = "lsh"): DataFrame = {
-    val (root, v) = readRelease(relRoot)(pillar)
-    lshPairsFromStoreAt(s, root, v, dir)
-  }
-
-  /** q253's stored containment serve at a release's pinned version. */
-  def cdcPairsAtRelease(s: SparkSession, relRoot: String,
-                        pillar: String = "cdc"): DataFrame = {
-    val (root, v) = readRelease(relRoot)(pillar)
-    cdcPairsFromStoreAt(s, root, v)
-  }
-
+  // The postings-pair serves resolve their pillar version(s) through ONE
+  // release pin ([[pairsAtRelease]]): a mid-swap reader of the one
+  // genuinely MULTI-pillar consumer (q260's cross-modal consensus, which
+  // composes the text AND media SimHash pillars) could otherwise see
+  // text pairs from v=N and media pairs from v=N+1, exactly the mix
+  // releases exist to prevent. Pillar installs keep landing underneath
+  // without ever moving a released reader.
   /** q260's cross-modal consensus with BOTH SimHash pillars (token-
     * shingle text, byte-shingle media) resolved from ONE release — the
     * multi-pillar read that motivated release coherence: however the
@@ -2386,8 +1909,8 @@ object IndexLifecycle {
     val (tr, tv) = pins(textPillar)
     val (mr, mv) = pins(mediaPillar)
     MultimodalQueries.crossModalConsensus(
-      simhashPairsFromStoreAt(s, tr, tv),
-      simhashPairsFromStoreAt(s, mr, mv))
+      pairsFromStoreAt(s, tr, SimhashPostings, tv),
+      pairsFromStoreAt(s, mr, SimhashPostings, mv))
   }
 
   // ---------- takedown / delete propagation ----------
@@ -2436,129 +1959,6 @@ object IndexLifecycle {
     }
   }
 
-  /** Remove `deleted(doc_id)` from the SimHash postings pillar — v=N+1
-    * writes consolidated survivor segments for sigs AND postings
-    * (id-only anti-joins; posting rows are per-doc, so no signature or
-    * band-key recompute), cap carries. None only when nothing stored is
-    * deleted; lost races re-drive. A takedown doubles as a compaction:
-    * the survivor write folds every prior delta segment into one. */
-  def takedownSimhashPostings(s: SparkSession, root: String,
-                              deleted: DataFrame): Option[Long] =
-    takedownPostingsPillar(s, root, deleted, "doc_id", SimhashArts,
-      Seq("capcfg"),
-      surv => Seq("balls" -> writeBandBalls(s, root, surv("postings"))))
-
-  /** Remove `deleted(doc_id)` from the MinHash postings pillar. */
-  def takedownMinhashPostings(s: SparkSession, root: String,
-                              deleted: DataFrame): Option[Long] =
-    takedownPostingsPillar(s, root, deleted, "doc_id", MinhashArts,
-      Seq("capcfg"),
-      surv => Seq("balls" -> writeBandBalls(s, root, surv("postings"))))
-
-  /** Remove `deleted(vec_id)` from the LSH postings pillar — surviving
-    * codes consolidate into one segment (no re-hashing), dials carry.
-    * The probe-ready balls rebuild from the SURVIVOR set (not an id
-    * anti-join on the lists: a deletion can pull an over-cap bucket back
-    * under the serve bound, which only a whole-index re-census sees). */
-  def takedownLshPostings(s: SparkSession, root: String,
-                          deleted: DataFrame): Option[Long] =
-    retryVersionRace() { () =>
-      val v = latestVersion(root).getOrElse(noIndex(root))
-      val del = deleted.select(col("vec_id")).distinct()
-      val codes = readArtifact(s, root, v, "codes", LshCodesSchema)
-      val hit = codes.join(del, Seq("vec_id"), "left_semi")
-        .limit(1).count() > 0
-      if (!hit) Right(None)
-      else {
-        val codeSeg = writeSegment(root, "codes")(p =>
-          codes.join(del, Seq("vec_id"), "left_anti")
-            .write.mode("overwrite").partitionBy("tbl").parquet(p.toString))
-        val bits = scalarsAt(s, root, v, "lshcfg", LshCfgSchema)(0).toInt
-        val ballSeg = writeLshBalls(s, root,
-          s.read.schema(LshCodesSchema).parquet(s"$root/$codeSeg"), bits)
-        val done = installVersion(root, v + 1, _ => ()) { staging =>
-          copyTree(Paths.get(s"$root/v=$v/lshcfg"), staging.resolve("lshcfg"))
-          writeManifest(staging,
-            Seq("codes" -> codeSeg, "balls" -> ballSeg))
-        }
-        if (done) Right(Some(v + 1)) else Left(())
-      }
-    }
-
-  /** Remove `deleted(doc_id)` from the CDC chunk postings pillar —
-    * surviving chunk rows consolidate (no payload walk); df re-prices
-    * over the survivors, so containment verdicts follow the deletion.
-    * The probe-ready layout rebuilds from the survivor set (df is a
-    * whole-corpus property: a deletion moves every cohabiting chunk's
-    * df, which no per-list anti-join can see). */
-  def takedownCdcPostings(s: SparkSession, root: String,
-                          deleted: DataFrame): Option[Long] =
-    retryVersionRace() { () =>
-      val v = latestVersion(root).getOrElse(noIndex(root))
-      val del = deleted.select(col("doc_id")).distinct()
-      val chunks = readArtifact(s, root, v, "chunks", CdcChunksSchema)
-      val hit = chunks.join(del, Seq("doc_id"), "left_semi")
-        .limit(1).count() > 0
-      if (!hit) Right(None)
-      else {
-        val chunkSeg = writeSegment(root, "chunks")(p =>
-          chunks.join(del, Seq("doc_id"), "left_anti")
-            .write.mode("overwrite").partitionBy("bkt").parquet(p.toString))
-        val derived = writeCdcServeLayout(s, root,
-          s.read.schema(CdcChunksSchema).parquet(s"$root/$chunkSeg")
-            .select("doc_id", "cfp"))
-        val done = installVersion(root, v + 1, _ => ()) { staging =>
-          copyTree(Paths.get(s"$root/v=$v/capcfg"), staging.resolve("capcfg"))
-          writeManifest(staging, (("chunks" -> chunkSeg)) +: derived)
-        }
-        if (done) Right(Some(v + 1)) else Left(())
-      }
-    }
-
-  /** The shared takedown commit: for each (artifact, schema, partition
-    * cols), anti-join the deleted ids and write ONE survivor segment;
-    * scalars carry by KB copy. `derive` appends extra manifest entries
-    * rebuilt from the SURVIVOR frames (the probe-ready layouts — whole-
-    * index properties like bucket size move under a deletion, which no
-    * per-list anti-join can see). None when no stored row is deleted. */
-  private def takedownPostingsPillar(s: SparkSession, root: String,
-                                     deleted: DataFrame, idCol: String,
-                                     arts: Seq[(String, String, Seq[String])],
-                                     scalars: Seq[String],
-                                     derive: (String => DataFrame) =>
-                                       Seq[(String, String)] = _ => Nil)
-      : Option[Long] =
-    retryVersionRace() { () =>
-      val v = latestVersion(root).getOrElse(noIndex(root))
-      val del = deleted.select(col(idCol)).distinct()
-      val hit = readArtifact(s, root, v, arts.head._1, arts.head._2)
-        .join(del, Seq(idCol), "left_semi").limit(1).count() > 0
-      if (!hit) Right(None)
-      else {
-        val segs = arts.map { case (name, schema, parts) =>
-          name -> writeSegment(root, name) { p =>
-            val surv = readArtifact(s, root, v, name, schema)
-              .join(del, Seq(idCol), "left_anti")
-            val w = surv.write.mode("overwrite")
-            (if (parts.nonEmpty) w.partitionBy(parts: _*) else w)
-              .parquet(p.toString)
-          }
-        }
-        val segMap = segs.toMap
-        val survOf = (name: String) => {
-          val schema = arts.find(_._1 == name).get._2
-          s.read.schema(schema).parquet(s"$root/${segMap(name)}")
-        }
-        val extra = derive(survOf)
-        val done = installVersion(root, v + 1, _ => ()) { staging =>
-          scalars.foreach(a =>
-            copyTree(Paths.get(s"$root/v=$v/$a"), staging.resolve(a)))
-          writeManifest(staging, segs ++ extra)
-        }
-        if (done) Right(Some(v + 1)) else Left(())
-      }
-    }
-
   // ---------- postings-delta compaction ----------
   //
   // The LSM discipline for the manifest store (VERDICT r14 item 3):
@@ -2572,53 +1972,37 @@ object IndexLifecycle {
   // the shuffle to the advisory partition bytes — file count tracks data
   // size, not append count, at any corpus scale.
 
-  /** Compact the SimHash postings pillar's delta segments. None when
-    * every artifact already resolves to one segment. */
-  def compactSimhashPostings(s: SparkSession, root: String): Option[Long] =
-    compactPillar(s, root, SimhashArts :+ BandBallsArt, Seq("capcfg"))
-
-  /** Compact the MinHash postings pillar's delta segments. */
-  def compactMinhashPostings(s: SparkSession, root: String): Option[Long] =
-    compactPillar(s, root, MinhashArts :+ BandBallsArt, Seq("capcfg"))
-
-  /** Compact the LSH postings pillar's delta segments. */
-  def compactLshPostings(s: SparkSession, root: String): Option[Long] =
-    compactPillar(s, root, LshArts, Seq("lshcfg"))
-
-  /** Compact the CDC chunk postings pillar's delta segments. */
-  def compactCdcPostings(s: SparkSession, root: String): Option[Long] =
-    compactPillar(s, root, CdcArts, Seq("capcfg"))
+  private val PqArts = Seq(
+    Art("codes", PqCodesSchema, Seq("cent_id")),
+    Art("centroids", PqCentsSchema, Nil),
+    Art("codebook", PqBookSchema, Nil))
 
   /** Compact the PQ serving index's code-delta segments — quantizer
     * segments (always single) carry by reference; baseline/meta are
     * row-identical under compaction and carry by KB copy. */
   def compactPqIndex(s: SparkSession, root: String): Option[Long] =
-    compactPillar(s, root, PqArts, Seq("baseline", "meta"))
+    compactPillar(s, root, _ => PqArts, Seq("baseline", "meta"))
 
+  /** `artsAt(v)`: the artifacts version v holds. */
   private def compactPillar(s: SparkSession, root: String,
-                            arts: Seq[(String, String, Seq[String])],
+                            artsAt: Long => Seq[Art],
                             scalars: Seq[String]): Option[Long] =
     retryVersionRace() { () =>
       val v = latestVersion(root).getOrElse(noIndex(root))
       val (multi, single) =
-        arts.partition { case (n, _, _) => artifactRefs(root, v, n).size > 1 }
+        artsAt(v).partition(a => artifactRefs(root, v, a.name).size > 1)
       if (multi.isEmpty) Right(None)
       else {
-        val segs = multi.map { case (name, schema, parts) =>
-          name -> writeSegment(root, name) { p =>
-            val df = readArtifact(s, root, v, name, schema)
-            val sized =
-              if (parts.nonEmpty) df.repartition(parts.map(col): _*) else df
-            val w = sized.write.mode("overwrite")
-            (if (parts.nonEmpty) w.partitionBy(parts: _*) else w)
-              .parquet(p.toString)
-          }
+        val segs = multi.map { a =>
+          val df = readArtifact(s, root, v, a.name, a.schema)
+          writeArt(root, a,
+            if (a.parts.nonEmpty) df.repartition(a.parts.map(col): _*) else df)
         }
         val done = installVersion(root, v + 1, _ => ()) { staging =>
           scalars.foreach(a =>
             copyTree(Paths.get(s"$root/v=$v/$a"), staging.resolve(a)))
           writeManifest(staging,
-            carriedRefs(root, v, single.map(_._1)) ++ segs)
+            carriedRefs(root, v, single.map(_.name)) ++ segs)
         }
         if (done) Right(Some(v + 1)) else Left(())
       }
@@ -2693,19 +2077,29 @@ object IndexLifecycle {
   /** One pillar's description for [[nightlyMaintenance]] — the name is
     * the report key; context fields are what its audit needs. */
   sealed trait PillarSpec { def name: String; def root: String }
-  final case class SimhashPillar(name: String, root: String,
-                                 pending: Option[DataFrame] = None)
-    extends PillarSpec
-  final case class MinhashPillar(name: String, root: String, dir: String,
-                                 pending: Option[DataFrame] = None)
-    extends PillarSpec
+
+  /** A postings pillar's description: its descriptor and the pending
+    * arrivals to append. */
+  sealed trait PostingsSpec extends PillarSpec {
+    def postings: Postings[_]
+    def pending: Option[DataFrame]
+  }
+
+  /** A cap-served postings pillar, audited by its descriptor's dial over
+    * `input`. */
+  final case class PostingsPillar[A](name: String, root: String,
+                                     postings: Postings[A], input: A,
+                                     pending: Option[DataFrame] = None)
+    extends PostingsSpec
+
+  /** The LSH postings pillar over the corpus at `dir`, maintained under
+    * the confirm-mass guard. */
   final case class LshPillar(name: String, root: String, dir: String,
                              pending: Option[DataFrame] = None,
                              budgetPairs: Long = LshConfirmBudgetPairs)
-    extends PillarSpec
-  final case class CdcPillar(name: String, root: String, media: DataFrame,
-                             pending: Option[DataFrame] = None)
-    extends PillarSpec
+    extends PostingsSpec {
+    def postings: Postings[Unit] = LshPostings(dir)
+  }
   final case class PqPillar(name: String, root: String, dir: String,
                             k: Int) extends PillarSpec
 
@@ -2728,32 +2122,16 @@ object IndexLifecycle {
     pillars.foreach { p =>
       // 1. pending arrivals commit first — the audit must cover them
       p match {
-        case SimhashPillar(n, r, Some(b)) =>
-          appendSimhashPostings(s, r, b)
-            .foreach(v => rec(n, "append", "new arrivals committed", Some(v)))
-        case MinhashPillar(n, r, _, Some(b)) =>
-          appendMinhashPostings(s, r, b)
-            .foreach(v => rec(n, "append", "new arrivals committed", Some(v)))
-        case LshPillar(n, r, _, Some(b), _) =>
-          appendLshPostings(s, r, b)
-            .foreach(v => rec(n, "append", "new arrivals committed", Some(v)))
-        case CdcPillar(n, r, _, Some(b)) =>
-          appendCdcPostings(s, r, b)
-            .foreach(v => rec(n, "append", "new arrivals committed", Some(v)))
+        case ps: PostingsSpec =>
+          ps.pending.flatMap(appendPostings(s, ps.root, ps.postings, _))
+            .foreach(v => rec(ps.name, "append", "new arrivals committed",
+              Some(v)))
         case _ => ()
       }
       // 2. audit → recalibrate (or guard-route, or PQ drift/growth)
       p match {
-        case SimhashPillar(n, r, _) =>
-          recalibrateSimhashPostingsCap(s, r)
-            .foreach(v => rec(n, "recalibrate", "serving cap re-chosen",
-              Some(v)))
-        case MinhashPillar(n, r, d, _) =>
-          recalibrateMinhashPostingsCap(s, r, d)
-            .foreach(v => rec(n, "recalibrate", "serving cap re-chosen",
-              Some(v)))
-        case CdcPillar(n, r, m, _) =>
-          recalibrateCdcPostingsCap(s, r, m)
+        case PostingsPillar(n, r, d, input, _) =>
+          recalibratePostings(s, r, d, input)
             .foreach(v => rec(n, "recalibrate", "serving cap re-chosen",
               Some(v)))
         case LshPillar(n, r, d, _, budget) =>
@@ -2773,10 +2151,7 @@ object IndexLifecycle {
       }
       // 3. compact when fragmented
       (p match {
-        case _: SimhashPillar => compactSimhashPostings(s, p.root)
-        case _: MinhashPillar => compactMinhashPostings(s, p.root)
-        case _: LshPillar => compactLshPostings(s, p.root)
-        case _: CdcPillar => compactCdcPostings(s, p.root)
+        case ps: PostingsSpec => compactPostings(s, p.root, ps.postings)
         case _: PqPillar => compactPqIndex(s, p.root)
       }).foreach(v =>
         rec(p.name, "compact", "delta segments consolidated", Some(v)))

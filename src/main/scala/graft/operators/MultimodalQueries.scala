@@ -643,7 +643,7 @@ object MultimodalQueries {
         "under the manifest store, ONE release pins the coherent " +
         "(text_simhash, media_simhash) version tuple atomically, and " +
         "the serve resolves both through that release " +
-        "(crossModalConsensusAtRelease over simhashPairsFromStoreAt). " +
+        "(crossModalConsensusAtRelease over pairsFromStoreAt). " +
         "Same oracle text as q260 — hash-green proves the two-pillar " +
         "release indirection perturbs no pair; the IndexLifecycleSpec " +
         "interposed-swap twin proves a concurrent single-pillar install " +
@@ -654,11 +654,14 @@ object MultimodalQueries {
     ) { (s, dir) =>
       val root = RelationalQueries.staged(s, "xmrel",
         Tables.fingerprint(s, s"$dir/documents.parquet")) { out =>
-        IndexLifecycle.installSimhashPostings(s, s"$out/text", 1L,
-          DedupQueries.textSimhashSigs(s, dir))
-        IndexLifecycle.installSimhashPostings(s, s"$out/media", 1L,
+        IndexLifecycle.installPostings(s, s"$out/text", 1L,
+          IndexLifecycle.SimhashPostings, DedupQueries.textSimhashSigs(s, dir),
+          Seq(DedupQueries.MaxBucket))
+        IndexLifecycle.installPostings(s, s"$out/media", 1L,
+          IndexLifecycle.SimhashPostings,
           byteSimhashSigs(Tables.documents(s, dir)
-            .select(col("doc_id"), mediaPayload.as("payload"))))
+            .select(col("doc_id"), mediaPayload.as("payload"))),
+          Seq(DedupQueries.MaxBucket))
         IndexLifecycle.cutRelease(s"$out/rel", 1L,
           Map("text_simhash" -> s"$out/text",
             "media_simhash" -> s"$out/media"))
@@ -958,7 +961,7 @@ object MultimodalQueries {
               |ORDER BY doc_a, doc_b""".stripMargin),
       "q253 served FROM the installed CDC chunk postings pillar — the " +
         "content-addressed store's own read path: " +
-        "IndexLifecycle.installCdcPostings walks each payload ONCE at " +
+        "IndexLifecycle.installPostings(CdcPostings) walks each payload ONCE at " +
         "install and persists the per-doc distinct chunk fingerprints " +
         "(8 bytes each) partitioned by a 16-way fingerprint bucket " +
         "under ATOMIC_MOVE v=N; the serve path recomputes df and " +
@@ -968,7 +971,7 @@ object MultimodalQueries {
         "deliberately NOT frozen at install: document frequency is a " +
         "corpus property, and an appended batch must move it). A new " +
         "media batch walks ITS payloads only and admits against the " +
-        "stored lists (cdcBatchPairs/appendCdcPostings — " +
+        "stored lists (batchPairs/appendPostings — " +
         "IndexLifecycleSpec pins batch == full-rebuild-on-union). " +
         "Install memoized per corpus fingerprint so steady state " +
         "measures the serve path; same oracle text as q253 — stored " +
@@ -977,12 +980,13 @@ object MultimodalQueries {
     ) { (s, dir) =>
       val root = RelationalQueries.staged(s, "cdcpost",
         Tables.fingerprint(s, s"$dir/documents.parquet")) { out =>
-        IndexLifecycle.installCdcPostings(s, out, 1L,
+        IndexLifecycle.installPostings(s, out, 1L, IndexLifecycle.CdcPostings,
           Tables.documents(s, dir)
-            .select(col("doc_id"), mediaPayload.as("payload")))
+            .select(col("doc_id"), mediaPayload.as("payload")),
+          Seq(DedupQueries.MaxBucket))
         ()
       }
-      IndexLifecycle.cdcPairsFromStore(s, root)
+      IndexLifecycle.pairsFromStore(s, root, IndexLifecycle.CdcPostings)
     },
 
     GraftQuery(
@@ -1049,11 +1053,11 @@ object MultimodalQueries {
         .select(col("doc_id"), mediaPayload.as("payload"))
       val root = RelationalQueries.staged(s, "cdcadmit",
         Tables.fingerprint(s, s"$dir/documents.parquet")) { out =>
-        IndexLifecycle.installCdcPostings(s, out, 1L,
-          media.filter(col("doc_id") % 7 =!= 0))
+        IndexLifecycle.installPostings(s, out, 1L, IndexLifecycle.CdcPostings,
+          media.filter(col("doc_id") % 7 =!= 0), Seq(DedupQueries.MaxBucket))
         ()
       }
-      IndexLifecycle.cdcBatchPairs(s, root,
+      IndexLifecycle.batchPairs(s, root, IndexLifecycle.CdcPostings,
         media.filter(col("doc_id") % 7 === 0))
     }
   )

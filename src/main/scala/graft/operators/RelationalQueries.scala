@@ -836,8 +836,17 @@ object RelationalQueries {
     }
   }
 
+  // The live slots outlive every query, so the JVM's exit releases them
+  // by the same rule — otherwise the last staged copy of each format
+  // (index pillar stores included) stays under the temp root for good.
+  private lazy val releaseAtExit: Unit = {
+    sys.addShutdownHook(fmtSlots.values.foreach { case (_, p) => dropStaged(p) })
+    ()
+  }
+
   private[operators] def staged(s: SparkSession, fmt: String, key: String)(
       build: String => Unit): String = fmtSlots.synchronized {
+    releaseAtExit
     fmtSlots.get(fmt) match {
       case Some((k, path)) if k == key => path
       case prev =>

@@ -1,8 +1,9 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.OutputMode
+import org.apache.spark.sql.types.StructType
 
 import graft.operators.{DedupQueries, IndexLifecycle}
 
@@ -21,7 +22,7 @@ import graft.operators.{DedupQueries, IndexLifecycle}
   *      wants sub-document granularity);
   *   3. NEAR-DUP ADMIT — SimHash pairs of the cleaned batch against the
   *      ADMITTED postings pillar plus the batch itself
-  *      ([[IndexLifecycle.simhashBatchPairsAt]], q289's union-capped
+  *      ([[IndexLifecycle.batchPairsAt]], q289's union-capped
   *      admission), greedily resolved in arrival order so only ADMITTED
   *      docs block (a rejected near-dup never shadows a later arrival —
   *      the chunking-invariance requirement);
@@ -86,6 +87,23 @@ object IngestPipeline {
   /** The near-dup families the pipeline can compose. */
   val Families: Seq[String] = Seq("simhash", "minhash")
 
+  /** One near-dup family: its stored postings pillar, the signature
+    * frame of cleaned `(doc_id, text)`, the full-rebuild pair set of a
+    * signature frame, and its pillar and per-batch pin directories under
+    * an ingest base. */
+  private final case class Family(postings: IndexLifecycle.Postings[_],
+                                  sigsOf: DataFrame => DataFrame,
+                                  pairsOf: DataFrame => DataFrame,
+                                  pillarDir: String, pinDir: String)
+
+  private val FamilyOf: Map[String, Family] = Map(
+    "simhash" -> Family(IndexLifecycle.SimhashPostings,
+      DedupQueries.textSimhashSigsFor,
+      DedupQueries.simhashNearDupPairsUnsorted(_), "pillar", "pillarv"),
+    "minhash" -> Family(IndexLifecycle.MinhashPostings,
+      DedupQueries.minhashSignaturesFor,
+      DedupQueries.minhashPairsOfSigs(_), "pillarm", "pillarvm"))
+
   /** Default admission-state snapshot cadence (batches). */
   val SnapEvery: Int = 8
 
@@ -116,19 +134,12 @@ object IngestPipeline {
                        budgetPerLang: Long,
                        stages: IngestStages = IngestStages()): DataFrame = {
     import s.implicits._
-    requireStages(stages)
+    val fams = familiesOf(stages)
     val feats = features(s, docs, evalW).persist()
     try {
       val cleaned = feats.select(col("doc_id"), col("text_clean").as("text"))
-      val famPairs = stages.families.map { f =>
-        val pairs = (f match {
-          case "simhash" => DedupQueries.simhashNearDupPairsUnsorted(
-            DedupQueries.textSimhashSigsFor(cleaned))
-          case "minhash" => DedupQueries.minhashPairsOfSigs(
-            DedupQueries.minhashSignaturesFor(cleaned))
-        }).select("doc_a", "doc_b").collect()
-          .map(r => (r.getLong(0), r.getLong(1))).toSeq
-        f -> pairs
+      val famPairs = fams.map { case (f, fam) =>
+        f -> pairList(fam.pairsOf(fam.sigsOf(cleaned)))
       }
       val ids = feats.select("doc_id").collect().map(_.getLong(0)).toSet
       val (storedRuns, pairRuns) =
@@ -141,12 +152,19 @@ object IngestPipeline {
     } finally { feats.unpersist(); () }
   }
 
-  private def requireStages(stages: IngestStages): Unit =
+  /** The validated stage set's families, each mapped to its [[Family]]. */
+  private def familiesOf(stages: IngestStages): Seq[(String, Family)] = {
     require(stages.families.nonEmpty &&
       stages.families.forall(Families.contains) &&
       stages.families.distinct == stages.families,
       s"families must be a non-empty subset of $Families: " +
         s"${stages.families}")
+    stages.families.map(f => f -> FamilyOf(f))
+  }
+
+  private def pairList(pairs: DataFrame): Seq[(Long, Long)] =
+    pairs.select("doc_a", "doc_b").collect()
+      .map(r => (r.getLong(0), r.getLong(1))).toSeq
 
   // ---------- per-batch machinery ----------
 
@@ -317,15 +335,15 @@ object IngestPipeline {
                                   stages: IngestStages = IngestStages())
       : Unit = {
     import s.implicits._
-    requireStages(stages)
-    stages.families.foreach(f => ensurePillar(s, base, f))
+    val fams = familiesOf(stages)
+    fams.foreach { case (f, _) => ensurePillar(s, base, f) }
     val tdPre = pinnedTakedownSeq(s, base, id)
     // one pinned pillar version per enabled family — each family's
     // replay re-decides against ITS recorded store state
-    val famPins = stages.families.map(f =>
+    val famPins = fams.map { case (f, _) =>
       f -> pinnedScalar(s, familyPinDir(base, f, id), "v")(
-        IndexLifecycle.latestVersion(familyRoot(base, f)).getOrElse(1L)))
-      .toMap
+        IndexLifecycle.latestVersion(familyRoot(base, f)).getOrElse(1L))
+    }.toMap
     val feats = features(s, batch, evalW).persist()
     val cleaned = feats.select(col("doc_id"), col("text_clean").as("text"))
     // persisted for the epoch and RELEASED in the finally (a localCheckpoint
@@ -333,27 +351,19 @@ object IngestPipeline {
     // probe consumes each family's signature frame three times (band keys +
     // both confirm sides) and the append twice more (no-op probe + delta
     // write) — one signature walk per family per epoch instead of ~5.
-    // Built INSIDE the try (r17, ADVICE): a throw while constructing or
-    // persist-marking the frames must still reach the finally, or feats'
-    // persisted blocks leak for the session.
-    var famSigs = Map.empty[String, org.apache.spark.sql.DataFrame]
+    // Built INSIDE the try, one family at a time: a throw while
+    // constructing or persist-marking a family's frame must still reach
+    // the finally with every frame marked so far, or feats' and the
+    // earlier families' persisted blocks leak for the session.
+    val famSigs = scala.collection.mutable.Map.empty[String, DataFrame]
     try {
-      famSigs = stages.families.map { f =>
-        f -> (f match {
-          case "simhash" => DedupQueries.textSimhashSigsFor(cleaned)
-          case "minhash" => DedupQueries.minhashSignaturesFor(cleaned)
-        }).persist()
-      }.toMap
-      val famPairs = stages.families.map { f =>
-        val root = familyRoot(base, f)
-        val pairs = (f match {
-          case "simhash" =>
-            IndexLifecycle.simhashBatchPairsAt(s, root, famPins(f), famSigs(f))
-          case "minhash" =>
-            IndexLifecycle.minhashBatchPairsAt(s, root, famPins(f), famSigs(f))
-        }).select("doc_a", "doc_b").collect()
-          .map(r => (r.getLong(0), r.getLong(1))).toSeq
-        f -> pairs
+      fams.foreach { case (f, fam) =>
+        famSigs(f) = fam.sigsOf(cleaned)
+        famSigs(f).persist()
+      }
+      val famPairs = fams.map { case (f, fam) =>
+        f -> pairList(IndexLifecycle.batchPairsAt(s, familyRoot(base, f),
+          fam.postings, famPins(f), famSigs(f)))
       }
       val storedHits = feats.select("digest")
         .join(digestsBefore(s, base, id, tdPre), Seq("digest"), "left_semi")
@@ -392,19 +402,13 @@ object IngestPipeline {
         // would resurrect them — decisions keep the pinned horizon, the
         // append honors every takedown committed since
         val mask = takedownsAfter(s, base, tdPre)
-        stages.families.foreach { f =>
+        fams.foreach { case (f, fam) =>
           val admittedSigs = famSigs(f)
             .join(admittedDf, Seq("doc_id"), "left_semi")
           val masked = mask.fold(admittedSigs)(td =>
             admittedSigs.join(td, Seq("doc_id"), "left_anti"))
-          f match {
-            case "simhash" =>
-              IndexLifecycle.appendSimhashPostings(s, familyRoot(base, f),
-                masked)
-            case "minhash" =>
-              IndexLifecycle.appendMinhashPostings(s, familyRoot(base, f),
-                masked)
-          }
+          IndexLifecycle.appendPostings(s, familyRoot(base, f), fam.postings,
+            masked)
           ()
         }
       }
@@ -417,34 +421,23 @@ object IngestPipeline {
   }
 
   /** Each family's pillar root and per-batch pin directory. */
-  private def familyRoot(base: String, fam: String): String = fam match {
-    case "simhash" => s"$base/pillar"
-    case "minhash" => s"$base/pillarm"
-  }
-
-  private def familyPinSub(fam: String): String = fam match {
-    case "simhash" => "pillarv"
-    case "minhash" => "pillarvm"
-  }
+  private def familyRoot(base: String, fam: String): String =
+    s"$base/${FamilyOf(fam).pillarDir}"
 
   private def familyPinDir(base: String, fam: String, id: Long): String =
-    s"$base/${familyPinSub(fam)}/batch=$id"
+    s"$base/${FamilyOf(fam).pinDir}/batch=$id"
 
   /** Install an empty v=1 pillar when none exists — the pipeline's
     * zero-state start. */
   private def ensurePillar(s: SparkSession, base: String,
                            fam: String): Unit = {
-    import s.implicits._
     val root = familyRoot(base, fam)
     if (IndexLifecycle.latestVersion(root).isEmpty) {
-      fam match {
-        case "simhash" =>
-          IndexLifecycle.installSimhashPostings(s, root, 1L,
-            Seq.empty[(Long, Long)].toDF("doc_id", "sim"))
-        case "minhash" =>
-          IndexLifecycle.installMinhashPostings(s, root, 1L,
-            Seq.empty[(Long, Seq[Long])].toDF("doc_id", "sig"))
-      }
+      val p = FamilyOf(fam).postings
+      IndexLifecycle.installPostings(s, root, 1L, p,
+        s.createDataFrame(java.util.Collections.emptyList[Row](),
+          StructType.fromDDL(p.layout.base.head.schema)),
+        Seq(DedupQueries.MaxBucket))
       ()
     }
   }
@@ -679,7 +672,7 @@ object IngestPipeline {
     * contract the pins exist to keep). */
   def ingestPinnedVersions(s: SparkSession, base: String,
                            fam: String = "simhash"): Set[Long] = {
-    val dirs = committedBatchDirs(base, familyPinSub(fam), 0L, Long.MaxValue)
+    val dirs = committedBatchDirs(base, FamilyOf(fam).pinDir, 0L, Long.MaxValue)
     if (dirs.isEmpty) Set.empty
     else s.read.schema("v BIGINT").parquet(dirs: _*)
       .distinct().collect().map(_.getLong(0)).toSet
@@ -744,7 +737,7 @@ object IngestPipeline {
   /** TAKEDOWN PROPAGATION for the composed ingest — the delete verb that
     * closes the admission lifecycle: the deleted docs leave the postings
     * pillar (so future batches' near-dup stage stops pairing against
-    * them — [[IndexLifecycle.takedownSimhashPostings]]'s consolidated
+    * them — [[IndexLifecycle.takedownPostings]]'s consolidated
     * survivor commit) and a doc_id tombstone sequence masks their
     * digests (so a re-offered verbatim copy of REMOVED content is
     * admittable again — removed content is not duplicate content).
@@ -760,7 +753,8 @@ object IngestPipeline {
     val seq = committedTakedownSeqs(base).maxOption.getOrElse(0L) + 1
     deleted.select(col("doc_id")).distinct().coalesce(1)
       .write.mode("overwrite").parquet(s"$base/takedowns/seq=$seq")
-    IndexLifecycle.takedownSimhashPostings(s, s"$base/pillar", deleted)
+    IndexLifecycle.takedownPostings(s, familyRoot(base, "simhash"),
+      IndexLifecycle.SimhashPostings, deleted)
     seq
   }
 

@@ -13,10 +13,12 @@ import scala.jdk.CollectionConverters._
   * events (a record-granular callback would serialize the hot path — the
   * engine deliberately surfaces the same information at batch granularity,
   * which is also what Kafka's producer callbacks get coalesced into under
-  * `linger.ms` batching). The listener captures, per micro-batch: rows in,
-  * processing duration, and event-time watermark — enough to derive the
-  * reference's "how many records were replicated, how fast, how far behind"
-  * without touching the data path.
+  * `linger.ms` batching). The listener records, per non-empty
+  * micro-batch, the rows in and the summed phase durations
+  * (`durationMs`), plus per-stream totals of rows and batches — enough to
+  * derive the reference's "how many records were replicated, how fast"
+  * without touching the data path. It records no event-time watermark:
+  * the replication stream defines none.
   */
 final class ReplicationMetrics extends StreamingQueryListener {
 

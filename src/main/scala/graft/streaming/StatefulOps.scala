@@ -1315,8 +1315,9 @@ object StatefulOps {
                            root: String): Dataset[BucketBootstrap] = {
     import s.implicits._
     import org.apache.spark.sql.functions._
-    val (sigs, postings, _) =
-      graft.operators.IndexLifecycle.readSimhashIndex(s, root)
+    val ix = graft.operators.IndexLifecycle.readPostings(s, root,
+      graft.operators.IndexLifecycle.SimhashPostings.layout)
+    val (sigs, postings) = (ix("sigs"), ix("postings"))
     postings.join(sigs, "doc_id")
       .select(shiftleft(col("band").cast("long"), 10)
           .bitwiseOR(col("key")).as("bucket"),
@@ -1351,8 +1352,9 @@ object StatefulOps {
                            root: String): Dataset[MinhashBucketBootstrap] = {
     import s.implicits._
     import org.apache.spark.sql.functions._
-    val (sigs, postings, _) =
-      graft.operators.IndexLifecycle.readMinhashIndex(s, root)
+    val ix = graft.operators.IndexLifecycle.readPostings(s, root,
+      graft.operators.IndexLifecycle.MinhashPostings.layout)
+    val (sigs, postings) = (ix("sigs"), ix("postings"))
     val keyed = sigs.select(col("doc_id"),
       transform(graft.operators.DedupQueries.bandKeys(col("sig")),
         bk => bk("key")).as("keys"))
@@ -1393,7 +1395,9 @@ object StatefulOps {
                        root: String): Dataset[LshBucketBootstrap] = {
     import s.implicits._
     import org.apache.spark.sql.functions._
-    val (codes, bits, _) = graft.operators.IndexLifecycle.readLshIndex(s, root)
+    val ix = graft.operators.IndexLifecycle.readPostings(s, root,
+      graft.operators.IndexLifecycle.LshLayout)
+    val (codes, bits) = (ix("codes"), ix.cfg.head.toInt)
     val codeVecs = codes.groupBy("vec_id")
       .agg(transform(sort_array(collect_list(struct(col("tbl"), col("code")))),
         x => x("code")).as("codes"))
@@ -1443,7 +1447,8 @@ object StatefulOps {
                               root: String): Dataset[ChunkOwnerBootstrap] = {
     import s.implicits._
     import org.apache.spark.sql.functions._
-    val (chunks, _) = graft.operators.IndexLifecycle.readCdcIndex(s, root)
+    val chunks = graft.operators.IndexLifecycle.readPostings(s, root,
+      graft.operators.IndexLifecycle.CdcPostings.layout)("chunks")
     chunks.groupBy("cfp").agg(min(col("doc_id")).as("owner"))
       .as[ChunkOwnerBootstrap]
   }
@@ -1454,7 +1459,8 @@ object StatefulOps {
                              root: String): Dataset[CdcFilersBootstrap] = {
     import s.implicits._
     import org.apache.spark.sql.functions._
-    val (chunks, _) = graft.operators.IndexLifecycle.readCdcIndex(s, root)
+    val chunks = graft.operators.IndexLifecycle.readPostings(s, root,
+      graft.operators.IndexLifecycle.CdcPostings.layout)("chunks")
     chunks.groupBy("cfp")
       .agg(sort_array(collect_list(col("doc_id"))).as("filers"))
       .as[CdcFilersBootstrap]

@@ -300,26 +300,32 @@ class IndexLifecycleSpec extends SparkSpec {
       .filter(col("chosen")).collect()
     assert(dial1.length == 1 && dial1.head.getLong(0) == 16L,
       "tiny buckets must calibrate to the cheapest swept cap")
-    assert(IndexLifecycle.installCap(spark, root, 1L, 16, sigsOf(healthyRows)))
-    assert(IndexLifecycle.readCap(spark, root) === 16)
-    val audit1 = IndexLifecycle.capDriftAudit(spark, root, sigsOf(healthyRows))
+    assert(IndexLifecycle.installDial(spark, root, 1L,
+      IndexLifecycle.SimhashCapDial, 16, sigsOf(healthyRows)))
+    assert(IndexLifecycle.readDial(spark, root, IndexLifecycle.SimhashCapDial) === 16)
+    val audit1 = IndexLifecycle.dialDriftAudit(spark, root,
+      IndexLifecycle.SimhashCapDial, sigsOf(healthyRows))
       .collect()
     assert(!audit1.exists(_.getBoolean(audit1.head.fieldIndex("recalibrate"))))
     assert(IndexLifecycle
-      .recalibrateCapIfSagging(spark, root, sigsOf(healthyRows)).isEmpty)
+      .recalibrateDial(spark, root,
+      IndexLifecycle.SimhashCapDial, sigsOf(healthyRows)).isEmpty)
 
     // the corpus drifts into saturation: the installed cap's recall
     // collapses (966 of 970 panel pairs sit only in 70-member buckets)
-    val audit2 = IndexLifecycle.capDriftAudit(spark, root, sigsOf(driftedRows))
+    val audit2 = IndexLifecycle.dialDriftAudit(spark, root,
+      IndexLifecycle.SimhashCapDial, sigsOf(driftedRows))
       .collect()
     assert(audit2.exists(r => r.getBoolean(r.fieldIndex("recalibrate"))),
       s"saturated corpus must flag the installed cap:\n${audit2.mkString("\n")}")
 
     // the closed loop installs the dial's new choice atomically
     assert(IndexLifecycle
-      .recalibrateCapIfSagging(spark, root, sigsOf(driftedRows)) === Some(2L))
-    assert(IndexLifecycle.readCap(spark, root) === 128)
-    val audit3 = IndexLifecycle.capDriftAudit(spark, root, sigsOf(driftedRows))
+      .recalibrateDial(spark, root,
+      IndexLifecycle.SimhashCapDial, sigsOf(driftedRows)) === Some(2L))
+    assert(IndexLifecycle.readDial(spark, root, IndexLifecycle.SimhashCapDial) === 128)
+    val audit3 = IndexLifecycle.dialDriftAudit(spark, root,
+      IndexLifecycle.SimhashCapDial, sigsOf(driftedRows))
       .collect()
     assert(!audit3.exists(_.getBoolean(audit3.head.fieldIndex("recalibrate"))),
       "post-recalibration audit must read green")
@@ -327,7 +333,8 @@ class IndexLifecycleSpec extends SparkSpec {
     // pairs flow through the store alone: the v1 cap dropped the planted
     // family, the v2 cap recovers all 70*69/2 of it plus the healthy 10
     val pairs = IndexLifecycle
-      .nearDupThroughStore(spark, root, sigsOf(driftedRows)).count()
+      .serveDial(spark, root,
+      IndexLifecycle.SimhashCapDial, sigsOf(driftedRows)).count()
     assert(pairs === 69L * 35L + 10L,
       s"dial-chosen cap must recover the saturated family, got $pairs")
     assert(graft.operators.DedupQueries
@@ -335,41 +342,47 @@ class IndexLifecycleSpec extends SparkSpec {
       "the superseded cap loses exactly the planted family")
 
     // replayed install of a committed version is a strict no-op
-    assert(!IndexLifecycle.installCap(spark, root, 2L, 16, sigsOf(healthyRows)))
-    assert(IndexLifecycle.readCap(spark, root) === 128)
+    assert(!IndexLifecycle.installDial(spark, root, 2L,
+      IndexLifecycle.SimhashCapDial, 16, sigsOf(healthyRows)))
+    assert(IndexLifecycle.readDial(spark, root, IndexLifecycle.SimhashCapDial) === 128)
   }
 
   test("a cap reader concurrent with the swap sees exactly one complete version") {
     val root = Files.createTempDirectory("graft_cap_swap").toString
-    assert(IndexLifecycle.installCap(spark, root, 1L, 16, sigsOf(healthyRows)))
+    assert(IndexLifecycle.installDial(spark, root, 1L,
+      IndexLifecycle.SimhashCapDial, 16, sigsOf(healthyRows)))
 
     var sawDuringStaged: Option[(Option[Long], Int)] = None
     var sawAfterInstall: Option[(Option[Long], Int)] = None
-    IndexLifecycle.installCap(spark, root, 2L, 128, sigsOf(driftedRows),
-      interpose = {
+    IndexLifecycle.installDial(spark, root, 2L,
+      IndexLifecycle.SimhashCapDial, 128, sigsOf(driftedRows), interpose = {
         case "staged" =>
           sawDuringStaged = Some((IndexLifecycle.latestVersion(root),
-            IndexLifecycle.readCap(spark, root)))
+            IndexLifecycle.readDial(spark, root,
+              IndexLifecycle.SimhashCapDial)))
         case "installed" =>
           sawAfterInstall = Some((IndexLifecycle.latestVersion(root),
-            IndexLifecycle.readCap(spark, root)))
+            IndexLifecycle.readDial(spark, root,
+              IndexLifecycle.SimhashCapDial)))
         case _ => ()
       })
     assert(sawDuringStaged === Some((Some(1L), 16)),
       "mid-swap reader must see the OLD cap, complete")
     assert(sawAfterInstall === Some((Some(2L), 128)))
     // the install-time dial evidence rode along with the artifact
-    assert(IndexLifecycle.readCapBaseline(spark, root)
+    assert(IndexLifecycle.readDialBaseline(spark, root,
+      IndexLifecycle.SimhashCapDial)
       .filter(col("chosen")).head.getLong(0) === 128L)
 
     // a failed install never becomes visible and leaves no staging debris
     intercept[RuntimeException] {
-      IndexLifecycle.installCap(spark, root, 3L, 64, sigsOf(healthyRows),
+      IndexLifecycle.installDial(spark, root, 3L,
+        IndexLifecycle.SimhashCapDial, 64, sigsOf(healthyRows),
         interpose = phase =>
           if (phase == "staged") throw new RuntimeException("crash before move"))
     }
     assert(IndexLifecycle.latestVersion(root) === Some(2L))
-    assert(IndexLifecycle.readCap(spark, root) === 128)
+    assert(IndexLifecycle.readDial(spark, root, IndexLifecycle.SimhashCapDial) === 128)
   }
 
   // ---------- probe-depth pillar twins ----------
@@ -433,15 +446,19 @@ class IndexLifecycleSpec extends SparkSpec {
       .filter(col("chosen")).collect()
     assert(dialH.length == 1 && dialH.head.getLong(0) == 1L,
       "tight own-cell clusters must calibrate to 1 probe")
-    assert(IndexLifecycle.installProbes(spark, root, 1L, 1, dirH))
-    assert(IndexLifecycle.readProbes(spark, root) === 1)
-    val audit1 = IndexLifecycle.probesDriftAudit(spark, root, dirH).collect()
+    assert(IndexLifecycle.installDial(spark, root, 1L,
+      IndexLifecycle.ProbesDial, 1, dirH))
+    assert(IndexLifecycle.readDial(spark, root, IndexLifecycle.ProbesDial) === 1)
+    val audit1 = IndexLifecycle.dialDriftAudit(spark, root,
+      IndexLifecycle.ProbesDial, dirH).collect()
     assert(!audit1.exists(_.getBoolean(audit1.head.fieldIndex("recalibrate"))))
-    assert(IndexLifecycle.recalibrateProbesIfSagging(spark, root, dirH).isEmpty)
+    assert(IndexLifecycle.recalibrateDial(spark, root,
+      IndexLifecycle.ProbesDial, dirH).isEmpty)
 
     // the corpus drifts: queries' neighbors now live outside the first
     // probed cell, the installed depth's recall collapses to 400000 ppm
-    val audit2 = IndexLifecycle.probesDriftAudit(spark, root, dirD).collect()
+    val audit2 = IndexLifecycle.dialDriftAudit(spark, root,
+      IndexLifecycle.ProbesDial, dirD).collect()
     val installedRow = audit2
       .filter(_.getBoolean(audit2.head.fieldIndex("installed"))).head
     assert(installedRow.getLong(installedRow.fieldIndex("recall_ppm")) == 400000L,
@@ -449,10 +466,12 @@ class IndexLifecycleSpec extends SparkSpec {
     assert(installedRow.getBoolean(installedRow.fieldIndex("recalibrate")))
 
     // the closed loop installs the dial's new choice atomically
-    assert(IndexLifecycle.recalibrateProbesIfSagging(spark, root, dirD)
+    assert(IndexLifecycle.recalibrateDial(spark, root,
+      IndexLifecycle.ProbesDial, dirD)
       === Some(2L))
-    assert(IndexLifecycle.readProbes(spark, root) === 3)
-    val audit3 = IndexLifecycle.probesDriftAudit(spark, root, dirD).collect()
+    assert(IndexLifecycle.readDial(spark, root, IndexLifecycle.ProbesDial) === 3)
+    val audit3 = IndexLifecycle.dialDriftAudit(spark, root,
+      IndexLifecycle.ProbesDial, dirD).collect()
     assert(!audit3.exists(_.getBoolean(audit3.head.fieldIndex("recalibrate"))),
       "post-recalibration audit must read green")
 
@@ -462,7 +481,7 @@ class IndexLifecycleSpec extends SparkSpec {
       .select("query_id", "neighbor_id", "rk").collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
     val throughStore = rows(
-      IndexLifecycle.searchAtInstalledProbes(spark, root, dirD))
+      IndexLifecycle.serveDial(spark, root, IndexLifecycle.ProbesDial, dirD))
     assert(throughStore ==
       rows(SimilarityQueries.ivfTopK(spark, dirD, 3)))
     assert(throughStore !=
@@ -471,9 +490,11 @@ class IndexLifecycleSpec extends SparkSpec {
 
     // replayed install of a committed version is a strict no-op, and the
     // install-time dial evidence rode along with the artifact
-    assert(!IndexLifecycle.installProbes(spark, root, 2L, 1, dirH))
-    assert(IndexLifecycle.readProbes(spark, root) === 3)
-    assert(IndexLifecycle.readProbesBaseline(spark, root)
+    assert(!IndexLifecycle.installDial(spark, root, 2L,
+      IndexLifecycle.ProbesDial, 1, dirH))
+    assert(IndexLifecycle.readDial(spark, root, IndexLifecycle.ProbesDial) === 3)
+    assert(IndexLifecycle.readDialBaseline(spark, root,
+      IndexLifecycle.ProbesDial)
       .filter(col("chosen")).head.getLong(0) === 3L)
   }
 
@@ -515,28 +536,35 @@ class IndexLifecycleSpec extends SparkSpec {
     val dirD = tablesDriftedDir
 
     // v1: identical twins collide in table 0 — the dial picks 1 table
-    assert(IndexLifecycle.installLshTables(spark, root, 1L, 1, dirH))
-    assert(IndexLifecycle.readLshTables(spark, root) === 1)
-    assert(IndexLifecycle.readLshTablesBaseline(spark, root)
+    assert(IndexLifecycle.installDial(spark, root, 1L,
+      IndexLifecycle.TablesDial, 1, dirH))
+    assert(IndexLifecycle.readDial(spark, root, IndexLifecycle.TablesDial) === 1)
+    assert(IndexLifecycle.readDialBaseline(spark, root,
+      IndexLifecycle.TablesDial)
       .filter(col("chosen")).head.getLong(0) === 1L)
-    val audit1 = IndexLifecycle.lshTablesDriftAudit(spark, root, dirH).collect()
+    val audit1 = IndexLifecycle.dialDriftAudit(spark, root,
+      IndexLifecycle.TablesDial, dirH).collect()
     assert(!audit1.exists(_.getBoolean(audit1.head.fieldIndex("recalibrate"))))
     assert(IndexLifecycle
-      .recalibrateLshTablesIfSagging(spark, root, dirH).isEmpty)
+      .recalibrateDial(spark, root,
+      IndexLifecycle.TablesDial, dirH).isEmpty)
 
     // drifted: near-dup mass at cos 0.40 sits past one table's probe
     // radius — exactly q264's miss-near-threshold diagnostic
-    val audit2 = IndexLifecycle.lshTablesDriftAudit(spark, root, dirD).collect()
+    val audit2 = IndexLifecycle.dialDriftAudit(spark, root,
+      IndexLifecycle.TablesDial, dirD).collect()
     val installedRow = audit2
       .filter(_.getBoolean(audit2.head.fieldIndex("installed"))).head
     assert(installedRow.getLong(installedRow.fieldIndex("recall_ppm")) == 250000L,
       s"drifted corpus at 1 table:\n${audit2.mkString("\n")}")
     assert(installedRow.getBoolean(installedRow.fieldIndex("recalibrate")))
 
-    assert(IndexLifecycle.recalibrateLshTablesIfSagging(spark, root, dirD)
+    assert(IndexLifecycle.recalibrateDial(spark, root,
+      IndexLifecycle.TablesDial, dirD)
       === Some(2L))
-    assert(IndexLifecycle.readLshTables(spark, root) === 3)
-    val audit3 = IndexLifecycle.lshTablesDriftAudit(spark, root, dirD).collect()
+    assert(IndexLifecycle.readDial(spark, root, IndexLifecycle.TablesDial) === 3)
+    val audit3 = IndexLifecycle.dialDriftAudit(spark, root,
+      IndexLifecycle.TablesDial, dirD).collect()
     assert(!audit3.exists(_.getBoolean(audit3.head.fieldIndex("recalibrate"))),
       "post-recalibration audit must read green")
 
@@ -546,11 +574,13 @@ class IndexLifecycleSpec extends SparkSpec {
     val n = graft.Tables.parquetRowCount(spark, dirD, "embeddings")
     assert(DedupQueries.lshNearDupPairsFrom(DedupQueries.normVecs(spark, dirD),
       SimilarityQueries.codeBits(n), tables = 1).count() === 3L)
-    assert(IndexLifecycle.lshNearDupThroughStore(spark, root, dirD).count() === 9L)
+    assert(IndexLifecycle.serveDial(spark, root, IndexLifecycle.TablesDial,
+      dirD).count() === 9L)
 
     // replayed install of a committed version is a strict no-op
-    assert(!IndexLifecycle.installLshTables(spark, root, 2L, 1, dirH))
-    assert(IndexLifecycle.readLshTables(spark, root) === 3)
+    assert(!IndexLifecycle.installDial(spark, root, 2L,
+      IndexLifecycle.TablesDial, 1, dirH))
+    assert(IndexLifecycle.readDial(spark, root, IndexLifecycle.TablesDial) === 3)
   }
 
   test("the manifest read from the store equals the recomputed manifest (all six pillars installed)") {
@@ -563,9 +593,9 @@ class IndexLifecycleSpec extends SparkSpec {
     val cmh = base.resolve("capminhash").toString
     val ccd = base.resolve("capcdc").toString
     // install every pillar from the sf corpus at its dial's own choice
-    IndexLifecycle.installProbes(spark, pr, 1L,
+    IndexLifecycle.installDial(spark, pr, 1L, IndexLifecycle.ProbesDial,
       SimilarityQueries.calibratedProbes(spark, sf), sf)
-    IndexLifecycle.installCap(spark, ct, 1L,
+    IndexLifecycle.installDial(spark, ct, 1L, IndexLifecycle.SimhashCapDial,
       DedupQueries.calibratedSimhashCap(spark, sf),
       DedupQueries.textSimhashSigs(spark, sf))
     val media = graft.Tables.documents(spark, sf)
@@ -573,13 +603,13 @@ class IndexLifecycleSpec extends SparkSpec {
     val mediaDial = DedupQueries
       .bucketCapDial(MultimodalQueries.byteSimhashSigs(media))
       .filter(col("chosen")).head.getLong(0).toInt
-    IndexLifecycle.installCap(spark, cm, 1L, mediaDial,
-      MultimodalQueries.byteSimhashSigs(media))
-    IndexLifecycle.installLshTables(spark, tr, 1L,
+    IndexLifecycle.installDial(spark, cm, 1L, IndexLifecycle.SimhashCapDial,
+      mediaDial, MultimodalQueries.byteSimhashSigs(media))
+    IndexLifecycle.installDial(spark, tr, 1L, IndexLifecycle.TablesDial,
       DedupQueries.calibratedLshTables(spark, sf), sf)
-    IndexLifecycle.installMinhashCap(spark, cmh, 1L,
+    IndexLifecycle.installDial(spark, cmh, 1L, IndexLifecycle.MinhashCapDial,
       DedupQueries.calibratedMinhashCap(spark, sf), sf)
-    IndexLifecycle.installCdcCap(spark, ccd, 1L,
+    IndexLifecycle.installDial(spark, ccd, 1L, IndexLifecycle.CdcCapDial,
       MultimodalQueries.calibratedCdcCap(spark, sf), media)
 
     def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
@@ -603,7 +633,7 @@ class IndexLifecycleSpec extends SparkSpec {
       "a release cut at head must report exactly the store manifest")
     // a single-pillar recalibration moves the STORE manifest but cannot
     // move one row of the release's frame mid-sequence
-    IndexLifecycle.installCap(spark, ct, 2L,
+    IndexLifecycle.installDial(spark, ct, 2L, IndexLifecycle.SimhashCapDial,
       DedupQueries.calibratedSimhashCap(spark, sf),
       DedupQueries.textSimhashSigs(spark, sf))
     assert(rows(Calibration.manifestFromRelease(spark, rel)) == fromRelease,
@@ -706,18 +736,22 @@ class IndexLifecycleSpec extends SparkSpec {
     val media = graft.Tables.documents(spark, sf)
       .select(col("doc_id"), MultimodalQueries.mediaPayload.as("payload"))
     val chosen = MultimodalQueries.calibratedCdcCap(spark, sf)
-    assert(IndexLifecycle.installCdcCap(spark, root, 1L, chosen, media))
-    assert(IndexLifecycle.readCap(spark, root) === chosen)
+    assert(IndexLifecycle.installDial(spark, root, 1L,
+      IndexLifecycle.CdcCapDial, chosen, media))
+    assert(IndexLifecycle.readDial(spark, root, IndexLifecycle.CdcCapDial) === chosen)
     // read-through equals the calibrated entry point
-    val viaStore = IndexLifecycle.cdcThroughStore(spark, root, media).collect()
+    val viaStore = IndexLifecycle.serveDial(spark, root,
+      IndexLifecycle.CdcCapDial, media).collect()
     val direct = MultimodalQueries.cdcContainmentCalibrated(spark, sf).collect()
     assert(viaStore.map(_.toSeq).toSeq == direct.map(_.toSeq).toSeq,
       "store read-through must serve exactly the calibrated pair set")
     // drift audit is green right after install by construction
-    val audit = IndexLifecycle.cdcCapDriftAudit(spark, root, media).collect()
+    val audit = IndexLifecycle.dialDriftAudit(spark, root,
+      IndexLifecycle.CdcCapDial, media).collect()
     assert(!audit.exists(_.getBoolean(audit.head.fieldIndex("recalibrate"))),
       "a freshly installed cap must not flag recalibration")
-    assert(IndexLifecycle.recalibrateCdcCapIfSagging(spark, root, media).isEmpty)
+    assert(IndexLifecycle.recalibrateDial(spark, root,
+      IndexLifecycle.CdcCapDial, media).isEmpty)
     // a saturated corpus (one hot payload shared corpus-wide) sags the
     // installed small cap below the floor; the closed loop re-installs
     import spark.implicits._
@@ -731,10 +765,13 @@ class IndexLifecycleSpec extends SparkSpec {
     val hot = lcgBytes(3L, 2048)
     val saturated = (0L until 100L).map(i => (i, hot.clone())).toDF("doc_id", "payload")
     val root2 = Files.createTempDirectory("graft_cdc_cap2").toString
-    assert(IndexLifecycle.installCdcCap(spark, root2, 1L, 16, saturated))
-    val v2 = IndexLifecycle.recalibrateCdcCapIfSagging(spark, root2, saturated)
+    assert(IndexLifecycle.installDial(spark, root2, 1L,
+      IndexLifecycle.CdcCapDial, 16, saturated))
+    val v2 = IndexLifecycle.recalibrateDial(spark, root2,
+      IndexLifecycle.CdcCapDial, saturated)
     assert(v2 === Some(2L), "a sagging cap must recalibrate to a new version")
-    assert(IndexLifecycle.readCap(spark, root2) === 128,
+    assert(IndexLifecycle.readDial(spark, root2,
+      IndexLifecycle.CdcCapDial) === 128,
       "every bucket holds 100 members, so only the 128 cap meets the floor")
   }
 
@@ -742,25 +779,31 @@ class IndexLifecycleSpec extends SparkSpec {
     import graft.operators.DedupQueries
     val root = Files.createTempDirectory("graft_minhash_cap").toString
     val chosen = DedupQueries.calibratedMinhashCap(spark, sf)
-    assert(IndexLifecycle.installMinhashCap(spark, root, 1L, chosen, sf))
-    assert(IndexLifecycle.readCap(spark, root) === chosen)
+    assert(IndexLifecycle.installDial(spark, root, 1L,
+      IndexLifecycle.MinhashCapDial, chosen, sf))
+    assert(IndexLifecycle.readDial(spark, root, IndexLifecycle.MinhashCapDial) === chosen)
     // readers see exactly the chosen-cap pair set, through the store alone
-    val through = IndexLifecycle.minhashNearDupThroughStore(spark, root, sf)
+    val through = IndexLifecycle.serveDial(spark, root,
+      IndexLifecycle.MinhashCapDial, sf)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val direct = DedupQueries.minhashPairs(spark, sf, chosen)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(through === direct)
     // replayed install of a committed version is a strict no-op
-    assert(!IndexLifecycle.installMinhashCap(spark, root, 1L, chosen + 1, sf))
-    assert(IndexLifecycle.readCap(spark, root) === chosen)
+    assert(!IndexLifecycle.installDial(spark, root, 1L,
+      IndexLifecycle.MinhashCapDial, chosen + 1, sf))
+    assert(IndexLifecycle.readDial(spark, root, IndexLifecycle.MinhashCapDial) === chosen)
     // right after install the audit is green by construction
-    assert(IndexLifecycle.recalibrateMinhashCapIfSagging(spark, root, sf)
+    assert(IndexLifecycle.recalibrateDial(spark, root,
+      IndexLifecycle.MinhashCapDial, sf)
       .isEmpty)
-    val audit = IndexLifecycle.minhashCapDriftAudit(spark, root, sf).collect()
+    val audit = IndexLifecycle.dialDriftAudit(spark, root,
+      IndexLifecycle.MinhashCapDial, sf).collect()
     assert(audit.count(_.getBoolean(audit.head.fieldIndex("installed"))) == 1)
     assert(!audit.exists(_.getBoolean(audit.head.fieldIndex("recalibrate"))))
     // the install-time evidence rode along: its chosen row is the cap
-    val base = IndexLifecycle.readCapBaseline(spark, root).collect()
+    val base = IndexLifecycle.readDialBaseline(spark, root,
+      IndexLifecycle.MinhashCapDial).collect()
     assert(base.filter(_.getBoolean(base.head.fieldIndex("chosen")))
       .head.getLong(0).toInt === chosen)
   }
@@ -1012,48 +1055,59 @@ class IndexLifecycleSpec extends SparkSpec {
     // SimHash
     val shRoot = Files.createTempDirectory("graft_shpost").toString
     val shSigs = DedupQueries.textSimhashSigs(spark, sf)
-    assert(IndexLifecycle.installSimhashPostings(spark, shRoot, 1L, shSigs))
+    assert(IndexLifecycle.installPostings(spark, shRoot, 1L,
+      IndexLifecycle.SimhashPostings, shSigs, Seq(DedupQueries.MaxBucket)))
     val shLive = rowSet(SparkEntry.queries("q40_dedup_simhash")(spark, sf))
     assert(shLive.nonEmpty &&
-      rowSet(IndexLifecycle.simhashPairsFromStore(spark, shRoot)) == shLive,
+      rowSet(IndexLifecycle.pairsFromStore(spark, shRoot,
+        IndexLifecycle.SimhashPostings)) == shLive,
       "stored SimHash postings must serve exactly q40's live pair set")
     // replay no-op
-    assert(!IndexLifecycle.installSimhashPostings(spark, shRoot, 1L,
-      shSigs.limit(1)))
-    assert(rowSet(IndexLifecycle.simhashPairsFromStore(spark, shRoot)) == shLive)
+    assert(!IndexLifecycle.installPostings(spark, shRoot, 1L,
+      IndexLifecycle.SimhashPostings, shSigs.limit(1),
+      Seq(DedupQueries.MaxBucket)))
+    assert(rowSet(IndexLifecycle.pairsFromStore(spark, shRoot,
+      IndexLifecycle.SimhashPostings)) == shLive)
     // cap swap: readers follow the installed version's cap alone
-    assert(IndexLifecycle.installSimhashPostings(spark, shRoot, 2L, shSigs,
-      cap = 2))
-    assert(rowSet(IndexLifecycle.simhashPairsFromStore(spark, shRoot)) ==
+    assert(IndexLifecycle.installPostings(spark, shRoot, 2L,
+      IndexLifecycle.SimhashPostings, shSigs, Seq(2)))
+    assert(rowSet(IndexLifecycle.pairsFromStore(spark, shRoot,
+      IndexLifecycle.SimhashPostings)) ==
       rowSet(DedupQueries.simhashNearDupPairsUnsorted(shSigs, cap = 2)
         .orderBy("doc_a", "doc_b")),
       "a cap swap must move the served pairs exactly as the live cap does")
 
     // MinHash
     val mhRoot = Files.createTempDirectory("graft_mhpost").toString
-    assert(IndexLifecycle.installMinhashPostings(spark, mhRoot, 1L,
-      DedupQueries.minhashSignatures(spark, sf)))
+    assert(IndexLifecycle.installPostings(spark, mhRoot, 1L,
+      IndexLifecycle.MinhashPostings,
+      DedupQueries.minhashSignatures(spark, sf), Seq(DedupQueries.MaxBucket)))
     val mhLive = rowSet(SparkEntry.queries("q39_dedup_minhash_lsh")(spark, sf))
     assert(mhLive.nonEmpty &&
-      rowSet(IndexLifecycle.minhashPairsFromStore(spark, mhRoot)) == mhLive,
+      rowSet(IndexLifecycle.pairsFromStore(spark, mhRoot,
+        IndexLifecycle.MinhashPostings)) == mhLive,
       "stored MinHash postings must serve exactly q39's live pair set")
 
     // LSH
     val lshRoot = Files.createTempDirectory("graft_lshpost").toString
-    assert(IndexLifecycle.installLshPostings(spark, lshRoot, 1L,
-      DedupQueries.normVecs(spark, sf), bits))
+    assert(IndexLifecycle.installPostings(spark, lshRoot, 1L,
+      IndexLifecycle.LshPostings(sf), DedupQueries.normVecs(spark, sf),
+      Seq(bits, DedupQueries.LshTables)))
     val lshLive = rowSet(SparkEntry.queries("q67_dedup_embedding_lsh")(spark, sf))
     assert(lshLive.nonEmpty &&
-      rowSet(IndexLifecycle.lshPairsFromStore(spark, lshRoot, sf)) == lshLive,
+      rowSet(IndexLifecycle.pairsFromStore(spark, lshRoot,
+        IndexLifecycle.LshPostings(sf))) == lshLive,
       "stored LSH codes must serve exactly q67's live pair set")
 
     // CDC
     val cdcRoot = Files.createTempDirectory("graft_cdcpost").toString
-    assert(IndexLifecycle.installCdcPostings(spark, cdcRoot, 1L, mediaOf(sf)))
+    assert(IndexLifecycle.installPostings(spark, cdcRoot, 1L,
+      IndexLifecycle.CdcPostings, mediaOf(sf), Seq(DedupQueries.MaxBucket)))
     val cdcLive = rowSet(
       SparkEntry.queries("q253_media_cdc_containment")(spark, sf))
     assert(cdcLive.nonEmpty &&
-      rowSet(IndexLifecycle.cdcPairsFromStore(spark, cdcRoot)) == cdcLive,
+      rowSet(IndexLifecycle.pairsFromStore(spark, cdcRoot,
+        IndexLifecycle.CdcPostings)) == cdcLive,
       "stored CDC chunk postings must serve exactly q253's live pair set")
   }
 
@@ -1069,36 +1123,45 @@ class IndexLifecycleSpec extends SparkSpec {
     // SimHash
     val shRoot = Files.createTempDirectory("graft_shadmit").toString
     val shSigs = DedupQueries.textSimhashSigs(spark, sf)
-    assert(IndexLifecycle.installSimhashPostings(spark, shRoot, 1L,
-      shSigs.filter(col("doc_id") % 7 =!= 0)))
+    assert(IndexLifecycle.installPostings(spark, shRoot, 1L,
+      IndexLifecycle.SimhashPostings, shSigs.filter(col("doc_id") % 7 =!= 0),
+      Seq(DedupQueries.MaxBucket)))
     val shBatch = shSigs.filter(col("doc_id") % 7 === 0)
     val shExp = touching(
       SparkEntry.queries("q40_dedup_simhash")(spark, sf), "doc_a", "doc_b")
     assert(shExp.nonEmpty &&
-      rowSet(IndexLifecycle.simhashBatchPairs(spark, shRoot, shBatch)) == shExp,
+      rowSet(IndexLifecycle.batchPairs(spark, shRoot,
+        IndexLifecycle.SimhashPostings, shBatch)) == shExp,
       "SimHash batch admission must equal the union rebuild's touching pairs")
     // append commits the union; the serve path then equals live q40
-    assert(IndexLifecycle.appendSimhashPostings(spark, shRoot, shBatch)
+    assert(IndexLifecycle.appendPostings(spark, shRoot,
+      IndexLifecycle.SimhashPostings, shBatch)
       === Some(2L))
-    assert(rowSet(IndexLifecycle.simhashPairsFromStore(spark, shRoot)) ==
+    assert(rowSet(IndexLifecycle.pairsFromStore(spark, shRoot,
+      IndexLifecycle.SimhashPostings)) ==
       rowSet(SparkEntry.queries("q40_dedup_simhash")(spark, sf)))
     // replayed append of already-stored docs: no-op
-    assert(IndexLifecycle.appendSimhashPostings(spark, shRoot, shBatch).isEmpty)
+    assert(IndexLifecycle.appendPostings(spark, shRoot,
+      IndexLifecycle.SimhashPostings, shBatch).isEmpty)
 
     // MinHash
     val mhRoot = Files.createTempDirectory("graft_mhadmit").toString
     val mhSigs = DedupQueries.minhashSignatures(spark, sf)
-    assert(IndexLifecycle.installMinhashPostings(spark, mhRoot, 1L,
-      mhSigs.filter(col("doc_id") % 7 =!= 0)))
+    assert(IndexLifecycle.installPostings(spark, mhRoot, 1L,
+      IndexLifecycle.MinhashPostings, mhSigs.filter(col("doc_id") % 7 =!= 0),
+      Seq(DedupQueries.MaxBucket)))
     val mhBatch = mhSigs.filter(col("doc_id") % 7 === 0)
     val mhExp = touching(
       SparkEntry.queries("q39_dedup_minhash_lsh")(spark, sf), "doc_a", "doc_b")
     assert(mhExp.nonEmpty &&
-      rowSet(IndexLifecycle.minhashBatchPairs(spark, mhRoot, mhBatch)) == mhExp,
+      rowSet(IndexLifecycle.batchPairs(spark, mhRoot,
+        IndexLifecycle.MinhashPostings, mhBatch)) == mhExp,
       "MinHash batch admission must equal the union rebuild's touching pairs")
-    assert(IndexLifecycle.appendMinhashPostings(spark, mhRoot, mhBatch)
+    assert(IndexLifecycle.appendPostings(spark, mhRoot,
+      IndexLifecycle.MinhashPostings, mhBatch)
       === Some(2L))
-    assert(rowSet(IndexLifecycle.minhashPairsFromStore(spark, mhRoot)) ==
+    assert(rowSet(IndexLifecycle.pairsFromStore(spark, mhRoot,
+      IndexLifecycle.MinhashPostings)) ==
       rowSet(SparkEntry.queries("q39_dedup_minhash_lsh")(spark, sf)))
 
     // LSH — batch codes must come from the INSTALLED planes/width (the
@@ -1107,18 +1170,22 @@ class IndexLifecycleSpec extends SparkSpec {
     val bits = SimilarityQueries.codeBits(n)
     val lshRoot = Files.createTempDirectory("graft_lshadmit").toString
     val vecs = DedupQueries.normVecs(spark, sf)
-    assert(IndexLifecycle.installLshPostings(spark, lshRoot, 1L,
-      vecs.filter(col("vec_id") % 7 =!= 0), bits))
+    assert(IndexLifecycle.installPostings(spark, lshRoot, 1L,
+      IndexLifecycle.LshPostings(sf), vecs.filter(col("vec_id") % 7 =!= 0),
+      Seq(bits, DedupQueries.LshTables)))
     val lshBatch = vecs.filter(col("vec_id") % 7 === 0)
     val lshExp = touching(
       SparkEntry.queries("q67_dedup_embedding_lsh")(spark, sf), "vec_a", "vec_b")
     assert(lshExp.nonEmpty &&
-      rowSet(IndexLifecycle.lshBatchPairs(spark, lshRoot, sf, lshBatch))
+      rowSet(IndexLifecycle.batchPairs(spark, lshRoot,
+        IndexLifecycle.LshPostings(sf), lshBatch))
         == lshExp,
       "LSH batch admission must equal the union rebuild's touching pairs")
-    assert(IndexLifecycle.appendLshPostings(spark, lshRoot, lshBatch)
+    assert(IndexLifecycle.appendPostings(spark, lshRoot,
+      IndexLifecycle.LshPostings(sf), lshBatch)
       === Some(2L))
-    assert(rowSet(IndexLifecycle.lshPairsFromStore(spark, lshRoot, sf)) ==
+    assert(rowSet(IndexLifecycle.pairsFromStore(spark, lshRoot,
+      IndexLifecycle.LshPostings(sf))) ==
       rowSet(SparkEntry.queries("q67_dedup_embedding_lsh")(spark, sf)))
     // a TRULY new vector (id absent from the corpus dir) must still
     // confirm — its floats live only in the batch until it is appended
@@ -1126,7 +1193,8 @@ class IndexLifecycleSpec extends SparkSpec {
     val clone = vecs.orderBy("vec_id").limit(1)
       .select((col("vec_id") + 1000000000L).as("vec_id"), col("v"),
         col("nrm"))
-    val cp = IndexLifecycle.lshBatchPairs(spark, lshRoot, sf, clone).collect()
+    val cp = IndexLifecycle.batchPairs(spark, lshRoot,
+      IndexLifecycle.LshPostings(sf), clone).collect()
     assert(cp.exists(r => r.getLong(0) == v0 &&
         r.getLong(1) == v0 + 1000000000L),
       s"a new vector must pair with its identical source: ${cp.toSeq}")
@@ -1135,20 +1203,25 @@ class IndexLifecycleSpec extends SparkSpec {
     // verdicts match the full rebuild even where the batch moved df
     val cdcRoot = Files.createTempDirectory("graft_cdcadmit").toString
     val media = mediaOf(sf)
-    assert(IndexLifecycle.installCdcPostings(spark, cdcRoot, 1L,
-      media.filter(col("doc_id") % 7 =!= 0)))
+    assert(IndexLifecycle.installPostings(spark, cdcRoot, 1L,
+      IndexLifecycle.CdcPostings, media.filter(col("doc_id") % 7 =!= 0),
+      Seq(DedupQueries.MaxBucket)))
     val cdcBatch = media.filter(col("doc_id") % 7 === 0)
     val cdcExp = touching(
       SparkEntry.queries("q253_media_cdc_containment")(spark, sf),
       "doc_a", "doc_b")
     assert(cdcExp.nonEmpty &&
-      rowSet(IndexLifecycle.cdcBatchPairs(spark, cdcRoot, cdcBatch)) == cdcExp,
+      rowSet(IndexLifecycle.batchPairs(spark, cdcRoot,
+        IndexLifecycle.CdcPostings, cdcBatch)) == cdcExp,
       "CDC batch admission must equal the union rebuild's touching pairs")
-    assert(IndexLifecycle.appendCdcPostings(spark, cdcRoot, cdcBatch)
+    assert(IndexLifecycle.appendPostings(spark, cdcRoot,
+      IndexLifecycle.CdcPostings, cdcBatch)
       === Some(2L))
-    assert(rowSet(IndexLifecycle.cdcPairsFromStore(spark, cdcRoot)) ==
+    assert(rowSet(IndexLifecycle.pairsFromStore(spark, cdcRoot,
+      IndexLifecycle.CdcPostings)) ==
       rowSet(SparkEntry.queries("q253_media_cdc_containment")(spark, sf)))
-    assert(IndexLifecycle.appendCdcPostings(spark, cdcRoot, cdcBatch).isEmpty)
+    assert(IndexLifecycle.appendPostings(spark, cdcRoot,
+      IndexLifecycle.CdcPostings, cdcBatch).isEmpty)
   }
 
   test("takedown: a deleted doc vanishes from every serve path (pq codes + all four postings pillars)") {
@@ -1187,45 +1260,55 @@ class IndexLifecycleSpec extends SparkSpec {
 
     val shRoot = Files.createTempDirectory("graft_td_sh").toString
     val shSigs = DedupQueries.textSimhashSigs(spark, sf)
-    assert(IndexLifecycle.installSimhashPostings(spark, shRoot, 1L, shSigs))
-    assert(IndexLifecycle.takedownSimhashPostings(spark, shRoot,
-      shSigs.filter(byDoc).select("doc_id")) === Some(2L))
-    assert(rowSet(IndexLifecycle.simhashPairsFromStore(spark, shRoot)) ==
+    assert(IndexLifecycle.installPostings(spark, shRoot, 1L,
+      IndexLifecycle.SimhashPostings, shSigs, Seq(DedupQueries.MaxBucket)))
+    assert(IndexLifecycle.takedownPostings(spark, shRoot,
+      IndexLifecycle.SimhashPostings, shSigs.filter(byDoc).select("doc_id")) === Some(2L))
+    assert(rowSet(IndexLifecycle.pairsFromStore(spark, shRoot,
+      IndexLifecycle.SimhashPostings)) ==
       rowSet(DedupQueries.simhashNearDupPairsUnsorted(shSigs.filter(!byDoc))
         .orderBy("doc_a", "doc_b")),
       "SimHash takedown must equal a rebuild on the post-deletion corpus")
 
     val mhRoot = Files.createTempDirectory("graft_td_mh").toString
     val mhSigs = DedupQueries.minhashSignatures(spark, sf)
-    assert(IndexLifecycle.installMinhashPostings(spark, mhRoot, 1L, mhSigs))
-    assert(IndexLifecycle.takedownMinhashPostings(spark, mhRoot,
-      mhSigs.filter(byDoc).select("doc_id")) === Some(2L))
-    assert(rowSet(IndexLifecycle.minhashPairsFromStore(spark, mhRoot)) ==
-      rowSet(IndexLifecycle.minhashPairsFromStore(spark, {
+    assert(IndexLifecycle.installPostings(spark, mhRoot, 1L,
+      IndexLifecycle.MinhashPostings, mhSigs, Seq(DedupQueries.MaxBucket)))
+    assert(IndexLifecycle.takedownPostings(spark, mhRoot,
+      IndexLifecycle.MinhashPostings, mhSigs.filter(byDoc).select("doc_id")) === Some(2L))
+    assert(rowSet(IndexLifecycle.pairsFromStore(spark, mhRoot,
+      IndexLifecycle.MinhashPostings)) ==
+      rowSet(IndexLifecycle.pairsFromStore(spark, {
         val r = Files.createTempDirectory("graft_td_mh2").toString
-        IndexLifecycle.installMinhashPostings(spark, r, 1L,
-          mhSigs.filter(!byDoc)); r
-      })),
+        IndexLifecycle.installPostings(spark, r, 1L,
+          IndexLifecycle.MinhashPostings, mhSigs.filter(!byDoc),
+          Seq(DedupQueries.MaxBucket)); r
+      }, IndexLifecycle.MinhashPostings)),
       "MinHash takedown must equal a rebuild on the post-deletion corpus")
 
     val lshRoot = Files.createTempDirectory("graft_td_lsh").toString
     val n = Tables.parquetRowCount(spark, sf, "embeddings")
     val bits = SimilarityQueries.codeBits(n)
     val vecs = DedupQueries.normVecs(spark, sf)
-    assert(IndexLifecycle.installLshPostings(spark, lshRoot, 1L, vecs, bits))
-    assert(IndexLifecycle.takedownLshPostings(spark, lshRoot,
-      vecs.filter(byVec).select("vec_id")) === Some(2L))
-    assert(rowSet(IndexLifecycle.lshPairsFromStore(spark, lshRoot, sf)) ==
+    assert(IndexLifecycle.installPostings(spark, lshRoot, 1L,
+      IndexLifecycle.LshPostings(sf), vecs, Seq(bits, DedupQueries.LshTables)))
+    assert(IndexLifecycle.takedownPostings(spark, lshRoot,
+      IndexLifecycle.LshPostings(sf), vecs.filter(byVec).select("vec_id"))
+      === Some(2L))
+    assert(rowSet(IndexLifecycle.pairsFromStore(spark, lshRoot,
+      IndexLifecycle.LshPostings(sf))) ==
       rowSet(DedupQueries.lshNearDupPairsFrom(vecs.filter(!byVec), bits)
         .orderBy("vec_a", "vec_b")),
       "LSH takedown must equal a rebuild on the post-deletion corpus")
 
     val cdcRoot = Files.createTempDirectory("graft_td_cdc").toString
     val media = mediaOf(sf)
-    assert(IndexLifecycle.installCdcPostings(spark, cdcRoot, 1L, media))
-    assert(IndexLifecycle.takedownCdcPostings(spark, cdcRoot,
-      media.filter(byDoc).select("doc_id")) === Some(2L))
-    assert(rowSet(IndexLifecycle.cdcPairsFromStore(spark, cdcRoot)) ==
+    assert(IndexLifecycle.installPostings(spark, cdcRoot, 1L,
+      IndexLifecycle.CdcPostings, media, Seq(DedupQueries.MaxBucket)))
+    assert(IndexLifecycle.takedownPostings(spark, cdcRoot,
+      IndexLifecycle.CdcPostings, media.filter(byDoc).select("doc_id")) === Some(2L))
+    assert(rowSet(IndexLifecycle.pairsFromStore(spark, cdcRoot,
+      IndexLifecycle.CdcPostings)) ==
       rowSet(graft.operators.MultimodalQueries
         .cdcContainmentPairs(media.filter(!byDoc))),
       "CDC takedown must equal a rebuild on the post-deletion corpus")
@@ -1237,61 +1320,78 @@ class IndexLifecycleSpec extends SparkSpec {
     // SimHash: the full drift loop on the planted saturation fixture —
     // this dial reads ONLY the stored signature frame, no corpus at all
     val root = Files.createTempDirectory("graft_postcap").toString
-    assert(IndexLifecycle.installSimhashPostings(spark, root, 1L,
-      sigsOf(healthyRows), cap = 16))
-    val a1 = IndexLifecycle.simhashPostingsCapAudit(spark, root).collect()
+    assert(IndexLifecycle.installPostings(spark, root, 1L,
+      IndexLifecycle.SimhashPostings, sigsOf(healthyRows), Seq(16)))
+    val a1 = IndexLifecycle.postingsAudit(spark, root,
+      IndexLifecycle.SimhashPostings, ()).collect()
     assert(!a1.exists(_.getBoolean(a1.head.fieldIndex("recalibrate"))),
       s"healthy install must audit green:\n${a1.mkString("\n")}")
-    assert(IndexLifecycle.recalibrateSimhashPostingsCap(spark, root).isEmpty)
+    assert(IndexLifecycle.recalibratePostings(spark, root,
+      IndexLifecycle.SimhashPostings, ()).isEmpty)
 
     // the saturated family ARRIVES THROUGH THE APPEND PATH — drift
     // reaches the pillar the way production drift does
-    assert(IndexLifecycle.appendSimhashPostings(spark, root,
-      sigsOf(driftedRows)) === Some(2L))
-    val a2 = IndexLifecycle.simhashPostingsCapAudit(spark, root).collect()
+    assert(IndexLifecycle.appendPostings(spark, root,
+      IndexLifecycle.SimhashPostings, sigsOf(driftedRows)) === Some(2L))
+    val a2 = IndexLifecycle.postingsAudit(spark, root,
+      IndexLifecycle.SimhashPostings, ()).collect()
     assert(a2.exists(_.getBoolean(a2.head.fieldIndex("recalibrate"))),
       s"the appended saturation must flag the serving cap:\n${a2.mkString("\n")}")
 
     // recalibrate: v3 carries sigs/postings by copy, only capcfg moves —
     // and the serve path recovers the planted family through the store
-    assert(IndexLifecycle.recalibrateSimhashPostingsCap(spark, root)
+    assert(IndexLifecycle.recalibratePostings(spark, root,
+      IndexLifecycle.SimhashPostings, ())
       === Some(3L))
-    val (_, _, cap3) = IndexLifecycle.readSimhashIndex(spark, root)
+    val cap3 = IndexLifecycle.readPostings(spark, root,
+      IndexLifecycle.SimhashPostings.layout).cfg.head
     assert(cap3 === 128)
-    assert(IndexLifecycle.simhashPairsFromStore(spark, root).count()
+    assert(IndexLifecycle.pairsFromStore(spark, root,
+      IndexLifecycle.SimhashPostings).count()
       === 69L * 35L + 10L,
       "the recalibrated cap must recover the saturated family")
-    val a3 = IndexLifecycle.simhashPostingsCapAudit(spark, root).collect()
+    val a3 = IndexLifecycle.postingsAudit(spark, root,
+      IndexLifecycle.SimhashPostings, ()).collect()
     assert(!a3.exists(_.getBoolean(a3.head.fieldIndex("recalibrate"))))
-    assert(IndexLifecycle.recalibrateSimhashPostingsCap(spark, root).isEmpty)
+    assert(IndexLifecycle.recalibratePostings(spark, root,
+      IndexLifecycle.SimhashPostings, ()).isEmpty)
 
     // MinHash / CDC / LSH: green-at-install + no-op loop on the sf corpus
     val mhRoot = Files.createTempDirectory("graft_postcap_mh").toString
-    assert(IndexLifecycle.installMinhashPostings(spark, mhRoot, 1L,
-      DedupQueries.minhashSignatures(spark, sf)))
-    val ma = IndexLifecycle.minhashPostingsCapAudit(spark, mhRoot, sf).collect()
+    assert(IndexLifecycle.installPostings(spark, mhRoot, 1L,
+      IndexLifecycle.MinhashPostings,
+      DedupQueries.minhashSignatures(spark, sf), Seq(DedupQueries.MaxBucket)))
+    val ma = IndexLifecycle.postingsAudit(spark, mhRoot,
+      IndexLifecycle.MinhashPostings, sf).collect()
     assert(ma.exists(_.getBoolean(ma.head.fieldIndex("installed"))) &&
       !ma.exists(_.getBoolean(ma.head.fieldIndex("recalibrate"))))
-    assert(IndexLifecycle.recalibrateMinhashPostingsCap(spark, mhRoot, sf)
+    assert(IndexLifecycle.recalibratePostings(spark, mhRoot,
+      IndexLifecycle.MinhashPostings, sf)
       .isEmpty)
 
     val cdcRoot = Files.createTempDirectory("graft_postcap_cdc").toString
     val media = mediaOf(sf)
-    assert(IndexLifecycle.installCdcPostings(spark, cdcRoot, 1L, media))
-    val ca = IndexLifecycle.cdcPostingsCapAudit(spark, cdcRoot, media).collect()
+    assert(IndexLifecycle.installPostings(spark, cdcRoot, 1L,
+      IndexLifecycle.CdcPostings, media, Seq(DedupQueries.MaxBucket)))
+    val ca = IndexLifecycle.postingsAudit(spark, cdcRoot,
+      IndexLifecycle.CdcPostings, media).collect()
     assert(ca.exists(_.getBoolean(ca.head.fieldIndex("installed"))) &&
       !ca.exists(_.getBoolean(ca.head.fieldIndex("recalibrate"))))
-    assert(IndexLifecycle.recalibrateCdcPostingsCap(spark, cdcRoot, media)
+    assert(IndexLifecycle.recalibratePostings(spark, cdcRoot,
+      IndexLifecycle.CdcPostings, media)
       .isEmpty)
 
     val lshRoot = Files.createTempDirectory("graft_postcap_lsh").toString
-    assert(IndexLifecycle.installLshPostings(spark, lshRoot, 1L,
-      DedupQueries.normVecs(spark, sf), SimilarityQueries.codeBits(
-        Tables.parquetRowCount(spark, sf, "embeddings"))))
-    val la = IndexLifecycle.lshPostingsTablesAudit(spark, lshRoot, sf).collect()
+    assert(IndexLifecycle.installPostings(spark, lshRoot, 1L,
+      IndexLifecycle.LshPostings(sf), DedupQueries.normVecs(spark, sf),
+      Seq(SimilarityQueries.codeBits(
+        Tables.parquetRowCount(spark, sf, "embeddings")), DedupQueries.LshTables)))
+    val la = IndexLifecycle.postingsAudit(spark, lshRoot,
+      IndexLifecycle.LshPostings(sf), ()).collect()
     assert(la.exists(_.getBoolean(la.head.fieldIndex("installed"))) &&
       !la.exists(_.getBoolean(la.head.fieldIndex("recalibrate"))))
-    assert(IndexLifecycle.recalibrateLshPostingsTables(spark, lshRoot, sf)
+    assert(IndexLifecycle.recalibratePostings(spark, lshRoot,
+      IndexLifecycle.LshPostings(sf), ())
       .isEmpty)
   }
 
@@ -1366,8 +1466,9 @@ class IndexLifecycleSpec extends SparkSpec {
     val sigs = DedupQueries.textSimhashSigs(spark, sf)
 
     // v1: full install of ~4/7 of the corpus
-    assert(IndexLifecycle.installSimhashPostings(spark, root, 1L,
-      sigs.filter(col("doc_id") % 7 >= 3)))
+    assert(IndexLifecycle.installPostings(spark, root, 1L,
+      IndexLifecycle.SimhashPostings, sigs.filter(col("doc_id") % 7 >= 3),
+      Seq(DedupQueries.MaxBucket)))
     val segsV1 = segDirsOf(root)
     val bytesV1 = bytesUnder(java.nio.file.Paths.get(root))
 
@@ -1375,8 +1476,8 @@ class IndexLifecycleSpec extends SparkSpec {
     // the carried segments (zero copied bytes) and add only delta segments
     (0 until 3).foreach { m =>
       val before = manifestRefs(root, 1L + m)
-      assert(IndexLifecycle.appendSimhashPostings(spark, root,
-        sigs.filter(col("doc_id") % 7 === m)) === Some(2L + m))
+      assert(IndexLifecycle.appendPostings(spark, root,
+        IndexLifecycle.SimhashPostings, sigs.filter(col("doc_id") % 7 === m)) === Some(2L + m))
       val after = manifestRefs(root, 2L + m)
       // base artifacts (sigs/postings) carry by reference; the derived
       // probe-ready `balls` segment rebuilds whole per commit (bucket
@@ -1394,7 +1495,8 @@ class IndexLifecycleSpec extends SparkSpec {
     assert(segsV1.subsetOf(segDirsOf(root)))
     // served pairs after the three appends == live full corpus
     val live = rowSet(SparkEntry.queries("q40_dedup_simhash")(spark, sf))
-    assert(rowSet(IndexLifecycle.simhashPairsFromStore(spark, root)) == live)
+    assert(rowSet(IndexLifecycle.pairsFromStore(spark, root,
+      IndexLifecycle.SimhashPostings)) == live)
 
     // file count: appends accumulated >= 4 postings segments; compaction
     // folds them into one segment per artifact with fewer files
@@ -1402,24 +1504,28 @@ class IndexLifecycleSpec extends SparkSpec {
     assert(refsBefore.size >= 8,
       s"3 appends over 2 artifacts must accumulate segments: $refsBefore")
     val filesBefore = filesUnderRefs(root, refsBefore)
-    assert(IndexLifecycle.compactSimhashPostings(spark, root) === Some(5L))
+    assert(IndexLifecycle.compactPostings(spark, root,
+      IndexLifecycle.SimhashPostings) === Some(5L))
     val refsAfter = manifestRefs(root, 5L)
     assert(refsAfter.size === 3,
       s"compaction must leave one segment per artifact (sigs, postings, " +
         s"and the carried balls): $refsAfter")
     assert(filesUnderRefs(root, refsAfter) < filesBefore,
       "compaction must shrink the physical file count")
-    assert(rowSet(IndexLifecycle.simhashPairsFromStore(spark, root)) == live,
+    assert(rowSet(IndexLifecycle.pairsFromStore(spark, root,
+      IndexLifecycle.SimhashPostings)) == live,
       "a compacted version must serve identical pairs")
     // idempotence: single-segment artifacts have nothing to compact
-    assert(IndexLifecycle.compactSimhashPostings(spark, root).isEmpty)
+    assert(IndexLifecycle.compactPostings(spark, root,
+      IndexLifecycle.SimhashPostings).isEmpty)
 
     // retention: keep only the compacted head; the superseded delta
     // segments (referenced by dropped manifests only) are reclaimed and
     // disk returns to ~one index (compacted segments + KB of scalars)
     val (vDel, sDel) = IndexLifecycle.pruneVersions(root, keep = 1)
     assert(vDel === 4 && sDel >= 8, s"prune deleted ($vDel, $sDel)")
-    assert(rowSet(IndexLifecycle.simhashPairsFromStore(spark, root)) == live,
+    assert(rowSet(IndexLifecycle.pairsFromStore(spark, root,
+      IndexLifecycle.SimhashPostings)) == live,
       "a pruned store must serve the latest version unchanged")
     assert(segDirsOf(root) == refsAfter.map(_.stripPrefix("segments/")),
       "after prune, disk holds exactly the kept manifest's segments")
@@ -1435,7 +1541,8 @@ class IndexLifecycleSpec extends SparkSpec {
       "a fresh unreferenced segment may be an in-flight commit: not swept")
     assert(IndexLifecycle.gcOrphanSegments(root, minAgeMs = 0L) === 1)
     assert(!Files.exists(orphan))
-    assert(rowSet(IndexLifecycle.simhashPairsFromStore(spark, root)) == live)
+    assert(rowSet(IndexLifecycle.pairsFromStore(spark, root,
+      IndexLifecycle.SimhashPostings)) == live)
   }
 
   test("lsh confirm guard names a planted pathological bucket's mass; the dial absorbs it; no candidate is ever dropped") {
@@ -1454,8 +1561,9 @@ class IndexLifecycleSpec extends SparkSpec {
     val dir = writeEmbeddings(rows)
     val root = Files.createTempDirectory("graft_lshguard").toString
     val n = Tables.parquetRowCount(spark, dir, "embeddings")
-    assert(IndexLifecycle.installLshPostings(spark, root, 1L,
-      DedupQueries.normVecs(spark, dir), SimilarityQueries.codeBits(n)))
+    assert(IndexLifecycle.installPostings(spark, root, 1L,
+      IndexLifecycle.LshPostings(dir), DedupQueries.normVecs(spark, dir),
+      Seq(SimilarityQueries.codeBits(n), DedupQueries.LshTables)))
 
     // the audit names WHERE the mass lives: heaviest bucket = the
     // planted one, 780 pairs, flagged against a 100-pair bucket budget
@@ -1471,7 +1579,8 @@ class IndexLifecycleSpec extends SparkSpec {
     assert(g.overBudget, s"planted mass must exceed the budget: $g")
 
     // the guard reports, never drops: serve under the flag == plain serve
-    val served = rowSet(IndexLifecycle.lshPairsFromStore(spark, root, dir))
+    val served = rowSet(IndexLifecycle.pairsFromStore(spark, root,
+      IndexLifecycle.LshPostings(dir)))
     assert(served.size >= 780,
       "every planted pair must survive the flagged confirm")
 
@@ -1488,7 +1597,8 @@ class IndexLifecycleSpec extends SparkSpec {
     val g2 = IndexLifecycle.lshConfirmGuard(spark, root, budgetPairs = 1000L)
     assert(g2.mass < g.mass,
       s"absorbing must shrink the confirm mass: ${g.mass} -> ${g2.mass}")
-    assert(rowSet(IndexLifecycle.lshPairsFromStore(spark, root, dir))
+    assert(rowSet(IndexLifecycle.pairsFromStore(spark, root,
+      IndexLifecycle.LshPostings(dir)))
       == served,
       "absorbing the mass must not change the served pair set here")
     // under budget now? either way the reading is named, not hidden
@@ -1556,8 +1666,9 @@ class IndexLifecycleSpec extends SparkSpec {
     // nightly batch; plus one AGED orphan segment (failed-commit debris)
     val shRoot = base.resolve("sh").toString
     val sigs = DedupQueries.textSimhashSigs(spark, sf)
-    assert(IndexLifecycle.installSimhashPostings(spark, shRoot, 1L,
-      sigs.filter(col("doc_id") % 7 =!= 0)))
+    assert(IndexLifecycle.installPostings(spark, shRoot, 1L,
+      IndexLifecycle.SimhashPostings, sigs.filter(col("doc_id") % 7 =!= 0),
+      Seq(DedupQueries.MaxBucket)))
     val orphan = Files.createTempDirectory(
       java.nio.file.Paths.get(shRoot, "segments"), "sigs-orphan")
     Files.write(orphan.resolve("junk.parquet"), Array[Byte](1))
@@ -1568,8 +1679,9 @@ class IndexLifecycleSpec extends SparkSpec {
     // MinHash pillar: fully installed and quiescent — the driver must
     // touch nothing
     val mhRoot = base.resolve("mh").toString
-    assert(IndexLifecycle.installMinhashPostings(spark, mhRoot, 1L,
-      DedupQueries.minhashSignatures(spark, sf)))
+    assert(IndexLifecycle.installPostings(spark, mhRoot, 1L,
+      IndexLifecycle.MinhashPostings,
+      DedupQueries.minhashSignatures(spark, sf), Seq(DedupQueries.MaxBucket)))
 
     // PQ pillar: installed (and baselined) on the OLD epoch; the corpus
     // then drifts to the full distribution — the audit must flag and
@@ -1585,9 +1697,11 @@ class IndexLifecycleSpec extends SparkSpec {
       .parquet(s"$dir/embeddings.parquet")
 
     val pillars = Seq(
-      IndexLifecycle.SimhashPillar("sh", shRoot,
+      IndexLifecycle.PostingsPillar("sh", shRoot,
+        IndexLifecycle.SimhashPostings, (),
         Some(sigs.filter(col("doc_id") % 7 === 0))),
-      IndexLifecycle.MinhashPillar("mh", mhRoot, sf),
+      IndexLifecycle.PostingsPillar("mh", mhRoot,
+        IndexLifecycle.MinhashPostings, sf),
       IndexLifecycle.PqPillar("pq", pqRoot, dir, k = 2))
     def run() = IndexLifecycle
       .nightlyMaintenance(spark, pillars, keep = 1)
@@ -1603,7 +1717,8 @@ class IndexLifecycleSpec extends SparkSpec {
       s"unexpected action set: $r1")
     assert(!Files.exists(orphan), "the aged orphan must be reclaimed")
     // the pass left a healthy store: the serve equals a fresh rebuild
-    assert(IndexLifecycle.simhashPairsFromStore(spark, shRoot)
+    assert(IndexLifecycle.pairsFromStore(spark, shRoot,
+      IndexLifecycle.SimhashPostings)
       .collect().toSeq ==
       DedupQueries.simhashNearDupPairsUnsorted(sigs)
         .orderBy("doc_a", "doc_b").collect().toSeq,
@@ -1625,8 +1740,10 @@ class IndexLifecycleSpec extends SparkSpec {
     val tSigs = DedupQueries.textSimhashSigs(spark, sf)
     val mSigs = MultimodalQueries.byteSimhashSigs(media)
 
-    assert(IndexLifecycle.installSimhashPostings(spark, tRoot, 1L, tSigs))
-    assert(IndexLifecycle.installSimhashPostings(spark, mRoot, 1L, mSigs))
+    assert(IndexLifecycle.installPostings(spark, tRoot, 1L,
+      IndexLifecycle.SimhashPostings, tSigs, Seq(DedupQueries.MaxBucket)))
+    assert(IndexLifecycle.installPostings(spark, mRoot, 1L,
+      IndexLifecycle.SimhashPostings, mSigs, Seq(DedupQueries.MaxBucket)))
     assert(IndexLifecycle.cutRelease(rel, 1L,
       Map("text_simhash" -> tRoot, "media_simhash" -> mRoot)))
     def consensus() = IndexLifecycle
@@ -1635,19 +1752,23 @@ class IndexLifecycleSpec extends SparkSpec {
     assert(c1.nonEmpty)
     // the release serve equals the live q260 composition exactly
     assert(c1 == MultimodalQueries.crossModalConsensus(
-      IndexLifecycle.simhashPairsFromStore(spark, tRoot),
-      IndexLifecycle.simhashPairsFromStore(spark, mRoot)).collect().toSeq)
+      IndexLifecycle.pairsFromStore(spark, tRoot,
+        IndexLifecycle.SimhashPostings),
+      IndexLifecycle.pairsFromStore(spark, mRoot,
+        IndexLifecycle.SimhashPostings)).collect().toSeq)
     // the single-pillar release serves agree with their stores too
-    assert(IndexLifecycle.simhashPairsAtRelease(spark, rel, "text_simhash")
+    assert(IndexLifecycle.pairsAtRelease(spark, rel,
+      IndexLifecycle.SimhashPostings, "text_simhash")
       .collect().toSeq ==
-      IndexLifecycle.simhashPairsFromStore(spark, tRoot).collect().toSeq)
+      IndexLifecycle.pairsFromStore(spark, tRoot,
+        IndexLifecycle.SimhashPostings).collect().toSeq)
 
     // interposed MEDIA swap (half the corpus): at 'staged' AND
     // 'installed' the release must keep composing the pinned v1 pair —
     // never text v1 + media v2, the mid-swap mix releases exist to kill
-    assert(IndexLifecycle.installSimhashPostings(spark, mRoot, 2L,
-      mSigs.filter(col("doc_id") % 2 === 0),
-      interpose = stage => {
+    assert(IndexLifecycle.installPostings(spark, mRoot, 2L,
+      IndexLifecycle.SimhashPostings, mSigs.filter(col("doc_id") % 2 === 0),
+      Seq(DedupQueries.MaxBucket), interpose = stage => {
         assert(consensus() == c1,
           s"release must compose the pinned pair at media-swap '$stage'")
       }))
@@ -1656,15 +1777,19 @@ class IndexLifecycleSpec extends SparkSpec {
     // sanity: the LATEST-version composition did move — the pin is load-
     // bearing, not vacuously green
     assert(MultimodalQueries.crossModalConsensus(
-      IndexLifecycle.simhashPairsFromStore(spark, tRoot),
-      IndexLifecycle.simhashPairsFromStore(spark, mRoot)).collect().toSeq
+      IndexLifecycle.pairsFromStore(spark, tRoot,
+        IndexLifecycle.SimhashPostings),
+      IndexLifecycle.pairsFromStore(spark, mRoot,
+        IndexLifecycle.SimhashPostings)).collect().toSeq
       != c1, "the head composition must differ after the media swap")
 
     // the next cut picks up the new head coherently
     assert(IndexLifecycle.cutRelease(rel, 2L,
       Map("text_simhash" -> tRoot, "media_simhash" -> mRoot)))
     assert(consensus() == MultimodalQueries.crossModalConsensus(
-      IndexLifecycle.simhashPairsFromStore(spark, tRoot),
-      IndexLifecycle.simhashPairsFromStore(spark, mRoot)).collect().toSeq)
+      IndexLifecycle.pairsFromStore(spark, tRoot,
+        IndexLifecycle.SimhashPostings),
+      IndexLifecycle.pairsFromStore(spark, mRoot,
+        IndexLifecycle.SimhashPostings)).collect().toSeq)
   }
 }

@@ -2112,8 +2112,9 @@ class StreamingOpsSpec extends SparkSpec {
     // --- SimHash text: pillar on ~6/7, the 1/7 batch streams in ---
     val shRoot = java.nio.file.Files.createTempDirectory("boot_sh").toString
     val shSigs = DedupQueries.textSimhashSigs(spark, sf)
-    assert(IndexLifecycle.installSimhashPostings(spark, shRoot, 1L,
-      shSigs.filter(col("doc_id") % 7 =!= 0)))
+    assert(IndexLifecycle.installPostings(spark, shRoot, 1L,
+      IndexLifecycle.SimhashPostings, shSigs.filter(col("doc_id") % 7 =!= 0),
+      Seq(DedupQueries.MaxBucket)))
     val shBatch = shSigs.filter(col("doc_id") % 7 === 0)
       .orderBy("doc_id").as[MediaSig].collect().toSeq
     val shPairs = runBootstrapped[MediaSig, NearDupPair](
@@ -2129,9 +2130,10 @@ class StreamingOpsSpec extends SparkSpec {
     // --- MinHash: candidates + the two-lookup signature confirm ---
     val mhRoot = java.nio.file.Files.createTempDirectory("boot_mh").toString
     val docs = Tables.documents(spark, sf)
-    assert(IndexLifecycle.installMinhashPostings(spark, mhRoot, 1L,
+    assert(IndexLifecycle.installPostings(spark, mhRoot, 1L,
+      IndexLifecycle.MinhashPostings,
       DedupQueries.minhashSignatures(spark, sf)
-        .filter(col("doc_id") % 7 =!= 0)))
+        .filter(col("doc_id") % 7 =!= 0), Seq(DedupQueries.MaxBucket)))
     val mhBatch = DedupQueries.minhashSigKeysFor(
         docs.filter(col("doc_id") % 7 === 0))
       .orderBy("doc_id").as[MinhashSig].collect().toSeq
@@ -2157,8 +2159,9 @@ class StreamingOpsSpec extends SparkSpec {
     val n = Tables.parquetRowCount(spark, sf, "embeddings")
     val bits = SimilarityQueries.codeBits(n)
     val e = DedupQueries.normVecs(spark, sf)
-    assert(IndexLifecycle.installLshPostings(spark, lshRoot, 1L,
-      e.filter(col("vec_id") % 7 =!= 0), bits))
+    assert(IndexLifecycle.installPostings(spark, lshRoot, 1L,
+      IndexLifecycle.LshPostings(sf), e.filter(col("vec_id") % 7 =!= 0),
+      Seq(bits, DedupQueries.LshTables)))
     val lshBatch = DedupQueries.lshSigCodes(
         e.filter(col("vec_id") % 7 === 0), bits)
       .orderBy("vec_id").as[LshSig].collect().toSeq
@@ -2210,7 +2213,8 @@ class StreamingOpsSpec extends SparkSpec {
       .toDF("doc_id", "payload")
     val stored = media.filter(col("doc_id").isin(1L, 2L, 4L))
     val cdcRoot = java.nio.file.Files.createTempDirectory("boot_cdc").toString
-    assert(IndexLifecycle.installCdcPostings(spark, cdcRoot, 1L, stored))
+    assert(IndexLifecycle.installPostings(spark, cdcRoot, 1L,
+      IndexLifecycle.CdcPostings, stored, Seq(DedupQueries.MaxBucket)))
     val batchArr = chunkFrame(media.filter(col("doc_id").isin(3L, 5L)))
       .select(col("cfp"), col("doc_id")).as[ChunkArrival]
       .collect().sortBy(_.doc_id).toSeq
@@ -2418,8 +2422,9 @@ class StreamingOpsSpec extends SparkSpec {
         s"$pins vs $latest")
     // advance the pillar once more so the prune has an UNPINNED,
     // non-head version to actually reclaim
-    graft.operators.IndexLifecycle.appendSimhashPostings(spark,
-      s"$base3/pillar", Seq((999999L, 123L)).toDF("doc_id", "sim"))
+    graft.operators.IndexLifecycle.appendPostings(spark, s"$base3/pillar",
+      graft.operators.IndexLifecycle.SimhashPostings,
+      Seq((999999L, 123L)).toDF("doc_id", "sim"))
     val (vDropped, _) = IngestPipeline.pruneIngestPillar(spark, base3,
       keep = 1)
     assert(vDropped >= 1,
@@ -2693,7 +2698,8 @@ class StreamingOpsSpec extends SparkSpec {
     IngestPipeline.ingestTakedown(spark, base, Seq(victim).toDF("doc_id"))
     val vAfterTd = IndexLifecycle.latestVersion(s"$base/pillar").get
     def storedHas(id: Long): Boolean =
-      IndexLifecycle.readSimhashIndex(spark, s"$base/pillar")._1
+      IndexLifecycle.readPostings(spark, s"$base/pillar",
+        IndexLifecycle.SimhashPostings.layout)("sigs")
         .filter(col("doc_id") === id).count() > 0
     assert(!storedHas(victim), "the takedown must remove the victim")
     IngestPipeline.processBatch(spark, docs1.toDF(), 1L, evalW,
