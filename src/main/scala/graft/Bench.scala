@@ -20,39 +20,49 @@ object Bench {
       try q.run(spark, sfDir).count()
       catch { case _: Throwable => () }
     }
+    // A query that throws in any timed run is named and counted as failed;
+    // its time-to-failure is not a query time, so it stays out of
+    // "queries", the medians and the total.
+    val failed = scala.collection.mutable.LinkedHashMap.empty[String, String]
+    def timed(q: GraftQuery): Option[Double] = {
+      val t0 = System.nanoTime()
+      try { q.run(spark, sfDir).count(); Some((System.nanoTime() - t0) / 1e9) }
+      catch {
+        case e: Throwable =>
+          failed.getOrElseUpdate(q.name, s"${e.getClass.getSimpleName}: ${e.getMessage}")
+          None
+      }
+    }
     // Two timed passes, per-query MIN: this box has noisy co-tenants and a
     // single pass can read 20-200% high on whichever queries the noise hits;
     // the min of two is the honest steady-state signal (same rationale as
     // BenchOne's min-of-N dev loop).
-    def timedPass(): Seq[(String, Double)] = SparkEntry.catalog.map { q =>
-      val t0 = System.nanoTime()
-      try { q.run(spark, sfDir).count() } catch { case _: Throwable => -1L }
-      q.name -> (System.nanoTime() - t0) / 1e9
-    }
-    val (p1, p2) = (timedPass(), timedPass())
-    val results = p1.zip(p2).map { case ((name, a), (_, b)) => name -> math.min(a, b) }
+    def timedPass(qs: Seq[GraftQuery]): Map[String, Double] =
+      qs.flatMap(q => timed(q).map(q.name -> _)).toMap
+    val (p1, p2) = (timedPass(SparkEntry.catalog), timedPass(SparkEntry.catalog))
+    val mins = SparkEntry.catalog.map(_.name).filterNot(failed.contains)
+      .map(k => k -> math.min(p1(k), p2(k)))
     // Median-of-3 for the 10 most expensive queries: with min-of-2 alone, a
     // real 1.5x regression in a ~2s query is indistinguishable from this
     // box's co-tenant noise (q102's ±40% swing across rounds with untouched
     // code). A third sample of just the top-10 costs seconds and the median
     // is the cross-round comparison signal; the headline total stays
     // min-based so totals remain comparable with earlier rounds.
-    val top10 = results.sortBy(-_._2).take(10).map(_._1).toSet
-    val p3 = SparkEntry.catalog.filter(q => top10(q.name)).map { q =>
-      val t0 = System.nanoTime()
-      try { q.run(spark, sfDir).count() } catch { case _: Throwable => -1L }
-      q.name -> (System.nanoTime() - t0) / 1e9
-    }.toMap
-    val (t1, t2) = (p1.toMap, p2.toMap)
+    val top10 = mins.sortBy(-_._2).take(10).map(_._1).toSet
+    val p3 = timedPass(SparkEntry.catalog.filter(q => top10(q.name)))
+    val results = mins.filterNot(r => failed.contains(r._1))
     val medians = results.filter(r => top10(r._1)).map { case (k, _) =>
-      k -> Seq(t1(k), t2(k), p3(k)).sorted.apply(1)
+      k -> Seq(p1(k), p2(k), p3(k)).sorted.apply(1)
     }
+    failed.foreach { case (k, err) => System.err.println(s"[bench] FAILED $k: $err") }
+    val failures = s""""n_failed":${failed.size},"failed":""" +
+      failed.keys.map("\"" + _ + "\"").mkString("[", ",", "]")
     val med = medians.map { case (k, v) => s"\"" + k + "\":" + v }
       .mkString("{", ",", "}")
     val qs = results.map { case (k, v) => s"\"" + k + "\":" + v }
       .mkString("{", ",", "}")
     val total = if (results.nonEmpty) results.map(_._2).sum else 0.0
-    val json = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"median3_top10":$med,"sf":"$sfDir"}"""
+    val json = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"median3_top10":$med,$failures,"sf":"$sfDir"}"""
     println(json)
     // Also persist the line verbatim: the driver captures only a tail of
     // stdout and sbt noise has twice truncated the JSON (BENCH_r01/r02
@@ -67,6 +77,6 @@ object Bench {
     // any tail capture then carries a complete parseable record.
     val slowest = results.sortBy(-_._2).take(5)
       .map { case (k, v) => s"\"" + k + "\":" + v }.mkString("{", ",", "}")
-    println(s"""{"metric":"total","value":$total,"unit":"sec","n":${results.size},"queries":$slowest,"median3_top10":$med,"sf":"$sfDir"}""")
+    println(s"""{"metric":"total","value":$total,"unit":"sec","n":${results.size},"queries":$slowest,"median3_top10":$med,$failures,"sf":"$sfDir"}""")
   }
 }

@@ -17,9 +17,14 @@ import org.apache.spark.sql.types.{BinaryType, DataType, StructField, StructType
   * executors row-by-row; CodegenFallback is acceptable because Avro decode is
   * malloc-bound, not dispatch-bound.
   *
-  * Thread-safety: GenericDatumReader/Writer keep resolver state, so the codec
-  * constructs them per call (expressions are shared across an executor's task
-  * threads); the parsed Schema is immutable and safely shared.
+  * Per-task state: each expression compiles its codec once — converter tree,
+  * datum reader/writer, decoder/encoder, output buffer and the Avro-side
+  * record it reads into — and keeps it in `@transient lazy val`s. That is
+  * safe because Spark deserializes its own copy of the plan for every task,
+  * so the state is confined to one task thread (the confinement spark-avro's
+  * `AvroDataToCatalyst` relies on). Output values are never reused: every
+  * record yields fresh rows, arrays and byte arrays that share nothing with
+  * the reused Avro record, so operators may buffer them.
   */
 /** @param jsonSchema       reader schema — defines the output struct type
   * @param writerJsonSchema writer schema the bytes were encoded with (from
@@ -41,9 +46,12 @@ case class AvroToCatalyst(child: Expression, jsonSchema: String,
 
   override def prettyName: String = "graft_from_avro"
 
+  @transient private lazy val decoding = new AvroCodec.Decoding(writer, reader)
+  @transient private lazy val toRow = AvroCodec.toCatalyst(reader, dataType)
+
   override protected def nullSafeEval(input: Any): Any = {
-    val rec = AvroCodec.decode(input.asInstanceOf[Array[Byte]], writer, reader)
-    AvroCodec.avroToCatalyst(rec, reader, dataType)
+    val bytes = input.asInstanceOf[Array[Byte]]
+    toRow(decoding.reusedRecord(bytes, 0, bytes.length))
   }
 
   override protected def withNewChildInternal(newChild: Expression): AvroToCatalyst =
@@ -82,15 +90,12 @@ case class CatalystToAvro(child: Expression, recordName: String,
   override def prettyName: String =
     if (frameId.isDefined) "graft_to_avro_wire" else "graft_to_avro"
 
-  override protected def nullSafeEval(input: Any): Any = {
-    val rec = AvroCodec.catalystToAvro(input, child.dataType, schema)
-      .asInstanceOf[org.apache.avro.generic.GenericRecord]
-    val body = AvroCodec.encode(rec, schema)
-    frameId match {
-      case Some(id) => WireFormat.frame(id, body, frameMagic)
-      case None     => body
-    }
-  }
+  @transient private lazy val toAvro = AvroCodec.fromCatalyst(child.dataType, schema)
+  @transient private lazy val encoding = new AvroCodec.Encoding(schema,
+    frameId.fold(Array.emptyByteArray)(WireFormat.header(_, frameMagic)))
+
+  override protected def nullSafeEval(input: Any): Any =
+    encoding.bytes(toAvro(input).asInstanceOf[org.apache.avro.generic.GenericRecord])
 
   override protected def withNewChildInternal(newChild: Expression): CatalystToAvro =
     copy(child = newChild)
@@ -114,8 +119,10 @@ case class WireAvroToCatalyst(child: Expression, readerJsonSchema: String,
   @transient private lazy val reader: Schema =
     new Schema.Parser().parse(readerJsonSchema)
   @transient private lazy val openRegistry = registry.open()
-  @transient private lazy val writerCache =
-    scala.collection.concurrent.TrieMap.empty[Long, Schema]
+  @transient private lazy val toRow = AvroCodec.toCatalyst(reader, dataType)
+  /** One decoding per writer schema id seen by this task. */
+  @transient private lazy val decodings =
+    scala.collection.mutable.LongMap.empty[AvroCodec.Decoding]
 
   override lazy val dataType: DataType = AvroSchemaConverter.toStructType(
     new Schema.Parser().parse(readerJsonSchema))
@@ -127,12 +134,13 @@ case class WireAvroToCatalyst(child: Expression, readerJsonSchema: String,
   override protected def nullSafeEval(input: Any): Any = nullSafeDecode(input)
 
   private[avro] def nullSafeDecode(input: Any): Any = {
-    val (id, body) = WireFormat.unframe(input.asInstanceOf[Array[Byte]])
-    val writer = writerCache.getOrElseUpdate(id,
+    val bytes = input.asInstanceOf[Array[Byte]]
+    val (id, offset) = WireFormat.locate(bytes)
+    val decoding = decodings.getOrElseUpdate(id, new AvroCodec.Decoding(
       openRegistry.byId(id).getOrElse(
-        throw new IllegalStateException(s"schema id $id not in registry $registry")))
-    val rec = AvroCodec.decode(body, writer, reader)
-    AvroCodec.avroToCatalyst(rec, reader, dataType)
+        throw new IllegalStateException(s"schema id $id not in registry $registry")),
+      reader))
+    toRow(decoding.reusedRecord(bytes, offset, bytes.length - offset))
   }
 
   override protected def withNewChildInternal(newChild: Expression): WireAvroToCatalyst =

@@ -14,16 +14,21 @@ import scala.jdk.CollectionConverters._
   * engine deliberately surfaces the same information at batch granularity,
   * which is also what Kafka's producer callbacks get coalesced into under
   * `linger.ms` batching). The listener records, per non-empty
-  * micro-batch, the rows in and the summed phase durations
-  * (`durationMs`), plus per-stream totals of rows and batches — enough to
+  * micro-batch, the rows in, each phase's duration (`durationMs`: e.g.
+  * `latestOffset`, `getBatch`, `queryPlanning`, `walCommit`, `addBatch`,
+  * `commitOffsets` and the whole `triggerExecution`) and their sum, plus
+  * per-stream totals of rows and batches — enough to
   * derive the reference's "how many records were replicated, how fast"
   * without touching the data path. It records no event-time watermark:
   * the replication stream defines none.
   */
 final class ReplicationMetrics extends StreamingQueryListener {
 
+  /** @param durationMs the sum of `phases`
+    * @param phases     each phase's duration in ms, by Spark's phase name */
   final case class BatchMetric(queryId: java.util.UUID, batchId: Long,
-                               inputRows: Long, durationMs: Long, timestamp: String)
+                               inputRows: Long, durationMs: Long, timestamp: String,
+                               phases: Map[String, Long])
 
   private final class Totals {
     val rows = new java.util.concurrent.atomic.AtomicLong()
@@ -50,8 +55,9 @@ final class ReplicationMetrics extends StreamingQueryListener {
       val t = totals.computeIfAbsent(p.id, _ => new Totals)
       t.rows.addAndGet(p.numInputRows)
       t.batches.incrementAndGet()
+      val phases = p.durationMs.asScala.map { case (k, v) => k -> v.toLong }.toMap
       recent.addLast(BatchMetric(p.id, p.batchId, p.numInputRows,
-        p.durationMs.asScala.values.map(_.toLong).sum, p.timestamp))
+        phases.values.sum, p.timestamp, phases))
       while (recent.size() > RecentCap) recent.pollFirst()
     }
   }

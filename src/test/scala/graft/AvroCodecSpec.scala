@@ -1,8 +1,13 @@
 package graft
 
-import graft.avro.{AvroCodec, AvroFunctions, AvroSchemaConverter, InMemorySchemaRegistry, SchemaRegistry}
+import java.nio.file.Files
+
+import graft.avro.{AvroCodec, AvroFunctions, AvroSchemaConverter, FileRegistryRef, FileSchemaRegistry, InMemorySchemaRegistry, SchemaRegistry, WireFormat}
 import org.apache.avro.{Schema, SchemaBuilder}
 import org.apache.avro.generic.GenericData
+import org.apache.avro.io.EncoderFactory
+import org.apache.spark.sql.Row
+import org.apache.spark.sql.catalyst.CatalystTypeConverters
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.scalacheck.Gen
@@ -231,6 +236,93 @@ class AvroCodecSpec extends SparkSpec {
     assert(encodeMicros(-1500L) === -2L)   // -1.5ms → -2ms (floor), not -1ms
     assert(encodeMicros(1500L) === 1L)
     assert(encodeMicros(-1000L) === -1L)
+  }
+
+  /** The one-shot path — `unframe`, `decode` under the registry's writer
+    * schema, `avroToCatalyst` — as an external Row. */
+  private def oneShot(wire: Array[Byte], registry: SchemaRegistry, reader: Schema): Row = {
+    val dt = AvroSchemaConverter.toStructType(reader)
+    val (id, body) = WireFormat.unframe(wire)
+    val rec = AvroCodec.decode(body, registry.byId(id).get, reader)
+    CatalystTypeConverters.createToScalaConverter(dt)(
+      AvroCodec.avroToCatalyst(rec, reader, dt)).asInstanceOf[Row]
+  }
+
+  test("interleaved writer versions in 4 partitions decode as the one-shot path does") {
+    import spark.implicits._
+    val regRoot = Files.createTempDirectory("graft-evo").toString
+    val wire = EvoFixture.interleaved(regRoot, 400)
+    val df = spark.sparkContext.parallelize(wire.zipWithIndex, 4).toDF("value", "i")
+    val idsPerPartition = df.rdd
+      .mapPartitions(rows => Iterator(rows.map(r => WireFormat.locate(r.getAs[Array[Byte]](0))._1).toSet))
+      .collect()
+    assert(idsPerPartition.length === 4)
+    assert(idsPerPartition.forall(_.size === 2), "every partition interleaves both writer ids")
+
+    val decoded = df.select(col("i"), AvroFunctions.fromAvroWire(
+        col("value"), EvoFixture.v2.toString, FileRegistryRef(regRoot)).as("r"))
+      .collect().map(r => r.getInt(0) -> r.getStruct(1)).toMap
+    val registry = new FileSchemaRegistry(regRoot)
+    assert(decoded.size === 400)
+    wire.zipWithIndex.foreach { case (w, i) =>
+      assert(decoded(i) === oneShot(w, registry, EvoFixture.v2), s"record $i")
+      assert(decoded(i).getString(1) === (if (i % 3 == 0) "legacy" else s"s$i"))
+    }
+  }
+
+  test("poison records leave no decoder or record state behind in their partition") {
+    import spark.implicits._
+    val schema = new Schema.Parser().parse(
+      """{"type":"record","name":"Tagged","fields":[
+        |  {"name":"id","type":"long"},
+        |  {"name":"tags","type":{"type":"array","items":"long"}},
+        |  {"name":"name","type":"string"}]}""".stripMargin)
+    val regRoot = Files.createTempDirectory("graft-poison").toString
+    val id = new FileSchemaRegistry(regRoot).register("tagged-value", schema)
+    def body(i: Long, tags: Int): Array[Byte] = {
+      val rec = new GenericData.Record(schema)
+      rec.put("id", i)
+      rec.put("tags", java.util.Arrays.asList((0 until tags).map(t => Long.box(i * 10 + t)): _*))
+      rec.put("name", s"n$i" * tags)
+      AvroCodec.encode(rec, schema)
+    }
+    // a block count just under Avro's collection limit: read into a new
+    // array it makes the reader preallocate ~16 GB
+    val hugeBlock = {
+      val out = new java.io.ByteArrayOutputStream()
+      val enc = EncoderFactory.get().directBinaryEncoder(out, null)
+      enc.writeLong(99L)
+      enc.writeLong(Int.MaxValue - 16L)
+      out.toByteArray
+    }
+    // longer arrays right before each poison record, shorter ones after,
+    // so leftover elements of a reused array would show
+    val good = Seq(0L -> 5, 1L -> 1, 2L -> 4, 3L -> 0, 4L -> 3)
+      .map { case (i, tags) => WireFormat.frame(id, body(i, tags)) }
+    val poison = Seq(
+      Array[Byte](99, 1, 2, 3, 4, 5, 6, 7, 8, 9),            // bad magic
+      WireFormat.frame(424242L, body(9, 2)),                 // unknown schema id
+      WireFormat.frame(id, body(9, 6).dropRight(1)),         // truncated body
+      WireFormat.frame(id, hugeBlock))                       // OOM block count
+    val partition = good.head +: poison.zip(good.tail).flatMap { case (p, g) => Seq(p, g) }
+    val out = spark.sparkContext.parallelize(partition.zipWithIndex, 1).toDF("value", "i")
+      .select(col("i"), AvroFunctions.tryFromAvroWire(
+        col("value"), schema.toString, FileRegistryRef(regRoot)).as("t"))
+      .select(col("i"), col("t.r"), col("t.err"))
+      .collect().sortBy(_.getInt(0))
+    assert(out.length === 9)
+    val registry = new FileSchemaRegistry(regRoot)
+    out.zip(partition).foreach { case (row, wire) =>
+      val i = row.getInt(0)
+      if (i % 2 == 0) {
+        assert(row.isNullAt(2), s"record $i: ${row.getString(2)}")
+        assert(row.getStruct(1) === oneShot(wire, registry, schema), s"record $i")
+      } else {
+        assert(row.isNullAt(1) && !row.isNullAt(2), s"poison record $i")
+      }
+    }
+    val errs = out.filter(_.getInt(0) % 2 == 1).map(_.getString(2))
+    assert(errs(0).contains("magic") && errs(1).contains("424242"), errs.toSeq)
   }
 
   test("registry ids are content-addressed and idempotent across registries") {

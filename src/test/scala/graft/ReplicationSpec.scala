@@ -2,7 +2,7 @@ package graft
 
 import java.nio.file.Files
 
-import graft.avro.{AvroFunctions, ConfluentRegistryRef, FileRegistryRef, FileSchemaRegistry, RegistryRef, WireFormat}
+import graft.avro.{AvroCodec, AvroFunctions, ConfluentRegistryRef, FileRegistryRef, FileSchemaRegistry, RegistryRef, WireFormat}
 import graft.streaming.{CommittedTopicSource, FileTopicSink, FileTopicSource, Replication, ReplicationMetrics}
 import graft.streaming.Replication.Topics
 import org.apache.spark.sql.functions._
@@ -117,7 +117,96 @@ class ReplicationSpec extends SparkSpec {
         s"every replicated record must be accounted for: ${metrics.snapshot}")
       assert(metrics.batchCount(qid) > 1, "maxFilesPerTrigger=4 should yield multiple batches")
       assert(metrics.snapshot(qid).forall(_.durationMs >= 0))
+      // each batch keeps its phases, not only their sum
+      val phases = Seq("latestOffset", "getBatch", "queryPlanning", "walCommit",
+        "addBatch", "commitOffsets", "triggerExecution")
+      metrics.snapshot(qid).foreach { b =>
+        assert(phases.forall(b.phases.contains), s"batch ${b.batchId}: ${b.phases}")
+        assert(b.phases("addBatch") <= b.phases("triggerExecution"), b.phases)
+        assert(b.durationMs === b.phases.values.sum)
+      }
     } finally ReplicationMetrics.remove(spark, metrics)
+  }
+
+  /** key → the body after the frame header, of a replicated target topic. */
+  private def targetBodies(targetDir: String): Map[String, Seq[Byte]] =
+    Replication.readCommitted(spark, targetDir).select("key", "value").collect()
+      .map(r => r.getString(0) -> body(r.getAs[Array[Byte]](1))).toMap
+
+  private def body(wire: Array[Byte]): Seq[Byte] =
+    wire.drop(WireFormat.locate(wire)._2).toSeq
+
+  test("writer == reader: replicated events bodies are byte-identical to the source's") {
+    val env = freshEnv()
+    val events = Tables.events(spark, sf).limit(200).cache()
+    val schemaJson = Replication.stageSource(
+      events, env.topics.sourceDir, "events-value", env.sourceReg, "Event")
+    val source = spark.read.parquet(env.topics.sourceDir)
+      .select(AvroFunctions.fromAvroWire(col("value"), schemaJson, env.sourceReg)
+        .getField("event_id").cast("string"), col("value"))
+      .collect().map(r => r.getString(0) -> body(r.getAs[Array[Byte]](1))).toMap
+    assert(source.size === 200)
+    Replication.start(spark, env.topics, "events-value", env.sourceReg, env.targetReg,
+      idField = "event_id", maxFilesPerTrigger = 8).awaitTermination(120000)
+    assert(targetBodies(env.topics.targetDir) === source)
+  }
+
+  test("writer == reader: the Avro type mix replicates byte-identically") {
+    import org.apache.avro.Schema
+    import org.apache.avro.generic.GenericData
+    import spark.implicits._
+    val root = Files.createTempDirectory("graft-mix").toString
+    val schema = new Schema.Parser().parse(
+      """{"type":"record","name":"Mix","namespace":"graft.test","fields":[
+        |  {"name":"id","type":"long"},
+        |  {"name":"color","type":{"type":"enum","name":"Color","symbols":["RED","GREEN"]}},
+        |  {"name":"fp","type":{"type":"fixed","name":"FP4","size":4}},
+        |  {"name":"amount","type":{"type":"bytes","logicalType":"decimal","precision":10,"scale":2}},
+        |  {"name":"tags","type":{"type":"array","items":"long"}},
+        |  {"name":"attrs","type":{"type":"map","values":"string"}},
+        |  {"name":"inner","type":{"type":"record","name":"Inner","fields":[
+        |    {"name":"x","type":["null","string"],"default":null}]}},
+        |  {"name":"payload","type":["null","long","string",
+        |    {"type":"record","name":"P","fields":[{"name":"y","type":"double"}]}]},
+        |  {"name":"ts","type":{"type":"long","logicalType":"timestamp-millis"}}]}""".stripMargin)
+    val id = new FileSchemaRegistry(s"$root/regA").register("mix-value", schema)
+    def field(name: String) = schema.getField(name).schema()
+    val source = (0L until 60L).map { i =>
+      val rec = new GenericData.Record(schema)
+      rec.put("id", i)
+      rec.put("color", new GenericData.EnumSymbol(field("color"), if (i % 2 == 0) "RED" else "GREEN"))
+      rec.put("fp", new GenericData.Fixed(field("fp"), Array[Byte](1, 2, i.toByte, (-i).toByte)))
+      rec.put("amount", java.nio.ByteBuffer.wrap(
+        java.math.BigInteger.valueOf(12345L - 997L * i).toByteArray))
+      rec.put("tags", java.util.Arrays.asList((0L until i % 4).map(t => Long.box(t - i)): _*))
+      // maps of at most one entry: a longer map's order on the wire is
+      // the decoder's hash-map order, not the producer's
+      val attrs = new java.util.HashMap[String, String]()
+      if (i % 3 != 0) attrs.put(s"k$i", s"v\u00e9\u2713$i")
+      rec.put("attrs", attrs)
+      val inner = new GenericData.Record(field("inner"))
+      inner.put("x", if (i % 5 == 0) null else s"deep$i")
+      rec.put("inner", inner)
+      rec.put("payload", (i % 4).toInt match {
+        case 0 => null
+        case 1 => Long.box(i * 1000003L)
+        case 2 => s"p$i"
+        case _ =>
+          val p = new GenericData.Record(field("payload").getTypes.get(3))
+          p.put("y", i / 7.0)
+          p
+      })
+      rec.put("ts", Long.box(-1500L - 86400000L * i)) // pre-epoch millis
+      i.toString -> WireFormat.frame(id, AvroCodec.encode(rec, schema))
+    }
+    spark.sparkContext.parallelize(source.map(_._2), 3).toDF("value")
+      .write.parquet(s"$root/topicA")
+    Replication.start(spark,
+      FileTopicSource(s"$root/topicA", 8), FileTopicSink(s"$root/topicB"),
+      s"$root/ck", "mix-value",
+      FileRegistryRef(s"$root/regA"), FileRegistryRef(s"$root/regB"),
+      idField = "id", availableNow = true).awaitTermination(120000)
+    assert(targetBodies(s"$root/topicB") === source.map { case (k, w) => k -> body(w) }.toMap)
   }
 
   test("missing source topic is fatal (R9)") {
@@ -245,13 +334,7 @@ class ReplicationSpec extends SparkSpec {
     import org.apache.avro.generic.GenericData
     import spark.implicits._
     val root = Files.createTempDirectory("graft-mixed").toString
-    val v1 = new Schema.Parser().parse(
-      """{"type":"record","name":"Evo","fields":[
-        |  {"name":"id","type":"long"}]}""".stripMargin)
-    val v2 = new Schema.Parser().parse(
-      """{"type":"record","name":"Evo","fields":[
-        |  {"name":"id","type":"long"},
-        |  {"name":"source","type":"string","default":"legacy"}]}""".stripMargin)
+    import EvoFixture.{v1, v2}
     val reg = new graft.avro.FileSchemaRegistry(s"$root/regA")
     val id1 = reg.register("evo-value", v1)
     val id2 = reg.register("evo-value", v2) // latest
