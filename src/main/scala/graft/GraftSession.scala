@@ -20,6 +20,15 @@ import org.apache.spark.sql.SparkSession
   *    filters, so excluding it cannot change results
   *  - codegen cache: ~77 plans × several stages overflow the default
   *    100-entry generated-class cache and thrash recompilation
+  *  - `file` scheme → [[ForkFreeLocalFileSystem]] / [[ForkFreeLocalFs]]:
+  *    without `libhadoop`, Hadoop's local filesystem forks `chmod` for
+  *    every file, `.crc` and directory it creates (7.6–10.8 ms a call,
+  *    against 0.006–0.019 ms for NIO) and `readlink` for every checkpoint
+  *    rename (3.4–3.7 ms), which made up most of a 500-record
+  *    micro-batch's fixed cost. One line for the `FileSystem` API
+  *    (parquet writes, the commit protocol, Staging, AvroOcf), one for
+  *    `FileContext` (the streaming checkpoint log); ForkGateSpec fails if
+  *    either goes
   */
 object GraftSession {
   def builder(master: String, shufflePartitions: Int): SparkSession.Builder =
@@ -44,4 +53,6 @@ object GraftSession {
       // Buffers are k·16B, so even 16k groups is ~32 MB per task.
       .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "16384")
       .config("spark.ui.enabled", "false")
+      .config("spark.hadoop.fs.file.impl", classOf[ForkFreeLocalFileSystem].getName)
+      .config("spark.hadoop.fs.AbstractFileSystem.file.impl", classOf[ForkFreeLocalFs].getName)
 }

@@ -104,16 +104,20 @@ case class CatalystToAvro(child: Expression, recordName: String,
 /** Registry-resolved decode of wire-framed values (the reference's actual
   * R2 mechanism: `KafkaAvroDeserializer` looks the writer schema up by the
   * id embedded in every record). The reader schema fixes the output struct
-  * at plan time; each record's writer schema is fetched (and cached) from
-  * the registry on the executor and resolved against the reader — so a
-  * topic containing a mix of schema versions decodes correctly record by
-  * record.
+  * at plan time; each record's writer schema is fetched from the registry
+  * on the executor (through [[WriterSchemas]], so once per JVM, not once
+  * per task) and resolved against the reader — so a topic containing a mix
+  * of schema versions decodes correctly record by record.
   *
   * @param registry serializable registry pointer, opened lazily per executor
   *                 (at 100 TB: a shared store / DFS path, or an HTTP client)
+  *                 and only when a writer schema is not cached yet
+  * @param cacheToken minted once per expression on the driver
+  *                 ([[AvroFunctions.fromAvroWire]]); keys the JVM-wide
+  *                 writer-schema cache together with the id
   */
 case class WireAvroToCatalyst(child: Expression, readerJsonSchema: String,
-                              registry: RegistryRef)
+                              registry: RegistryRef, cacheToken: String)
     extends UnaryExpression with CodegenFallback {
 
   @transient private lazy val reader: Schema =
@@ -131,13 +135,16 @@ case class WireAvroToCatalyst(child: Expression, readerJsonSchema: String,
 
   override def prettyName: String = "graft_from_avro_wire"
 
+  // the token is a cache key, not part of what the expression computes
+  override protected def stringArgs: Iterator[Any] = Iterator(child, readerJsonSchema, registry)
+
   override protected def nullSafeEval(input: Any): Any = nullSafeDecode(input)
 
   private[avro] def nullSafeDecode(input: Any): Any = {
     val bytes = input.asInstanceOf[Array[Byte]]
     val (id, offset) = WireFormat.locate(bytes)
     val decoding = decodings.getOrElseUpdate(id, new AvroCodec.Decoding(
-      openRegistry.byId(id).getOrElse(
+      WriterSchemas.get(cacheToken, id)(openRegistry.byId(id)).getOrElse(
         throw new IllegalStateException(s"schema id $id not in registry $registry")),
       reader))
     toRow(decoding.reusedRecord(bytes, offset, bytes.length - offset))
@@ -147,6 +154,23 @@ case class WireAvroToCatalyst(child: Expression, readerJsonSchema: String,
     copy(child = newChild)
 }
 
+/** Writer schemas resolved by [[WireAvroToCatalyst]], shared by every task
+  * in this JVM, so a stream asks the registry once per writer id rather
+  * than once per micro-batch. Keyed by the expression's token plus the id:
+  * a registry recreated at the same location (Confluent ids restart at 1)
+  * is read through a new expression and never sees a stale schema.
+  * Positive-only — an id the registry does not know is asked again — and
+  * bounded: the map is emptied when it reaches [[MaxEntries]]. */
+private[avro] object WriterSchemas {
+  val MaxEntries = 4096
+  private val cache = new java.util.concurrent.ConcurrentHashMap[(String, Long), Schema]()
+
+  def get(token: String, id: Long)(fetch: => Option[Schema]): Option[Schema] = {
+    if (cache.size >= MaxEntries) cache.clear()
+    Option(cache.computeIfAbsent((token, id), _ => fetch.orNull))
+  }
+}
+
 /** Fallible variant of [[WireAvroToCatalyst]] for dead-letter routing:
   * instead of failing the task on a poison record (bad magic, unknown
   * schema id, corrupt body), yields `struct(r, err)` — `r` is the decoded
@@ -154,11 +178,11 @@ case class WireAvroToCatalyst(child: Expression, readerJsonSchema: String,
   * carries the reason. The stream splits on `err` and routes failures to a
   * dead-letter topic without losing the batch. */
 case class TryWireAvroToCatalyst(child: Expression, readerJsonSchema: String,
-                                 registry: RegistryRef)
+                                 registry: RegistryRef, cacheToken: String)
     extends UnaryExpression with CodegenFallback {
 
   @transient private lazy val inner =
-    WireAvroToCatalyst(child, readerJsonSchema, registry)
+    WireAvroToCatalyst(child, readerJsonSchema, registry, cacheToken)
 
   override lazy val dataType: StructType = StructType(Seq(
     StructField("r", inner.dataType, nullable = true),
@@ -167,6 +191,8 @@ case class TryWireAvroToCatalyst(child: Expression, readerJsonSchema: String,
   override def nullable: Boolean = false
 
   override def prettyName: String = "graft_try_from_avro_wire"
+
+  override protected def stringArgs: Iterator[Any] = Iterator(child, readerJsonSchema, registry)
 
   override def eval(input: org.apache.spark.sql.catalyst.InternalRow): Any = {
     val bytes = child.eval(input)
@@ -212,12 +238,14 @@ object AvroFunctions {
     * impl (fingerprint-id or Confluent-style — framing auto-detected). */
   def fromAvroWire(col: Column, readerJsonSchema: String, registry: RegistryRef): Column =
     ColumnBridge.column(WireAvroToCatalyst(
-      ColumnBridge.expression(col), readerJsonSchema, registry))
+      ColumnBridge.expression(col), readerJsonSchema, registry, newCacheToken()))
 
   /** Fallible decode for dead-letter routing: `struct(r, err)`. */
   def tryFromAvroWire(col: Column, readerJsonSchema: String, registry: RegistryRef): Column =
     ColumnBridge.column(TryWireAvroToCatalyst(
-      ColumnBridge.expression(col), readerJsonSchema, registry))
+      ColumnBridge.expression(col), readerJsonSchema, registry, newCacheToken()))
+
+  private def newCacheToken(): String = java.util.UUID.randomUUID().toString
 
   /** Encode a struct column and frame it with the given schema id — one
     * Catalyst node, no UDF boundary in the produce hot path. */

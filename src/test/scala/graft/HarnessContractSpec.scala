@@ -206,4 +206,16 @@ class HarnessContractSpec extends SparkSpec {
   test("session time zone is UTC (precondition of the NTZ events cast)") {
     assert(spark.conf.get("spark.sql.session.timeZone") == "UTC")
   }
+
+  /** Both Hadoop APIs must reach the fork-free local filesystem: parquet
+    * writes and the commit protocol go through `FileSystem`, the streaming
+    * checkpoint log through `FileContext` (ForkGateSpec measures why). */
+  test("the session resolves file: to the fork-free local filesystem for both Hadoop APIs") {
+    val conf = spark.sessionState.newHadoopConf()
+    val local = new java.net.URI("file:///")
+    val fs = org.apache.hadoop.fs.FileSystem.get(local, conf)
+    assert(fs.getClass === classOf[ForkFreeLocalFileSystem])
+    val fc = org.apache.hadoop.fs.FileContext.getFileContext(local, conf)
+    assert(fc.getDefaultFileSystem.getClass === classOf[ForkFreeLocalFs])
+  }
 }
