@@ -3,7 +3,7 @@ package graft.avro
 import java.io.OutputStream
 import java.math.BigInteger
 import java.nio.ByteBuffer
-import java.util.concurrent.atomic.AtomicLong
+import java.util.concurrent.atomic.{AtomicLong, LongAdder}
 
 import org.apache.avro.{LogicalTypes, Schema}
 import org.apache.avro.generic.{GenericData, GenericDatumReader, GenericDatumWriter, GenericRecord}
@@ -372,6 +372,14 @@ object AvroCodec {
   private[avro] object CodecBuilds {
     val decodings = new AtomicLong
     val encodings = new AtomicLong
+  }
+
+  /** How many records [[ReplicateWire]] passed through untouched
+    * (`reframed`) and decoded and encoded again (`transcoded`) in this JVM.
+    * Public so that a traced run can report the share of each. */
+  object Replicated {
+    val reframed = new LongAdder
+    val transcoded = new LongAdder
   }
 
   private val NoHeader = Array.emptyByteArray

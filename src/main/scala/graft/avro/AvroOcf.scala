@@ -23,7 +23,7 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
   * including unions and evolution). The sink appends PRE-ENCODED datum
   * bytes (`DataFileWriter.appendEncoded`), so no second serializer exists
   * to drift from the expression codec; the source slices each datum's RAW
-  * bytes straight out of the decompressed block (a schema-driven skip walk
+  * bytes straight out of the decompressed block (a [[DatumWalker]] skip walk
   * finds the boundaries — nothing is materialized, nothing re-encoded) and
   * surfaces them as the binary `avro_value` column for `fromAvro`. That is
   * the container contract end-to-end: the writer schema travels in the
@@ -294,13 +294,20 @@ object AvroOcf {
       // fast path: slice raw datum bytes out of each decompressed block
       private val walker = new DatumWalker(writer)
       private var bytes: Array[Byte] = _
+      private var blockStart = 0
       private var pos = 0
+      private var limit = 0
       protected def loadBlock(buf: ByteBuffer): Unit = {
         bytes = buf.array()
-        pos = buf.arrayOffset() + buf.position()
+        blockStart = buf.arrayOffset() + buf.position()
+        pos = blockStart
+        limit = buf.arrayOffset() + buf.limit()
       }
       protected def nextDatum(): Array[Byte] = {
-        val stop = walker.skip(bytes, pos)
+        val stop = walker.skip(bytes, pos, limit)
+        if (stop == DatumWalker.Malformed)
+          throw new java.io.IOException(s"corrupt block in $p: the datum at offset " +
+            s"${pos - blockStart} of a ${limit - blockStart}-byte block does not fit the writer schema")
         val datum = java.util.Arrays.copyOfRange(bytes, pos, stop)
         pos = stop
         datum
@@ -352,71 +359,6 @@ object AvroOcf {
       if (!hasNext) throw new NoSuchElementException("split exhausted")
       remaining -= 1
       nextDatum()
-    }
-  }
-
-  /** Schema-driven skip walk over Avro binary: returns the end offset of
-    * the datum starting at `pos`, touching only lengths/varints — no
-    * object materialization, no string decode. This is what makes the OCF
-    * source single-decode: boundaries come from the walk, bytes pass
-    * through raw, and the one real decode happens in codegen'd `fromAvro`. */
-  private final class DatumWalker(root: Schema) extends Serializable {
-    def skip(bytes: Array[Byte], pos: Int): Int = walk(root, bytes, pos)
-
-    private def walk(s: Schema, bytes: Array[Byte], pos0: Int): Int = {
-      import Schema.Type._
-      var pos = pos0
-      def readVarLong(): Long = {
-        var b = bytes(pos); pos += 1
-        var n: Long = (b & 0x7f).toLong
-        var shift = 7
-        while ((b & 0x80) != 0) {
-          b = bytes(pos); pos += 1
-          n |= (b & 0x7f).toLong << shift
-          shift += 7
-        }
-        (n >>> 1) ^ -(n & 1L)
-      }
-      // NB: a length-prefixed skip must read the varint into a local BEFORE
-      // adding — `pos += readVarLong()` captures the pre-varint pos on the
-      // LHS and silently drops the varint's own bytes
-      def skipLenPrefixed(): Unit = { val len = readVarLong().toInt; pos += len }
-      s.getType match {
-        case NULL =>
-        case BOOLEAN => pos += 1
-        case INT | LONG | ENUM => readVarLong()
-        case FLOAT => pos += 4
-        case DOUBLE => pos += 8
-        case STRING | BYTES => skipLenPrefixed()
-        case FIXED => pos += s.getFixedSize
-        case UNION => pos = walk(s.getTypes.get(readVarLong().toInt), bytes, pos)
-        case RECORD =>
-          val fields = s.getFields
-          var i = 0
-          while (i < fields.size()) {
-            pos = walk(fields.get(i).schema(), bytes, pos)
-            i += 1
-          }
-        case ARRAY | MAP =>
-          var n = readVarLong()
-          while (n != 0L) {
-            if (n < 0L) {
-              // negative count: block byte size follows — skip wholesale
-              skipLenPrefixed()
-            } else {
-              var i = 0L
-              while (i < n) {
-                if (s.getType == MAP) skipLenPrefixed() // key string
-                pos = walk(
-                  if (s.getType == MAP) s.getValueType else s.getElementType,
-                  bytes, pos)
-                i += 1
-              }
-            }
-            n = readVarLong()
-          }
-      }
-      pos
     }
   }
 }

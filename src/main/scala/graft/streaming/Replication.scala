@@ -2,7 +2,7 @@ package graft.streaming
 
 import java.nio.file.{Files, Paths}
 
-import graft.avro.{AvroFunctions, FileRegistryRef, RegistryRef}
+import graft.avro.{AvroFunctions, AvroSchemaConverter, FileRegistryRef, RegistryRef, SchemaRegistry}
 import org.apache.avro.Schema
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -12,9 +12,9 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   *
   * {{{
   *   topic A (wire-framed Avro values)                 R1  TopicSource micro-batch
-  *     → per-record registry-resolved decode           R2  WireAvroToCatalyst
-  *     → key := value.id                               R3  Project
-  *     → re-encode + register schema in target registry R7 CatalystToAvro + frame
+  *     → per-record registry-resolved decode           R2  ┐ ReplicateWire: re-frame
+  *     → key := value.id                               R3  │ the body, or decode and
+  *     → re-encode + register schema in target registry R7 ┘ encode it again
   *     → atomically committed batch to topic B         R4-R6, R8  TopicSink
   * }}}
   *
@@ -49,9 +49,8 @@ object Replication {
     * (`application.yml:15`), so its first produce registers the String key
     * schema under `<topic>-key` — a registry-inspection tool pointed at the
     * target must see BOTH subjects. Idempotent, like the value path. */
-  private def registerKeySchema(registry: RegistryRef, valueSubject: String): Unit =
-    registry.open().register(keySubject(valueSubject),
-      Schema.create(Schema.Type.STRING))
+  private def registerKeySchema(registry: SchemaRegistry, valueSubject: String): Unit =
+    registry.register(keySubject(valueSubject), Schema.create(Schema.Type.STRING))
 
   /** Stage a DataFrame as a source "topic": register the writer schema and
     * write wire-framed Avro values (what the upstream producer's serializer
@@ -63,8 +62,9 @@ object Replication {
   def stageSource(df: DataFrame, topicDir: String, subject: String,
                   registry: RegistryRef, recordName: String): String = {
     val schemaJson = AvroFunctions.writerSchemaFor(df.schema, recordName)
-    val id = registry.open().register(subject, new Schema.Parser().parse(schemaJson))
-    registerKeySchema(registry, subject) // what the producer's key serializer did
+    val opened = registry.open()
+    val id = opened.register(subject, new Schema.Parser().parse(schemaJson))
+    registerKeySchema(opened, subject) // what the producer's key serializer did
     df.select(AvroFunctions.toAvroWire(
       struct(df.columns.map(col): _*), id, recordName, registry.magic).as("value"))
       .write.mode("append").parquet(topicDir)
@@ -101,40 +101,37 @@ object Replication {
     // before first produce — idempotent re-registration, and the TARGET's id
     // (not the source's) goes on the wire. The key serializer likewise
     // registers the String key schema under the -key subject.
-    val targetId = targetRegistry.open().register(subject, readerSchema)
-    registerKeySchema(targetRegistry, subject)
+    val target = targetRegistry.open()
+    val targetId = target.register(subject, readerSchema)
+    registerKeySchema(target, subject)
 
-    // R7 re-encode happens under the EXACT schema the target id names —
-    // deriving a schema from the decoded struct would drift whenever the
-    // subject schema is not a fixed point of the StructType→Avro mapping
-    // (general unions, timestamp-millis, enums...), making the framed id
-    // lie about the bytes.
-    def reEncode(r: org.apache.spark.sql.Column) =
-      AvroFunctions.toAvroWireWithSchema(r, targetId,
-        readerSchema.toString, targetRegistry.magic)
+    // R2 decode, R3 key := value.id and R7 re-encode in one expression: a
+    // body whose writer schema is the subject schema passes through
+    // re-framed, any other is decoded and encoded again (ReplicateWire).
+    // Encoding is under the EXACT schema the target id names — deriving a
+    // schema from the decoded struct would drift whenever the subject
+    // schema is not a fixed point of the StructType→Avro mapping (general
+    // unions, timestamp-millis, enums...), making the framed id lie about
+    // the bytes.
+    val fields = AvroSchemaConverter.toStructType(readerSchema).fieldNames
+    val resolved = fields.filter(spark.sessionState.conf.resolver(_, idField))
+    require(resolved.length == 1,
+      s"id field $idField must name exactly one field of ${fields.mkString("[", ", ", "]")}")
+    val replicated = source.stream(spark).select(col("value").as("raw"),
+      AvroFunctions.replicateWire(col("value"), readerSchema.toString, sourceRegistry,
+        resolved.head, targetId, targetRegistry.magic, deadLetter.isDefined).as("t"))
+    val key = col("t.id").cast("string").as("key")
 
     val writer = deadLetter match {
       case None =>
-        val projected = source.stream(spark)
-          .select(AvroFunctions.fromAvroWire(col("value"),
-            readerSchema.toString, sourceRegistry).as("r"))                    // R2
-          .select(col("r").getField(idField).cast("string").as("key"), col("r")) // R3
-          .select(col("key"), reEncode(col("r")).as("value"))                  // R7
-        projected.writeStream
+        replicated.select(key, col("t.value").as("value")).writeStream
           .option("checkpointLocation", checkpointDir)
           .foreachBatch { (batch: DataFrame, batchId: Long) =>                 // R4-R6, R8
             sink.commitBatch(batch, batchId)
           }
       case Some(dlq) =>
-        val routed = source.stream(spark)
-          .select(col("value").as("raw"),
-            AvroFunctions.tryFromAvroWire(col("value"),
-              readerSchema.toString, sourceRegistry).as("t"))                  // R2 (fallible)
-          .select(col("raw"), col("t.r").as("r"), col("t.err").as("err"))
-          .select(col("raw"), col("err"),
-            col("r").getField(idField).cast("string").as("key"),               // R3
-            when(col("err").isNull, reEncode(col("r"))).as("value"))           // R7
-        routed.writeStream
+        replicated.select(col("raw"), col("t.err").as("err"), key, col("t.value").as("value"))
+          .writeStream
           .option("checkpointLocation", checkpointDir)
           .foreachBatch { (batch: DataFrame, batchId: Long) =>                 // R4-R6, R8
             val cached = batch.persist()

@@ -2,7 +2,7 @@ package graft
 
 import java.io.ByteArrayOutputStream
 
-import graft.avro.AvroOcf
+import graft.avro.{AvroOcf, DatumWalker}
 import org.apache.avro.Schema
 import org.apache.avro.file.DataFileWriter
 import org.apache.avro.generic.{GenericData, GenericDatumReader, GenericDatumWriter, GenericRecord}
@@ -12,7 +12,7 @@ import scala.jdk.CollectionConverters._
 import scala.util.Random
 
 /** The OCF fast path slices raw datum bytes out of each block with a
-  * hand-rolled schema-driven skip walk (`AvroOcf.DatumWalker`) — a
+  * hand-rolled schema-driven skip walk (`graft.avro.DatumWalker`) — a
   * boundary error there shifts EVERY subsequent record in the block and
   * corrupts silently. The catalog (q225) only drives long/timestamp/
   * string/double shapes through it; this spec drives the walk across the
@@ -34,73 +34,7 @@ import scala.util.Random
   * exactly on a datum boundary.
   */
 class DatumWalkerSpec extends SparkSpec {
-
-  private val schemaJson =
-    """{"type":"record","name":"Zoo","fields":[
-      |  {"name":"f_null","type":"null"},
-      |  {"name":"f_bool","type":"boolean"},
-      |  {"name":"f_int","type":"int"},
-      |  {"name":"f_long","type":"long"},
-      |  {"name":"f_float","type":"float"},
-      |  {"name":"f_double","type":"double"},
-      |  {"name":"f_string","type":"string"},
-      |  {"name":"f_bytes","type":"bytes"},
-      |  {"name":"f_fixed","type":{"type":"fixed","name":"F8","size":8}},
-      |  {"name":"f_enum","type":{"type":"enum","name":"Color",
-      |    "symbols":["RED","GREEN","BLUE"]}},
-      |  {"name":"f_arr","type":{"type":"array","items":"long"}},
-      |  {"name":"f_arr_rec","type":{"type":"array","items":
-      |    {"type":"record","name":"Pt","fields":[
-      |      {"name":"x","type":"double"},{"name":"y","type":"double"}]}}},
-      |  {"name":"f_map","type":{"type":"map","values":"double"}},
-      |  {"name":"f_union","type":["null","Pt","string"]},
-      |  {"name":"f_nested","type":{"type":"record","name":"Inner","fields":[
-      |    {"name":"tag","type":"string"},
-      |    {"name":"vals","type":{"type":"array","items":"int"}}]}}
-      |]}""".stripMargin
-  private val schema = new Schema.Parser().parse(schemaJson)
-
-  private def mkRecord(rnd: Random, i: Int): GenericRecord = {
-    val r = new GenericData.Record(schema)
-    r.put("f_null", null)
-    r.put("f_bool", rnd.nextBoolean())
-    r.put("f_int", rnd.nextInt() - Int.MaxValue / 2) // negatives: zig-zag stress
-    r.put("f_long", rnd.nextLong())
-    r.put("f_float", rnd.nextFloat())
-    r.put("f_double", rnd.nextDouble())
-    r.put("f_string", if (i % 7 == 0) "" else rnd.alphanumeric.take(rnd.nextInt(40)).mkString)
-    r.put("f_bytes", java.nio.ByteBuffer.wrap(
-      Array.fill[Byte](rnd.nextInt(16))(rnd.nextInt().toByte)))
-    r.put("f_fixed", new GenericData.Fixed(schema.getField("f_fixed").schema(),
-      Array.fill[Byte](8)(rnd.nextInt().toByte)))
-    r.put("f_enum", new GenericData.EnumSymbol(
-      schema.getField("f_enum").schema(), Seq("RED", "GREEN", "BLUE")(rnd.nextInt(3))))
-    r.put("f_arr",
-      (if (i % 5 == 0) Seq.empty[java.lang.Long]
-       else Seq.fill(rnd.nextInt(6) + 1)(java.lang.Long.valueOf(rnd.nextLong()))).asJava)
-    val ptSchema = schema.getField("f_arr_rec").schema().getElementType
-    def mkPt(): GenericRecord = {
-      val p = new GenericData.Record(ptSchema)
-      p.put("x", rnd.nextDouble()); p.put("y", rnd.nextDouble()); p
-    }
-    r.put("f_arr_rec", Seq.fill(rnd.nextInt(4))(mkPt()).asJava)
-    r.put("f_map",
-      (if (i % 4 == 0) Map.empty[String, java.lang.Double]
-       else Seq.fill(rnd.nextInt(4) + 1)(
-         rnd.alphanumeric.take(5).mkString ->
-           java.lang.Double.valueOf(rnd.nextDouble())).toMap).asJava)
-    r.put("f_union", i % 3 match {
-      case 0 => null
-      case 1 => mkPt()
-      case 2 => s"u-$i"
-    })
-    val inner = new GenericData.Record(schema.getField("f_nested").schema())
-    inner.put("tag", s"tag-$i")
-    inner.put("vals",
-      Seq.fill(rnd.nextInt(5))(java.lang.Integer.valueOf(rnd.nextInt())).asJava)
-    r.put("f_nested", inner)
-    r
-  }
+  import DatumWalkerSpec._
 
   /** Runs the round-trip; returns (written, decoded) toString multisets. */
   private[graft] def diagPair(): (Seq[String], Seq[String]) = {
@@ -164,5 +98,181 @@ class DatumWalkerSpec extends SparkSpec {
     assert(decoded.size == written.size)
     assert(decoded.sorted == written.sorted,
       "decoded multiset differs from the written records")
+  }
+
+  private def encoded(rec: GenericRecord): Array[Byte] = {
+    val bos = new ByteArrayOutputStream(256)
+    val enc = EncoderFactory.get().binaryEncoder(bos, null)
+    new GenericDatumWriter[GenericRecord](schema).write(rec, enc)
+    enc.flush()
+    bos.toByteArray
+  }
+
+  /** `{"id": long}` with its varint stretched to 11 bytes — one more than
+    * a long can take. */
+  private val longSchema = new Schema.Parser().parse(
+    """{"type":"record","name":"L","fields":[{"name":"id","type":"long"}]}""")
+  private val elevenByteVarint = Array.fill[Byte](10)(0x80.toByte) :+ 1.toByte
+
+  test("the walker reports a truncated datum instead of reading past its limit") {
+    val rnd = new Random(7)
+    val walker = new DatumWalker(schema)
+    (0 until 60).foreach { i =>
+      val whole = encoded(mkRecord(rnd, i))
+      assert(walker.skip(whole, 0, whole.length) === whole.length)
+      (0 until whole.length).foreach { cut =>
+        // the datum's own tail lies past `limit`: walking on would find it
+        assert(walker.skip(whole, 0, cut) === DatumWalker.Malformed, s"record $i cut at $cut")
+        // and an array that ends where the datum is cut
+        val truncated = java.util.Arrays.copyOf(whole, cut)
+        assert(walker.skip(truncated, 0, cut) === DatumWalker.Malformed, s"record $i cut at $cut")
+      }
+    }
+  }
+
+  test("the walker reports an 11-byte varint") {
+    val walker = new DatumWalker(longSchema)
+    assert(walker.skip(elevenByteVarint, 0, elevenByteVarint.length) === DatumWalker.Malformed)
+    val tenBytes = Array.fill[Byte](9)(0xff.toByte) :+ 1.toByte // Long.MinValue
+    assert(walker.skip(tenBytes, 0, tenBytes.length) === tenBytes.length)
+  }
+
+  test("the OCF read path fails a malformed datum as a corrupt block") {
+    val rnd = new Random(9)
+    def readWith(s: Schema, datums: Seq[Array[Byte]]): Unit = {
+      val dir = java.nio.file.Files.createTempDirectory("graft_walker_bad").toString
+      val w = new DataFileWriter(new GenericDatumWriter[GenericRecord](s))
+      w.create(s, new java.io.File(dir, "bad.avro"))
+      datums.foreach(d => w.appendEncoded(java.nio.ByteBuffer.wrap(d)))
+      w.close()
+      val e = intercept[Exception] {
+        AvroOcf.readBinary(spark, dir, Some(s.toString)).collect()
+      }
+      val messages = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .map(t => String.valueOf(t.getMessage)).toSeq
+      assert(messages.exists(_.contains("corrupt block")), messages)
+    }
+    val good = encoded(mkRecord(rnd, 1))
+    val cut = encoded(mkRecord(rnd, 2))
+    readWith(schema, Seq(good, cut.dropRight(3)))
+    readWith(longSchema, Seq(Array[Byte](2), elevenByteVarint))
+  }
+
+  test("arrays whose items take no bytes hold more items than bytes, on the OCF path too") {
+    val empty = new Schema.Parser().parse(
+      """{"type":"record","name":"E","fields":[
+        |  {"name":"nulls","type":{"type":"array","items":"null"}},
+        |  {"name":"empties","type":{"type":"array","items":
+        |    {"type":"record","name":"Nothing","fields":[]}}},
+        |  {"name":"zeros","type":{"type":"array","items":{"type":"fixed","name":"F0","size":0}}},
+        |  {"name":"n","type":"long"}]}""".stripMargin)
+    val nothing = empty.getField("empties").schema().getElementType
+    val f0 = empty.getField("zeros").schema().getElementType
+    val records = (0 until 40).map { i =>
+      val r = new GenericData.Record(empty)
+      r.put("nulls", java.util.Collections.nCopies[AnyRef](100 + i, null))
+      r.put("empties", java.util.Collections.nCopies(100 + i, new GenericData.Record(nothing)))
+      r.put("zeros", java.util.Collections.nCopies(100 + i, new GenericData.Fixed(f0, Array.emptyByteArray)))
+      r.put("n", Long.box(i.toLong))
+      r
+    }
+    val datumWriter = new GenericDatumWriter[GenericRecord](empty)
+    val blockingFactory = new EncoderFactory().configureBlockSize(16)
+    def encode(r: GenericRecord, blocking: Boolean): Array[Byte] = {
+      val bos = new ByteArrayOutputStream(64)
+      val enc = if (blocking) blockingFactory.blockingBinaryEncoder(bos, null)
+        else EncoderFactory.get().binaryEncoder(bos, null)
+      datumWriter.write(r, enc)
+      enc.flush()
+      bos.toByteArray
+    }
+    val walker = new DatumWalker(empty)
+    assert(walker.hasEmptyItems && !new DatumWalker(schema).hasEmptyItems)
+    val datums = records.map(encode(_, blocking = false)) ++ records.map(encode(_, blocking = true))
+    datums.foreach(d => assert(walker.skip(d, 0, d.length) === d.length))
+    // a count of 100 with one byte left after it is a valid array of nulls
+    assert(datums.head.length < 100)
+
+    val dir = java.nio.file.Files.createTempDirectory("graft_walker_empty").toString
+    val w = new DataFileWriter(datumWriter)
+    w.create(empty, new java.io.File(dir, "empty.avro"))
+    datums.foreach(d => w.appendEncoded(java.nio.ByteBuffer.wrap(d)))
+    w.close()
+    val slices = AvroOcf.readBinary(spark, dir, Some(empty.toString))
+      .collect().map(_.getAs[Array[Byte]](0))
+    val reader = new GenericDatumReader[GenericRecord](empty)
+    val decoded = slices.map(b => reader.read(null, DecoderFactory.get().binaryDecoder(b, null)))
+    assert(decoded.map(_.toString).sorted.toSeq === (records ++ records).map(_.toString).sorted)
+  }
+}
+
+/** The full-type-algebra record the walker specs drive. */
+object DatumWalkerSpec {
+
+  val schemaJson =
+    """{"type":"record","name":"Zoo","fields":[
+      |  {"name":"f_null","type":"null"},
+      |  {"name":"f_bool","type":"boolean"},
+      |  {"name":"f_int","type":"int"},
+      |  {"name":"f_long","type":"long"},
+      |  {"name":"f_float","type":"float"},
+      |  {"name":"f_double","type":"double"},
+      |  {"name":"f_string","type":"string"},
+      |  {"name":"f_bytes","type":"bytes"},
+      |  {"name":"f_fixed","type":{"type":"fixed","name":"F8","size":8}},
+      |  {"name":"f_enum","type":{"type":"enum","name":"Color",
+      |    "symbols":["RED","GREEN","BLUE"]}},
+      |  {"name":"f_arr","type":{"type":"array","items":"long"}},
+      |  {"name":"f_arr_rec","type":{"type":"array","items":
+      |    {"type":"record","name":"Pt","fields":[
+      |      {"name":"x","type":"double"},{"name":"y","type":"double"}]}}},
+      |  {"name":"f_map","type":{"type":"map","values":"double"}},
+      |  {"name":"f_union","type":["null","Pt","string"]},
+      |  {"name":"f_nested","type":{"type":"record","name":"Inner","fields":[
+      |    {"name":"tag","type":"string"},
+      |    {"name":"vals","type":{"type":"array","items":"int"}}]}}
+      |]}""".stripMargin
+  val schema = new Schema.Parser().parse(schemaJson)
+
+  def mkRecord(rnd: Random, i: Int): GenericRecord = {
+    val r = new GenericData.Record(schema)
+    r.put("f_null", null)
+    r.put("f_bool", rnd.nextBoolean())
+    r.put("f_int", rnd.nextInt() - Int.MaxValue / 2) // negatives: zig-zag stress
+    r.put("f_long", rnd.nextLong())
+    r.put("f_float", rnd.nextFloat())
+    r.put("f_double", rnd.nextDouble())
+    r.put("f_string", if (i % 7 == 0) "" else rnd.alphanumeric.take(rnd.nextInt(40)).mkString)
+    r.put("f_bytes", java.nio.ByteBuffer.wrap(
+      Array.fill[Byte](rnd.nextInt(16))(rnd.nextInt().toByte)))
+    r.put("f_fixed", new GenericData.Fixed(schema.getField("f_fixed").schema(),
+      Array.fill[Byte](8)(rnd.nextInt().toByte)))
+    r.put("f_enum", new GenericData.EnumSymbol(
+      schema.getField("f_enum").schema(), Seq("RED", "GREEN", "BLUE")(rnd.nextInt(3))))
+    r.put("f_arr",
+      (if (i % 5 == 0) Seq.empty[java.lang.Long]
+       else Seq.fill(rnd.nextInt(6) + 1)(java.lang.Long.valueOf(rnd.nextLong()))).asJava)
+    val ptSchema = schema.getField("f_arr_rec").schema().getElementType
+    def mkPt(): GenericRecord = {
+      val p = new GenericData.Record(ptSchema)
+      p.put("x", rnd.nextDouble()); p.put("y", rnd.nextDouble()); p
+    }
+    r.put("f_arr_rec", Seq.fill(rnd.nextInt(4))(mkPt()).asJava)
+    r.put("f_map",
+      (if (i % 4 == 0) Map.empty[String, java.lang.Double]
+       else Seq.fill(rnd.nextInt(4) + 1)(
+         rnd.alphanumeric.take(5).mkString ->
+           java.lang.Double.valueOf(rnd.nextDouble())).toMap).asJava)
+    r.put("f_union", i % 3 match {
+      case 0 => null
+      case 1 => mkPt()
+      case 2 => s"u-$i"
+    })
+    val inner = new GenericData.Record(schema.getField("f_nested").schema())
+    inner.put("tag", s"tag-$i")
+    inner.put("vals",
+      Seq.fill(rnd.nextInt(5))(java.lang.Integer.valueOf(rnd.nextInt())).asJava)
+    r.put("f_nested", inner)
+    r
   }
 }
