@@ -1,8 +1,9 @@
 package graft.avro
 
 import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Path, Paths, StandardOpenOption}
+import java.nio.file.{Files, Path, Paths}
 
+import graft.Commit
 import org.apache.avro.{Schema, SchemaCompatibility}
 import org.apache.avro.SchemaCompatibility.SchemaCompatibilityType
 
@@ -27,8 +28,9 @@ import scala.jdk.CollectionConverters._
   * scheme, is the contract.
   *
   * Layout: `<root>/ids/<id>.avsc`, `<root>/subjects/<subject>/<version>`
-  * (file body = id). Single-writer (the driver); a production deployment
-  * swaps in the HTTP client behind the same trait.
+  * (file body = id), each file committed whole by [[graft.Commit]].
+  * Single-writer (the driver); a production deployment swaps in the HTTP
+  * client behind the same trait.
   */
 final class ConfluentFileRegistry(root: String,
                                   compatibility: String = "BACKWARD")
@@ -43,17 +45,8 @@ final class ConfluentFileRegistry(root: String,
 
   private def versionsOf(subject: String): Seq[(Int, Long)] = {
     val dir = subjectDir(subject)
-    if (!Files.exists(dir)) Nil
-    else {
-      val s = Files.list(dir)
-      // ignore non-version files (editor temps, partial writes) rather than
-      // letting one stray name poison every operation on the subject
-      try s.iterator().asScala
-        .filter(_.getFileName.toString.forall(_.isDigit))
-        .map(p => p.getFileName.toString.toInt -> Files.readString(p).trim.toLong)
-        .toSeq.sortBy(_._1)
-      finally s.close()
-    }
+    Commit.numbered(dir, "").map(v =>
+      v.toInt -> Files.readString(dir.resolve(v.toString)).trim.toLong)
   }
 
   def register(subject: String, schema: Schema): Long = synchronized {
@@ -106,19 +99,21 @@ final class ConfluentFileRegistry(root: String,
                                check(prior, schema, "forward")
           }
         }
+        // the id file first: a crash between the two leaves an id no
+        // version names, which nextId skips
         val id = nextId()
-        Files.createDirectories(idsDir)
-        Files.write(idsDir.resolve(s"$id.avsc"),
-          schema.toString(true).getBytes(StandardCharsets.UTF_8),
-          StandardOpenOption.CREATE, StandardOpenOption.TRUNCATE_EXISTING)
+        claim(idsDir.resolve(s"$id.avsc"), schema.toString(true))
         val version = versions.lastOption.map(_._1 + 1).getOrElse(1)
-        Files.createDirectories(subjectDir(subject))
-        Files.write(subjectDir(subject).resolve(version.toString),
-          id.toString.getBytes(StandardCharsets.UTF_8),
-          StandardOpenOption.CREATE, StandardOpenOption.TRUNCATE_EXISTING)
+        claim(subjectDir(subject).resolve(version.toString), id.toString)
         id
     }
   }
+
+  /** Commit a new registry file; another writer's file at `path` breaks
+    * the single-writer rule and fails the registration. */
+  private def claim(path: Path, body: String): Unit =
+    if (!Commit.publish(path, body.getBytes(StandardCharsets.UTF_8)))
+      throw new IllegalStateException(s"$path was written by another registry writer")
 
   private def nextId(): Long =
     if (!Files.exists(idsDir)) 1L

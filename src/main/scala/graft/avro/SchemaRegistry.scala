@@ -1,8 +1,9 @@
 package graft.avro
 
 import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Path, Paths, StandardOpenOption}
+import java.nio.file.{Files, Path, Paths}
 
+import graft.Commit
 import org.apache.avro.{Schema, SchemaNormalization}
 
 import scala.jdk.CollectionConverters._
@@ -64,20 +65,20 @@ final class InMemorySchemaRegistry extends SchemaRegistry {
 /** File-backed registry: `<root>/<subject>/<id>.avsc` plus a `_latest` marker.
   * Registration is idempotent (content-addressed file name) and last-writer
   * -wins on the marker — adequate for a single driver; a production deployment
-  * swaps in a Confluent-HTTP implementation of the same trait. */
+  * swaps in a Confluent-HTTP implementation of the same trait. Both files
+  * are written through [[graft.Commit]], so a crash never leaves a
+  * truncated one. */
 final class FileSchemaRegistry(root: String) extends SchemaRegistry {
   private def subjectDir(s: String): Path = Paths.get(root, s)
 
   def register(subject: String, schema: Schema): Long = {
     val id = SchemaRegistry.fingerprint(schema)
     val dir = subjectDir(subject)
-    Files.createDirectories(dir)
-    val f = dir.resolve(s"$id.avsc")
-    if (!Files.exists(f))
-      Files.write(f, schema.toString(true).getBytes(StandardCharsets.UTF_8),
-        StandardOpenOption.CREATE, StandardOpenOption.TRUNCATE_EXISTING)
-    Files.write(dir.resolve("_latest"), id.toString.getBytes(StandardCharsets.UTF_8),
-      StandardOpenOption.CREATE, StandardOpenOption.TRUNCATE_EXISTING)
+    Commit.publish(dir.resolve(s"$id.avsc"),
+      schema.toString(true).getBytes(StandardCharsets.UTF_8))
+    val marker = dir.resolve("_latest")
+    if (!Files.exists(marker) || Files.readString(marker).trim != id.toString)
+      Commit.replace(marker, id.toString.getBytes(StandardCharsets.UTF_8))
     id
   }
 
@@ -98,6 +99,10 @@ final class FileSchemaRegistry(root: String) extends SchemaRegistry {
 
   def subjects: Seq[String] =
     if (!Files.exists(Paths.get(root))) Nil
-    else Files.list(Paths.get(root)).iterator().asScala
-      .filter(Files.isDirectory(_)).map(_.getFileName.toString).toSeq.sorted
+    else {
+      val st = Files.list(Paths.get(root))
+      try st.iterator().asScala
+        .filter(Files.isDirectory(_)).map(_.getFileName.toString).toSeq.sorted
+      finally st.close()
+    }
 }

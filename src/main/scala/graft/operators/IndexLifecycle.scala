@@ -3,6 +3,8 @@ package graft.operators
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import scala.jdk.CollectionConverters._
 
+import graft.Commit
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -12,14 +14,12 @@ import org.apache.spark.sql.functions._
   * new index version atomically, so readers always see one complete index
   * (old or new, never neither, never a half-written centroid set).
   *
-  * Store layout (the [[graft.streaming.MaterializedAgg]] version-directory
-  * discipline applied to index artifacts): `root/v=N/centroids` (cent_id,
-  * cv, cn) and `root/v=N/baseline` (cent_id, n, ppm — the cell-mass
-  * distribution of the training corpus under THESE centroids, recorded at
-  * install time). A version directory appears atomically (staging dir +
-  * ATOMIC_MOVE rename), a replayed install of an existing version is a
-  * no-op, and readers load the highest committed version — so a reader
-  * concurrent with a swap sees exactly one complete version.
+  * Store layout: `root/v=N/centroids` (cent_id, cv, cn) and
+  * `root/v=N/baseline` (cent_id, n, ppm — the cell-mass distribution of
+  * the training corpus under THESE centroids, recorded at install time).
+  * Every version directory is committed by [[graft.Commit.publish]], and
+  * readers load the highest committed version — so a reader concurrent
+  * with a swap sees exactly one complete version.
   *
   * The drift audit generalizes q241: instead of comparing two data epochs
   * through a frozen index, it compares the CURRENT corpus's cell masses
@@ -37,9 +37,7 @@ import org.apache.spark.sql.functions._
   * Scale: centroids and baselines are KB-scale artifacts (thousands of
   * cells at 100 TB); the only corpus-sized work is the assignment scan the
   * audit shares with every index build, and the install moves directories,
-  * not data. This store uses local-filesystem atomic renames; a cluster
-  * deployment swaps in the same sequence over a filesystem with atomic
-  * rename (HDFS) or a catalog pointer (the AvroOcf `.bak` discipline).
+  * not data.
   */
 object IndexLifecycle {
 
@@ -50,23 +48,9 @@ object IndexLifecycle {
 
   // ---------- store ----------
 
-  private def versionsOf(root: Path): Seq[Long] =
-    if (!Files.exists(root)) Seq.empty
-    else {
-      val st = Files.list(root)
-      try st.iterator().asScala
-        .filter(Files.isDirectory(_))
-        .map(_.getFileName.toString)
-        .filter(n => n.startsWith("v=") && n.drop(2).nonEmpty &&
-          n.drop(2).forall(_.isDigit))
-        .map(_.stripPrefix("v=").toLong)
-        .toSeq
-      finally st.close()
-    }
-
   /** Highest committed version, if any. */
   def latestVersion(root: String): Option[Long] =
-    versionsOf(Paths.get(root)).maxOption
+    Commit.numbered(Paths.get(root), "v=").lastOption
 
   /** The latest committed centroid frame (cent_id, cv, cn). */
   def readCentroids(s: SparkSession, root: String): DataFrame = {
@@ -90,7 +74,7 @@ object IndexLifecycle {
   def install(s: SparkSession, root: String, version: Long,
               centroids: DataFrame, vectors: DataFrame,
               interpose: String => Unit = _ => ()): Boolean =
-    installVersion(root, version, interpose) { staging =>
+    Commit.publish(Paths.get(root, s"v=$version"), interpose) { staging =>
       centroids.write.mode("overwrite")
         .parquet(staging.resolve("centroids").toString)
       // baseline reads centroids back from STAGING: the recorded masses
@@ -100,44 +84,6 @@ object IndexLifecycle {
       cellPpm(assign(vectors, staged), staged)
         .write.mode("overwrite").parquet(staging.resolve("baseline").toString)
     }
-
-  /** The one atomic-version discipline both pillars install through:
-    * `write` fills a per-ATTEMPT private staging dir (two concurrent
-    * installs of the same version must not share one staging path — they
-    * would corrupt each other's artifacts before either rename), then one
-    * ATOMIC_MOVE commits; replays and rename-race losers return false. */
-  private def installVersion(root: String, version: Long,
-                             interpose: String => Unit)
-                            (write: Path => Unit): Boolean = {
-    val rootP = Paths.get(root)
-    Files.createDirectories(rootP)
-    val target = rootP.resolve(s"v=$version")
-    if (Files.exists(target)) return false // replay: already committed
-    val staging = Files.createTempDirectory(rootP, s".staging-$version-")
-    try {
-      write(staging)
-      interpose("staged")
-      if (Files.exists(target)) { // lost the race while staging
-        deleteRecursively(staging)
-        return false
-      }
-      try Files.move(staging, target, StandardCopyOption.ATOMIC_MOVE)
-      catch {
-        // the loser of the rename race takes the documented replay no-op
-        // path, exactly as if the version had been committed before entry
-        case _: java.nio.file.FileAlreadyExistsException |
-             _: java.nio.file.DirectoryNotEmptyException =>
-          deleteRecursively(staging)
-          return false
-      }
-      interpose("installed")
-      true
-    } catch {
-      case t: Throwable =>
-        deleteRecursively(staging)
-        throw t
-    }
-  }
 
   // ---------- assignment + audit ----------
 
@@ -217,13 +163,6 @@ object IndexLifecycle {
     }
   }
 
-  private def deleteRecursively(p: Path): Unit =
-    if (Files.exists(p)) {
-      val st = Files.walk(p)
-      try st.iterator().asScala.toSeq.reverse.foreach(Files.delete)
-      finally st.close()
-    }
-
   /** Search the corpus at `dir` through the INSTALLED index — q66's exact
     * plan with the store's centroid frame in place of the LCG sample. */
   def search(s: SparkSession, root: String, dir: String,
@@ -262,7 +201,7 @@ object IndexLifecycle {
   // The composed IVF-PQ index (q249) has two trained artifacts — the
   // coarse quantizer's centroids (drift monitor q241, store above) and
   // the product quantizer's codebooks (drift monitor q245, store below).
-  // Both live under the same v=N ATOMIC_MOVE discipline, in separate
+  // Both live under the same v=N Commit.publish rule, in separate
   // roots, so either pillar hot-swaps independently and a reader composes
   // whatever pair is installed at read time — each complete by itself.
 
@@ -288,7 +227,7 @@ object IndexLifecycle {
   def installCodebook(s: SparkSession, root: String, version: Long,
                       codebook: DataFrame, vectors: DataFrame,
                       interpose: String => Unit = _ => ()): Boolean =
-    installVersion(root, version, interpose) { staging =>
+    Commit.publish(Paths.get(root, s"v=$version"), interpose) { staging =>
       codebook.write.mode("overwrite")
         .parquet(staging.resolve("codebook").toString)
       val staged = s.read.parquet(staging.resolve("codebook").toString)
@@ -390,7 +329,7 @@ object IndexLifecycle {
   // it was coded with, so one v=N directory is a self-consistent serving
   // artifact — a query LUT can never address codes trained by a
   // different book, and the probed-cell join prunes whole partitions of
-  // the stored scan. Same ATOMIC_MOVE discipline as every pillar.
+  // the stored scan. Same Commit.publish rule as every pillar.
 
   private val PqCodesSchema = "vec_id BIGINT, cd ARRAY<BIGINT>, cent_id BIGINT"
   private val PqCentsSchema = "cent_id BIGINT, cv ARRAY<DOUBLE>, cn DOUBLE"
@@ -408,7 +347,7 @@ object IndexLifecycle {
   def installPqIndex(s: SparkSession, root: String, version: Long,
                      cents: DataFrame, codebook: DataFrame, dir: String,
                      interpose: String => Unit = _ => ()): Boolean =
-    installVersion(root, version, interpose) { staging =>
+    Commit.publish(Paths.get(root, s"v=$version"), interpose) { staging =>
       val centSeg = writeSegment(root, "centroids")(p =>
         cents.write.mode("overwrite").parquet(p.toString))
       val bookSeg = writeSegment(root, "codebook")(p =>
@@ -581,7 +520,7 @@ object IndexLifecycle {
     * takes between quantizer drifts: code only the vec_ids NOT yet in
     * the installed version against the INSTALLED quantizers (no retrain,
     * no corpus-wide re-code) and commit stored ∪ delta as v=N+1 under
-    * the same ATOMIC_MOVE discipline. The delta discovery is an id-only
+    * the same Commit.publish rule. The delta discovery is an id-only
     * anti-join (8-byte rows both sides); the stored codes and quantizer
     * frames carry by MANIFEST REFERENCE — the commit writes ONE
     * delta-sized code segment plus the KB-scale baseline/meta, never a
@@ -612,7 +551,7 @@ object IndexLifecycle {
           .write.mode("overwrite").partitionBy("cent_id")
           .parquet(p.toString))
       val delta = s.read.schema(PqCodesSchema).parquet(s"$root/$deltaSeg")
-      val done = installVersion(root, v + 1, _ => ()) { staging =>
+      val done = Commit.publish(Paths.get(root, s"v=${v + 1}")) { staging =>
         val all = Window.partitionBy(lit(1))
         s.read.parquet(s"$root/v=$v/baseline")
           .select(col("cent_id"), col("n"))
@@ -666,7 +605,7 @@ object IndexLifecycle {
   //   - an append/cap-swap commit writes O(delta) bytes (a cap swap
   //     writes ZERO data bytes — same segments, new capcfg);
   //   - segments are write-once: concurrent readers of any committed
-  //     version see immutable files, and the ATOMIC_MOVE of the version
+  //     version see immutable files, and the publish of the version
   //     directory is still the only visibility event;
   //   - disk holds ONE copy of the index regardless of how many versions
   //     reference it, and [[pruneVersions]] reclaims segments no kept
@@ -752,7 +691,7 @@ object IndexLifecycle {
     * old. */
   def pruneVersions(root: String, keep: Int = 2,
                     pinned: Set[Long] = Set.empty): (Int, Int) = {
-    val vs = versionsOf(Paths.get(root)).sorted
+    val vs = Commit.numbered(Paths.get(root), "v=")
     val keptVs = (vs.takeRight(keep.max(1)) ++ vs.filter(pinned)).distinct
     val dropVs = vs.filterNot(keptVs.contains)
     def refs(v: Seq[Long]): Set[String] =
@@ -766,8 +705,8 @@ object IndexLifecycle {
     }
     val deadVs = dropVs.filterNot(protectedVs.contains)
     val deadSegs = (refs(dropVs) -- keptRefs).filter(_.startsWith("segments/"))
-    deadVs.foreach(v => deleteRecursively(Paths.get(s"$root/v=$v")))
-    deadSegs.foreach(r => deleteRecursively(Paths.get(s"$root/$r")))
+    deadVs.foreach(v => Commit.delete(Paths.get(s"$root/v=$v")))
+    deadSegs.foreach(r => Commit.delete(Paths.get(s"$root/$r")))
     (deadVs.size, deadSegs.size)
   }
 
@@ -779,7 +718,7 @@ object IndexLifecycle {
   def gcOrphanSegments(root: String, minAgeMs: Long = 3600000L): Int = {
     val segDir = Paths.get(root).resolve("segments")
     if (!Files.exists(segDir)) return 0
-    val live = versionsOf(Paths.get(root))
+    val live = Commit.numbered(Paths.get(root), "v=")
       .flatMap(v => manifestEntries(root, v).getOrElse(Nil).map(_._2))
       .collect { case r if r.startsWith("segments/") =>
         r.stripPrefix("segments/") }
@@ -793,7 +732,7 @@ object IndexLifecycle {
         .filter(p => Files.getLastModifiedTime(p).toMillis <= cutoff)
         .toSeq
       finally st.close()
-    dead.foreach(deleteRecursively)
+    dead.foreach(Commit.delete)
     dead.size
   }
 
@@ -920,7 +859,7 @@ object IndexLifecycle {
   def installDial[A](s: SparkSession, root: String, version: Long, d: Dial[A],
                      value: Int, input: A,
                      interpose: String => Unit = _ => ()): Boolean =
-    installVersion(root, version, interpose) { staging =>
+    Commit.publish(Paths.get(root, s"v=$version"), interpose) { staging =>
       writeScalars(s, staging, d.cfg, Seq(d.valueCol), Seq(value.toLong))
       d.frame(s, input)
         .write.mode("overwrite").parquet(staging.resolve(d.dial).toString)
@@ -973,8 +912,8 @@ object IndexLifecycle {
   // corpus — the pay-the-index-build-per-read pattern the PQ-index
   // pillar exists to end. These pillars persist the signature frame AND
   // the banded posting lists (PARTITIONED BY band/tbl/bkt) next to the
-  // parameter they are served at, under the same ATOMIC_MOVE v=N
-  // discipline, so
+  // parameter they are served at, under the same v=N Commit.publish
+  // rule, so
   //   (a) a reader serves the q40/q39/q67/q253 pair sets from the stored
   //       index — no text/payload/embedding re-scan, no signature
   //       recompute; the only corpus touch left is LSH's id-bounded
@@ -1229,7 +1168,7 @@ object IndexLifecycle {
     * Spark job (the catalog sweep's rule: the first read pays one job,
     * every re-plan after that is job-free, exactly the footer-cache
     * discipline `Tables.parquetRowCount` follows). The key carries the
-    * version directory's commit fingerprint (its ATOMIC_MOVE rename
+    * version directory's commit fingerprint (its publishing rename
     * stamps a fresh mtime), so a root deleted and reinstalled at the
     * same path/version — cleanup, external rebuild, a long-lived JVM
     * reusing temp roots — misses the stale entry instead of silently
@@ -1266,7 +1205,7 @@ object IndexLifecycle {
   def installPostings(s: SparkSession, root: String, version: Long,
                       p: Postings[_], input: DataFrame, cfg: Seq[Long],
                       interpose: String => Unit = _ => ()): Boolean =
-    installVersion(root, version, interpose) { staging =>
+    Commit.publish(Paths.get(root, s"v=$version"), interpose) { staging =>
       val segs = writeBase(s, root, p, p.encode(p.rows(input), cfg))
       val derived = writeDerived(root, p, segFrames(s, root, p.layout, segs), cfg)
       writeScalars(s, staging, p.layout.cfg, p.layout.cfgCols, cfg)
@@ -1413,7 +1352,7 @@ object IndexLifecycle {
       case Some(input) =>
         installPostings(ix.s, ix.root, ix.version + 1, p, input(ix), cfg)
       case None =>
-        installVersion(ix.root, ix.version + 1, _ => ()) { staging =>
+        Commit.publish(Paths.get(ix.root, s"v=${ix.version + 1}")) { staging =>
           writeScalars(ix.s, staging, p.layout.cfg, p.layout.cfgCols, cfg)
           writeManifest(staging, carriedRefs(ix.root, ix.version,
             (p.layout.base ++ presentDerived(ix.root, ix.version, p.layout))
@@ -1499,7 +1438,7 @@ object IndexLifecycle {
   private def commitNext(ix: PostingsIndex, entries: Seq[(String, String)])
       : Either[Unit, Option[Long]] = {
     val cfg = ix.layout.cfg
-    val done = installVersion(ix.root, ix.version + 1, _ => ()) { staging =>
+    val done = Commit.publish(Paths.get(ix.root, s"v=${ix.version + 1}")) { staging =>
       copyTree(Paths.get(s"${ix.root}/v=${ix.version}/$cfg"),
         staging.resolve(cfg))
       writeManifest(staging, entries)
@@ -1808,8 +1747,8 @@ object IndexLifecycle {
   // retrain of one can serve a MIXED version set to a reader that
   // resolves the pillars at different instants (VERDICT r14 item 6). A
   // RELEASE is a versioned manifest pinning one coherent
-  // (pillar → version) tuple, committed under the same installVersion
-  // ATOMIC_MOVE discipline: cutting a release is atomic, reading one is
+  // (pillar → version) tuple, committed by the same Commit.publish as
+  // every pillar version: cutting a release is atomic, reading one is
   // a pure function of the release version, and a consumer that resolves
   // every pillar through one release can never observe a mid-swap mix —
   // pillar installs keep happening underneath, they just don't serve
@@ -1821,7 +1760,7 @@ object IndexLifecycle {
     * version. Atomic + idempotent like every install. */
   def cutRelease(root: String, version: Long,
                  pillars: Map[String, String]): Boolean =
-    installVersion(root, version, _ => ()) { staging =>
+    Commit.publish(Paths.get(root, s"v=$version")) { staging =>
       val lines = pillars.toSeq.sortBy(_._1).map { case (name, proot) =>
         val v = latestVersion(proot).getOrElse(noIndex(proot))
         s"$name\t$proot\t$v"
@@ -1847,7 +1786,7 @@ object IndexLifecycle {
     * reclaim a version a release still serves. */
   def releasePinnedVersions(relRoot: String,
                             pillarRoot: String): Set[Long] =
-    versionsOf(Paths.get(relRoot))
+    Commit.numbered(Paths.get(relRoot), "v=")
       .flatMap(v => releaseAt(relRoot, v).values
         .collect { case (r, pv) if r == pillarRoot => pv })
       .toSet
@@ -1920,7 +1859,7 @@ object IndexLifecycle {
   // requests, and deleting the source rows is not enough while installed
   // artifacts still serve the doc. Each operator below produces the next
   // version of ONE pillar with the deleted ids gone, under the same
-  // ATOMIC_MOVE discipline — so readers swap from "doc present" to "doc
+  // Commit.publish rule — so readers swap from "doc present" to "doc
   // absent" atomically, with rollback by version like every other swap.
   // The deleted-id frame is id-only (8-byte rows) everywhere; the only
   // rewritten bytes are the index artifacts themselves.
@@ -1947,7 +1886,7 @@ object IndexLifecycle {
           .write.mode("overwrite").partitionBy("cent_id")
           .parquet(p.toString))
       val surv = s.read.schema(PqCodesSchema).parquet(s"$root/$survSeg")
-      val done = installVersion(root, v + 1, _ => ()) { staging =>
+      val done = Commit.publish(Paths.get(root, s"v=${v + 1}")) { staging =>
         writePqBaseline(s, staging, surv, cents)
         val m = pqMetaAt(s, root, v, book, cents)
         writePqMeta(s, staging, m(0), m(1), surv.count())
@@ -1998,7 +1937,7 @@ object IndexLifecycle {
           writeArt(root, a,
             if (a.parts.nonEmpty) df.repartition(a.parts.map(col): _*) else df)
         }
-        val done = installVersion(root, v + 1, _ => ()) { staging =>
+        val done = Commit.publish(Paths.get(root, s"v=${v + 1}")) { staging =>
           scalars.foreach(a =>
             copyTree(Paths.get(s"$root/v=$v/$a"), staging.resolve(a)))
           writeManifest(staging,

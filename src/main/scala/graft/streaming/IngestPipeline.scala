@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.OutputMode
 import org.apache.spark.sql.types.StructType
 
+import graft.Commit
 import graft.operators.{DedupQueries, IndexLifecycle}
 
 /** The COMPOSED training-ingest admission pipeline (VERDICT r15 item 4):
@@ -442,14 +443,6 @@ object IngestPipeline {
     }
   }
 
-  private def deleteRecursively(p: java.nio.file.Path): Unit =
-    if (java.nio.file.Files.exists(p)) {
-      val st = java.nio.file.Files.walk(p)
-      try st.sorted(java.util.Comparator.reverseOrder())
-        .forEach(x => { java.nio.file.Files.delete(x); () })
-      finally st.close()
-    }
-
   /** A per-batch artifact directory counts as committed only with its
     * `_SUCCESS` marker — a crash mid-write leaves a created-but-
     * footer-less directory, and treating THAT as committed wedges every
@@ -458,31 +451,23 @@ object IngestPipeline {
   private def committedDir(dir: String): Boolean =
     java.nio.file.Files.exists(java.nio.file.Paths.get(dir, "_SUCCESS"))
 
-  /** Read-or-commit one pinned scalar at `dir` with the store's own
-    * staging + ATOMIC_MOVE discipline: the value is written to a private
-    * staging path and renamed into place, so a crash can never leave a
-    * half-written pin that an exists-check would route to the read path
-    * (uncommitted debris from a pre-rename crash is deleted and
-    * rewritten). On a lost rename race the committed pin wins and is
-    * re-read — one batch, one pin, whatever the interleaving. */
+  /** Read-or-commit one pinned scalar at `dir`, published by
+    * [[Commit.publish]] so a crash can never leave a half-written pin
+    * that an exists-check would route to the read path (uncommitted debris
+    * left by a writer without that rule is deleted and rewritten). On a
+    * lost race the committed pin wins and is re-read — one batch, one pin,
+    * whatever the interleaving. */
   private def pinnedScalar(s: SparkSession, dir: String, colName: String)
                           (compute: => Long): Long = {
     def readPin(): Long =
       s.read.schema(s"$colName BIGINT").parquet(dir).head.getLong(0)
     if (committedDir(dir)) return readPin()
     val target = java.nio.file.Paths.get(dir)
-    deleteRecursively(target) // footer-less debris of a crashed write
+    Commit.delete(target) // footer-less debris of a crashed write
     val v = compute
-    java.nio.file.Files.createDirectories(target.getParent)
-    val staging = java.nio.file.Files
-      .createTempDirectory(target.getParent, ".pin-")
-    val data = staging.resolve("d")
-    s.range(1).select(lit(v).as(colName)).coalesce(1)
-      .write.mode("overwrite").parquet(data.toString)
-    try java.nio.file.Files.move(data, target,
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-    catch { case _: java.nio.file.FileSystemException => () } // race lost
-    deleteRecursively(staging)
+    Commit.publish(target)(staged =>
+      s.range(1).select(lit(v).as(colName)).coalesce(1)
+        .write.mode("overwrite").parquet(staged.toString))
     readPin()
   }
 
@@ -515,38 +500,17 @@ object IngestPipeline {
     * `from <= N < until`, listed driver-side (never a directory-glob
     * Spark scan — the unbounded listing was the growth term). */
   private def committedBatchDirs(base: String, sub: String, from: Long,
-                                 until: Long): Seq[String] = {
-    val dir = java.nio.file.Paths.get(base, sub)
-    if (!java.nio.file.Files.exists(dir)) return Seq.empty
-    val st = java.nio.file.Files.list(dir)
-    val ids =
-      try {
-        import scala.jdk.CollectionConverters._
-        st.iterator().asScala.map(_.getFileName.toString)
-          .filter(_.startsWith("batch="))
-          .map(_.stripPrefix("batch=").toLong)
-          .filter(n => n >= from && n < until)
-          .toSeq.sorted
-      } finally st.close()
-    ids.map(n => s"$base/$sub/batch=$n").filter(committedDir)
-  }
+                                 until: Long): Seq[String] =
+    Commit.numbered(java.nio.file.Paths.get(base, sub), "batch=")
+      .filter(n => n >= from && n < until)
+      .map(n => s"$base/$sub/batch=$n").filter(committedDir)
 
   /** Committed snapshot boundaries, ascending. */
-  private def snapshotUptos(base: String): Seq[Long] = {
-    val dir = java.nio.file.Paths.get(base, "snap")
-    if (!java.nio.file.Files.exists(dir)) return Seq.empty
-    val st = java.nio.file.Files.list(dir)
-    val us =
-      try {
-        import scala.jdk.CollectionConverters._
-        st.iterator().asScala.map(_.getFileName.toString)
-          .filter(_.startsWith("upto="))
-          .map(_.stripPrefix("upto=").toLong).toSeq.sorted
-      } finally st.close()
-    us.filter(u => committedDir(s"$base/snap/upto=$u/digests") &&
-      committedDir(s"$base/snap/upto=$u/consumed") &&
-      committedDir(s"$base/snap/upto=$u/spans"))
-  }
+  private def snapshotUptos(base: String): Seq[Long] =
+    Commit.numbered(java.nio.file.Paths.get(base, "snap"), "upto=")
+      .filter(u => committedDir(s"$base/snap/upto=$u/digests") &&
+        committedDir(s"$base/snap/upto=$u/consumed") &&
+        committedDir(s"$base/snap/upto=$u/spans"))
 
   /** The newest committed snapshot usable by batch `id` (boundary ≤ id).
     * Any usable snapshot derives identical state — the choice moves only
@@ -636,7 +600,7 @@ object IngestPipeline {
   /** Land the consolidated admission-state snapshot at boundary
     * `id + 1` when the cadence fires. The consolidation is a rolling
     * fold — previous snapshot + its tail, never a rescan of history —
-    * committed by staging + ATOMIC_MOVE and idempotent (a committed
+    * published by [[Commit.publish]] and idempotent (a committed
     * snapshot's content is a pure function of the immutable per-batch
     * partitions below its boundary, so a replayed boundary keeps it). */
   private def maybeSnapshot(s: SparkSession, base: String, id: Long,
@@ -647,21 +611,16 @@ object IngestPipeline {
     if (committedDir(target.resolve("digests").toString) &&
       committedDir(target.resolve("consumed").toString) &&
       committedDir(target.resolve("spans").toString)) return
-    deleteRecursively(target)
-    java.nio.file.Files.createDirectories(target.getParent)
-    val staging = java.nio.file.Files
-      .createTempDirectory(target.getParent, ".snap-")
-    val data = staging.resolve("d")
-    rawDigestsBefore(s, base, upto).write.mode("overwrite")
-      .parquet(data.resolve("digests").toString)
-    rawConsumedBefore(s, base, upto).coalesce(1).write.mode("overwrite")
-      .parquet(data.resolve("consumed").toString)
-    rawSpansBefore(s, base, upto).write.mode("overwrite")
-      .parquet(data.resolve("spans").toString)
-    try java.nio.file.Files.move(data, target,
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-    catch { case _: java.nio.file.FileSystemException => () } // race lost
-    deleteRecursively(staging)
+    Commit.delete(target)
+    Commit.publish(target) { staged =>
+      rawDigestsBefore(s, base, upto).write.mode("overwrite")
+        .parquet(staged.resolve("digests").toString)
+      rawConsumedBefore(s, base, upto).coalesce(1).write.mode("overwrite")
+        .parquet(staged.resolve("consumed").toString)
+      rawSpansBefore(s, base, upto).write.mode("overwrite")
+        .parquet(staged.resolve("spans").toString)
+    }
+    ()
   }
 
   /** Every pillar version some committed ingest epoch pinned — the
@@ -696,17 +655,8 @@ object IngestPipeline {
       .filter(col("seq") <= seq).select("doc_id"))
   }
 
-  private def committedTakedownSeqs(base: String): Seq[Long] = {
-    val dir = java.nio.file.Paths.get(base, "takedowns")
-    if (!java.nio.file.Files.exists(dir)) return Seq.empty
-    val st = java.nio.file.Files.list(dir)
-    try {
-      import scala.jdk.CollectionConverters._
-      st.iterator().asScala.map(_.getFileName.toString)
-        .filter(_.startsWith("seq=")).map(_.stripPrefix("seq=").toLong)
-        .toSeq
-    } finally st.close()
-  }
+  private def committedTakedownSeqs(base: String): Seq[Long] =
+    Commit.numbered(java.nio.file.Paths.get(base, "takedowns"), "seq=")
 
   /** The takedown horizon batch `id` decides against — recorded at first
     * processing (the max committed tombstone sequence), re-read on

@@ -1,7 +1,8 @@
 package graft.streaming
 
-import java.nio.file.{Files, Path, Paths, StandardCopyOption}
-import scala.jdk.CollectionConverters._
+import java.nio.file.{Path, Paths}
+
+import graft.Commit
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -11,11 +12,10 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * stream continuously folds into a per-key (n, total) parquet table,
   * updated once per micro-batch by merging the batch's PARTIALS with the
   * current state (work per batch ∝ batch + state size, never history), and
-  * committed with the same atomic-rename discipline as [[FileTopicSink]]:
-  * a version directory appears entirely or not at all, a replayed batch
-  * (checkpoint recovery) sees its version already committed and does
-  * nothing, and readers always load one committed version — exactly-once
-  * end to end without a log-compaction service.
+  * committed as version directory `v=<batchId>` by [[graft.Commit.publish]]:
+  * a replayed batch (checkpoint recovery) finds its version committed and
+  * does nothing, and readers always load one committed version —
+  * exactly-once end to end without a log-compaction service.
   *
   * Scale notes: count/sum partials are mergeable, so the merge is one
   * co-partitioned groupBy of (state ∪ batch-partials) — at 100 TB both
@@ -43,7 +43,7 @@ object MaterializedAgg {
       .start()
 
   /** Merge one micro-batch into the keyed state. Idempotent per `batchId`;
-    * atomic via staging-dir rename. `valueCol` must be an integral type:
+    * atomic. `valueCol` must be an integral type:
     * integer partial sums merge order-independently, which is what makes
     * the state provably equal a batch recompute — double totals drift by
     * summation order and decimal sums widen their precision every merge
@@ -55,26 +55,23 @@ object MaterializedAgg {
     require(Seq(ByteType, ShortType, IntegerType, LongType).contains(vt),
       s"valueCol '$valueCol' must be integral for order-independent merges, got $vt")
     val root = Paths.get(stateDir)
-    Files.createDirectories(root)
-    val target = root.resolve(s"v=$batchId")
-    if (Files.exists(target)) return // checkpoint replay: already committed
-    val partial = batch
-      .groupBy(col(keyCol))
-      .agg(count(lit(1)).as("n"), sum(col(valueCol)).as("total"))
-    val merged = latest(root) match {
-      case Some(prev) =>
-        s.read.parquet(root.resolve(s"v=$prev").toString)
-          .select(col(keyCol), col("n"), col("total"))
-          .union(partial.select(col(keyCol), col("n"), col("total")))
-          .groupBy(col(keyCol))
-          .agg(sum("n").as("n"), sum("total").as("total"))
-      case None => partial
+    Commit.publish(root.resolve(s"v=$batchId")) { staged =>
+      val partial = batch
+        .groupBy(col(keyCol))
+        .agg(count(lit(1)).as("n"), sum(col(valueCol)).as("total"))
+      val merged = latest(root) match {
+        case Some(prev) =>
+          s.read.parquet(root.resolve(s"v=$prev").toString)
+            .select(col(keyCol), col("n"), col("total"))
+            .union(partial.select(col(keyCol), col("n"), col("total")))
+            .groupBy(col(keyCol))
+            .agg(sum("n").as("n"), sum("total").as("total"))
+        case None => partial
+      }
+      merged.write.mode("overwrite").parquet(staged.toString)
     }
-    val staging = root.resolve(s".staging-$batchId")
-    merged.write.mode("overwrite").parquet(staging.toString)
-    Files.move(staging, target, StandardCopyOption.ATOMIC_MOVE)
-    versions(root).sorted.dropRight(Retain)
-      .foreach(v => deleteRecursively(root.resolve(s"v=$v")))
+    Commit.numbered(root, "v=").dropRight(Retain)
+      .foreach(v => Commit.delete(root.resolve(s"v=$v")))
   }
 
   /** The latest committed snapshot of the materialized aggregate. */
@@ -85,29 +82,6 @@ object MaterializedAgg {
     s.read.parquet(root.resolve(s"v=$v").toString)
   }
 
-  private def versions(root: Path): Seq[Long] =
-    if (!Files.exists(root)) Seq.empty
-    else {
-      val st = Files.list(root)
-      // all-digit filter so one stray `v=backup` dir can't poison every
-      // subsequent operation; close the stream — a long-running query
-      // calls this every batch and unclosed listings leak descriptors
-      try st.iterator().asScala
-        .filter(Files.isDirectory(_))
-        .map(_.getFileName.toString)
-        .filter(n => n.startsWith("v=") && n.drop(2).nonEmpty &&
-          n.drop(2).forall(_.isDigit))
-        .map(_.stripPrefix("v=").toLong)
-        .toSeq
-      finally st.close()
-    }
-
-  private def latest(root: Path): Option[Long] = versions(root).maxOption
-
-  private def deleteRecursively(p: Path): Unit =
-    if (Files.exists(p)) {
-      val st = Files.walk(p)
-      try st.iterator().asScala.toSeq.reverse.foreach(Files.delete)
-      finally st.close()
-    }
+  private def latest(root: Path): Option[Long] =
+    Commit.numbered(root, "v=").lastOption
 }

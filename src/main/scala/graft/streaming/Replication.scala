@@ -1,7 +1,8 @@
 package graft.streaming
 
-import java.nio.file.{Files, Paths}
+import java.nio.file.Paths
 
+import graft.Commit
 import graft.avro.{AvroFunctions, AvroSchemaConverter, FileRegistryRef, RegistryRef, SchemaRegistry}
 import org.apache.avro.Schema
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -161,13 +162,8 @@ object Replication {
   /** Consume the target topic with read-committed visibility, batch form
     * (streaming form: [[CommittedTopicSource]]). Committed batches are
     * exactly the renamed-in `batch=N` partitions. */
-  def readCommitted(spark: SparkSession, targetDir: String): DataFrame = {
-    val data = Paths.get(targetDir, "data")
-    val hasBatches = Files.exists(data) && {
-      val s = Files.list(data)
-      try s.iterator().hasNext finally s.close()
-    }
-    if (!hasBatches) spark.emptyDataFrame
+  def readCommitted(spark: SparkSession, targetDir: String): DataFrame =
+    if (Commit.numbered(Paths.get(targetDir, "data"), "batch=").isEmpty)
+      spark.emptyDataFrame
     else spark.read.parquet(s"$targetDir/data").drop("batch")
-  }
 }

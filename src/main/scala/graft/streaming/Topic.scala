@@ -1,6 +1,8 @@
 package graft.streaming
 
-import java.nio.file.{Files, Paths, StandardCopyOption}
+import java.nio.file.{Files, Paths}
+
+import graft.Commit
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types.{BinaryType, StringType, StructField, StructType}
@@ -62,22 +64,15 @@ final case class CommittedTopicSource(dir: String, maxFilesPerTrigger: Int = 1)
   }
 }
 
-/** Transactional file-topic sink: each micro-batch is written to a hidden
-  * staging dir, then atomically renamed to `data/batch=<id>` — the rename IS
-  * the commit point, so readers (batch [[Replication.readCommitted]] or a
-  * chained [[CommittedTopicSource]]) see a batch entirely or not at all, and
-  * a redelivered batch (checkpoint replay after a crash) is detected by the
-  * existence of its committed directory and skipped. Staging lives under
-  * `.staging/`, which Spark's file listing ignores (dot-prefixed). */
+/** Transactional file-topic sink: each micro-batch is published as
+  * `data/batch=<id>` by [[graft.Commit.publish]], so readers (batch
+  * [[Replication.readCommitted]] or a chained [[CommittedTopicSource]]) see
+  * a batch entirely or not at all, and a redelivered batch (checkpoint
+  * replay after a crash) finds its committed directory and is skipped. */
 final case class FileTopicSink(dir: String) extends TopicSink {
   def commitBatch(batch: DataFrame, batchId: Long): Unit = {
-    val dataDir = Paths.get(dir, "data")
-    val committed = dataDir.resolve(s"batch=$batchId")
-    if (!Files.exists(committed)) {
-      val staging = Paths.get(dir, ".staging", s"batch=$batchId")
-      batch.write.mode("overwrite").parquet(staging.toString)
-      Files.createDirectories(dataDir)
-      Files.move(staging, committed, StandardCopyOption.ATOMIC_MOVE)
-    }
+    Commit.publish(Paths.get(dir, "data", s"batch=$batchId"))(staged =>
+      batch.write.mode("overwrite").parquet(staged.toString))
+    ()
   }
 }

@@ -62,4 +62,27 @@ class MaterializeSpec extends SparkSpec {
         Seq((1L, 1.5)).toDF("user", "cents"), 99L, state, "user", "cents")
     }
   }
+
+  test("a failed batch leaves the state and no staging behind; its retry commits") {
+    import spark.implicits._
+    val state = Files.createTempDirectory("graft-mv-fail").resolve("state").toString
+    MaterializedAgg.applyBatch(spark,
+      Seq((1L, 100L), (2L, 50L)).toDF("user", "cents"), 0L, state, "user", "cents")
+    def snapshot = MaterializedAgg.read(spark, state).orderBy("user").collect().toSeq
+    val before = snapshot
+    val boom = udf((c: Long) =>
+      if (c == 7L) throw new RuntimeException("injected merge failure") else c)
+    val batch1 = Seq((2L, 10L), (3L, 7L)).toDF("user", "cents")
+    intercept[Exception] {
+      MaterializedAgg.applyBatch(spark, batch1.withColumn("cents", boom(col("cents"))),
+        1L, state, "user", "cents")
+    }
+    assert(snapshot === before, "a failed batch must leave the committed state as it was")
+    def staging = new java.io.File(state).list().filter(_.startsWith(".staging")).toSeq
+    assert(staging.isEmpty, s"a failed batch left staging behind: $staging")
+    MaterializedAgg.applyBatch(spark, batch1, 1L, state, "user", "cents")
+    assert(snapshot.map(r => (r.getLong(0), r.getLong(1), r.getLong(2))) ===
+      Seq((1L, 1L, 100L), (2L, 2L, 60L), (3L, 1L, 7L)))
+    assert(staging.isEmpty)
+  }
 }

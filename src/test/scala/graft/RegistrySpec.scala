@@ -2,7 +2,7 @@ package graft
 
 import java.nio.file.Files
 
-import graft.avro.ConfluentFileRegistry
+import graft.avro.{ConfluentFileRegistry, SchemaRegistry}
 import org.apache.avro.Schema
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -192,8 +192,55 @@ class RegistrySpec extends AnyFunSuite {
     reg.register("evo-value", v1)
     Files.writeString(java.nio.file.Paths.get(root, "subjects", "evo-value", "versions.bak"), "junk")
     Files.writeString(java.nio.file.Paths.get(root, "ids", ".DS_Store"), "junk")
+    // what killed publishes leave: staged files, one of them truncated,
+    // in the staging directories of the next id and version and in bare
+    // `.staging` directories
+    def debris(rel: String, body: String): Unit = {
+      val p = java.nio.file.Paths.get(root, rel)
+      Files.createDirectories(p.getParent)
+      Files.writeString(p, body)
+      ()
+    }
+    debris("subjects/evo-value/.staging-2/0c5e", "")
+    debris("subjects/evo-value/.staging/2", "7")
+    debris("ids/.staging-2.avsc/9a1f", """{"type":"record","name":"Ev""")
+    debris("ids/.staging/2.avsc", "junk")
     assert(reg.latest("evo-value").map(_._1) === Some(1L))
     assert(reg.register("evo-value", v2) === 2L)
+    assert(reg.latest("evo-value") === Some(2L -> v2))
+    assert(reg.latestVersion("evo-value") === Some(2))
+  }
+
+  test("file registry lookups close their directory listings") {
+    val fdDir = java.nio.file.Paths.get("/proc/self/fd")
+    assume(Files.isDirectory(fdDir), "needs /proc/self/fd")
+    def openFds(): Int = { System.gc(); fdDir.toFile.list().length }
+    val reg = new graft.avro.FileSchemaRegistry(
+      Files.createTempDirectory("freg-fds").toString)
+    val id = reg.register("evo-value", v1)
+    reg.register("other-value", v2)
+    val before = openFds()
+    (1 to 2000).foreach(_ => assert(reg.byId(id).isDefined))
+    val grown = openFds() - before
+    assert(grown < 50, s"2000 lookups left $grown descriptors open")
+  }
+
+  test("concurrent file registry registrations of one subject never throw") {
+    val reg = new graft.avro.FileSchemaRegistry(
+      Files.createTempDirectory("freg-race").toString)
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(4)
+    try {
+      val runs = (1 to 4).map { t =>
+        pool.submit(new java.util.concurrent.Callable[Unit] {
+          def call(): Unit = (1 to 25).foreach(i =>
+            reg.register("evo-value", if ((t + i) % 2 == 0) v1 else v2))
+        })
+      }
+      runs.foreach(_.get(60, java.util.concurrent.TimeUnit.SECONDS))
+    } finally pool.shutdownNow()
+    assert(reg.byId(SchemaRegistry.fingerprint(v1)) === Some(v1))
+    assert(reg.byId(SchemaRegistry.fingerprint(v2)) === Some(v2))
+    assert(reg.latest("evo-value").exists(l => Set(v1, v2)(l._2)))
   }
 
   test("HTTP client reports the real latest version, not the trait default") {

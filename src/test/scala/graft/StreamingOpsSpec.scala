@@ -2710,6 +2710,31 @@ class StreamingOpsSpec extends SparkSpec {
       "a replayed append must never resurrect a taken-down doc")
   }
 
+  test("ingest listings skip stray names: a batch=old directory does not stop the next batch") {
+    import graft.operators.DedupQueries
+    import graft.streaming.IngestPipeline
+
+    val all = Tables.documents(spark, sf).select("doc_id", "lang", "text")
+    val evalW = DedupQueries.evalWindowHashes(
+      all.filter(col("doc_id") % 97 === 0))
+    val docs0 = all.filter(col("doc_id") % 97 =!= 0 && col("doc_id") <= 40)
+    val docs1 = all.filter(col("doc_id") % 97 =!= 0 &&
+      col("doc_id") > 40 && col("doc_id") <= 60)
+    val base = java.nio.file.Files
+      .createTempDirectory("graft_ingest_stray").toString
+    IngestPipeline.processBatch(spark, docs0.toDF(), 0L, evalW,
+      Long.MaxValue, base)
+    // a hand-made backup or a foreign tool's directory next to the
+    // numbered ones, in each listing the next batch reads
+    Seq("manifest/batch=old", "snap/upto=old", "takedowns/seq=old")
+      .foreach(d => java.nio.file.Files.createDirectories(java.nio.file.Paths.get(base, d)))
+    IngestPipeline.processBatch(spark, docs1.toDF(), 1L, evalW,
+      Long.MaxValue, base)
+    assert(IngestPipeline.manifestOf(spark, base).count() ===
+      docs0.count() + docs1.count(),
+      "both batches must land their full manifests")
+  }
+
   test("contamination monitor bootstraps from the batch audit's span frame — later hits merge into the pre-filed ledger") {
     import spark.implicits._
     import graft.operators.DedupQueries

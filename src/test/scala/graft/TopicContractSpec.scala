@@ -2,6 +2,8 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
+import scala.jdk.CollectionConverters._
+
 import graft.streaming.{CommittedTopicSource, FileTopicSink, FileTopicSource, Replication, TopicSink, TopicSource}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -48,6 +50,20 @@ abstract class TopicContract extends SparkSpec {
     import spark.implicits._
     ids.map(i => (f"k$i%04d", f"v$i%04d".getBytes("UTF-8")))
       .toDF("key", "value").repartition(1)
+  }
+
+  /** Files under a `.staging` directory anywhere in the topic's tree (none
+    * for a topic that is not a directory). */
+  private def stagedFiles(topic: String): Seq[String] = {
+    val root = Paths.get(topic)
+    if (!Files.exists(root)) Seq.empty
+    else {
+      val w = Files.walk(root)
+      try w.iterator().asScala.filter(Files.isRegularFile(_))
+        .map(root.relativize(_).toString)
+        .filter(_.split('/').exists(_.startsWith(".staging"))).toSeq
+      finally w.close()
+    }
   }
 
   private def visibleKeys(topic: String): Seq[String] = {
@@ -97,6 +113,8 @@ abstract class TopicContract extends SparkSpec {
     sink.commitBatch(batchDf(0 until 5), batchId = 0L)
     assert(visibleKeys(topic) == (0 until 5).map(i => f"k$i%04d"),
       "the post-crash retry of the same batchId must land exactly once")
+    assert(stagedFiles(topic).isEmpty,
+      s"no staging may outlive the retry: ${stagedFiles(topic)}")
   }
 
   test(s"[$implName] a batchId replayed after later commits changes nothing (restart-replay race)") {
@@ -182,7 +200,6 @@ abstract class TopicContract extends SparkSpec {
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
       .start()
     q.awaitTermination(120000)
-    import scala.jdk.CollectionConverters._
     val seen = arrivals.asScala.toSeq.sortBy(_._1)
     // exactly once, all 30 records
     val allKeys = seen.flatMap(_._3)
