@@ -29,8 +29,8 @@ import scala.util.control.NonFatal
   * better on its own, since it replaces an existing file and an empty
   * directory. So a directory is renamed with `ATOMIC_MOVE` only after the
   * target was found absent (a racer's non-empty target makes the move
-  * fail), and a file is published with `Files.createLink`, which fails on
-  * any existing target. */
+  * fail), and a file ([[publishFile]]) is published with
+  * `Files.createLink`, which fails on any existing target. */
 object Commit {
 
   private val NoSeam: String => Unit = _ => ()
@@ -48,9 +48,20 @@ object Commit {
         if (Files.exists(target)) throw new FileAlreadyExistsException(target.toString)
         else Files.move(staged, target, StandardCopyOption.ATOMIC_MOVE))
 
+  /** Commit the file `write` creates at the path it is given as `target`;
+    * see [[publish]]. That path is named as `target` is, inside a directory
+    * private to the attempt, so whatever else `write` leaves beside it (a
+    * Hadoop `.crc`) is staging too. */
+  def publishFile(target: Path, interpose: String => Unit = NoSeam)(write: Path => Unit): Boolean = {
+    def file(staged: Path) = staged.resolve(target.getFileName)
+    commit(target, interpose)(
+      staged => { Files.createDirectory(staged); write(file(staged)) },
+      staged => Files.createLink(target, file(staged)))
+  }
+
   /** Commit `bytes` as the file `target`; see [[publish]]. */
   def publish(target: Path, bytes: Array[Byte], interpose: String => Unit): Boolean =
-    commit(target, interpose)(Files.write(_, bytes), Files.createLink(target, _))
+    publishFile(target, interpose)(Files.write(_, bytes))
 
   def publish(target: Path, bytes: Array[Byte]): Boolean = publish(target, bytes, NoSeam)
 

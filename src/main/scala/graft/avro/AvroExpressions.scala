@@ -3,7 +3,7 @@ package graft.avro
 import scala.jdk.CollectionConverters._
 import scala.util.control.NonFatal
 
-import org.apache.avro.{LogicalTypes, Schema}
+import org.apache.avro.{AvroRuntimeException, LogicalTypes, Schema}
 import org.apache.avro.generic.GenericRecord
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
@@ -132,9 +132,12 @@ case class WireAvroToCatalyst(child: Expression, readerJsonSchema: String,
     new Schema.Parser().parse(readerJsonSchema)
   @transient private lazy val openRegistry = registry.open()
   @transient private lazy val toRow = AvroCodec.toCatalyst(reader, dataType)
-  /** One decoding per writer schema id seen by this task. */
+  /** One decoding per writer schema id seen by this task, and a walker of
+    * that schema that refuses what would make the decoding preallocate
+    * without bound: a block count past the bytes left, or more than
+    * [[DatumWalker.MaxEmptyItems]] zero-width items. */
   @transient private lazy val decodings =
-    scala.collection.mutable.LongMap.empty[AvroCodec.Decoding]
+    scala.collection.mutable.LongMap.empty[(AvroCodec.Decoding, DatumWalker)]
 
   override lazy val dataType: DataType = AvroSchemaConverter.toStructType(
     new Schema.Parser().parse(readerJsonSchema))
@@ -151,7 +154,14 @@ case class WireAvroToCatalyst(child: Expression, readerJsonSchema: String,
   private[avro] def nullSafeDecode(input: Any): Any = {
     val bytes = input.asInstanceOf[Array[Byte]]
     val (id, offset) = WireFormat.locate(bytes)
-    val decoding = decodings.getOrElseUpdate(id, new AvroCodec.Decoding(writerSchema(id), reader))
+    val (decoding, guard) = decodings.getOrElseUpdate(id, {
+      val writer = writerSchema(id)
+      (new AvroCodec.Decoding(writer, reader),
+        new DatumWalker(writer, maxEmptyItems = DatumWalker.MaxEmptyItems))
+    })
+    if (guard.preallocates(bytes, offset, bytes.length))
+      throw new AvroRuntimeException("Malformed data: a block count past the bytes left or " +
+        s"past ${DatumWalker.MaxEmptyItems} zero-width items; not decoded")
     toRow(decoding.reusedRecord(bytes, offset, bytes.length - offset))
   }
 
@@ -189,9 +199,10 @@ private[avro] object DeadLetters {
   def nullValue: UTF8String = UTF8String.fromString("null value")
 
   /** `decode`'s result, or `poisoned`'s with the reason when it throws.
-    * NonFatal + OOM: a corrupt array block-count varint makes the Avro
-    * reader preallocate a huge array — that OutOfMemoryError is caused by
-    * the poison record, and the DLQ exists precisely to survive it. */
+    * NonFatal + OOM: the block counts that make the Avro reader
+    * preallocate are refused before the decode ([[WireAvroToCatalyst]]),
+    * but an allocation that guard does not foresee is still caused by the
+    * poison record, and the DLQ exists precisely to survive it. */
   def attempt[T](decode: => T)(poisoned: UTF8String => T): T =
     try decode
     catch {
@@ -258,7 +269,10 @@ case class TryWireAvroToCatalyst(child: Expression, readerJsonSchema: String,
   *    that are not a primitive or a `["null", primitive]` union.
   * The walker never rejects a body itself: one it reports (truncated,
   * out-of-range index, trailing bytes...) is transcoded, which accepts,
-  * rejects or drops trailing bytes exactly as the decoder does. Records
+  * rejects or drops trailing bytes exactly as the decoder does. Before
+  * decoding, the transcode walks the body under its writer schema and
+  * rejects one whose block count would make the decoder preallocate
+  * without bound ([[WireAvroToCatalyst]]). Records
   * taking each path are counted in [[AvroCodec.Replicated]].
   *
   * Writer schemas are resolved as [[WireAvroToCatalyst]] resolves them:

@@ -1,7 +1,8 @@
 package graft.avro
 
-import java.io.{ObjectInputStream, ObjectOutputStream}
 import java.nio.ByteBuffer
+
+import graft.LeanHadoopConf
 
 import org.apache.avro.Schema
 import org.apache.avro.file.{CodecFactory, DataFileReader, DataFileWriter}
@@ -41,23 +42,6 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
   */
 object AvroOcf {
 
-  /** Minimal serializable carrier for the session Hadoop conf, so executor
-    * tasks see the driver's filesystem impls/credentials instead of a bare
-    * `new Configuration()` (which only works on local FS). Same shape as
-    * Spark's internal SerializableConfiguration, re-stated here because
-    * that class is private[spark]. */
-  private final class SerializableHadoopConf(@transient var value: Configuration)
-      extends Serializable {
-    private def writeObject(out: ObjectOutputStream): Unit = {
-      out.defaultWriteObject()
-      value.write(out)
-    }
-    private def readObject(in: ObjectInputStream): Unit = {
-      value = new Configuration(false)
-      value.readFields(in)
-    }
-  }
-
   /** Write one `.avro` container file per non-empty partition of `bin`
     * (Avro-binary records, all encoded with `schemaJson`), deflate-block
     * compressed by default (a 100 TB at-rest corpus is never stored raw).
@@ -83,7 +67,7 @@ object AvroOcf {
       s".${outPath.getName}.inprogress-${java.util.UUID.randomUUID()}")
     fs.mkdirs(staging)
     val stagingStr = staging.toString
-    val sconf = new SerializableHadoopConf(conf)
+    val sconf = LeanHadoopConf(conf)
     try {
       bin.foreachPartition { (it: Iterator[Array[Byte]]) =>
         if (it.hasNext) {
@@ -241,7 +225,7 @@ object AvroOcf {
     val targetJson = readerSchemaJson.orElse(
       embeddedSchema(s, path)).getOrElse("")
     val strict = readerSchemaJson.isEmpty
-    val sconf = new SerializableHadoopConf(conf)
+    val sconf = LeanHadoopConf(conf)
     val parallelism = math.max(1, math.min(splits.size, s.sparkContext.defaultParallelism))
     s.createDataset(splits).repartition(parallelism)
       .mapPartitions { parts =>

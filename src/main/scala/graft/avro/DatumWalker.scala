@@ -21,8 +21,9 @@ import scala.jdk.CollectionConverters._
   * union or enum index out of range, a negative length, an int varint
   * longer than 5 bytes or a long varint longer than 10, a block count
   * larger than the bytes left (unless the items take no bytes: an array
-  * of nulls, of empty records or of size-0 fixeds), a negative block byte
-  * size or one that disagrees with the items the block holds. Items of a
+  * of nulls, of empty records or of size-0 fixeds), more such zero-width
+  * items in one datum than `maxEmptyItems`, a negative block byte size or
+  * one that disagrees with the items the block holds. Items of a
   * block are walked one by one, as a decoder reads them, not skipped by
   * the byte size. Varints read as the Avro decoder reads them: an int
   * from the low 32 bits of its varint.
@@ -33,8 +34,10 @@ import scala.jdk.CollectionConverters._
   * @param markField index of a top-level field of a record schema that
   *                  [[markEnd]], [[markValue]] and [[markBranch]] report
   *                  on after each walk, or -1
+  * @param maxEmptyItems how many zero-width array items one datum may hold
   */
-final class DatumWalker(schema: Schema, markField: Int = -1) {
+final class DatumWalker(schema: Schema, markField: Int = -1,
+                        maxEmptyItems: Long = Long.MaxValue) {
   import DatumWalker.Malformed
 
   /** The value of the last varint read. */
@@ -44,6 +47,9 @@ final class DatumWalker(schema: Schema, markField: Int = -1) {
   private var markedEnd = -1
   private var markedValue = 0L
   private var markedBranch = -1
+  /** Zero-width items the current walk has passed. */
+  private var emptySeen = 0L
+  private var oversized = false
 
   private abstract class Node {
     def walk(b: Array[Byte], pos: Int, limit: Int): Int
@@ -116,7 +122,10 @@ final class DatumWalker(schema: Schema, markField: Int = -1) {
           if (pos < 0 || value < 0L) return Malformed
           size = value
         }
-        if (n > limit - pos && !emptyItems) return Malformed
+        if (emptyItems) {
+          if (n > maxEmptyItems - emptySeen) { oversized = true; return Malformed }
+          emptySeen += n
+        } else if (n > limit - pos) { oversized = true; return Malformed }
         val start = pos
         var i = if (emptyItems) n else 0L
         while (i < n && pos >= 0) {
@@ -181,8 +190,11 @@ final class DatumWalker(schema: Schema, markField: Int = -1) {
         val items = empty(s.getElementType, java.util.Collections.newSetFromMap(
           new java.util.IdentityHashMap[Schema, java.lang.Boolean]()))
         emptyItems ||= items
+        hasBlocks = true
         new Blocks(compile(s.getElementType, records), isMap = false, items)
-      case MAP => new Blocks(compile(s.getValueType, records), isMap = true, emptyItems = false)
+      case MAP =>
+        hasBlocks = true
+        new Blocks(compile(s.getValueType, records), isMap = true, emptyItems = false)
       case RECORD =>
         // a recursive schema refers back to a record being compiled
         val known = records.get(s)
@@ -197,6 +209,7 @@ final class DatumWalker(schema: Schema, markField: Int = -1) {
   }
 
   private var emptyItems = false
+  private var hasBlocks = false
   private val root = compile(schema, new java.util.IdentityHashMap[Schema, Record]())
 
   require(markField < 0 || (root.isInstanceOf[Record] && markField < schema.getFields.size),
@@ -205,7 +218,9 @@ final class DatumWalker(schema: Schema, markField: Int = -1) {
   /** The end offset of the datum that starts at `pos`, or
     * [[DatumWalker.Malformed]] when `bytes[pos, limit)` does not start
     * with a well-formed one. */
-  def skip(bytes: Array[Byte], pos: Int, limit: Int): Int =
+  def skip(bytes: Array[Byte], pos: Int, limit: Int): Int = {
+    emptySeen = 0L
+    oversized = false
     if (markField < 0) root.walk(bytes, pos, limit)
     else {
       val fields = root.asInstanceOf[Record].fields
@@ -223,6 +238,14 @@ final class DatumWalker(schema: Schema, markField: Int = -1) {
       }
       p
     }
+  }
+
+  /** Whether a decoder reading the datum at `pos` would preallocate for a
+    * block count without the bytes to back it: more items than bytes left,
+    * or zero-width items past `maxEmptyItems`. Only a schema with an array
+    * or a map is walked; a walk stopped first by another fault says no. */
+  def preallocates(bytes: Array[Byte], pos: Int, limit: Int): Boolean =
+    hasBlocks && skip(bytes, pos, limit) == Malformed && oversized
 
   /** Whether the schema has an array whose items take no bytes, so that a
     * valid datum can hold more items than it has bytes. */
@@ -244,4 +267,9 @@ final class DatumWalker(schema: Schema, markField: Int = -1) {
 object DatumWalker {
   /** What [[DatumWalker.skip]] returns for a malformed datum. */
   final val Malformed = -1
+
+  /** The zero-width array items (nulls, empty records, size-0 fixeds) a
+    * wire value may hold in all before it is decoded: such items cost no
+    * bytes, and the decoder allocates every one of them. */
+  final val MaxEmptyItems = 1L << 20
 }

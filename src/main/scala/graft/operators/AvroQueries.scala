@@ -61,8 +61,8 @@ object AvroQueries {
       // One registry dir per schema per JVM — registration is idempotent,
       // and plan-only callers must not leak a temp dir per construction.
       val registryRoot = s.conf.getOption("graft.registry.root").getOrElse(
-        registryDirCache.getOrElseUpdate(schemaJson,
-          java.nio.file.Files.createTempDirectory("graft-q50-registry").toString))
+        registryDirCache.getOrElseUpdate(schemaJson, RelationalQueries.releaseAtExit(
+          java.nio.file.Files.createTempDirectory("graft-q50-registry").toString)))
       val id = new FileSchemaRegistry(registryRoot).register("events-value", parsed)
       ev.select(AvroFunctions.toAvroWire(
           struct(ev.columns.map(col): _*), id, "Event").as("avro_value"))

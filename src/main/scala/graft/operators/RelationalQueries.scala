@@ -810,43 +810,54 @@ object RelationalQueries {
   // source-file fingerprint (the q67 cache lesson — a path-keyed entry
   // would serve a stale staged copy after a corpus rewrite), with the
   // fingerprint hashed into the OUTPUT path so two corpora can never share
-  // a staging directory. Replacing a slot deletes the superseded copy when
-  // it lives under the JVM temp root (driver-owned) — a map would leak one
-  // full staged corpus per rewrite for process lifetime.
+  // a staging directory. Replacing a slot deletes the superseded copy —
+  // a map would leak one full staged corpus per rewrite for process
+  // lifetime.
   private val fmtSlots =
     scala.collection.concurrent.TrieMap.empty[String, (String, String)]
+
+  /** Names this JVM's copies under a staging root that other drivers may
+    * share, so that releasing them never removes another driver's. */
+  private val driverToken = java.util.UUID.randomUUID().toString.take(8)
 
   private def stagedPath(s: SparkSession, fmt: String, key: String): String = {
     val suffix = f"${key.hashCode}%08x"
     // staging root must be cluster-visible on non-local masters; local runs
     // use a driver temp dir (same contract as graft.registry.root)
     s.conf.getOption("graft.staging.root")
-      .map(r => s"$r/graft-$fmt-stage-$suffix")
+      .map(r => s"$r/graft-$fmt-stage-$suffix-$driverToken")
       .getOrElse(
         java.nio.file.Files.createTempDirectory(s"graft-$fmt-$suffix").toString)
   }
 
-  private def dropStaged(path: String): Unit = {
-    val tmpRoot = System.getProperty("java.io.tmpdir")
-    if (tmpRoot != null && path.startsWith(tmpRoot)) {
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
-      }
-      rm(new java.io.File(path))
-    }
-  }
+  /** Deletes a path the engine minted for itself: a slot's staged copy
+    * (under the staging root or the temp root) or a directory registered
+    * with [[releaseAtExit]]. */
+  private def dropStaged(path: String): Unit = graft.Commit.delete(java.nio.file.Paths.get(path))
 
-  // The live slots outlive every query, so the JVM's exit releases them
-  // by the same rule — otherwise the last staged copy of each format
-  // (index pillar stores included) stays under the temp root for good.
-  private lazy val releaseAtExit: Unit = {
-    sys.addShutdownHook(fmtSlots.values.foreach { case (_, p) => dropStaged(p) })
+  /** Driver-owned directories that outlive every query and go when the
+    * JVM exits, with the live slots: otherwise the last staged copy of each
+    * format (index pillar stores included) stays behind for good. */
+  private val exitPaths = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+
+  private lazy val exitHook: Unit = {
+    sys.addShutdownHook {
+      fmtSlots.values.foreach { case (_, p) => dropStaged(p) }
+      exitPaths.forEach(dropStaged(_))
+    }
     ()
   }
 
-  private[operators] def staged(s: SparkSession, fmt: String, key: String)(
+  /** Registers `path` to be deleted when the JVM exits; returns it. */
+  private[operators] def releaseAtExit(path: String): String = {
+    exitHook
+    exitPaths.add(path)
+    path
+  }
+
+  private[graft] def staged(s: SparkSession, fmt: String, key: String)(
       build: String => Unit): String = fmtSlots.synchronized {
-    releaseAtExit
+    exitHook
     fmtSlots.get(fmt) match {
       case Some((k, path)) if k == key => path
       case prev =>

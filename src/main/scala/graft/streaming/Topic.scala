@@ -1,10 +1,22 @@
 package graft.streaming
 
-import java.nio.file.{Files, Paths}
+import java.nio.file.{Files, Path, Paths}
+import java.util.UUID
 
-import graft.Commit
+import graft.{Commit, LeanHadoopConf}
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{Path => HPath}
+import org.apache.hadoop.mapreduce.{Job, TaskAttemptID, TaskType}
+import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
+import org.apache.spark.TaskContext
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{classic, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.execution.SQLExecution
+import org.apache.spark.sql.execution.datasources.OutputWriterFactory
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+import org.apache.spark.sql.graft.OutputMetricsBridge
 import org.apache.spark.sql.types.{BinaryType, StringType, StructField, StructType}
 
 /** The transport seam of the replication pipeline (SURVEY.md §2.1 R1/R4-R6).
@@ -71,8 +83,76 @@ final case class CommittedTopicSource(dir: String, maxFilesPerTrigger: Int = 1)
   * replay after a crash) finds its committed directory and is skipped. */
 final case class FileTopicSink(dir: String) extends TopicSink {
   def commitBatch(batch: DataFrame, batchId: Long): Unit = {
-    Commit.publish(Paths.get(dir, "data", s"batch=$batchId"))(staged =>
-      batch.write.mode("overwrite").parquet(staged.toString))
+    Commit.publish(Paths.get(dir, "data", s"batch=$batchId"))(FileTopicSink.writeParts(batch, _))
     ()
+  }
+}
+
+object FileTopicSink {
+
+  /** Writes `batch` into the directory `out` as parquet parts in one job:
+    * one part per non-empty partition, and always one for partition 0, so
+    * an empty batch still reads back with its schema (Spark's file writer
+    * keeps the same rule). A part is never split by
+    * `spark.sql.files.maxRecordsPerFile`.
+    *
+    * `out` is committed as a whole by [[graft.Commit.publish]], so the job
+    * runs none of Spark's file-commit protocol (`FileFormatWriter`,
+    * `FileOutputCommitter`, `_SUCCESS`). Each part is written by the
+    * `OutputWriterFactory` that `ParquetFileFormat.prepareWrite` returns,
+    * the writer `df.write.parquet` uses, so the bytes, codec and footer
+    * metadata are Spark's. The task carries the write's Hadoop settings as
+    * a [[graft.LeanHadoopConf]], about 30 entries instead of the session
+    * conf's ~1,100. */
+  private[graft] def writeParts(batch: DataFrame, out: Path): Unit = {
+    val (parts, rows) = prepare(batch, out)
+    // the session's SQL settings reach the tasks, as a Dataset action's do
+    SQLExecution.withSQLConfPropagated(batch.sparkSession.asInstanceOf[classic.SparkSession]) {
+      batch.sparkSession.sparkContext.runJob(rows,
+        (tc: TaskContext, it: Iterator[InternalRow]) => {
+          parts.write(tc.partitionId(), tc.attemptNumber(), it); ()
+        })
+    }
+    ()
+  }
+
+  /** The writer of `batch`'s parts into `out`, and the rows it writes. */
+  private[graft] def prepare(batch: DataFrame, out: Path): (PartWriter, RDD[InternalRow]) = {
+    val session = batch.sparkSession
+    val job = Job.getInstance(LeanHadoopConf(session.sessionState.newHadoopConf()).value)
+    val factory = new ParquetFileFormat().prepareWrite(session, job, Map.empty, batch.schema)
+    val ext = factory.getFileExtension(
+      new TaskAttemptContextImpl(job.getConfiguration, new TaskAttemptID()))
+    val rows = batch.queryExecution.toRdd
+    (PartWriter(factory, batch.schema, LeanHadoopConf(job.getConfiguration), out.toString,
+      s"-${UUID.randomUUID()}-c000$ext"),
+      if (rows.partitions.isEmpty) session.sparkContext.parallelize(Seq.empty[InternalRow], 1)
+      else rows)
+  }
+
+  /** What each task of the write needs; the parts of one batch share
+    * `suffix`, so every attempt of a partition names the same part. */
+  private[graft] final case class PartWriter(factory: OutputWriterFactory, schema: StructType,
+                                             conf: LeanHadoopConf, dir: String, suffix: String) {
+
+    /** Writes `rows` as partition `partition`'s part, committed with
+      * [[graft.Commit.publishFile]]: a failed attempt leaves nothing, and a
+      * second attempt of a committed part changes nothing. Whether this
+      * attempt committed the part; it then reports the part's bytes and
+      * rows on the task's output metrics. */
+    def write(partition: Int, attempt: Int, rows: Iterator[InternalRow],
+              hadoopConf: Configuration = conf.value): Boolean =
+      (partition == 0 || rows.hasNext) && {
+        val target = Paths.get(dir, f"part-$partition%05d$suffix")
+        var n = 0L
+        val won = Commit.publishFile(target) { staged =>
+          val ctx = new TaskAttemptContextImpl(hadoopConf,
+            new TaskAttemptID("", 0, TaskType.MAP, partition, attempt))
+          val w = factory.newInstance(new HPath(staged.toUri).toString, schema, ctx)
+          try rows.foreach { r => w.write(r); n += 1 } finally w.close()
+        }
+        if (won) OutputMetricsBridge.report(Files.size(target), n)
+        won
+      }
   }
 }

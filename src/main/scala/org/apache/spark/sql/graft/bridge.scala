@@ -1,5 +1,6 @@
 package org.apache.spark.sql.graft
 
+import org.apache.spark.TaskContext
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.catalyst.expressions.{Expression, ScalarSubquery}
 import org.apache.spark.sql.classic.ExpressionUtils
@@ -20,4 +21,18 @@ object ColumnBridge {
     ExpressionUtils.column(ScalarSubquery(
       df.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]]
         .queryExecution.analyzed))
+}
+
+/** Bridge into a task's output metrics, whose setters are
+  * `private[spark]`, so a task that writes its files itself
+  * (graft.streaming.FileTopicSink) reports them as Spark's own file writer
+  * does. Contains no logic. */
+object OutputMetricsBridge {
+  /** Add to the running task's bytes and records written. */
+  def report(bytes: Long, records: Long): Unit =
+    Option(TaskContext.get()).foreach { tc =>
+      val m = tc.taskMetrics().outputMetrics
+      m.setBytesWritten(m.bytesWritten + bytes)
+      m.setRecordsWritten(m.recordsWritten + records)
+    }
 }

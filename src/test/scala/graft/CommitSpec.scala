@@ -8,11 +8,12 @@ import scala.jdk.CollectionConverters._
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The crash matrix of [[Commit]], on both forms it publishes: a directory
-  * and a file. A crash before the rename leaves no target and no staging,
-  * a crash after it leaves the target committed, a replay never replaces
-  * the target, racing publishers commit exactly once, and a publish clears
-  * what a killed attempt left behind. */
+/** The crash matrix of [[Commit]], on the forms it publishes: a directory,
+  * a file of given bytes and a file a writer creates. A crash before the
+  * rename leaves no target and no staging, a crash after it leaves the
+  * target committed, a replay never replaces the target, racing publishers
+  * commit exactly once, and a publish clears what a killed attempt left
+  * behind. */
 class CommitSpec extends AnyFunSuite {
 
   private def fresh(): Path = Files.createTempDirectory("graft-commit")
@@ -34,15 +35,25 @@ class CommitSpec extends AnyFunSuite {
     Form("file",
       (p, s) => { Files.write(p, s.getBytes(UTF_8)); () },
       (t, s, seam) => Commit.publish(t, s.getBytes(UTF_8), seam),
+      p => Files.readString(p)),
+    // a writer that leaves a side file next to the one it commits, as
+    // Hadoop's checksummed filesystem leaves a `.crc`
+    Form("file writer",
+      (p, s) => { Files.write(p, s.getBytes(UTF_8)); () },
+      (t, s, seam) => Commit.publishFile(t, seam) { p =>
+        Files.write(p.resolveSibling(s".${p.getFileName}.crc"), Array[Byte](0))
+        Files.write(p, s.getBytes(UTF_8))
+      },
       p => Files.readString(p)))
 
   private val noSeam: String => Unit = _ => ()
 
-  /** Staging entries left in `parent`. */
+  /** Staging entries, or any other hidden entry (a writer's side file),
+    * left in `parent`. */
   private def staged(parent: Path): Seq[String] = {
     val st = Files.list(parent)
     try st.iterator().asScala.map(_.getFileName.toString)
-      .filter(_.startsWith(".staging")).toSeq
+      .filter(_.startsWith(".")).toSeq
     finally st.close()
   }
 

@@ -2,6 +2,8 @@ package graft
 
 import java.nio.file.Files
 
+import scala.jdk.CollectionConverters._
+
 import graft.avro.{AvroCodec, AvroFunctions, ConfluentRegistryRef, FileRegistryRef, FileSchemaRegistry, RegistryRef, WireFormat}
 import graft.streaming.{CommittedTopicSource, FileTopicSink, FileTopicSource, Replication, ReplicationMetrics}
 import graft.streaming.Replication.Topics
@@ -126,6 +128,47 @@ class ReplicationSpec extends SparkSpec {
         assert(b.durationMs === b.phases.values.sum)
       }
     } finally ReplicationMetrics.remove(spark, metrics)
+  }
+
+  test("each micro-batch of a one-file source runs 1 job, 1 stage and 1 task") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
+    val env = freshEnv()
+    val events = Tables.events(spark, sf).limit(150).cache()
+    // three one-file appends: one micro-batch each at maxFilesPerTrigger=1
+    events.randomSplit(Array(1.0, 1.0, 1.0), seed = 7).foreach(part =>
+      Replication.stageSource(part.coalesce(1), env.topics.sourceDir, "events-value",
+        env.sourceReg, "Event"))
+    // (job group, micro-batch id, stage ids) of every job; the stage of every task
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[(String, String, Seq[Int])]()
+    val tasks = new java.util.concurrent.ConcurrentLinkedQueue[Int]()
+    val listener = new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit = {
+        val p = Option(js.properties)
+        jobs.add((p.map(_.getProperty("spark.jobGroup.id")).orNull,
+          p.map(_.getProperty("streaming.sql.batchId")).orNull, js.stageIds))
+        ()
+      }
+      override def onTaskEnd(te: SparkListenerTaskEnd): Unit = { tasks.add(te.stageId); () }
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val q = Replication.start(spark, env.topics, "events-value", env.sourceReg,
+        env.targetReg, idField = "event_id", maxFilesPerTrigger = 1)
+      q.awaitTermination(120000)
+      assert(Replication.readCommitted(spark, env.topics.targetDir).count() === 150)
+      val group = q.runId.toString
+      def ofQuery = jobs.asScala.toSeq.filter(_._1 == group)
+      def tasksOf(stages: Seq[Int]) = tasks.asScala.count(stages.contains)
+      // listener events are delivered asynchronously
+      val deadline = System.nanoTime() + 30e9.toLong
+      while (tasksOf(ofQuery.flatMap(_._3)) < 3 && System.nanoTime() < deadline) Thread.sleep(50)
+      Thread.sleep(200)
+      val perBatch = ofQuery.groupBy(_._2).map { case (batch, js) =>
+        batch -> ((js.size, js.map(_._3.size).sum, tasksOf(js.flatMap(_._3))))
+      }
+      assert(perBatch.keySet === Set("0", "1", "2"), perBatch)
+      assert(perBatch.values.forall(_ == ((1, 1, 1))), s"(jobs, stages, tasks) by batch: $perBatch")
+    } finally spark.sparkContext.removeSparkListener(listener)
   }
 
   /** key → the body after the frame header, of a replicated target topic. */

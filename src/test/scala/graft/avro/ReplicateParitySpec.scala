@@ -26,7 +26,9 @@ import scala.jdk.CollectionConverters._
   * trailing bytes, a block count of 2^31−17), with each primitive field as
   * the id, on a record whose ids are `["null", primitive]` unions, on a
   * record of date, timestamp and uuid logical types, and on a record with
-  * an array of nulls, which always transcodes.
+  * an array of nulls, which always transcodes. Block counts that would
+  * make the decoder preallocate without bound are refused before any
+  * decode, on both paths alike.
   *
   * For every input both paths reject it, or both accept it with an equal
   * key and an equal decoded value; dead-letter reasons are identical; and
@@ -343,6 +345,42 @@ class ReplicateParitySpec extends SparkSpec {
       assert(WireFormat.locate(v)._1 === times.targetId)
       assert(body(v) === body(wire), millis)
     }
+  }
+
+  /** A `holes` value: id 7, `n` nulls in one block, tag "t". */
+  private def holesWire(n: Long): Array[Byte] =
+    WireFormat.frame(holes.sourceId, zigzag(7) ++
+      (if (n > 0) zigzag(n) else Array.emptyByteArray) ++ zigzag(0) ++ zigzag(1) ++ Array('t'.toByte))
+
+  private def reason(out: scala.util.Try[(String, Array[Byte], String)]): String =
+    out.fold(e => s"${e.getClass.getSimpleName}: ${e.getMessage}", _._3)
+
+  test("a 2^31−17 block count and 10^9 nulls are refused within 5 s, before any decode") {
+    val poisons = Seq(
+      ("a 2^31−17 block count", zoo, "f_long", hugeBlockInputs.head._2),
+      ("10^9 nulls", holes, "id", holesWire(1000000000L)))
+    for ((label, subject, idField, wire) <- poisons; deadLetter <- Seq(true, false)) {
+      val t0 = System.nanoTime()
+      val out = attempt(fused(subject, idField, deadLetter)(wire))
+      val secs = (System.nanoTime() - t0) / 1e9
+      assert(secs < 5, s"$label took $secs s")
+      // a dead letter, or the stream error a failed decode raises; never
+      // an exhausted heap
+      assert(out.isSuccess === deadLetter, s"$label: $out")
+      assert(reason(out).startsWith("AvroRuntimeException: Malformed data: a block count"),
+        s"$label: ${reason(out)}")
+      if (deadLetter) assert(out.get._2 === null)
+      assert(reason(attempt(stepwise(subject, idField, deadLetter)(wire))) === reason(out), label)
+    }
+  }
+
+  test("a value at the zero-width item cap transcodes; one item more is refused") {
+    val run = fused(holes, "id", deadLetter = true)
+    val (k, v, err) = run(holesWire(DatumWalker.MaxEmptyItems))
+    assert(err === null && k === "7")
+    assert(decoder(holes)(v).getSeq[Any](1).size === DatumWalker.MaxEmptyItems)
+    val past = run(holesWire(DatumWalker.MaxEmptyItems + 1))
+    assert(past._2 === null && past._3.startsWith("AvroRuntimeException: Malformed data"), past._3)
   }
 
   test("the dead-letter stream plan agrees with the three-step plan") {
