@@ -41,8 +41,8 @@ import org.apache.spark.sql.functions._
   *    original range, so they arrive AFTER their originals.
   *  - `longdocs`: draws 100–1000 tokens per doc (10× the default) — the
   *    text-heavy regime where the streaming-admitter pillar bootstrap's
-  *    corpus-independence is worth wall-clock, measured by StreamBench's
-  *    bootstrap-vs-restream pair.
+  *    corpus-independence is worth wall-clock (SCALE.md's text-heavy
+  *    bootstrap rows).
   *
   * Usage: runMain graft.ScaleCorpus <outDir> <mult> [ingest] [longdocs]
   */

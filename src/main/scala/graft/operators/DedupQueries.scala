@@ -2160,8 +2160,8 @@ object DedupQueries {
         "the hash compare would name it on every corpus every round. " +
         "Memoized per corpus fingerprint (q78's staging discipline), so " +
         "the bench measures the steady-state serve over the compacted " +
-        "single-segment layout; IndexMaintBench's store op carries the " +
-        "byte/file-count economics at x1/x10/x100."
+        "single-segment layout; SCALE.md's manifest-store economics " +
+        "record the byte/file-count economics at x1/x10/x100."
     ) { (s, dir) =>
       val root = RelationalQueries.staged(s, "shlife",
         Tables.fingerprint(s, s"$dir/documents.parquet")) { out =>
@@ -2469,10 +2469,10 @@ object DedupQueries {
               |ORDER BY vec_a, vec_b""".stripMargin),
       "q67 served FROM the installed sign-LSH postings pillar: per-table " +
         "BASE codes persist PARTITIONED BY table next to the (bits, " +
-        "tables) dials; the serve path derives the Hamming-1 probe balls " +
-        "from the stored codes (8 integer XORs per row — cheaper to " +
-        "re-derive than to 9× the stored artifact), bounds union " +
-        "buckets, pairs id-only, and re-checks exact cosine through an " +
+        "tables) dials, with the probe-ready `balls` derived from them at " +
+        "every commit (Hamming-1-expanded bucket id-lists bounded to " +
+        "[2, MaxBucket]); the serve path pairs those lists id-only and " +
+        "re-checks exact cosine through an " +
         "id-bounded lookup into the corpus — the embeddings scan feeds " +
         "ONLY the re-check join (q281's re-rank discipline); the 4×8 " +
         "hyperplane signature computation (the build) never re-runs. A " +

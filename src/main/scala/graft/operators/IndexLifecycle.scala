@@ -5,39 +5,42 @@ import scala.jdk.CollectionConverters._
 
 import graft.Commit
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-/** The observe→act loop on ANN-index maintenance: q241/q245 FLAG drift,
-  * this module ACTS on it — retrain the coarse quantizer and install the
-  * new index version atomically, so readers always see one complete index
-  * (old or new, never neither, never a half-written centroid set).
+/** The versioned index store: the trained and derived artifacts the ANN
+  * and near-dup serves read, installed atomically, audited against the
+  * current corpus and replaced when they drift, so readers always see
+  * one complete index (old or new, never neither, never half-written).
   *
-  * Store layout: `root/v=N/centroids` (cent_id, cv, cn) and
-  * `root/v=N/baseline` (cent_id, n, ppm — the cell-mass distribution of
-  * the training corpus under THESE centroids, recorded at install time).
-  * Every version directory is committed by [[graft.Commit.publish]], and
-  * readers load the highest committed version — so a reader concurrent
-  * with a swap sees exactly one complete version.
+  * Store layout: each pillar has its own root of `root/v=N` version
+  * directories, each committed whole by [[graft.Commit.publish]]; readers
+  * load the highest committed version (or the one a release pins), so a
+  * reader concurrent with a swap sees exactly one complete version. A
+  * version holds one of three shapes:
+  *  - a quantizer pillar ([[Quantizer]]): the trained artifact
+  *    (`centroids` or `codebook`) and its install-time `baseline`
+  *    measure, as parquet directories inside the version;
+  *  - a dial pillar ([[Dial]]): the one-row serving value and the dial
+  *    frame it was chosen on;
+  *  - a manifest pillar (the served PQ index, the [[Postings]] pillars):
+  *    a `manifest.tsv` naming the immutable segments under
+  *    `root/segments/` that compose every artifact of its layout, base
+  *    and derived, next to the version's KB-scale scalars (cfg, and the
+  *    PQ index's `baseline` and `meta`).
   *
-  * The drift audit generalizes q241: instead of comparing two data epochs
-  * through a frozen index, it compares the CURRENT corpus's cell masses
-  * against the masses recorded when the installed version was trained —
-  * which is the operational retrain trigger (a fresh index is green by
-  * construction because its baseline IS the current distribution), while
-  * q241's epoch-parity form remains the oracle-checked batch audit.
+  * The drift audits generalize q241/q245: instead of comparing two data
+  * epochs through a frozen index, they compare the CURRENT corpus against
+  * the measure recorded when the installed version was trained — the
+  * operational retrain trigger (a fresh index is green by construction
+  * because its baseline IS the current distribution), while q241/q245's
+  * epoch-parity forms remain the oracle-checked batch audits.
   *
-  * Retraining runs [[ClusterQueries.kmeans]] (deterministic seeding,
-  * broadcast-centroid assignment, partial-agg re-averaging — the q86
-  * trainer); search against any installed version rides
-  * [[SimilarityQueries.ivfTopKFrom]], the very plan q66 ships, so query
-  * results change ONLY through the installed centroid artifact.
-  *
-  * Scale: centroids and baselines are KB-scale artifacts (thousands of
-  * cells at 100 TB); the only corpus-sized work is the assignment scan the
-  * audit shares with every index build, and the install moves directories,
-  * not data.
+  * Scale: quantizers, baselines and scalars are KB-scale artifacts; the
+  * only corpus-sized work is the assignment scan the audit shares with
+  * every index build, installs move directories, and corpus-sized
+  * artifacts carry across versions by manifest reference, never by copy.
   */
 object IndexLifecycle {
 
@@ -52,40 +55,124 @@ object IndexLifecycle {
   def latestVersion(root: String): Option[Long] =
     Commit.numbered(Paths.get(root), "v=").lastOption
 
-  /** The latest committed centroid frame (cent_id, cv, cn). */
-  def readCentroids(s: SparkSession, root: String): DataFrame = {
-    val v = latestVersion(root).getOrElse(
-      throw new IllegalStateException(s"no committed index under $root"))
-    s.read.parquet(s"$root/v=$v/centroids")
-  }
+  // ---------- quantizer pillars: centroids and codebooks ----------
+  //
+  // The composed IVF-PQ index (q249) has two trained artifacts — the
+  // coarse quantizer's centroids (drift monitor q241) and the product
+  // quantizer's codebooks (drift monitor q245). Each lives in its own
+  // root, so either pillar hot-swaps independently and a reader composes
+  // whatever pair is installed at read time — each complete by itself.
+  // The two differ only in their [[Quantizer]] descriptor. Retraining
+  // runs the q86/q236 trainers; search against an installed version
+  // rides the very plans q66/q249 ship, so results change ONLY through
+  // the installed artifact.
 
-  /** The latest committed training-time cell masses (cent_id, n, ppm). */
-  def readBaseline(s: SparkSession, root: String): DataFrame = {
-    val v = latestVersion(root).getOrElse(
-      throw new IllegalStateException(s"no committed index under $root"))
-    s.read.parquet(s"$root/v=$v/baseline")
-  }
+  /** A quantizer pillar: the trained `artifact`, and the `baseline`
+    * artifact holding `measure(vectors, artifact)` of the training corpus
+    * — one row per `keyCol` with its `valueCol`. The drift audit names
+    * the two readings `baseline_<valueCol>` and `current_<valueCol>`,
+    * their absolute difference `shiftCol`, and `flagCol` =
+    * `flagRule(shift, baseline)`. `train` builds the artifact from
+    * `vectors(vec_id, v)` and a trainer parameter `P`. */
+  final case class Quantizer[P](artifact: String, baseline: String,
+                                keyCol: String, valueCol: String,
+                                shiftCol: String, flagCol: String,
+                                measure: (DataFrame, DataFrame) => DataFrame,
+                                flagRule: (Column, Column) => Column,
+                                train: (SparkSession, DataFrame, P) => DataFrame)
 
-  /** Install `centroids(cent_id, cv, cn)` as `version`, recording the
-    * cell-mass baseline of `vectors(vec_id, v)` under these centroids.
-    * Atomic (staging dir + rename); idempotent — an already-committed
-    * version returns false untouched. `interpose` is a test seam called at
-    * "staged" (artifacts complete, not yet visible) and "installed". */
-  def install(s: SparkSession, root: String, version: Long,
-              centroids: DataFrame, vectors: DataFrame,
-              interpose: String => Unit = _ => ()): Boolean =
+  /** The coarse quantizer (cent_id, cv, cn): the cell-mass baseline
+    * (cent_id, n, ppm) under nearest-centroid assignment, flagged by
+    * q241's ppm shift; trained by k-means with `k` cells. */
+  val Centroids: Quantizer[Int] = Quantizer("centroids", "baseline",
+    "cent_id", "ppm", "shift_ppm", "rebalance",
+    (vectors, cents) => cellPpm(assign(vectors, cents), cents),
+    (shift, _) => shift > RebalancePpm,
+    (s, vectors, k) => train(s, vectors, k))
+
+  /** The product quantizer (m, cent_id, csub, crk): the per-subspace mean
+    * quantization error baseline (m, n, merr_u), flagged by q245's
+    * 2.5%-relative rule ([[RefineQueries.PqDriftDenom]]); trained by the
+    * q236 share-form trainer. */
+  val Codebook: Quantizer[Unit] = Quantizer("codebook", "errbase",
+    "m", "merr_u", "shift_u", "retrain",
+    codebookErrU,
+    (shift, base) => shift * RefineQueries.PqDriftDenom > base,
+    (_, vectors, _) => trainCodebook(vectors))
+
+  /** The artifact of a SPECIFIC committed version. */
+  def readQuantizerAt(s: SparkSession, root: String, q: Quantizer[_],
+                      v: Long): DataFrame =
+    s.read.parquet(s"$root/v=$v/${q.artifact}")
+
+  /** The latest committed artifact. */
+  def readQuantizer(s: SparkSession, root: String,
+                    q: Quantizer[_]): DataFrame =
+    readQuantizerAt(s, root, q, latestIndex(root))
+
+  /** Install `artifact` as `version`, recording the descriptor's measure
+    * of `vectors(vec_id, v)` under it as the baseline. Atomic (staging dir
+    * + rename); idempotent — an already-committed version returns false
+    * untouched. `interpose` is a test seam called at "staged" (artifacts
+    * complete, not yet visible) and "installed". */
+  def installQuantizer(s: SparkSession, root: String, version: Long,
+                       q: Quantizer[_], artifact: DataFrame,
+                       vectors: DataFrame,
+                       interpose: String => Unit = _ => ()): Boolean =
     Commit.publish(Paths.get(root, s"v=$version"), interpose) { staging =>
-      centroids.write.mode("overwrite")
-        .parquet(staging.resolve("centroids").toString)
-      // baseline reads centroids back from STAGING: the recorded masses
-      // provably describe the exact artifact being installed, not the
-      // in-memory frame (whose k-means lineage could recompute differently)
-      val staged = s.read.parquet(staging.resolve("centroids").toString)
-      cellPpm(assign(vectors, staged), staged)
-        .write.mode("overwrite").parquet(staging.resolve("baseline").toString)
+      artifact.write.mode("overwrite")
+        .parquet(staging.resolve(q.artifact).toString)
+      // the baseline reads the artifact back from STAGING: the recorded
+      // measure provably describes the exact artifact being installed,
+      // not the in-memory frame (whose lineage could recompute
+      // differently)
+      val staged = s.read.parquet(staging.resolve(q.artifact).toString)
+      q.measure(vectors, staged)
+        .write.mode("overwrite").parquet(staging.resolve(q.baseline).toString)
     }
 
-  // ---------- assignment + audit ----------
+  /** Per-key drift of `vectors`' current measure vs the installed
+    * version's training-time baseline, both read from ONE resolved
+    * version: (key, baseline_<value>, current_<value>, shift, flag).
+    * Green right after a retrain by construction — the baseline IS the
+    * refreshed corpus. */
+  def quantizerDriftAudit(s: SparkSession, root: String, q: Quantizer[_],
+                          vectors: DataFrame): DataFrame = {
+    val v = latestIndex(root)
+    drift(q, readQuantizerAt(s, root, q, v),
+      s.read.parquet(s"$root/v=$v/${q.baseline}"), vectors)
+  }
+
+  /** The audit of `vectors` against an artifact and its baseline frame. */
+  private def drift(q: Quantizer[_], artifact: DataFrame,
+                    baseline: DataFrame, vectors: DataFrame): DataFrame = {
+    val (base, cur) = (s"baseline_${q.valueCol}", s"current_${q.valueCol}")
+    val current = q.measure(vectors, artifact)
+      .select(col(q.keyCol), col(q.valueCol).as(cur))
+    baseline.select(col(q.keyCol), col(q.valueCol).as(base))
+      .join(current, q.keyCol)
+      .withColumn(q.shiftCol, abs(col(cur) - col(base)))
+      .withColumn(q.flagCol, q.flagRule(col(q.shiftCol), col(base)))
+      .orderBy(q.keyCol)
+  }
+
+  /** The closed loop: audit the installed version against `vectors`; if
+    * any key flags, retrain on the current corpus (`param` goes to the
+    * descriptor's trainer) and install the next version atomically.
+    * Returns the new version when a retrain happened. */
+  def retrainQuantizer[P](s: SparkSession, root: String, q: Quantizer[P],
+                          vectors: DataFrame, param: P): Option[Long] = {
+    val flagged = quantizerDriftAudit(s, root, q, vectors)
+      .filter(col(q.flagCol)).limit(1).count() > 0
+    if (!flagged) None
+    else {
+      val next = latestVersion(root).getOrElse(0L) + 1
+      installQuantizer(s, root, next, q, q.train(s, vectors, param), vectors)
+      Some(next)
+    }
+  }
+
+  // ---------- the quantizers' measures and trainers ----------
 
   /** (vec_id, cent_id): nearest-centroid cosine assignment of
     * `vectors(vec_id, v)` — the q66 shape (broadcast centroids, map-side
@@ -104,37 +191,20 @@ object IndexLifecycle {
   }
 
   /** (cent_id, n, ppm) over ALL cells of `centroids` — zero-mass cells
-    * included (a cell emptying out is exactly the drift signal). The
-    * totals ride a single-series window over the cells-sized aggregate
-    * (q241's post-agg pattern — index metadata, never corpus rows). */
-  def cellPpm(assigned: DataFrame, centroids: DataFrame): DataFrame = {
-    val counts = assigned.groupBy("cent_id").agg(count(lit(1)).as("n"))
-    val all = Window.partitionBy(lit(1))
-    centroids.select(col("cent_id"))
-      .join(counts, Seq("cent_id"), "left")
-      .select(col("cent_id"), coalesce(col("n"), lit(0L)).as("n"))
-      .withColumn("t", sum(col("n")).over(all))
+    * included (a cell emptying out is exactly the drift signal). */
+  def cellPpm(assigned: DataFrame, centroids: DataFrame): DataFrame =
+    ppmOf(centroids.select(col("cent_id"))
+      .join(assigned.groupBy("cent_id").agg(count(lit(1)).as("n")),
+        Seq("cent_id"), "left")
+      .select(col("cent_id"), coalesce(col("n"), lit(0L)).as("n")))
+
+  /** (cent_id, n, ppm) of per-cell masses `cells(cent_id, n)`. The total
+    * rides a single-series window over the cells-sized frame (q241's
+    * post-agg pattern — index metadata, never corpus rows). */
+  private def ppmOf(cells: DataFrame): DataFrame =
+    cells.withColumn("t", sum(col("n")).over(Window.partitionBy(lit(1))))
       .select(col("cent_id"), col("n"),
         expr("(1000000 * n) div nullif(t, 0)").as("ppm"))
-  }
-
-  /** Per-cell drift of `vectors`' current cell masses vs the installed
-    * version's training-time baseline: (cent_id, baseline_ppm,
-    * current_ppm, shift_ppm, rebalance). Green (no flags) right after a
-    * retrain by construction — the baseline IS the refreshed corpus. */
-  def driftAudit(s: SparkSession, root: String, vectors: DataFrame): DataFrame = {
-    val cents = readCentroids(s, root)
-    val current = cellPpm(assign(vectors, cents), cents)
-      .select(col("cent_id"), col("ppm").as("current_ppm"))
-    readBaseline(s, root)
-      .select(col("cent_id"), col("ppm").as("baseline_ppm"))
-      .join(current, "cent_id")
-      .withColumn("shift_ppm", abs(col("current_ppm") - col("baseline_ppm")))
-      .withColumn("rebalance", col("shift_ppm") > RebalancePpm)
-      .orderBy("cent_id")
-  }
-
-  // ---------- retrain ----------
 
   /** k-means centroids of `vectors(vec_id, v)` in store schema
     * (cent_id, cv, cn) — the q86 trainer feeding the store. */
@@ -146,94 +216,6 @@ object IndexLifecycle {
     cents.select(col("cid").as("cent_id"), col("c").as("cv"),
       sqrt(dotd(col("c"), col("c"))).as("cn"))
   }
-
-  /** The closed loop: audit the installed version against `vectors`; if
-    * any cell flags, retrain k centroids on the current corpus and install
-    * the next version atomically. Returns the new version when a retrain
-    * happened. */
-  def retrainIfDrifted(s: SparkSession, root: String, vectors: DataFrame,
-                       k: Int): Option[Long] = {
-    val flagged = driftAudit(s, root, vectors)
-      .filter(col("rebalance")).limit(1).count() > 0
-    if (!flagged) None
-    else {
-      val next = latestVersion(root).getOrElse(0L) + 1
-      install(s, root, next, train(s, vectors, k), vectors)
-      Some(next)
-    }
-  }
-
-  /** Search the corpus at `dir` through the INSTALLED index — q66's exact
-    * plan with the store's centroid frame in place of the LCG sample. */
-  def search(s: SparkSession, root: String, dir: String,
-             probes: Int = SimilarityQueries.IvfProbes): DataFrame =
-    SimilarityQueries.ivfTopKFrom(s, dir, readCentroids(s, root), probes)
-
-  // ---------- selection-family consumers of the centroid pillar ----------
-  //
-  // Retrieval is not the pillar's only reader: the SELECTION family
-  // (SemDeDup q230, prototypicality q232) and the FILTERED search (q255)
-  // cluster through the same centroid artifact. Routing them through the
-  // store means ONE hot-swap moves membership, pruning and retrieval
-  // together — a live-only copy of the cluster structure in any consumer
-  // would silently drift from the version the operators audit.
-
-  /** q230's SemDeDup verdict with cluster structure from the INSTALLED
-    * centroid pillar — the exact q230 pipeline over
-    * [[SelectionQueries.assignedFrom]]. */
-  def semDedupAt(s: SparkSession, root: String, dir: String): DataFrame =
-    SelectionQueries.semDedupOf(
-      SelectionQueries.assignedFrom(s, dir, readCentroids(s, root)))
-
-  /** q232's prototypicality pruning through the INSTALLED centroid
-    * pillar. */
-  def prototypicalityAt(s: SparkSession, root: String, dir: String): DataFrame =
-    SelectionQueries.prototypicalityOf(
-      SelectionQueries.assignedFrom(s, dir, readCentroids(s, root)))
-
-  /** q255's label-filtered search through the INSTALLED centroid pillar. */
-  def searchFiltered(s: SparkSession, root: String, dir: String,
-                     probes: Int = SimilarityQueries.IvfProbes): DataFrame =
-    SimilarityQueries.ivfFilteredTopKFrom(s, dir, readCentroids(s, root), probes)
-
-  // ---------- the OTHER pillar: PQ codebooks ----------
-  //
-  // The composed IVF-PQ index (q249) has two trained artifacts — the
-  // coarse quantizer's centroids (drift monitor q241, store above) and
-  // the product quantizer's codebooks (drift monitor q245, store below).
-  // Both live under the same v=N Commit.publish rule, in separate
-  // roots, so either pillar hot-swaps independently and a reader composes
-  // whatever pair is installed at read time — each complete by itself.
-
-  /** The latest committed codebook frame (m, cent_id, csub, crk). */
-  def readCodebook(s: SparkSession, root: String): DataFrame = {
-    val v = latestVersion(root).getOrElse(
-      throw new IllegalStateException(s"no committed codebook under $root"))
-    s.read.parquet(s"$root/v=$v/codebook")
-  }
-
-  /** The latest committed training-time per-subspace mean quantization
-    * error (m, n, merr_u). */
-  def readErrBaseline(s: SparkSession, root: String): DataFrame = {
-    val v = latestVersion(root).getOrElse(
-      throw new IllegalStateException(s"no committed codebook under $root"))
-    s.read.parquet(s"$root/v=$v/errbase")
-  }
-
-  /** Install `codebook(m, cent_id, csub, crk)` as `version`, recording the
-    * per-subspace mean quantization error of `vectors(vec_id, v)` under
-    * THIS codebook — the training-time baseline q245's relative rule
-    * audits against. Same atomicity/idempotence contract as [[install]]. */
-  def installCodebook(s: SparkSession, root: String, version: Long,
-                      codebook: DataFrame, vectors: DataFrame,
-                      interpose: String => Unit = _ => ()): Boolean =
-    Commit.publish(Paths.get(root, s"v=$version"), interpose) { staging =>
-      codebook.write.mode("overwrite")
-        .parquet(staging.resolve("codebook").toString)
-      val staged = s.read.parquet(staging.resolve("codebook").toString)
-      codebookErrU(vectors, staged)
-        .write.mode("overwrite").parquet(staging.resolve("errbase").toString)
-    }
 
   /** (m, n, merr_u): per-subspace mean quantization error of
     * `vectors(vec_id, v)` under `codebook` — q245's exact arithmetic
@@ -261,60 +243,65 @@ object IndexLifecycle {
       .orderBy("m")
   }
 
-  /** Per-subspace drift of `vectors`' current mean quantization error vs
-    * the installed version's training-time baseline: (m, baseline_merr_u,
-    * current_merr_u, shift_u, retrain) — q245's 2.5%-relative rule
-    * ([[RefineQueries.PqDriftDenom]]). Green right after a retrain by
-    * construction. */
-  def codebookDriftAudit(s: SparkSession, root: String,
-                         vectors: DataFrame): DataFrame = {
-    val current = codebookErrU(vectors, readCodebook(s, root))
-      .select(col("m"), col("merr_u").as("current_merr_u"))
-    readErrBaseline(s, root)
-      .select(col("m"), col("merr_u").as("baseline_merr_u"))
-      .join(current, "m")
-      .withColumn("shift_u", abs(col("current_merr_u") - col("baseline_merr_u")))
-      .withColumn("retrain",
-        col("shift_u") * RefineQueries.PqDriftDenom > col("baseline_merr_u"))
-      .orderBy("m")
-  }
-
   /** Codebook in store schema from `vectors(vec_id, v)` — the q236
     * trainer ([[SimilarityQueries.pqCodebookOf]]) feeding the store. */
   def trainCodebook(vectors: DataFrame): DataFrame =
     SimilarityQueries.pqCodebookOf(SimilarityQueries.pqSubsOf(vectors))
 
-  /** The closed loop for the codebook pillar: audit the installed version
-    * against `vectors`; if any subspace flags q245's relative rule,
-    * retrain on the current corpus and install the next version
-    * atomically. Returns the new version when a retrain happened. */
-  def retrainCodebookIfDrifted(s: SparkSession, root: String,
-                               vectors: DataFrame): Option[Long] = {
-    val flagged = codebookDriftAudit(s, root, vectors)
-      .filter(col("retrain")).limit(1).count() > 0
-    if (!flagged) None
-    else {
-      val next = latestVersion(root).getOrElse(0L) + 1
-      installCodebook(s, root, next, trainCodebook(vectors), vectors)
-      Some(next)
-    }
-  }
+  // ---------- consumers of the quantizer pillars ----------
+  //
+  // Retrieval is not the centroid pillar's only reader: the SELECTION
+  // family (SemDeDup q230, prototypicality q232) and the FILTERED search
+  // (q255) cluster through the same centroid artifact. Routing them
+  // through the store means ONE hot-swap moves membership, pruning and
+  // retrieval together — a live-only copy of the cluster structure in
+  // any consumer would silently drift from the version the operators
+  // audit.
+
+  /** Search the corpus at `dir` through the INSTALLED index — q66's exact
+    * plan with the store's centroid frame in place of the LCG sample. */
+  def search(s: SparkSession, root: String, dir: String,
+             probes: Int = SimilarityQueries.IvfProbes): DataFrame =
+    SimilarityQueries.ivfTopKFrom(s, dir, readQuantizer(s, root, Centroids),
+      probes)
+
+  /** q230's SemDeDup verdict with cluster structure from the INSTALLED
+    * centroid pillar — the exact q230 pipeline over
+    * [[SelectionQueries.assignedFrom]]. */
+  def semDedupAt(s: SparkSession, root: String, dir: String): DataFrame =
+    SelectionQueries.semDedupOf(SelectionQueries.assignedFrom(s, dir,
+      readQuantizer(s, root, Centroids)))
+
+  /** q232's prototypicality pruning through the INSTALLED centroid
+    * pillar. */
+  def prototypicalityAt(s: SparkSession, root: String, dir: String): DataFrame =
+    SelectionQueries.prototypicalityOf(SelectionQueries.assignedFrom(s, dir,
+      readQuantizer(s, root, Centroids)))
+
+  /** q255's label-filtered search through the INSTALLED centroid pillar. */
+  def searchFiltered(s: SparkSession, root: String, dir: String,
+                     probes: Int = SimilarityQueries.IvfProbes): DataFrame =
+    SimilarityQueries.ivfFilteredTopKFrom(s, dir,
+      readQuantizer(s, root, Centroids), probes)
 
   /** Search the corpus at `dir` through BOTH installed pillars — q249's
     * exact plan with the stores' centroid and codebook frames in place of
     * the LCG samples. */
   def searchPq(s: SparkSession, centsRoot: String, codebookRoot: String,
                dir: String,
-               probes: Int = SimilarityQueries.IvfProbes): DataFrame = {
-    val book = readCodebook(s, codebookRoot)
-    // pillar-backed codebook: its one count() is the sanctioned KB-scale
-    // control-plane read, and passing it keeps the share-form footer
-    // fallback (which could needlessly demote a small installed book's
-    // broadcast) out of the pillar path
-    SimilarityQueries.ivfPqTopKFrom(s, dir,
-      readCentroids(s, centsRoot), book, probes,
+               probes: Int = SimilarityQueries.IvfProbes): DataFrame =
+    searchPqOf(s, dir, readQuantizer(s, centsRoot, Centroids),
+      readQuantizer(s, codebookRoot, Codebook), probes)
+
+  /** q249's plan over installed quantizer frames. The pillar-backed
+    * codebook's one count() is the sanctioned KB-scale control-plane
+    * read, and passing it keeps the share-form footer fallback (which
+    * could needlessly demote a small installed book's broadcast) out of
+    * the pillar path. */
+  private def searchPqOf(s: SparkSession, dir: String, cents: DataFrame,
+                         book: DataFrame, probes: Int): DataFrame =
+    SimilarityQueries.ivfPqTopKFrom(s, dir, cents, book, probes,
       knownCodebookRows = Some(book.count()))
-  }
 
   // ---------- the SERVED index pillar: stored PQ codes ----------
   //
@@ -331,108 +318,64 @@ object IndexLifecycle {
   // different book, and the probed-cell join prunes whole partitions of
   // the stored scan. Same Commit.publish rule as every pillar.
 
-  private val PqCodesSchema = "vec_id BIGINT, cd ARRAY<BIGINT>, cent_id BIGINT"
-  private val PqCentsSchema = "cent_id BIGINT, cv ARRAY<DOUBLE>, cn DOUBLE"
-  private val PqBookSchema =
-    "m INT, cent_id BIGINT, csub ARRAY<DOUBLE>, crk BIGINT"
+  // The served index's artifacts, in manifest order: the quantizer
+  // frames it was coded with, then the codes, partitioned by cell.
+  private val PqCents =
+    Art("centroids", "cent_id BIGINT, cv ARRAY<DOUBLE>, cn DOUBLE", Nil)
+  private val PqBook = Art("codebook",
+    "m INT, cent_id BIGINT, csub ARRAY<DOUBLE>, crk BIGINT", Nil)
+  private val PqCodes = Art("codes",
+    "vec_id BIGINT, cd ARRAY<BIGINT>, cent_id BIGINT", Seq("cent_id"))
+  private val PqArts = Seq(PqCents, PqBook, PqCodes)
+
+  /** The 1-row `meta` sizing record — codebook_rows is what the serve
+    * path's broadcast gate reads, so a search never launches a job
+    * against the quantizer frames just to size a hint. */
+  private val PqMetaCols = Seq("codebook_rows", "cents_rows", "code_rows")
 
   /** Install the complete serving index coded from `dir` under the given
-    * quantizer frames. The codes are derived from the STAGED copies of
-    * the quantizers (the [[install]] rule: the recorded artifact provably
-    * describes what was installed, not an in-memory lineage that could
-    * recompute differently). */
-  private val PqMetaSchema =
-    "codebook_rows BIGINT, cents_rows BIGINT, code_rows BIGINT"
-
+    * quantizer frames. The codes are derived from the WRITTEN copies of
+    * the quantizers (the [[installQuantizer]] rule: the recorded artifact
+    * provably describes what was installed, not an in-memory lineage
+    * that could recompute differently). */
   def installPqIndex(s: SparkSession, root: String, version: Long,
                      cents: DataFrame, codebook: DataFrame, dir: String,
                      interpose: String => Unit = _ => ()): Boolean =
     Commit.publish(Paths.get(root, s"v=$version"), interpose) { staging =>
-      val centSeg = writeSegment(root, "centroids")(p =>
-        cents.write.mode("overwrite").parquet(p.toString))
-      val bookSeg = writeSegment(root, "codebook")(p =>
-        codebook.write.mode("overwrite").parquet(p.toString))
-      // codes derive from the WRITTEN quantizer segments (the install
-      // rule: the recorded artifact provably describes what is being
-      // installed, not an in-memory lineage that could recompute
-      // differently) — with immutable segments that is literally the
+      val centSeg = writeArt(root, PqCents, cents)
+      val bookSeg = writeArt(root, PqBook, codebook)
+      // with immutable segments the written quantizers are literally the
       // same files every later version referencing them will serve
-      val sc = s.read.schema(PqCentsSchema).parquet(s"$root/$centSeg")
-      val sb = s.read.schema(PqBookSchema).parquet(s"$root/$bookSeg")
-      val codeSeg = writeSegment(root, "codes")(p =>
-        SimilarityQueries.pqIndexRows(s, dir, sc, sb)
-          .write.mode("overwrite").partitionBy("cent_id")
-          .parquet(p.toString))
-      val staged = s.read.schema(PqCodesSchema).parquet(s"$root/$codeSeg")
+      val sc = segFrame(s, root, PqCents, centSeg)
+      val sb = segFrame(s, root, PqBook, bookSeg)
+      val codeSeg = writeArt(root, PqCodes,
+        SimilarityQueries.pqIndexRows(s, dir, sc, sb))
+      val staged = segFrame(s, root, PqCodes, codeSeg)
       writePqBaseline(s, staging, staged, sc)
-      writePqMeta(s, staging, sb.count(), sc.count(), staged.count())
-      writeManifest(staging, Seq("centroids" -> centSeg,
-        "codebook" -> bookSeg, "codes" -> codeSeg))
+      writeScalars(s, staging, "meta", PqMetaCols,
+        Seq(sb.count(), sc.count(), staged.count()))
+      writeManifest(staging, Seq(centSeg, bookSeg, codeSeg))
     }
 
   /** The install-time cell-mass baseline of the codes being committed —
     * cells-sized, materialized inside the version directory. */
   private def writePqBaseline(s: SparkSession, staging: Path,
                               codes: DataFrame, sc: DataFrame): Unit =
-    cellPpm(codes.select("vec_id", "cent_id"), sc)
-      .write.mode("overwrite").parquet(staging.resolve("baseline").toString)
+    cellPpm(codes.select("vec_id", "cent_id"), sc).write.mode("overwrite")
+      .parquet(staging.resolve(Centroids.baseline).toString)
 
-  /** The 1-row `meta` sizing record — codebook_rows is what the serve
-    * path's broadcast gate reads, so a search never launches a job
-    * against the quantizer frames just to size a hint. */
-  private def writePqMeta(s: SparkSession, staging: Path, bookRows: Long,
-                          centRows: Long, codeRows: Long): Unit =
-    s.range(1).select(lit(bookRows).as("codebook_rows"),
-        lit(centRows).as("cents_rows"),
-        lit(codeRows).as("code_rows"))
-      .write.mode("overwrite").parquet(staging.resolve("meta").toString)
-
-  /** The latest committed serving index: (codes, centroids, codebook).
-    * Explicit schemas — an empty corpus installs an empty (file-less)
-    * artifact, which schema inference cannot read back. */
+  /** The latest committed serving index: (codes, centroids, codebook). */
   def readPqIndex(s: SparkSession, root: String)
       : (DataFrame, DataFrame, DataFrame) =
-    readPqIndexAt(s, root, latestPqVersion(root))
-
-  /** The pinned version every multi-artifact read resolves ONCE: two
-    * `latestVersion` calls around a concurrent install would compare
-    * v=N artifacts against v=N+1's — a bogus verdict. */
-  private def latestPqVersion(root: String): Long =
-    latestVersion(root).getOrElse(
-      throw new IllegalStateException(s"no committed pq index under $root"))
+    readPqIndexAt(s, root, latestIndex(root))
 
   /** A SPECIFIC committed version's serving index — every consumer that
     * reads more than one artifact of the pillar goes through this so all
     * its reads resolve to the same v=N manifest. */
   def readPqIndexAt(s: SparkSession, root: String, v: Long)
       : (DataFrame, DataFrame, DataFrame) =
-    (readArtifact(s, root, v, "codes", PqCodesSchema),
-      readArtifact(s, root, v, "centroids", PqCentsSchema),
-      readArtifact(s, root, v, "codebook", PqBookSchema))
-
-  /** The installed codebook's row count from the version's `meta` record
-    * — the serve path's broadcast-gate input, knowable at install time
-    * and persisted there (VERDICT r13: a per-search count() of the
-    * quantizer frame was the one job the serve path didn't need).
-    * Pre-meta version directories fall back to the one count of the
-    * pillar-sized frame — the sanctioned control-plane read. */
-  private def pqMetaCodebookRows(s: SparkSession, root: String, v: Long,
-                                 book: DataFrame): Long = {
-    val meta = Paths.get(s"$root/v=$v/meta")
-    if (Files.exists(meta)) scalarsAt(s, root, v, "meta", PqMetaSchema).head
-    else book.count()
-  }
-
-  /** The full (codebook_rows, cents_rows, code_rows) sizing record —
-    * pre-meta version directories pay the one-time migration counts of
-    * the pillar frames. */
-  private def pqMetaAt(s: SparkSession, root: String, v: Long,
-                       book: DataFrame, cents: DataFrame): Seq[Long] = {
-    val meta = Paths.get(s"$root/v=$v/meta")
-    if (Files.exists(meta)) scalarsAt(s, root, v, "meta", PqMetaSchema)
-    else Seq(book.count(), cents.count(),
-      readArtifact(s, root, v, "codes", PqCodesSchema).count())
-  }
+    (readArtifact(s, root, v, PqCodes), readArtifact(s, root, v, PqCents),
+      readArtifact(s, root, v, PqBook))
 
   /** q249's search served FROM the installed index: stored codes, stored
     * quantizers, zero per-query re-coding — the production read path.
@@ -442,7 +385,7 @@ object IndexLifecycle {
   def searchPqIndex(s: SparkSession, root: String, dir: String,
                     probes: Int = SimilarityQueries.IvfProbes,
                     panelIdCap: Option[Long] = None): DataFrame =
-    searchPqIndexAtVersion(s, root, latestPqVersion(root), dir, probes,
+    searchPqIndexAtVersion(s, root, latestIndex(root), dir, probes,
       panelIdCap)
 
   private def searchPqIndexAtVersion(s: SparkSession, root: String, v: Long,
@@ -456,32 +399,25 @@ object IndexLifecycle {
       graft.Tables.parquetRowCount(s, dir, "embeddings") / 50 + 1)
     SimilarityQueries.ivfPqServe(s, dir, codes, cents, book, probes,
       estBytes =
-        nQueries * probes * 8L * pqMetaCodebookRows(s, root, v, book),
+        nQueries * probes * 8L * scalarsAt(s, root, v, "meta", PqMetaCols).head,
       panelIdCap)
   }
 
-  /** Per-cell drift of the CURRENT corpus at `dir` vs the served index's
-    * install-time cell masses: (cent_id, baseline_ppm, current_ppm,
-    * shift_ppm, rebalance) — the q241 dial read against the stored
-    * artifact. A corpus that grew or shifted since install codes new
-    * arrivals into cells the served index sized differently; the flag is
-    * the rebuild trigger, exactly the centroid pillar's contract. The
-    * version is resolved ONCE — centroids and baseline always come from
-    * the same v=N directory, even with a concurrent install committing
-    * v=N+1 mid-audit. */
+  /** The centroid pillar's drift audit ([[quantizerDriftAudit]]) run over
+    * the served index's stored centroids and install-time cell masses,
+    * against the CURRENT corpus at `dir`. A corpus that grew or shifted
+    * since install codes new arrivals into cells the served index sized
+    * differently; the flag is the rebuild trigger. The version is
+    * resolved ONCE — centroids and baseline always come from the same
+    * v=N directory, even with a concurrent install committing v=N+1
+    * mid-audit. */
   def pqIndexDriftAudit(s: SparkSession, root: String,
                         dir: String): DataFrame = {
-    val v = latestPqVersion(root)
+    val v = latestIndex(root)
     val (_, cents, _) = readPqIndexAt(s, root, v)
-    val vectors = SimilarityQueries.normed(s, dir).select(col("vec_id"), col("v"))
-    val current = cellPpm(assign(vectors, cents), cents)
-      .select(col("cent_id"), col("ppm").as("current_ppm"))
-    s.read.parquet(s"$root/v=$v/baseline")
-      .select(col("cent_id"), col("ppm").as("baseline_ppm"))
-      .join(current, "cent_id")
-      .withColumn("shift_ppm", abs(col("current_ppm") - col("baseline_ppm")))
-      .withColumn("rebalance", col("shift_ppm") > RebalancePpm)
-      .orderBy("cent_id")
+    drift(Centroids, cents,
+      s.read.parquet(s"$root/v=$v/${Centroids.baseline}"),
+      SimilarityQueries.normed(s, dir).select(col("vec_id"), col("v")))
   }
 
   /** The closed loop for the served index: audit against the current
@@ -496,20 +432,22 @@ object IndexLifecycle {
     * drift — the one-byte-code / broadcast-survives-by-construction
     * properties the fixed forms exist for would be lost. Callers pass
     * the trainers the pillar was installed with; the defaults are the
-    * share-form q86/q236 trainers (the live q249 contract). */
+    * descriptors' share-form q86/q236 trainers (the live q249 contract). */
   def rebuildPqIndexIfDrifted(s: SparkSession, root: String, dir: String,
                               k: Int,
                               trainCents: Option[String => DataFrame] = None,
                               trainBook: Option[String => DataFrame] = None)
       : Option[Long] = {
     val flagged = pqIndexDriftAudit(s, root, dir)
-      .filter(col("rebalance")).limit(1).count() > 0
+      .filter(col(Centroids.flagCol)).limit(1).count() > 0
     if (!flagged) None
     else {
       def vectors = SimilarityQueries.normed(s, dir)
         .select(col("vec_id"), col("v"))
-      val cents = trainCents.map(_(dir)).getOrElse(train(s, vectors, k))
-      val book = trainBook.map(_(dir)).getOrElse(trainCodebook(vectors))
+      val cents = trainCents.map(_(dir))
+        .getOrElse(Centroids.train(s, vectors, k))
+      val book = trainBook.map(_(dir))
+        .getOrElse(Codebook.train(s, vectors, ()))
       val next = latestVersion(root).getOrElse(0L) + 1
       installPqIndex(s, root, next, cents, book, dir)
       Some(next)
@@ -527,16 +465,16 @@ object IndexLifecycle {
     * copy of the index (the r14 advisory: at 100 TB a nightly 64-doc
     * append cannot copy the index; r14's measured file copy is now zero
     * bytes). The baseline rolls forward incrementally — prior per-cell
-    * masses + the delta's cell counts, cells+delta-sized work — and
-    * meta's code_rows adds the delta count, so neither re-reads the
-    * carried codes. Returns the new version, or None ONLY when no new
-    * vec_ids exist (the replay no-op); losing the v=N+1 commit race
-    * re-resolves and re-drives instead of reporting a bogus no-op.
-    * Quantizer drift still takes [[rebuildPqIndexIfDrifted]] — append
-    * extends cells, it never moves them. */
+    * masses + the delta's cell counts, through [[cellPpm]]'s ppm step,
+    * cells+delta-sized work — and meta's code_rows adds the delta count,
+    * so neither re-reads the carried codes. Returns the new version, or
+    * None ONLY when no new vec_ids exist (the replay no-op); losing the
+    * v=N+1 commit race re-resolves and re-drives instead of reporting a
+    * bogus no-op. Quantizer drift still takes [[rebuildPqIndexIfDrifted]]
+    * — append extends cells, it never moves them. */
   def appendPqIndex(s: SparkSession, root: String,
-                    dir: String): Option[Long] = retryVersionRace() { () =>
-    val v = latestPqVersion(root)
+                    dir: String): Option[Long] = retryVersionRace { () =>
+    val v = latestIndex(root)
     val (codes, cents, book) = readPqIndexAt(s, root, v)
     val fresh = SimilarityQueries.normed(s, dir)
       .select(col("vec_id"), col("v"))
@@ -545,32 +483,25 @@ object IndexLifecycle {
     else {
       // the delta codes against the INSTALLED quantizer segments (the
       // install rule — immutable segments ARE the installed artifact)
-      val deltaSeg = writeSegment(root, "codes")(p =>
+      val deltaSeg = writeArt(root, PqCodes,
         SimilarityQueries.pqIndexRowsOf(fresh, cents, book)
-          .select("vec_id", "cd", "cent_id")
-          .write.mode("overwrite").partitionBy("cent_id")
-          .parquet(p.toString))
-      val delta = s.read.schema(PqCodesSchema).parquet(s"$root/$deltaSeg")
-      val done = Commit.publish(Paths.get(root, s"v=${v + 1}")) { staging =>
-        val all = Window.partitionBy(lit(1))
-        s.read.parquet(s"$root/v=$v/baseline")
+          .select("vec_id", "cd", "cent_id"))
+      val delta = segFrame(s, root, PqCodes, deltaSeg)
+      publishNext(root, v) { staging =>
+        ppmOf(s.read.parquet(s"$root/v=$v/${Centroids.baseline}")
           .select(col("cent_id"), col("n"))
           .join(delta.groupBy("cent_id").agg(count(lit(1)).as("dn")),
             Seq("cent_id"), "left")
           .select(col("cent_id"),
-            (col("n") + coalesce(col("dn"), lit(0L))).as("n"))
-          .withColumn("t", sum(col("n")).over(all))
-          .select(col("cent_id"), col("n"),
-            expr("(1000000 * n) div nullif(t, 0)").as("ppm"))
+            (col("n") + coalesce(col("dn"), lit(0L))).as("n")))
           .write.mode("overwrite")
-          .parquet(staging.resolve("baseline").toString)
-        val m = pqMetaAt(s, root, v, book, cents)
-        writePqMeta(s, staging, m(0), m(1), m(2) + delta.count())
+          .parquet(staging.resolve(Centroids.baseline).toString)
+        val m = scalarsAt(s, root, v, "meta", PqMetaCols)
+        writeScalars(s, staging, "meta", PqMetaCols,
+          Seq(m(0), m(1), m(2) + delta.count()))
         writeManifest(staging,
-          carriedRefs(root, v, Seq("centroids", "codebook", "codes")) :+
-            ("codes" -> deltaSeg))
+          carriedRefs(root, v, PqArts.map(_.name)) :+ deltaSeg)
       }
-      if (done) Right(Some(v + 1)) else Left(())
     }
   }
 
@@ -597,8 +528,8 @@ object IndexLifecycle {
   // ---------- manifest-referenced segment store ----------
   //
   // The version-commit discipline for CORPUS-SIZED artifacts (VERDICT r14
-  // item 1): a version directory no longer materializes its big artifacts
-  // — it holds a `manifest.tsv` listing the immutable SEGMENT directories
+  // item 1): a version directory never materializes its big artifacts —
+  // it holds a `manifest.tsv` listing the immutable SEGMENT directories
   // (under `root/segments/`) that compose each artifact, plus its own
   // KB-scale scalars. Writers append a delta segment and commit a new
   // manifest = prior references + delta reference, so
@@ -610,26 +541,28 @@ object IndexLifecycle {
   //   - disk holds ONE copy of the index regardless of how many versions
   //     reference it, and [[pruneVersions]] reclaims segments no kept
   //     manifest references.
-  // Readers resolve an artifact to its segment paths and union the
+  // Every commit names every artifact of its layout, base and derived, so
+  // readers resolve an artifact to its segment paths and union the
   // per-segment scans (one scan node per segment — partition pruning on
   // band/tbl/bkt/cent_id pushes into EACH scan; [[compactPillar]] bounds
-  // the fan-in after many appends, the LSM discipline). A version with no
-  // manifest resolves to the legacy materialized layout `v=N/<artifact>`,
-  // so pre-manifest stores stay readable and prunable.
+  // the fan-in after many appends, the LSM discipline).
 
   private val ManifestFile = "manifest.tsv"
 
-  /** Write one immutable segment of `artifact` under `root/segments/` —
-    * invisible to readers until a committed manifest references it (a
-    * failed or race-losing commit leaves an orphan for
-    * [[gcOrphanSegments]]). Returns the root-relative reference. */
-  private def writeSegment(root: String, artifact: String)
-                          (write: Path => Unit): String = {
+  /** Write `df` as one immutable segment of artifact `a` under
+    * `root/segments/` — invisible to readers until a committed manifest
+    * references it (a failed or race-losing commit leaves an orphan for
+    * [[gcOrphanSegments]]). Returns its manifest entry: the artifact
+    * name and the root-relative reference. */
+  private def writeArt(root: String, a: Art,
+                       df: DataFrame): (String, String) = {
     val segs = Paths.get(root).resolve("segments")
     Files.createDirectories(segs)
-    val seg = Files.createTempDirectory(segs, s"$artifact-")
-    write(seg)
-    s"segments/${seg.getFileName}"
+    val seg = Files.createTempDirectory(segs, s"${a.name}-")
+    val w = df.write.mode("overwrite")
+    (if (a.parts.nonEmpty) w.partitionBy(a.parts: _*) else w)
+      .parquet(seg.toString)
+    a.name -> s"segments/${seg.getFileName}"
   }
 
   private def writeManifest(staging: Path,
@@ -639,42 +572,31 @@ object IndexLifecycle {
     ()
   }
 
-  /** The committed manifest of v=N — None for a legacy materialized
-    * version. Driver-side NIO on a KB file, never a Spark job (the
-    * catalog sweep's serve-path rule). */
-  private def manifestEntries(root: String,
-                              v: Long): Option[Seq[(String, String)]] = {
+  /** The committed manifest of v=N as (artifact, segment) entries — none
+    * for the stores that keep no manifest (quantizer, dial and release
+    * roots). Driver-side NIO on a KB file, never a Spark job (the catalog
+    * sweep's serve-path rule). */
+  private def manifestEntries(root: String, v: Long): Seq[(String, String)] = {
     val mf = Paths.get(s"$root/v=$v/$ManifestFile")
-    if (!Files.exists(mf)) None
-    else Some(Files.readAllLines(mf).asScala.toSeq.map { l =>
+    if (!Files.exists(mf)) Nil
+    else Files.readAllLines(mf).asScala.toSeq.map { l =>
       val t = l.split("\t", 2); (t(0), t(1))
-    })
+    }
   }
 
-  /** Segment references composing `artifact` at v=N, root-relative;
-    * the artifact's in-version directory when no manifest exists. */
+  /** Segment references composing `artifact` at v=N, root-relative. */
   private def artifactRefs(root: String, v: Long,
                            artifact: String): Seq[String] =
-    manifestEntries(root, v) match {
-      case Some(es) => es.collect { case (a, p) if a == artifact => p }
-      case None => Seq(s"v=$v/$artifact")
-    }
-
-  /** Whether v=N's manifest carries `artifact` — the derived probe-ready
-    * layouts (balls/buckets/doccnt) are optional: a version committed by
-    * an older writer lacks them and the serve falls back to deriving the
-    * same frame from the base artifact. Driver-side NIO, never a job. */
-  private def hasArtifact(root: String, v: Long, artifact: String): Boolean =
-    manifestEntries(root, v).exists(_.exists(_._1 == artifact))
+    manifestEntries(root, v).collect { case (a, p) if a == artifact => p }
 
   /** One artifact of v=N as a DataFrame: per-segment scans unioned, so a
     * partition filter (band/tbl/bkt/cent_id) prunes inside EVERY
     * segment. Explicit schema — an empty pillar has file-less segments
     * that inference cannot read. */
   private def readArtifact(s: SparkSession, root: String, v: Long,
-                           artifact: String, schema: String): DataFrame =
-    artifactRefs(root, v, artifact)
-      .map(r => s.read.schema(schema).parquet(s"$root/$r"))
+                           a: Art): DataFrame =
+    artifactRefs(root, v, a.name)
+      .map(r => s.read.schema(a.schema).parquet(s"$root/$r"))
       .reduce(_ unionByName _)
 
   /** Retention: delete all version directories older than the newest
@@ -683,31 +605,21 @@ object IndexLifecycle {
     * segment those dropped manifests referenced that no KEPT manifest
     * still references — provably dead bytes only (an unreferenced
     * segment still being staged by an in-flight commit is NOT touched
-    * here; that is [[gcOrphanSegments]]'s age-gated job). Legacy
-    * materialized versions referenced by a kept manifest are kept too.
-    * Returns (version dirs deleted, segment dirs deleted). Readers
-    * pinned to a dropped, unpinned version lose it — retention is an
-    * explicit maintenance verb, run when no reader holds versions that
-    * old. */
+    * here; that is [[gcOrphanSegments]]'s age-gated job). Returns
+    * (version dirs deleted, segment dirs deleted). Readers pinned to a
+    * dropped, unpinned version lose it — retention is an explicit
+    * maintenance verb, run when no reader holds versions that old. */
   def pruneVersions(root: String, keep: Int = 2,
                     pinned: Set[Long] = Set.empty): (Int, Int) = {
     val vs = Commit.numbered(Paths.get(root), "v=")
     val keptVs = (vs.takeRight(keep.max(1)) ++ vs.filter(pinned)).distinct
     val dropVs = vs.filterNot(keptVs.contains)
     def refs(v: Seq[Long]): Set[String] =
-      v.flatMap(x => manifestEntries(root, x).getOrElse(Nil).map(_._2)).toSet
-    val keptRefs = refs(keptVs)
-    // a kept manifest may reference a legacy version's materialized
-    // artifact ("v=3/sigs") — that version directory must survive
-    val protectedVs = keptRefs.collect {
-      case r if r.startsWith("v=") =>
-        r.takeWhile(_ != '/').stripPrefix("v=").toLong
-    }
-    val deadVs = dropVs.filterNot(protectedVs.contains)
-    val deadSegs = (refs(dropVs) -- keptRefs).filter(_.startsWith("segments/"))
-    deadVs.foreach(v => Commit.delete(Paths.get(s"$root/v=$v")))
+      v.flatMap(x => manifestEntries(root, x).map(_._2)).toSet
+    val deadSegs = refs(dropVs) -- refs(keptVs)
+    dropVs.foreach(v => Commit.delete(Paths.get(s"$root/v=$v")))
     deadSegs.foreach(r => Commit.delete(Paths.get(s"$root/$r")))
-    (deadVs.size, deadSegs.size)
+    (dropVs.size, deadSegs.size)
   }
 
   /** Reclaim segments referenced by NO remaining manifest — the debris
@@ -719,9 +631,7 @@ object IndexLifecycle {
     val segDir = Paths.get(root).resolve("segments")
     if (!Files.exists(segDir)) return 0
     val live = Commit.numbered(Paths.get(root), "v=")
-      .flatMap(v => manifestEntries(root, v).getOrElse(Nil).map(_._2))
-      .collect { case r if r.startsWith("segments/") =>
-        r.stripPrefix("segments/") }
+      .flatMap(v => manifestEntries(root, v).map(_._2.stripPrefix("segments/")))
       .toSet
     val cutoff = System.currentTimeMillis() - minAgeMs
     val st = Files.list(segDir)
@@ -743,22 +653,12 @@ object IndexLifecycle {
     * new state instead of masquerading as a no-op (the r14 advisory: a
     * nightly append must not report "no change" while a batch with
     * genuinely new arrivals was dropped — on re-drive, rows the racer
-    * already admitted fall out of the delta and the rest still commit). */
-  private def retryVersionRace[A](attempts: Int = 4)
-                                 (step: () => Either[Unit, A]): A = {
-    var left = attempts
-    while (left > 1) {
-      step() match {
-        case Right(a) => return a
-        case Left(_) => left -= 1
-      }
-    }
-    step() match {
-      case Right(a) => a
-      case Left(_) => throw new IllegalStateException(
-        s"version-commit race unresolved after $attempts attempts")
-    }
-  }
+    * already admitted fall out of the delta and the rest still commit).
+    * Four attempts at most. */
+  private def retryVersionRace[A](step: () => Either[Unit, A]): A =
+    Iterator.continually(step()).take(4).collectFirst { case Right(a) => a }
+      .getOrElse(throw new IllegalStateException(
+        "version-commit race unresolved after 4 attempts"))
 
   /** The full maintenance decision a nightly pass runs: quantizer drift
     * → complete rebuild (dial-preserving via the trainer seams); no
@@ -837,7 +737,7 @@ object IndexLifecycle {
 
   /** The serving value of a SPECIFIC pillar version. */
   def readDialAt(s: SparkSession, root: String, d: Dial[_], v: Long): Int =
-    scalarsAt(s, root, v, d.cfg, s"${d.valueCol} BIGINT").head.toInt
+    scalarsAt(s, root, v, d.cfg, Seq(d.valueCol)).head.toInt
 
   /** The latest committed serving value. */
   def readDial(s: SparkSession, root: String, d: Dial[_]): Int =
@@ -855,7 +755,7 @@ object IndexLifecycle {
 
   /** Install `value` as `version`, recording the dial over `input` as
     * the install-time baseline. Same atomicity / idempotence contract as
-    * [[install]]. */
+    * [[installQuantizer]]. */
   def installDial[A](s: SparkSession, root: String, version: Long, d: Dial[A],
                      value: Int, input: A,
                      interpose: String => Unit = _ => ()): Boolean =
@@ -965,16 +865,15 @@ object IndexLifecycle {
   /** What a postings pillar keeps on disk: base artifacts keyed by `id`
     * (the first is the signature grain, every append writes a delta
     * segment of each), derived probe-ready serve layouts (rebuilt whole
-    * at every commit that changes the base, optional in versions older
-    * writers committed), and the one-row `cfg` artifact whose columns
-    * are `cfgCols` — the last one is the value the pillar's dial
-    * chooses. */
+    * at every commit that changes the base, carried by every commit that
+    * does not), and the one-row `cfg` artifact whose columns are
+    * `cfgCols` — the last one is the value the pillar's dial chooses. */
   final case class Layout(id: String, base: Seq[Art], derived: Seq[Art],
                           cfg: String, cfgCols: Seq[String]) {
+    /** Every artifact a committed version's manifest names. */
+    def arts: Seq[Art] = base ++ derived
     private[IndexLifecycle] def art(name: String): Art =
-      (base ++ derived).find(_.name == name).get
-    private[IndexLifecycle] def cfgSchema: String =
-      cfgCols.map(c => s"$c BIGINT").mkString(", ")
+      arts.find(_.name == name).get
   }
 
   /** One committed version of a postings pillar, resolved ONCE: every
@@ -987,15 +886,11 @@ object IndexLifecycle {
 
     /** One artifact: its per-segment scans unioned. */
     def apply(artifact: String): DataFrame = frames.getOrElseUpdate(artifact,
-      readArtifact(s, root, version, artifact, layout.art(artifact).schema))
-
-    /** Whether this version carries `artifact` (derived layouts are
-      * optional). */
-    def has(artifact: String): Boolean = hasArtifact(root, version, artifact)
+      readArtifact(s, root, version, layout.art(artifact)))
 
     /** The cfg scalars, in [[Layout.cfgCols]] order. */
     lazy val cfg: Seq[Long] =
-      scalarsAt(s, root, version, layout.cfg, layout.cfgSchema)
+      scalarsAt(s, root, version, layout.cfg, layout.cfgCols)
   }
 
   /** A postings pillar: its [[Layout]] plus the functions the generic
@@ -1084,9 +979,7 @@ object IndexLifecycle {
   /** q67's index over the corpus at `dir`: the exact cosine re-check is
     * an id-bounded lookup into that corpus (q281's re-rank discipline),
     * and its table count (q268's dial) SHAPES the codes, so a
-    * recalibration honestly re-codes the corpus. Versions committed by
-    * older writers (no balls) serve by deriving the same frame from
-    * codes. */
+    * recalibration honestly re-codes the corpus. */
   def LshPostings(dir: String): Postings[Unit] = Postings(
     LshLayout,
     rows = identity,
@@ -1096,13 +989,8 @@ object IndexLifecycle {
       .select(col("vec_id"), col("code"), col("tbl")),
     keys = None,
     derive = (base, cfg) => Seq(lshBallsOf(base("codes"), cfg(0).toInt)),
-    serve = { ix =>
-      val balls =
-        if (ix.has("balls")) ix("balls")
-        else lshBallsOf(ix("codes"), ix.cfg(0).toInt)
-      lshConfirm(pairsOfBalls(balls, "vec_a", "vec_b"),
-        DedupQueries.normVecs(ix.s, dir))
-    },
+    serve = ix => lshConfirm(pairsOfBalls(ix("balls"), "vec_a", "vec_b"),
+      DedupQueries.normVecs(ix.s, dir)),
     // codes computed batch-side with the INSTALLED planes/width; a truly
     // new vector's floats exist only in the batch until it is appended,
     // so the confirm side unions both (dedup by id covers re-offered
@@ -1113,7 +1001,7 @@ object IndexLifecycle {
       // side read one evaluation. Safe to stage here (unlike the banded
       // pillars, which the streaming ingest calls per micro-batch and
       // where an unreleasable checkpoint per epoch would accumulate):
-      // LSH admission is batch-only — q291 and IndexMaintBench.
+      // LSH admission is batch-only (q291).
       val fresh = graft.Staging.stage(vecs)
       def banded(codes: DataFrame) = lshProbed(codes, bits)
         .withColumnRenamed("tbl", "band").withColumnRenamed("code", "key")
@@ -1179,11 +1067,12 @@ object IndexLifecycle {
     .empty[(String, Long, String, Long), Seq[Long]]
 
   private def scalarsAt(s: SparkSession, root: String, v: Long,
-                        artifact: String, schema: String): Seq[Long] = {
+                        artifact: String, cols: Seq[String]): Seq[Long] = {
     val fp = Files.getLastModifiedTime(Paths.get(s"$root/v=$v")).toMillis
     if (scalarCache.size > 4096) scalarCache.clear()
     scalarCache.getOrElseUpdate((root, v, artifact, fp), {
-      val row = s.read.schema(schema).parquet(s"$root/v=$v/$artifact").head
+      val row = s.read.schema(cols.map(c => s"$c BIGINT").mkString(", "))
+        .parquet(s"$root/v=$v/$artifact").head
       (0 until row.length).map(row.getLong)
     })
   }
@@ -1252,7 +1141,7 @@ object IndexLifecycle {
     * commit race re-resolves and re-drives. */
   def appendPostings(s: SparkSession, root: String, p: Postings[_],
                      batch: DataFrame): Option[Long] =
-    retryVersionRace() { () =>
+    retryVersionRace { () =>
       val ix = readPostings(s, root, p.layout)
       val fresh = p.fresh(ix, p.rows(batch))
       if (fresh.limit(1).count() == 0) Right(None)
@@ -1275,7 +1164,7 @@ object IndexLifecycle {
     * deleted; lost races re-drive. */
   def takedownPostings(s: SparkSession, root: String, p: Postings[_],
                        deleted: DataFrame): Option[Long] =
-    retryVersionRace() { () =>
+    retryVersionRace { () =>
       val ix = readPostings(s, root, p.layout)
       val id = p.layout.id
       val del = deleted.select(col(id)).distinct()
@@ -1294,9 +1183,7 @@ object IndexLifecycle {
     * when every artifact already resolves to one segment. */
   def compactPostings(s: SparkSession, root: String,
                       p: Postings[_]): Option[Long] =
-    compactPillar(s, root,
-      v => p.layout.base ++ presentDerived(root, v, p.layout),
-      Seq(p.layout.cfg))
+    compactPillar(s, root, p.layout.arts, Seq(p.layout.cfg))
 
   /** The serve at a release's pinned version of pillar `pin`. */
   def pairsAtRelease(s: SparkSession, relRoot: String, p: Postings[_],
@@ -1335,7 +1222,7 @@ object IndexLifecycle {
     * dial's new choice as v=N+1 ([[reinstall]]). */
   def recalibratePostings[A](s: SparkSession, root: String, p: Postings[A],
                              input: A): Option[Long] =
-    retryVersionRace() { () =>
+    retryVersionRace { () =>
       val ix = readPostings(s, root, p.layout)
       chosenIfSagging(postingsAuditAt(ix, p, input), p.layout.cfgCols.last)
         .map(reinstall(ix, p, _)).getOrElse(Right(None))
@@ -1348,18 +1235,16 @@ object IndexLifecycle {
   private def reinstall(ix: PostingsIndex, p: Postings[_],
                         value: Long): Either[Unit, Option[Long]] = {
     val cfg = ix.cfg.init :+ value
-    val done = p.rebuild match {
-      case Some(input) =>
-        installPostings(ix.s, ix.root, ix.version + 1, p, input(ix), cfg)
+    p.rebuild match {
+      case Some(input) => Either.cond(installPostings(ix.s, ix.root,
+        ix.version + 1, p, input(ix), cfg), Some(ix.version + 1), ())
       case None =>
-        Commit.publish(Paths.get(ix.root, s"v=${ix.version + 1}")) { staging =>
+        publishNext(ix.root, ix.version) { staging =>
           writeScalars(ix.s, staging, p.layout.cfg, p.layout.cfgCols, cfg)
           writeManifest(staging, carriedRefs(ix.root, ix.version,
-            (p.layout.base ++ presentDerived(ix.root, ix.version, p.layout))
-              .map(_.name)))
+            p.layout.arts.map(_.name)))
         }
     }
-    if (done) Right(Some(ix.version + 1)) else Left(())
   }
 
   /** The dial's chosen value when the INSTALLED row sags — None when the
@@ -1393,15 +1278,6 @@ object IndexLifecycle {
 
   // ----- the generic commit pieces -----
 
-  /** Write `df` as one immutable segment of artifact `a`. */
-  private def writeArt(root: String, a: Art,
-                       df: DataFrame): (String, String) =
-    a.name -> writeSegment(root, a.name) { p =>
-      val w = df.write.mode("overwrite")
-      (if (a.parts.nonEmpty) w.partitionBy(a.parts: _*) else w)
-        .parquet(p.toString)
-    }
-
   /** Segments of the base artifacts: the first from `rows`, the banded
     * pillars' postings from the WRITTEN signature segment. */
   private def writeBase(s: SparkSession, root: String, p: Postings[_],
@@ -1420,31 +1296,32 @@ object IndexLifecycle {
 
   /** Frames of freshly written segments, by artifact name. */
   private def segFrames(s: SparkSession, root: String, layout: Layout,
-                        segs: Seq[(String, String)]): String => DataFrame = {
-    val m = segs.toMap
-    name => s.read.schema(layout.art(name).schema).parquet(s"$root/${m(name)}")
-  }
+                        segs: Seq[(String, String)]): String => DataFrame =
+    name => segFrame(s, root, layout.art(name), segs.find(_._1 == name).get)
 
-  /** The derived layouts v=N actually carries. They are optional — a
-    * version an older writer committed lacks them — so a carry includes
-    * one ONLY when present, never as a phantom `v=N/<artifact>`
-    * reference to a directory that does not exist. */
-  private def presentDerived(root: String, v: Long,
-                             layout: Layout): Seq[Art] =
-    layout.derived.filter(a => hasArtifact(root, v, a.name))
+  /** The frame of artifact `a`'s freshly written segment `seg`. */
+  private def segFrame(s: SparkSession, root: String, a: Art,
+                       seg: (String, String)): DataFrame =
+    s.read.schema(a.schema).parquet(s"$root/${seg._2}")
 
   /** Commit v=N+1 with `entries` as its manifest and v=N's cfg carried
     * by KB copy. */
   private def commitNext(ix: PostingsIndex, entries: Seq[(String, String)])
       : Either[Unit, Option[Long]] = {
     val cfg = ix.layout.cfg
-    val done = Commit.publish(Paths.get(ix.root, s"v=${ix.version + 1}")) { staging =>
+    publishNext(ix.root, ix.version) { staging =>
       copyTree(Paths.get(s"${ix.root}/v=${ix.version}/$cfg"),
         staging.resolve(cfg))
       writeManifest(staging, entries)
     }
-    if (done) Right(Some(ix.version + 1)) else Left(())
   }
+
+  /** Publish v=N+1: Right(Some(N+1)) when this writer committed it,
+    * Left(()) when a concurrent writer took the version first. */
+  private def publishNext(root: String, v: Long)(write: Path => Unit)
+      : Either[Unit, Option[Long]] =
+    Either.cond(Commit.publish(Paths.get(root, s"v=${v + 1}"))(write),
+      Some(v + 1), ())
 
   // ----- per-pillar frame math -----
 
@@ -1468,12 +1345,12 @@ object IndexLifecycle {
   }
 
   /** The banded serve's candidate pairs: the stored bucket lists under a
-    * pushed bsz <= cap filter when present and servable at the cap —
-    * no bucket-count window per read — else the legacy window-derive
-    * from the postings. */
+    * pushed bsz <= cap filter — no bucket-count window per read — at any
+    * cap the lists are bounded for; a custom cap past that bound
+    * re-derives the buckets from the postings. */
   private def bandPairs(ix: PostingsIndex): DataFrame = {
     val cap = ix.cfg.head.toInt
-    if (cap <= DedupQueries.CapSweep.max && ix.has("balls"))
+    if (cap <= DedupQueries.CapSweep.max)
       pairsOfBalls(ix("balls").filter(col("bsz") <= cap), "doc_a", "doc_b")
     else pairsOfBuckets(boundedBuckets(ix("postings"), cap), "doc_a", "doc_b")
   }
@@ -1584,13 +1461,13 @@ object IndexLifecycle {
   /** q253's containment pairs served FROM the stored chunk postings: the
     * stored member lists pair directly under a pushed df ≤ cap filter
     * and per-doc sizes come from the stored census — no corpus-wide df
-    * window and no per-doc size window in the serve plan. Legacy
-    * versions (or a custom cap past the stored bound) fall back to
-    * re-pricing df from the chunk rows. */
+    * window and no per-doc size window in the serve plan. A custom cap
+    * past the stored bound falls back to re-pricing df from the chunk
+    * rows. */
   private def cdcServe(ix: PostingsIndex): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val cap = ix.cfg.head.toInt
-    if (cap <= CdcStoredDfBound && ix.has("buckets") && ix.has("doccnt")) {
+    if (cap <= CdcStoredDfBound) {
       val buckets = ix("buckets").filter(col("df") <= cap)
       val sizes = ix("doccnt").filter(col("df") <= cap)
         .groupBy("doc_id").agg(sum(col("cnt")).as("n"))
@@ -1614,8 +1491,8 @@ object IndexLifecycle {
     val cap = ix.cfg.head.toInt
     // batch-sized, staged: the union, the batch-membership flag and the
     // touched-bucket census all read the batch's payload chunk walk once
-    // (batch-only verb — q292 and IndexMaintBench — so the staged block
-    // cannot accumulate per streaming epoch)
+    // (batch-only verb — q292 — so the staged block cannot accumulate
+    // per streaming epoch)
     val fresh = graft.Staging.stage(batchChunks)
     val union = chunks.unionByName(fresh)
       .withColumn("df", count(lit(1)).over(Window.partitionBy("cfp")))
@@ -1684,19 +1561,11 @@ object IndexLifecycle {
     * audit prices exactly the work the serve does. */
   def lshConfirmAudit(s: SparkSession, root: String,
                       bucketBudgetPairs: Long = Long.MaxValue): DataFrame = {
-    val ix = readPostings(s, root, LshLayout)
-    // the audit prices exactly the serve's buckets — which the store now
+    // the audit prices exactly the serve's buckets — which the store
     // keeps probe-ready, so the reading is a scan of bucket-sized rows
-    // (legacy versions derive the same frame from codes)
-    val sized =
-      if (ix.has("balls"))
-        ix("balls").select(col("band").as("tbl"), col("key").as("code"),
-          size(col("ids")).cast("long").as("bsz"))
-      else
-        lshProbed(ix("codes"), ix.cfg(0).toInt)
-          .groupBy("tbl", "code").agg(count(lit(1)).as("bsz"))
-          .filter(col("bsz").between(2, DedupQueries.MaxBucket))
-    sized
+    readPostings(s, root, LshLayout)("balls")
+      .select(col("band").as("tbl"), col("key").as("code"),
+        size(col("ids")).cast("long").as("bsz"))
       .withColumn("cand_pairs",
         (col("bsz") * (col("bsz") - 1)).divide(2).cast("long"))
       .withColumn("over_budget", col("cand_pairs") > bucketBudgetPairs)
@@ -1730,7 +1599,7 @@ object IndexLifecycle {
       : (LshGuardReading, Option[Long]) = {
     val reading = lshConfirmGuard(s, root, budgetPairs)
     if (!reading.overBudget) (reading, None)
-    else (reading, retryVersionRace() { () =>
+    else (reading, retryVersionRace { () =>
       val p = LshPostings(dir)
       val ix = readPostings(s, root, p.layout)
       // no cheaper viable count: keep flagging
@@ -1791,14 +1660,6 @@ object IndexLifecycle {
         .collect { case (r, pv) if r == pillarRoot => pv })
       .toSet
 
-  /** The centroid frame of a SPECIFIC pillar version. */
-  def readCentroidsAt(s: SparkSession, root: String, v: Long): DataFrame =
-    s.read.parquet(s"$root/v=$v/centroids")
-
-  /** The codebook frame of a SPECIFIC pillar version. */
-  def readCodebookAt(s: SparkSession, root: String, v: Long): DataFrame =
-    s.read.parquet(s"$root/v=$v/codebook")
-
   /** q249's two-pillar search with BOTH quantizer frames resolved from
     * ONE release — a concurrent centroid or codebook swap cannot serve
     * this reader a mixed pair; it serves the pinned pair until the next
@@ -1810,10 +1671,8 @@ object IndexLifecycle {
     val pins = readRelease(relRoot)
     val (cRoot, cV) = pins("centroids")
     val (bRoot, bV) = pins("codebook")
-    val book = readCodebookAt(s, bRoot, bV)
-    SimilarityQueries.ivfPqTopKFrom(s, dir,
-      readCentroidsAt(s, cRoot, cV), book, probes,
-      knownCodebookRows = Some(book.count()))
+    searchPqOf(s, dir, readQuantizerAt(s, cRoot, Centroids, cV),
+      readQuantizerAt(s, bRoot, Codebook, bV), probes)
   }
 
   /** q281's stored-index serve at a release's pinned "pq_index" version
@@ -1873,28 +1732,25 @@ object IndexLifecycle {
     * when no deleted id is in the stored codes (replay no-op); a lost
     * commit race re-resolves and re-drives. */
   def takedownPqIndex(s: SparkSession, root: String,
-                      deleted: DataFrame): Option[Long] = retryVersionRace() { () =>
-    val v = latestPqVersion(root)
-    val (codes, cents, book) = readPqIndexAt(s, root, v)
+                      deleted: DataFrame): Option[Long] = retryVersionRace { () =>
+    val v = latestIndex(root)
+    val (codes, cents, _) = readPqIndexAt(s, root, v)
     val del = deleted.select(col("vec_id")).distinct()
     if (codes.join(del, Seq("vec_id"), "left_semi").limit(1).count() == 0)
       Right(None)
     else {
-      val survSeg = writeSegment(root, "codes")(p =>
+      val survSeg = writeArt(root, PqCodes,
         codes.join(del, Seq("vec_id"), "left_anti")
-          .select("vec_id", "cd", "cent_id")
-          .write.mode("overwrite").partitionBy("cent_id")
-          .parquet(p.toString))
-      val surv = s.read.schema(PqCodesSchema).parquet(s"$root/$survSeg")
-      val done = Commit.publish(Paths.get(root, s"v=${v + 1}")) { staging =>
+          .select("vec_id", "cd", "cent_id"))
+      val surv = segFrame(s, root, PqCodes, survSeg)
+      publishNext(root, v) { staging =>
         writePqBaseline(s, staging, surv, cents)
-        val m = pqMetaAt(s, root, v, book, cents)
-        writePqMeta(s, staging, m(0), m(1), surv.count())
+        val m = scalarsAt(s, root, v, "meta", PqMetaCols)
+        writeScalars(s, staging, "meta", PqMetaCols,
+          Seq(m(0), m(1), surv.count()))
         writeManifest(staging,
-          carriedRefs(root, v, Seq("centroids", "codebook")) :+
-            ("codes" -> survSeg))
+          carriedRefs(root, v, Seq(PqCents.name, PqBook.name)) :+ survSeg)
       }
-      if (done) Right(Some(v + 1)) else Left(())
     }
   }
 
@@ -1911,39 +1767,33 @@ object IndexLifecycle {
   // the shuffle to the advisory partition bytes — file count tracks data
   // size, not append count, at any corpus scale.
 
-  private val PqArts = Seq(
-    Art("codes", PqCodesSchema, Seq("cent_id")),
-    Art("centroids", PqCentsSchema, Nil),
-    Art("codebook", PqBookSchema, Nil))
-
   /** Compact the PQ serving index's code-delta segments — quantizer
     * segments (always single) carry by reference; baseline/meta are
     * row-identical under compaction and carry by KB copy. */
   def compactPqIndex(s: SparkSession, root: String): Option[Long] =
-    compactPillar(s, root, _ => PqArts, Seq("baseline", "meta"))
+    compactPillar(s, root, PqArts, Seq(Centroids.baseline, "meta"))
 
-  /** `artsAt(v)`: the artifacts version v holds. */
-  private def compactPillar(s: SparkSession, root: String,
-                            artsAt: Long => Seq[Art],
+  /** Compact the artifacts `arts` of the latest version; the version's
+    * `scalars` carry by KB copy. */
+  private def compactPillar(s: SparkSession, root: String, arts: Seq[Art],
                             scalars: Seq[String]): Option[Long] =
-    retryVersionRace() { () =>
-      val v = latestVersion(root).getOrElse(noIndex(root))
+    retryVersionRace { () =>
+      val v = latestIndex(root)
       val (multi, single) =
-        artsAt(v).partition(a => artifactRefs(root, v, a.name).size > 1)
+        arts.partition(a => artifactRefs(root, v, a.name).size > 1)
       if (multi.isEmpty) Right(None)
       else {
         val segs = multi.map { a =>
-          val df = readArtifact(s, root, v, a.name, a.schema)
+          val df = readArtifact(s, root, v, a)
           writeArt(root, a,
             if (a.parts.nonEmpty) df.repartition(a.parts.map(col): _*) else df)
         }
-        val done = Commit.publish(Paths.get(root, s"v=${v + 1}")) { staging =>
+        publishNext(root, v) { staging =>
           scalars.foreach(a =>
             copyTree(Paths.get(s"$root/v=$v/$a"), staging.resolve(a)))
           writeManifest(staging,
             carriedRefs(root, v, single.map(_.name)) ++ segs)
         }
-        if (done) Right(Some(v + 1)) else Left(())
       }
     }
 

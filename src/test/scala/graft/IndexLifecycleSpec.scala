@@ -8,6 +8,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.operators.IndexLifecycle
+import graft.operators.IndexLifecycle.{Centroids, Codebook}
 
 /** The retrain-and-swap loop (VERDICT r9 item 2): drift flagged → retrain →
   * atomic version install, with the three contracted properties:
@@ -48,55 +49,59 @@ class IndexLifecycleSpec extends SparkSpec {
     val c = corpus
 
     // v1: trained and baselined on the OLD epoch only
-    IndexLifecycle.install(spark, root, 1L,
+    IndexLifecycle.installQuantizer(spark, root, 1L, Centroids,
       IndexLifecycle.train(spark, asVec(oldEpoch(c)), k = 2),
       asVec(oldEpoch(c)))
     assert(IndexLifecycle.latestVersion(root) === Some(1L))
 
     // the audit against the FULL corpus must flag: the new e2 mass crowds
     // into one of the two old cells, shifting its share far past 2%
-    val audit1 = IndexLifecycle.driftAudit(spark, root, asVec(c)).collect()
+    val audit1 = IndexLifecycle.quantizerDriftAudit(spark, root, Centroids,
+      asVec(c)).collect()
     assert(audit1.exists(_.getBoolean(audit1.head.fieldIndex("rebalance"))),
       s"stale index must flag drift:\n${audit1.mkString("\n")}")
 
     // the closed loop retrains (k=3 — room for the new cluster) and swaps
-    val retrained = IndexLifecycle.retrainIfDrifted(spark, root, asVec(c), k = 3)
+    val retrained = IndexLifecycle.retrainQuantizer(spark, root,
+      Centroids, asVec(c), 3)
     assert(retrained === Some(2L))
     assert(IndexLifecycle.latestVersion(root) === Some(2L))
-    assert(IndexLifecycle.readCentroids(spark, root).count() === 3L)
+    assert(IndexLifecycle.readQuantizer(spark, root, Centroids).count() === 3L)
 
     // (b) post-retrain: green by construction — the baseline is the
     // current distribution, so every shift is exactly 0
-    val audit2 = IndexLifecycle.driftAudit(spark, root, asVec(c)).collect()
+    val audit2 = IndexLifecycle.quantizerDriftAudit(spark, root, Centroids,
+      asVec(c)).collect()
     assert(audit2.nonEmpty &&
       audit2.forall(_.getLong(audit2.head.fieldIndex("shift_ppm")) == 0L),
       s"post-retrain audit must read green:\n${audit2.mkString("\n")}")
     assert(!audit2.exists(_.getBoolean(audit2.head.fieldIndex("rebalance"))))
 
     // a second loop pass is a no-op: nothing flagged, no new version
-    assert(IndexLifecycle.retrainIfDrifted(spark, root, asVec(c), k = 3).isEmpty)
+    assert(IndexLifecycle.retrainQuantizer(spark, root,
+      Centroids, asVec(c), 3).isEmpty)
     assert(IndexLifecycle.latestVersion(root) === Some(2L))
   }
 
   test("a reader concurrent with the swap sees exactly one complete version") {
     val root = Files.createTempDirectory("graft_index_swap").toString
     val c = corpus
-    IndexLifecycle.install(spark, root, 1L,
+    IndexLifecycle.installQuantizer(spark, root, 1L, Centroids,
       IndexLifecycle.train(spark, asVec(oldEpoch(c)), k = 2), asVec(oldEpoch(c)))
 
     var sawDuringStaged: Option[(Option[Long], Long)] = None
     var sawAfterInstall: Option[(Option[Long], Long)] = None
-    IndexLifecycle.install(spark, root, 2L,
+    IndexLifecycle.installQuantizer(spark, root, 2L, Centroids,
       IndexLifecycle.train(spark, asVec(c), k = 3), asVec(c),
       interpose = {
         case "staged" =>
           // new artifacts fully written but not yet visible: a reader must
           // still resolve v1, complete
           sawDuringStaged = Some((IndexLifecycle.latestVersion(root),
-            IndexLifecycle.readCentroids(spark, root).count()))
+            IndexLifecycle.readQuantizer(spark, root, Centroids).count()))
         case "installed" =>
           sawAfterInstall = Some((IndexLifecycle.latestVersion(root),
-            IndexLifecycle.readCentroids(spark, root).count()))
+            IndexLifecycle.readQuantizer(spark, root, Centroids).count()))
         case _ => ()
       })
     assert(sawDuringStaged === Some((Some(1L), 2L)),
@@ -105,16 +110,16 @@ class IndexLifecycleSpec extends SparkSpec {
       "post-swap reader must see the NEW version, complete")
 
     // replayed install of a committed version is a strict no-op
-    val replayed = IndexLifecycle.install(spark, root, 2L,
+    val replayed = IndexLifecycle.installQuantizer(spark, root, 2L, Centroids,
       IndexLifecycle.train(spark, asVec(c), k = 2), asVec(c))
     assert(!replayed)
-    assert(IndexLifecycle.readCentroids(spark, root).count() === 3L,
+    assert(IndexLifecycle.readQuantizer(spark, root, Centroids).count() === 3L,
       "replay must not touch the committed artifact")
 
     // a failed install never becomes visible and leaves no staging debris
     // behind for versionsOf to misread
     intercept[RuntimeException] {
-      IndexLifecycle.install(spark, root, 3L,
+      IndexLifecycle.installQuantizer(spark, root, 3L, Centroids,
         IndexLifecycle.train(spark, asVec(c), k = 2), asVec(c),
         interpose = phase =>
           if (phase == "staged") throw new RuntimeException("crash before move"))
@@ -129,7 +134,7 @@ class IndexLifecycleSpec extends SparkSpec {
     val c = corpus
     c.coalesce(1).write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
 
-    IndexLifecycle.install(spark, root, 1L,
+    IndexLifecycle.installQuantizer(spark, root, 1L, Centroids,
       IndexLifecycle.train(spark, asVec(oldEpoch(c)), k = 2), asVec(oldEpoch(c)))
 
     def collectSearch(): Seq[(Long, Long, Long)] =
@@ -145,9 +150,9 @@ class IndexLifecycleSpec extends SparkSpec {
 
     // swap to the retrained version: results remain deterministic and the
     // index serving them is demonstrably the new artifact
-    IndexLifecycle.install(spark, root, 2L,
+    IndexLifecycle.installQuantizer(spark, root, 2L, Centroids,
       IndexLifecycle.train(spark, asVec(c), k = 3), asVec(c))
-    assert(IndexLifecycle.readCentroids(spark, root).count() === 3L)
+    assert(IndexLifecycle.readQuantizer(spark, root, Centroids).count() === 3L)
     val run3 = collectSearch()
     assert(run3 === collectSearch(),
       "new version must serve deterministically too")
@@ -161,55 +166,59 @@ class IndexLifecycleSpec extends SparkSpec {
 
     // v1: trained and baselined on the OLD epoch only (its LCG sample
     // holds only e0/e1-direction subvectors)
-    IndexLifecycle.installCodebook(spark, root, 1L,
+    IndexLifecycle.installQuantizer(spark, root, 1L, Codebook,
       IndexLifecycle.trainCodebook(asVec(oldEpoch(c))), asVec(oldEpoch(c)))
     assert(IndexLifecycle.latestVersion(root) === Some(1L))
 
     // against the FULL corpus the e2 arrivals reconstruct terribly under
     // the old codebook: at least one subspace's mean error jumps far past
     // the 2.5% relative rule
-    val audit1 = IndexLifecycle.codebookDriftAudit(spark, root, asVec(c)).collect()
+    val audit1 = IndexLifecycle.quantizerDriftAudit(spark, root, Codebook,
+      asVec(c)).collect()
     assert(audit1.exists(_.getBoolean(audit1.head.fieldIndex("retrain"))),
       s"stale codebook must flag drift:\n${audit1.mkString("\n")}")
 
     // the closed loop retrains on the current corpus and swaps
-    assert(IndexLifecycle.retrainCodebookIfDrifted(spark, root, asVec(c))
+    assert(IndexLifecycle.retrainQuantizer(spark, root,
+      Codebook, asVec(c), ())
       === Some(2L))
     assert(IndexLifecycle.latestVersion(root) === Some(2L))
 
     // green by construction: the refreshed baseline IS the current error
-    val audit2 = IndexLifecycle.codebookDriftAudit(spark, root, asVec(c)).collect()
+    val audit2 = IndexLifecycle.quantizerDriftAudit(spark, root, Codebook,
+      asVec(c)).collect()
     assert(audit2.nonEmpty &&
       audit2.forall(_.getLong(audit2.head.fieldIndex("shift_u")) == 0L),
       s"post-retrain audit must read green:\n${audit2.mkString("\n")}")
-    assert(IndexLifecycle.retrainCodebookIfDrifted(spark, root, asVec(c)).isEmpty)
+    assert(IndexLifecycle.retrainQuantizer(spark, root,
+      Codebook, asVec(c), ()).isEmpty)
 
     // replayed install of a committed version is a strict no-op
-    assert(!IndexLifecycle.installCodebook(spark, root, 2L,
+    assert(!IndexLifecycle.installQuantizer(spark, root, 2L, Codebook,
       IndexLifecycle.trainCodebook(asVec(oldEpoch(c))), asVec(c)))
   }
 
   test("a codebook reader concurrent with the swap sees exactly one complete version") {
     val root = Files.createTempDirectory("graft_codebook_swap").toString
     val c = corpus
-    IndexLifecycle.installCodebook(spark, root, 1L,
+    IndexLifecycle.installQuantizer(spark, root, 1L, Codebook,
       IndexLifecycle.trainCodebook(asVec(oldEpoch(c))), asVec(oldEpoch(c)))
-    val v1Rows = IndexLifecycle.readCodebook(spark, root).count()
+    val v1Rows = IndexLifecycle.readQuantizer(spark, root, Codebook).count()
 
     var sawDuringStaged: Option[(Option[Long], Long)] = None
     var sawAfterInstall: Option[(Option[Long], Long)] = None
-    IndexLifecycle.installCodebook(spark, root, 2L,
+    IndexLifecycle.installQuantizer(spark, root, 2L, Codebook,
       IndexLifecycle.trainCodebook(asVec(c)), asVec(c),
       interpose = {
         case "staged" =>
           sawDuringStaged = Some((IndexLifecycle.latestVersion(root),
-            IndexLifecycle.readCodebook(spark, root).count()))
+            IndexLifecycle.readQuantizer(spark, root, Codebook).count()))
         case "installed" =>
           sawAfterInstall = Some((IndexLifecycle.latestVersion(root),
-            IndexLifecycle.readCodebook(spark, root).count()))
+            IndexLifecycle.readQuantizer(spark, root, Codebook).count()))
         case _ => ()
       })
-    val v2Rows = IndexLifecycle.readCodebook(spark, root).count()
+    val v2Rows = IndexLifecycle.readQuantizer(spark, root, Codebook).count()
     assert(sawDuringStaged === Some((Some(1L), v1Rows)),
       "mid-swap reader must see the OLD codebook, complete")
     assert(sawAfterInstall === Some((Some(2L), v2Rows)))
@@ -217,7 +226,7 @@ class IndexLifecycleSpec extends SparkSpec {
 
     // a failed install never becomes visible and leaves no staging debris
     intercept[RuntimeException] {
-      IndexLifecycle.installCodebook(spark, root, 3L,
+      IndexLifecycle.installQuantizer(spark, root, 3L, Codebook,
         IndexLifecycle.trainCodebook(asVec(c)), asVec(c),
         interpose = phase =>
           if (phase == "staged") throw new RuntimeException("crash before move"))
@@ -232,9 +241,9 @@ class IndexLifecycleSpec extends SparkSpec {
     val c = corpus
     c.coalesce(1).write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
 
-    IndexLifecycle.install(spark, centsRoot, 1L,
+    IndexLifecycle.installQuantizer(spark, centsRoot, 1L, Centroids,
       IndexLifecycle.train(spark, asVec(oldEpoch(c)), k = 2), asVec(oldEpoch(c)))
-    IndexLifecycle.installCodebook(spark, cbRoot, 1L,
+    IndexLifecycle.installQuantizer(spark, cbRoot, 1L, Codebook,
       IndexLifecycle.trainCodebook(asVec(c)), asVec(c))
 
     // probes=1 so the cell gate actually gates (2-3 cells in store)
@@ -259,7 +268,7 @@ class IndexLifecycleSpec extends SparkSpec {
       if (i == 0) 1.0 else if (i == 10) 0.06 else 0.0)
     val handCents = Seq((100L, e0, 1.0), (101L, e0j, math.sqrt(1.0036)))
       .toDF("cent_id", "cv", "cn")
-    IndexLifecycle.install(spark, centsRoot, 2L, handCents, asVec(c))
+    IndexLifecycle.installQuantizer(spark, centsRoot, 2L, Centroids, handCents, asVec(c))
     val run3 = collectSearch()
     assert(run3 === collectSearch(), "new pillar pair must be deterministic")
     assert(run3 !== run1,
@@ -655,13 +664,13 @@ class IndexLifecycleSpec extends SparkSpec {
       .parquet(s"$dir/embeddings.parquet")
     val old = asVec(oldEpoch(corpus))
     val full = asVec(corpus)
-    assert(IndexLifecycle.install(spark, centsRoot, 1L,
+    assert(IndexLifecycle.installQuantizer(spark, centsRoot, 1L, Centroids,
       IndexLifecycle.train(spark, old, k = 2), old))
-    assert(IndexLifecycle.installCodebook(spark, bookRoot, 1L,
+    assert(IndexLifecycle.installQuantizer(spark, bookRoot, 1L, Codebook,
       IndexLifecycle.trainCodebook(old), old))
     assert(IndexLifecycle.installPqIndex(spark, pqRoot, 1L,
-      IndexLifecycle.readCentroids(spark, centsRoot),
-      IndexLifecycle.readCodebook(spark, bookRoot), dir))
+      IndexLifecycle.readQuantizer(spark, centsRoot, Centroids),
+      IndexLifecycle.readQuantizer(spark, bookRoot, Codebook), dir))
     assert(IndexLifecycle.cutRelease(rel, 1L, Map(
       "centroids" -> centsRoot, "codebook" -> bookRoot,
       "pq_index" -> pqRoot)))
@@ -676,7 +685,7 @@ class IndexLifecycleSpec extends SparkSpec {
 
     // interposed CODEBOOK swap: at both install stages the release must
     // keep serving the pinned v1 pair — never v1 centroids + v2 codebook
-    assert(IndexLifecycle.installCodebook(spark, bookRoot, 2L,
+    assert(IndexLifecycle.installQuantizer(spark, bookRoot, 2L, Codebook,
       IndexLifecycle.trainCodebook(full), full,
       interpose = stage => {
         assert(liveRows() == live1,
@@ -685,7 +694,7 @@ class IndexLifecycleSpec extends SparkSpec {
     assert(liveRows() == live1,
       "release must serve the pinned pair after the codebook swap commits")
     // interposed CENTROID swap too — still the coherent v1 pair
-    assert(IndexLifecycle.install(spark, centsRoot, 2L,
+    assert(IndexLifecycle.installQuantizer(spark, centsRoot, 2L, Centroids,
       IndexLifecycle.train(spark, full, k = 3), full))
     assert(liveRows() == live1 && servedRows() == served1,
       "release must pin every pillar until the next release is cut")
@@ -693,15 +702,15 @@ class IndexLifecycleSpec extends SparkSpec {
     // the next release serves the new coherent pair — and equals a
     // direct read of the new versions composed together
     assert(IndexLifecycle.installPqIndex(spark, pqRoot, 2L,
-      IndexLifecycle.readCentroids(spark, centsRoot),
-      IndexLifecycle.readCodebook(spark, bookRoot), dir))
+      IndexLifecycle.readQuantizer(spark, centsRoot, Centroids),
+      IndexLifecycle.readQuantizer(spark, bookRoot, Codebook), dir))
     assert(IndexLifecycle.cutRelease(rel, 2L, Map(
       "centroids" -> centsRoot, "codebook" -> bookRoot,
       "pq_index" -> pqRoot)))
-    val book2 = IndexLifecycle.readCodebook(spark, bookRoot)
+    val book2 = IndexLifecycle.readQuantizer(spark, bookRoot, Codebook)
     assert(liveRows() ==
       SimilarityQueries.ivfPqTopKFrom(spark, dir,
-        IndexLifecycle.readCentroids(spark, centsRoot), book2,
+        IndexLifecycle.readQuantizer(spark, centsRoot, Centroids), book2,
         knownCodebookRows = Some(book2.count())).collect().toSeq)
     val served2 = servedRows()
     assert(served2 ==
@@ -999,7 +1008,7 @@ class IndexLifecycleSpec extends SparkSpec {
     c.coalesce(1).write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
 
     // v1: trained and baselined on the OLD epoch only — two cells
-    IndexLifecycle.install(spark, root, 1L,
+    IndexLifecycle.installQuantizer(spark, root, 1L, Centroids,
       IndexLifecycle.train(spark, asVec(oldEpoch(c)), k = 2), asVec(oldEpoch(c)))
 
     def sd() = IndexLifecycle.semDedupAt(spark, root, dir).collect()
@@ -1020,7 +1029,7 @@ class IndexLifecycleSpec extends SparkSpec {
       "v1 membership must live in v1's two cells")
 
     // swap: retrain on the full corpus with room for the new e2 cluster
-    IndexLifecycle.install(spark, root, 2L,
+    IndexLifecycle.installQuantizer(spark, root, 2L, Centroids,
       IndexLifecycle.train(spark, asVec(c), k = 3), asVec(c))
     val (sd2, pr2, fs2, live2) = (sd(), pr(), fs(), liveSd())
     assert(sd2.map(_._2).toSet.size === 3 && pr2.map(_._2).toSet.size === 3,
@@ -1791,5 +1800,129 @@ class IndexLifecycleSpec extends SparkSpec {
         IndexLifecycle.SimhashPostings),
       IndexLifecycle.pairsFromStore(spark, mRoot,
         IndexLifecycle.SimhashPostings)).collect().toSeq)
+  }
+
+  // ---------- manifest completeness: what every reader relies on ----------
+
+  /** The latest version of `root`: its manifest names every artifact in
+    * `arts`, each of its references exists, and each in-version scalar in
+    * `scalars` exists. */
+  private def assertComplete(root: String, arts: Seq[String],
+                             scalars: Seq[String], verb: String): Unit = {
+    val v = IndexLifecycle.latestVersion(root).get
+    val dir = java.nio.file.Paths.get(root, s"v=$v")
+    val entries = Files.readAllLines(dir.resolve("manifest.tsv")).asScala
+      .map(_.split("\t", 2)).map(t => (t(0), t(1))).toSeq
+    val named = entries.map(_._1).toSet
+    assert(arts.toSet.subsetOf(named),
+      s"$verb: v=$v names $named, missing ${arts.toSet -- named}")
+    entries.foreach { case (a, r) =>
+      assert(Files.exists(java.nio.file.Paths.get(root, r)),
+        s"$verb: v=$v references a missing $a segment $r")
+    }
+    scalars.foreach(a => assert(Files.exists(dir.resolve(a)),
+      s"$verb: v=$v holds no $a"))
+  }
+
+  test("every writer verb commits a manifest naming every artifact of its layout, base and derived") {
+    import spark.implicits._
+    import graft.operators.{DedupQueries, SimilarityQueries}
+    val n = Tables.parquetRowCount(spark, sf, "embeddings")
+    val families: Seq[(String, IndexLifecycle.Postings[_], DataFrame, String,
+                       Seq[Long])] = Seq(
+      ("simhash", IndexLifecycle.SimhashPostings,
+        DedupQueries.textSimhashSigs(spark, sf), "doc_id",
+        Seq(DedupQueries.MaxBucket.toLong)),
+      ("minhash", IndexLifecycle.MinhashPostings,
+        DedupQueries.minhashSignatures(spark, sf), "doc_id",
+        Seq(DedupQueries.MaxBucket.toLong)),
+      ("lsh", IndexLifecycle.LshPostings(sf), DedupQueries.normVecs(spark, sf),
+        "vec_id", Seq(SimilarityQueries.codeBits(n).toLong,
+          DedupQueries.LshTables.toLong)),
+      ("cdc", IndexLifecycle.CdcPostings, mediaOf(sf), "doc_id",
+        Seq(DedupQueries.MaxBucket.toLong)))
+
+    // install, append, compact and takedown, per postings family
+    families.foreach { case (name, p, input, id, cfg) =>
+      val root = Files.createTempDirectory(s"graft_complete_$name").toString
+      val arts = p.layout.arts.map(_.name)
+      def check(verb: String) =
+        assertComplete(root, arts, Seq(p.layout.cfg), s"$name $verb")
+      assert(IndexLifecycle.installPostings(spark, root, 1L, p,
+        input.filter(col(id) % 7 =!= 0), cfg))
+      check("install")
+      assert(IndexLifecycle.appendPostings(spark, root, p,
+        input.filter(col(id) % 7 === 0)) === Some(2L))
+      check("append")
+      assert(IndexLifecycle.compactPostings(spark, root, p) === Some(3L))
+      check("compact")
+      assert(IndexLifecycle.takedownPostings(spark, root, p,
+        input.filter(col(id) % 5 === 2).select(id)) === Some(4L))
+      check("takedown")
+    }
+
+    // the cap-recalibration carry: a sagging cap commits a new capcfg
+    // over the carried segments
+    val capRoot = Files.createTempDirectory("graft_complete_cap").toString
+    val sh = IndexLifecycle.SimhashPostings
+    assert(IndexLifecycle.installPostings(spark, capRoot, 1L, sh,
+      sigsOf(healthyRows), Seq(16)))
+    assert(IndexLifecycle.appendPostings(spark, capRoot, sh,
+      sigsOf(driftedRows)) === Some(2L))
+    assert(IndexLifecycle.recalibratePostings(spark, capRoot, sh, ())
+      === Some(3L))
+    assertComplete(capRoot, sh.layout.arts.map(_.name), Seq(sh.layout.cfg),
+      "cap recalibration")
+
+    // the LSH table re-code: one planted bucket over budget, absorbed by
+    // re-coding at the dial's cheaper table count
+    val planted = (0 until 40).map { i =>
+      val v = Array.fill(64)(0.001f); v(0) = 1.0f; v(5) = 0.002f + 1e-5f * i
+      (i.toLong, v)
+    } ++ (0 until 24).map { i =>
+      val v = Array.fill(64)(0.0f); v(i % 16) = if (i % 2 == 0) 1.0f else -1.0f
+      (100L + i, v)
+    }
+    val lshDir = writeEmbeddings(planted)
+    val lshRoot = Files.createTempDirectory("graft_complete_recode").toString
+    val lsh = IndexLifecycle.LshPostings(lshDir)
+    assert(IndexLifecycle.installPostings(spark, lshRoot, 1L, lsh,
+      DedupQueries.normVecs(spark, lshDir),
+      Seq(SimilarityQueries.codeBits(
+        Tables.parquetRowCount(spark, lshDir, "embeddings")).toLong,
+        DedupQueries.LshTables.toLong)))
+    assert(IndexLifecycle.lshGuardedMaintenance(spark, lshRoot, lshDir,
+      budgetPairs = 1000L)._2 === Some(2L))
+    assertComplete(lshRoot, lsh.layout.arts.map(_.name), Seq(lsh.layout.cfg),
+      "lsh re-code")
+
+    // the PQ index: install, append, compact and takedown
+    val pqRoot = Files.createTempDirectory("graft_complete_pq").toString
+    val pqDir = Files.createTempDirectory("graft_complete_pqc").toString
+    def embeddings(ids: Range): Unit =
+      ids.map { i =>
+        val v = Array.fill(64)(0.0f)
+        v(i % 2) = 1.0f
+        v(10) = 0.01f * (i % 7)
+        (i.toLong, v)
+      }.toDF("vec_id", "embedding").coalesce(1).write.mode("overwrite")
+        .parquet(s"$pqDir/embeddings.parquet")
+    def pqVecs = asVec(spark.read.parquet(s"$pqDir/embeddings.parquet"))
+    def pqCheck(verb: String) = assertComplete(pqRoot,
+      Seq("codes", "centroids", "codebook"), Seq("baseline", "meta"),
+      s"pq $verb")
+    embeddings(0 until 80)
+    assert(IndexLifecycle.installPqIndex(spark, pqRoot, 1L,
+      IndexLifecycle.train(spark, pqVecs, k = 2),
+      IndexLifecycle.trainCodebook(pqVecs), pqDir))
+    pqCheck("install")
+    embeddings(0 until 160)
+    assert(IndexLifecycle.appendPqIndex(spark, pqRoot, pqDir) === Some(2L))
+    pqCheck("append")
+    assert(IndexLifecycle.compactPqIndex(spark, pqRoot) === Some(3L))
+    pqCheck("compact")
+    assert(IndexLifecycle.takedownPqIndex(spark, pqRoot,
+      Seq(7L, 41L).toDF("vec_id")) === Some(4L))
+    pqCheck("takedown")
   }
 }
