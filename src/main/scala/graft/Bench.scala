@@ -36,7 +36,7 @@ object Bench {
     // Two timed passes, per-query MIN: this box has noisy co-tenants and a
     // single pass can read 20-200% high on whichever queries the noise hits;
     // the min of two is the honest steady-state signal (same rationale as
-    // BenchOne's min-of-N dev loop).
+    // BenchSome's min-of-N dev loop).
     def timedPass(qs: Seq[GraftQuery]): Map[String, Double] =
       qs.flatMap(q => timed(q).map(q.name -> _)).toMap
     val (p1, p2) = (timedPass(SparkEntry.catalog), timedPass(SparkEntry.catalog))

@@ -2,15 +2,17 @@ package graft
 
 /** Dev harness: time an arbitrary query list in ONE warm JVM (min and
   * median of N reps per query, untimed first pass as warm-up) — the
-  * before/after A/B loop for optimization rounds, where BenchOne's
-  * one-query-per-JVM shape would pay a fresh session per data point.
+  * before/after A/B loop for optimization rounds; one query is a list of
+  * one. [[ScaleBench]] times its headline list through the same loop.
   * Usage: runMain graft.BenchSome <sfDir> <reps> <name...>
   */
 object BenchSome {
-  def main(args: Array[String]): Unit = {
-    val sfDir = args(0)
-    val reps = args(1).toInt
-    val names = args.drop(2).toSeq
+  def main(args: Array[String]): Unit =
+    run(args(0), args(1).toInt, args.drop(2).toSeq, "BENCHSOME")
+
+  /** Times `names` against `sfDir` and prints one line per query, each
+    * starting with `tag`. */
+  def run(sfDir: String, reps: Int, names: Seq[String], tag: String): Unit = {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val spark = GraftSession.builder(s"local[$cpus]", cpus.toInt).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
@@ -23,7 +25,7 @@ object BenchSome {
         try { fn(spark, sfDir).count(); true }
         catch { case t: Throwable =>
           t.printStackTrace()
-          println(s"BENCHSOME $n FAILED (warm-up): $t")
+          println(s"$tag $n FAILED (warm-up): $t")
           false
         }
       if (warmOk) {
@@ -34,7 +36,7 @@ object BenchSome {
         }
         val sorted = times.sorted
         val med = sorted(sorted.size / 2)
-        println(f"BENCHSOME $n min=${sorted.head}%.3f med=$med%.3f " +
+        println(f"$tag $n min=${sorted.head}%.3f med=$med%.3f " +
           f"times=${times.map(t => f"$t%.3f").mkString(",")}")
       }
     }

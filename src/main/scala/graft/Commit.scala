@@ -10,7 +10,9 @@ import scala.util.control.NonFatal
 
 /** The one commit rule of every local store: the topic sink's batches,
   * the materialized aggregate's versions, the index store's versions,
-  * ingest's pins and snapshots, and the file registries' entries.
+  * ingest's per-batch artifacts, pins, snapshots and takedowns,
+  * `decontaminateAdmit`'s batches, Avro container outputs and their parts,
+  * and the file registries' entries.
   *
   * [[publish]] stages into a private per-attempt path,
   * `<parent>/.staging-<name>/<random>`, then renames it into place without

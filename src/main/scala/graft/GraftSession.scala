@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** The one place the engine-mandatory session configuration lives. Every
-  * entry point (Verify/Bench/RunOne/BenchOne and the test sessions) builds
+  * entry point (Verify/Bench/RunOne/BenchSome and the test sessions) builds
   * through here — a builder that forgets one of these lines compiles fine
   * and fails subtly at runtime:
   *

@@ -38,8 +38,8 @@ class ForkFreeRawLocalFileSystem extends RawLocalFileSystem {
   * like Hadoop's `LocalFileSystem`. It keeps the one rule of Hive's
   * `ProxyLocalFileSystem`, which hive-exec registers for `file` and which
   * the scheme resolved to without this binding: a rename onto an existing
-  * file fails instead of replacing it (AvroOcf's task commit relies on
-  * that to drop a losing attempt). */
+  * file fails instead of replacing it. Hadoop's `FileOutputCommitter`
+  * calls this rename for every `df.write` task and job commit. */
 class ForkFreeLocalFileSystem extends LocalFileSystem(new ForkFreeRawLocalFileSystem) {
   override def rename(src: Path, dst: Path): Boolean =
     !Files.isRegularFile(pathToFile(dst).toPath) && super.rename(src, dst)

@@ -4,7 +4,8 @@ package graft
   * print one parseable line per query — the scale-headroom evidence run
   * (SCALE.md §growth): the bench top-10 plus the recall-scoreboard /
   * calibration-dial families, whose ground-truth passes are the newest
-  * bounded plans. min-of-reps in a warm JVM, BenchOne's convention.
+  * bounded plans. min and median of reps in a warm JVM after an untimed
+  * warm-up pass: [[BenchSome]]'s loop.
   *
   * Usage: runMain graft.ScaleBench <sfDir> [reps] [label] [query...]
   * (trailing query names restrict the run — the decade-2 dev loop, where
@@ -42,19 +43,7 @@ object ScaleBench {
     require(unknown.isEmpty,
       s"unknown headline queries: ${unknown.toSeq.sorted.mkString(", ")} " +
         s"(valid: ${Headline.mkString(", ")})")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = GraftSession.builder(s"local[$cpus]", cpus.toInt).getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    (if (only.isEmpty) Headline else Headline.filter(only)).foreach { name =>
-      val fn = SparkEntry.queries(name)
-      val times = (1 to reps).map { _ =>
-        val t0 = System.nanoTime()
-        fn(spark, sfDir).count()
-        (System.nanoTime() - t0) / 1e9
-      }
-      println(f"SCALEBENCH $label $name min=${times.min}%.3f " +
-        f"times=${times.map(t => f"$t%.3f").mkString(",")}")
-    }
-    spark.stop()
+    BenchSome.run(sfDir, reps, if (only.isEmpty) Headline else Headline.filter(only),
+      s"SCALEBENCH $label")
   }
 }

@@ -1,11 +1,12 @@
 package graft.avro
 
 import java.nio.ByteBuffer
+import java.nio.file.Paths
 
-import graft.LeanHadoopConf
+import graft.{Commit, LeanHadoopConf}
 
 import org.apache.avro.Schema
-import org.apache.avro.file.{CodecFactory, DataFileReader, DataFileWriter}
+import org.apache.avro.file.{CodecFactory, DataFileConstants, DataFileReader, DataFileWriter}
 import org.apache.avro.generic.{GenericDatumReader, GenericDatumWriter, GenericRecord}
 import org.apache.avro.io.EncoderFactory
 import org.apache.avro.mapred.FsInput
@@ -34,9 +35,9 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
   * Scale shape: each file is split into byte ranges at sync markers
   * ([[DataFileReader.sync]]/`pastSync`, the format's whole point), so a
   * multi-GB container fans out across tasks instead of capping parallelism
-  * at one-task-per-file; the sink stages into a hidden sibling directory
-  * and atomically renames on success, the same read-committed discipline
-  * as the streaming sink (`streaming/Topic.scala` FileTopicSink, mirroring
+  * at one-task-per-file; the sink publishes its output directory and
+  * each part with [[graft.Commit]], the same read-committed discipline as
+  * the streaming sink (`streaming/Topic.scala` FileTopicSink, mirroring
   * the reference's transactional visibility,
   * `ReplicationApplication.java:66,96-98`).
   */
@@ -46,104 +47,39 @@ object AvroOcf {
     * (Avro-binary records, all encoded with `schemaJson`), deflate-block
     * compressed by default (a 100 TB at-rest corpus is never stored raw).
     *
-    * Commit discipline: parts land in a dot-prefixed sibling staging dir
-    * (each task itself writes a `.tmp` and renames on task success, so a
-    * failed/speculative attempt never half-writes a part), and the staging
-    * dir is installed as `out` only after every partition succeeded — a
-    * mid-job failure leaves `out` untouched, never a mix of old and new
-    * containers. Overwrites any previous `out` via [[commitSwap]]'s
-    * move-aside/install/sweep sequence, so the old corpus is never
-    * destroyed before the new one is in place.
+    * Commit discipline: `out` is committed as a whole by
+    * [[graft.Commit.publish]], and each task commits its part with
+    * [[graft.Commit.publishFile]], so a failed or second attempt never
+    * half-writes a part and a mid-job failure leaves `out` absent. Like
+    * every store, `write` never replaces an existing `out`: it returns
+    * whether this call committed it.
     *
     * `syncInterval` (bytes, 0 = Avro's default ~64 KiB) bounds block size
     * and therefore split granularity for readers. */
   def write(bin: Dataset[Array[Byte]], schemaJson: String, out: String,
-            codec: String = "deflate", syncInterval: Int = 0): Unit = {
-    val session = bin.sparkSession
-    val conf = session.sessionState.newHadoopConf()
-    val outPath = new Path(out)
-    val fs = outPath.getFileSystem(conf)
-    val staging = new Path(outPath.getParent,
-      s".${outPath.getName}.inprogress-${java.util.UUID.randomUUID()}")
-    fs.mkdirs(staging)
-    val stagingStr = staging.toString
-    val sconf = LeanHadoopConf(conf)
-    try {
+            codec: String = "deflate", syncInterval: Int = 0): Boolean = {
+    val sconf = LeanHadoopConf(bin.sparkSession.sessionState.newHadoopConf())
+    Commit.publish(Paths.get(out)) { staged =>
+      val dir = staged.toString
       bin.foreachPartition { (it: Iterator[Array[Byte]]) =>
         if (it.hasNext) {
-          val hc = sconf.value
-          val schema = new Schema.Parser().parse(schemaJson)
-          val tc = TaskContext.get()
-          val part = tc.partitionId()
-          val fin = new Path(stagingStr, f"part-$part%05d.avro")
-          val tmp = new Path(stagingStr,
-            f".part-$part%05d-attempt${tc.taskAttemptId()}.avro.tmp")
-          val pfs = tmp.getFileSystem(hc)
-          val w = new DataFileWriter[GenericRecord](
-            new GenericDatumWriter[GenericRecord](schema))
-            .setCodec(CodecFactory.fromString(codec))
-          if (syncInterval > 0) w.setSyncInterval(syncInterval)
-          try {
-            w.create(schema, pfs.create(tmp, true))
-            it.foreach(b => w.appendEncoded(ByteBuffer.wrap(b)))
-          } finally w.close()
-          // task commit: rename is atomic per attempt; if a sibling attempt
-          // already won the race, drop this attempt's output
-          if (!pfs.rename(tmp, fin)) { pfs.delete(tmp, false); () }
+          val part = TaskContext.getPartitionId()
+          Commit.publishFile(Paths.get(dir, f"part-$part%05d.avro")) { file =>
+            val path = new Path(file.toUri)
+            val schema = new Schema.Parser().parse(schemaJson)
+            val w = new DataFileWriter[GenericRecord](
+              new GenericDatumWriter[GenericRecord](schema))
+              .setCodec(CodecFactory.fromString(codec))
+            if (syncInterval > 0) w.setSyncInterval(syncInterval)
+            try {
+              w.create(schema, path.getFileSystem(sconf.value).create(path, false))
+              it.foreach(b => w.appendEncoded(ByteBuffer.wrap(b)))
+            } finally w.close()
+          }
+          ()
         }
       }
-      commitSwap(fs, staging, outPath)
-    } catch {
-      case t: Throwable =>
-        fs.delete(staging, true)
-        throw t
     }
-  }
-
-  private def bakSiblings(fs: org.apache.hadoop.fs.FileSystem,
-                          out: Path): Seq[Path] = {
-    val parent = out.getParent
-    if (parent == null || !fs.exists(parent)) Seq.empty
-    else fs.listStatus(parent).toSeq.map(_.getPath)
-      .filter(_.getName.startsWith(s".${out.getName}.bak-"))
-  }
-
-  /** Job commit with no destruction window: the previous corpus moves aside
-    * to a hidden `.bak` sibling, the staged corpus renames in, and only then
-    * is the `.bak` deleted. Failure behavior at each phase:
-    *  - the install rename fails in-process → the `.bak` is restored to
-    *    `out` and the error propagates: the old corpus is back, unchanged;
-    *  - a hard crash BETWEEN the two renames leaves the old corpus intact
-    *    under `.bak`, where [[listAvro]] transparently falls back — so a
-    *    reader always sees the old corpus or the new one, never neither
-    *    (the pre-round-9 `delete(out); rename(staging, out)` sequence had
-    *    exactly that destroyed-but-not-replaced window);
-    *  - the next successful commit sweeps any stale `.bak` a crash left.
-    * `interpose` is a test seam called between the phases ("old-aside",
-    * "installed") so specs can assert the old-or-new invariant mid-swap. */
-  private[graft] def commitSwap(fs: org.apache.hadoop.fs.FileSystem,
-                                staging: Path, outPath: Path,
-                                interpose: String => Unit = _ => ()): Unit = {
-    val bak = new Path(outPath.getParent,
-      s".${outPath.getName}.bak-${java.util.UUID.randomUUID()}")
-    val hadOld = fs.exists(outPath)
-    if (hadOld) {
-      if (!fs.rename(outPath, bak))
-        throw new java.io.IOException(s"commit move-aside failed: $outPath -> $bak")
-      interpose("old-aside")
-    }
-    try {
-      if (!fs.rename(staging, outPath))
-        throw new java.io.IOException(s"commit rename failed: $staging -> $outPath")
-    } catch {
-      case t: Throwable =>
-        if (hadOld) fs.rename(bak, outPath)
-        throw t
-    }
-    interpose("installed")
-    // the moved-aside corpus — and any stale .bak an earlier crashed
-    // commit left behind — is now superseded by the installed one
-    bakSiblings(fs, outPath).foreach(p => fs.delete(p, true))
   }
 
   /** The writer schema embedded in the container header of the first file
@@ -165,20 +101,10 @@ object AvroOcf {
   private def listAvro(conf: Configuration, path: String): Seq[(String, Long)] = {
     val root = new Path(path)
     val fs = root.getFileSystem(conf)
-    // crash-window fallback: a writer that died between commitSwap's two
-    // renames left the old corpus under a `.bak` sibling — read that, so
-    // the reader contract stays old-or-new, never neither (at most one
-    // survives a successful commit's sweep; newest name wins if a double
-    // crash left several)
-    val dir =
-      if (fs.exists(root)) Some(root)
-      else bakSiblings(fs, root).sortBy(_.getName).lastOption
-    dir match {
-      case None => Seq.empty
-      case Some(d) => fs.listStatus(d).toSeq
-        .filter(st => st.isFile && st.getPath.getName.endsWith(".avro"))
-        .map(st => (st.getPath.toString, st.getLen)).sortBy(_._1)
-    }
+    if (!fs.exists(root)) Seq.empty
+    else fs.listStatus(root).toSeq
+      .filter(st => st.isFile && st.getPath.getName.endsWith(".avro"))
+      .map(st => (st.getPath.toString, st.getLen)).sortBy(_._1)
   }
 
   /** Read every `.avro` file under `path` into a one-column binary
@@ -246,15 +172,37 @@ object AvroOcf {
     * one decompressed block (~the sync interval), never the whole split
     * (`maxSplitBytes` × the codec's expansion ratio, the pre-round-9
     * shape). The reader closes on exhaustion; the task-completion listener
-    * covers a consumer that stops early (limit / take). */
+    * covers a consumer that stops early (limit / take).
+    *
+    * The split that owns the file's end first checks that the file ends
+    * with its sync marker, as every complete container does. Avro's reader
+    * takes an end of file inside a block for the end of the container, so
+    * without the check a container cut mid-block reads as a shorter one. */
   private def readSplit(hc: Configuration, p: String, start: Long, end: Long,
                         target: Schema, strict: Boolean): Iterator[Array[Byte]] = {
-    val reader = new DataFileReader[GenericRecord](
-      new FsInput(new Path(p), hc), new GenericDatumReader[GenericRecord]())
+    val in = new FsInput(new Path(p), hc)
+    val reader = new DataFileReader[GenericRecord](in, new GenericDatumReader[GenericRecord]())
     Option(TaskContext.get())
       .foreach(_.addTaskCompletionListener[Unit](_ => reader.close()))
+    if (end >= in.length() && !endsWithSync(hc, p, reader.previousSync(), in.length()))
+      throw new java.io.IOException(s"truncated container $p: it does not end with its sync marker")
     splitIterator(reader, p, start, end, target, strict)
   }
+
+  /** Whether the `len` bytes of `p`, whose header ends at `headerEnd`, end
+    * with the sync marker that closes the header. */
+  private def endsWithSync(hc: Configuration, p: String, headerEnd: Long, len: Long): Boolean = {
+    val path = new Path(p)
+    val in = path.getFileSystem(hc).open(path)
+    try {
+      val (head, tail) = (new Array[Byte](SyncSize), new Array[Byte](SyncSize))
+      in.readFully(headerEnd - SyncSize, head)
+      in.readFully(len - SyncSize, tail)
+      java.util.Arrays.equals(head, tail)
+    } finally in.close()
+  }
+
+  private val SyncSize = DataFileConstants.SYNC_SIZE
 
   /** Lazy datum iterator over `reader`'s blocks in [start, end) — the body
     * of [[readSplit]], split out so a spec can wrap `reader` with a

@@ -82,8 +82,8 @@ object AvroQueries {
         "codec; this proves the .avro container): events encode through " +
         "the SAME codegen toAvro expression, land as deflate-compressed " +
         "sync-marked OCFs (one per partition, writer schema EMBEDDED — the " +
-        "container's registry-free contract) committed by atomic staging-" +
-        "dir rename, and read back SPLIT at sync markers: each task slices " +
+        "container's registry-free contract) committed by graft.Commit's " +
+        "staged publish, and read back SPLIT at sync markers: each task slices " +
         "raw datum bytes out of its blocks by a schema-driven skip walk — " +
         "zero decode, zero re-encode in the container layer — and the one " +
         "real decode is the codegen fromAvro expression, so container " +
@@ -98,13 +98,16 @@ object AvroQueries {
       val cols = Seq("event_id", "ts", "user_id", "event_type", "value", "props")
       val ev = Tables.events(s, dir).select(cols.map(col): _*)
       val schemaJson = AvroFunctions.writerSchemaFor(ev.schema, "Event")
-      val ocfDir = RelationalQueries.staged(s, "avro-ocf",
+      // the slot may already exist, and a commit never replaces a path:
+      // the container files land in a child of the slot
+      val slot = RelationalQueries.staged(s, "avro-ocf",
         graft.Tables.fingerprint(s, s"$dir/events.parquet")) { out =>
         graft.avro.AvroOcf.write(
           ev.select(AvroFunctions.toAvro(
             struct(cols.map(col): _*), "Event").as("b")).as[Array[Byte]],
-          schemaJson, out)
+          schemaJson, s"$out/ocf")
       }
+      val ocfDir = s"$slot/ocf"
       graft.avro.AvroOcf.readBinary(s, ocfDir, readerSchemaJson = Some(schemaJson))
         .select(AvroFunctions.fromAvro(col("avro_value"), schemaJson).as("r"))
         .select(col("r.*"))

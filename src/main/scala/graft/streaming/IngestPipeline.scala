@@ -38,14 +38,15 @@ import graft.operators.{DedupQueries, IndexLifecycle}
   * Exactly-once is the idempotent-foreachBatch discipline
   * ([[StatefulOps.decontaminateAdmit]]'s contract, extended to a
   * pipeline with CROSS-BATCH state): every landed artifact is
-  * partitioned `batch=<id>` and OVERWRITTEN whole; the pillar version
+  * partitioned `batch=<id>` and published whole by [[Commit.publish]],
+  * which leaves a committed directory untouched; the pillar version
   * the batch admitted against is recorded at first processing and
   * re-read on replay (the pillar itself has advanced — decisions must
   * not); budget and digest state re-derive from durable per-batch
   * artifacts with batch < id only, resolved as one consolidated
   * SNAPSHOT plus a bounded tail (per-batch read cost O(snapEvery),
   * not O(batches)). So a replayed epoch recomputes bit-identical
-  * decisions and rewrites byte-identical files, and the pillar append
+  * decisions, finds their files already committed, and the pillar append
   * replays as its documented anti-join no-op. Retention on the ingest
   * pillar excludes [[ingestPinnedVersions]] — the versions committed
   * epochs re-decide against on replay.
@@ -380,22 +381,20 @@ object IngestPipeline {
       val decisions = greedy(collectFeats(feats), storedHits, famPairs, ids,
         storedRuns, pairRuns, stages.spanGrain, consumed, budget)
 
-      decisions.toDS().toDF().coalesce(1).write.mode("overwrite")
-        .parquet(s"$base/manifest/batch=$id")
+      publishBatch(base, "manifest", id)(decisions.toDS().toDF().coalesce(1))
       val admitted = decisions.filter(_.admitted).map(_.doc_id).toSet
       val admittedDf = admitted.toSeq.toDF("doc_id")
-      decisions.filter(d => admitted(d.doc_id))
-        .map(_.doc_id).toDF("doc_id")
-        .join(feats.select("doc_id", "digest"), "doc_id")
-        .select("doc_id", "digest").coalesce(1).write.mode("overwrite")
-        .parquet(s"$base/digests/batch=$id")
+      publishBatch(base, "digests", id)(
+        decisions.filter(d => admitted(d.doc_id))
+          .map(_.doc_id).toDF("doc_id")
+          .join(feats.select("doc_id", "digest"), "doc_id")
+          .select("doc_id", "digest").coalesce(1))
       // the span store files each admitted doc's ARRIVAL windows —
       // written every batch (possibly empty) so the tail read's
       // partition contract matches the digest store's
-      wins.foreach(w =>
+      wins.foreach(w => publishBatch(base, "spans", id)(
         w.join(admittedDf, Seq("doc_id"), "left_semi")
-          .select("doc_id", "wh").distinct()
-          .write.mode("overwrite").parquet(s"$base/spans/batch=$id"))
+          .select("doc_id", "wh").distinct()))
       if (admitted.nonEmpty) {
         // mask each append with takedowns AFTER the pinned horizon: on a
         // crash-replay that interleaved with a takedown, the deleted docs
@@ -443,34 +442,27 @@ object IngestPipeline {
     }
   }
 
-  /** A per-batch artifact directory counts as committed only with its
-    * `_SUCCESS` marker — a crash mid-write leaves a created-but-
-    * footer-less directory, and treating THAT as committed wedges every
-    * replay on an unreadable frame (the exact crash-recovery scenario
-    * these directories exist to serve). */
-  private def committedDir(dir: String): Boolean =
-    java.nio.file.Files.exists(java.nio.file.Paths.get(dir, "_SUCCESS"))
-
-  /** Read-or-commit one pinned scalar at `dir`, published by
-    * [[Commit.publish]] so a crash can never leave a half-written pin
-    * that an exists-check would route to the read path (uncommitted debris
-    * left by a writer without that rule is deleted and rewritten). On a
-    * lost race the committed pin wins and is re-read — one batch, one pin,
-    * whatever the interleaving. */
-  private def pinnedScalar(s: SparkSession, dir: String, colName: String)
-                          (compute: => Long): Long = {
-    def readPin(): Long =
-      s.read.schema(s"$colName BIGINT").parquet(dir).head.getLong(0)
-    if (committedDir(dir)) return readPin()
-    val target = java.nio.file.Paths.get(dir)
-    Commit.delete(target) // footer-less debris of a crashed write
-    val v = compute
-    Commit.publish(target)(staged =>
-      s.range(1).select(lit(v).as(colName)).coalesce(1)
-        .write.mode("overwrite").parquet(staged.toString))
-    readPin()
+  /** Publish `frame` as `base/sub/batch=id` with [[Commit.publish]]. A
+    * replayed committed epoch finds the directory committed and writes
+    * nothing: by the replay contract its frame is the committed one. */
+  private def publishBatch(base: String, sub: String, id: Long)
+                          (frame: DataFrame): Unit = {
+    Commit.publish(java.nio.file.Paths.get(base, sub, s"batch=$id"))(staged =>
+      frame.write.mode("overwrite").parquet(staged.toString))
+    ()
   }
 
+  /** Read-or-commit one pinned scalar at `dir`, published by
+    * [[Commit.publish]]: a committed pin is whole, so one batch has one
+    * pin whatever the interleaving. Returns `v` when this call published
+    * it, else the committed pin a replay or a racer finds. */
+  private[graft] def pinnedScalar(s: SparkSession, dir: String, colName: String)
+                                 (v: Long): Long = {
+    val won = Commit.publish(java.nio.file.Paths.get(dir))(staged =>
+      s.range(1).select(lit(v).as(colName)).coalesce(1)
+        .write.mode("overwrite").parquet(staged.toString))
+    if (won) v else s.read.schema(s"$colName BIGINT").parquet(dir).head.getLong(0)
+  }
 
   // ---------- bounded admission-state bookkeeping ----------
   //
@@ -503,14 +495,11 @@ object IngestPipeline {
                                  until: Long): Seq[String] =
     Commit.numbered(java.nio.file.Paths.get(base, sub), "batch=")
       .filter(n => n >= from && n < until)
-      .map(n => s"$base/$sub/batch=$n").filter(committedDir)
+      .map(n => s"$base/$sub/batch=$n")
 
   /** Committed snapshot boundaries, ascending. */
   private def snapshotUptos(base: String): Seq[Long] =
     Commit.numbered(java.nio.file.Paths.get(base, "snap"), "upto=")
-      .filter(u => committedDir(s"$base/snap/upto=$u/digests") &&
-        committedDir(s"$base/snap/upto=$u/consumed") &&
-        committedDir(s"$base/snap/upto=$u/spans"))
 
   /** The newest committed snapshot usable by batch `id` (boundary ≤ id).
     * Any usable snapshot derives identical state — the choice moves only
@@ -607,12 +596,7 @@ object IngestPipeline {
                             snapEvery: Int): Unit = {
     val upto = id + 1
     if (snapEvery <= 0 || upto % snapEvery != 0) return
-    val target = java.nio.file.Paths.get(s"$base/snap/upto=$upto")
-    if (committedDir(target.resolve("digests").toString) &&
-      committedDir(target.resolve("consumed").toString) &&
-      committedDir(target.resolve("spans").toString)) return
-    Commit.delete(target)
-    Commit.publish(target) { staged =>
+    Commit.publish(java.nio.file.Paths.get(s"$base/snap/upto=$upto")) { staged =>
       rawDigestsBefore(s, base, upto).write.mode("overwrite")
         .parquet(staged.resolve("digests").toString)
       rawConsumedBefore(s, base, upto).coalesce(1).write.mode("overwrite")
@@ -697,12 +681,20 @@ object IngestPipeline {
     * both ways: in-flight and replayed epochs decide against their
     * PINNED pillar version and takedown horizon, so a takedown landing
     * mid-stream changes only batches first processed after it. Returns
-    * the committed tombstone sequence. */
+    * the committed tombstone sequence: the next free one, published by
+    * [[Commit.publish]], so a failed write leaves no sequence behind and
+    * a racer that takes a sequence first moves this call to the next. */
   def ingestTakedown(s: SparkSession, base: String,
                      deleted: DataFrame): Long = {
-    val seq = committedTakedownSeqs(base).maxOption.getOrElse(0L) + 1
-    deleted.select(col("doc_id")).distinct().coalesce(1)
-      .write.mode("overwrite").parquet(s"$base/takedowns/seq=$seq")
+    val ids = deleted.select(col("doc_id")).distinct().coalesce(1)
+    @scala.annotation.tailrec
+    def land(): Long = {
+      val seq = committedTakedownSeqs(base).maxOption.getOrElse(0L) + 1
+      val won = Commit.publish(java.nio.file.Paths.get(base, "takedowns", s"seq=$seq"))(
+        staged => ids.write.mode("overwrite").parquet(staged.toString))
+      if (won) seq else land()
+    }
+    val seq = land()
     IndexLifecycle.takedownPostings(s, familyRoot(base, "simhash"),
       IndexLifecycle.SimhashPostings, deleted)
     seq

@@ -1791,18 +1791,20 @@ object StatefulOps {
     * construction and row-identical to batch q282 on the union of all
     * batches (StreamingOpsSpec pins 3-chunk == 7-chunk == batch, and
     * restart). Exactly-once is the idempotent-foreachBatch discipline:
-    * each batch OVERWRITES its own `batch=<id>` directory, and the
-    * excision is a pure function of (batch, frozen evalW), so a replayed
-    * epoch rewrites byte-identical files — the same replay contract as
-    * the transactional sink, at directory granularity. */
+    * each batch publishes its own `batch=<id>` directory with
+    * [[graft.Commit.publish]], and the excision is a pure function of
+    * (batch, frozen evalW), so a replayed epoch finds its directory
+    * committed and writes nothing — the same replay contract as the
+    * transactional sink, at directory granularity. */
   def decontaminateAdmit(docs: org.apache.spark.sql.DataFrame,
                          evalW: org.apache.spark.sql.DataFrame,
                          outDir: String, checkpoint: String)
       : org.apache.spark.sql.streaming.StreamingQuery =
     docs.writeStream
       .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], id: Long) =>
-        graft.operators.DedupQueries.exciseAgainst(batch.toDF(), evalW)
-          .write.mode("overwrite").parquet(s"$outDir/batch=$id")
+        graft.Commit.publish(java.nio.file.Paths.get(outDir, s"batch=$id"))(staged =>
+          graft.operators.DedupQueries.exciseAgainst(batch.toDF(), evalW)
+            .write.mode("overwrite").parquet(staged.toString))
         ()
       }
       .option("checkpointLocation", checkpoint)

@@ -19,7 +19,7 @@ class AvroOcfSpec extends SparkSpec {
     val in = (1L to 10L).map(i => (i, s"name-$i", i * 1.5))
       .toDF("id", "name", "score").repartition(3)
     val schemaJson = AvroFunctions.writerSchemaFor(in.schema, "Rec")
-    val out = tempDir("rt")
+    val out = tempDir("rt") + "/t"
     AvroOcf.write(
       in.select(AvroFunctions.toAvro(
         struct(col("id"), col("name"), col("score")), "Rec").as("b"))
@@ -38,7 +38,7 @@ class AvroOcfSpec extends SparkSpec {
     import spark.implicits._
     val in = Seq("e-1", "e-2").toDF("id")
     val v1 = AvroFunctions.writerSchemaFor(in.schema, "Evo")
-    val out = tempDir("evo")
+    val out = tempDir("evo") + "/t"
     AvroOcf.write(
       in.select(AvroFunctions.toAvro(struct(col("id")), "Evo").as("b"))
         .as[Array[Byte]],
@@ -80,10 +80,10 @@ class AvroOcfSpec extends SparkSpec {
           org.apache.avro.generic.GenericRecord]())
       try r.getMetaString("avro.codec") finally r.close()
     }
-    val deflated = tempDir("deflate")
+    val deflated = tempDir("deflate") + "/t"
     AvroOcf.write(bin, schemaJson, deflated)
     assert(headerCodec(deflated) == "deflate")
-    val raw = tempDir("rawcodec")
+    val raw = tempDir("rawcodec") + "/t"
     AvroOcf.write(bin, schemaJson, raw, codec = "null")
     assert(headerCodec(raw) == "null")
     // compression must actually bite on the repetitive payload…
@@ -138,13 +138,13 @@ class AvroOcfSpec extends SparkSpec {
     // v1 writers: id only
     val inV1 = Seq("e-1", "e-2").toDF("id")
     val v1 = AvroFunctions.writerSchemaFor(inV1.schema, "Evo")
-    val d1 = tempDir("mixv1")
+    val d1 = tempDir("mixv1") + "/t"
     AvroOcf.write(inV1.select(AvroFunctions.toAvro(
       struct(col("id")), "Evo").as("b")).as[Array[Byte]], v1, d1)
     // v2 writers: full shape
     val inV2 = Seq(("e-3", 1.5, "s3"), ("e-4", 2.5, "s4"))
       .toDF("id", "score", "source")
-    val d2 = tempDir("mixv2")
+    val d2 = tempDir("mixv2") + "/t"
     AvroOcf.write(inV2.select(AvroFunctions.toAvroWithSchema(
       struct(col("id"), col("score"), col("source")), v2).as("b"))
       .as[Array[Byte]], v2, d2)
@@ -184,7 +184,7 @@ class AvroOcfSpec extends SparkSpec {
     val in = (1L to 25L).map(i => (i, s"name-$i", i * 0.5))
       .toDF("id", "name", "score").repartition(2)
     val schemaJson = AvroFunctions.writerSchemaFor(in.schema, "Interop")
-    val out = tempDir("interop")
+    val out = tempDir("interop") + "/t"
     AvroOcf.write(
       in.select(AvroFunctions.toAvro(
         struct(col("id"), col("name"), col("score")), "Interop").as("b"))
@@ -223,7 +223,7 @@ class AvroOcfSpec extends SparkSpec {
     val in = (1L to 500L).map(i => (i, s"payload-$i-${"y" * 60}"))
       .toDF("id", "pad").repartition(1)
     val schemaJson = AvroFunctions.writerSchemaFor(in.schema, "Trunc")
-    val out = tempDir("trunc")
+    val out = tempDir("trunc") + "/t"
     AvroOcf.write(
       in.select(AvroFunctions.toAvro(
         struct(col("id"), col("pad")), "Trunc").as("b")).as[Array[Byte]],
@@ -275,7 +275,7 @@ class AvroOcfSpec extends SparkSpec {
     val in = (1L to n).map(i => (i, s"payload-$i-${"z" * 50}"))
       .toDF("id", "pad").repartition(1)
     val schemaJson = AvroFunctions.writerSchemaFor(in.schema, "Lazy")
-    val out = tempDir("lazy")
+    val out = tempDir("lazy") + "/t"
     // small sync interval => many blocks in one container
     AvroOcf.write(in.select(AvroFunctions.toAvro(
       struct(col("id"), col("pad")), "Lazy").as("b")).as[Array[Byte]],
@@ -318,109 +318,21 @@ class AvroOcfSpec extends SparkSpec {
     } finally r2.close()
   }
 
-  // --- commit swap ----------------------------------------------------------
-  // Overwrite commit must never hold a window where the old corpus is
-  // destroyed and the new one not yet installed (the pre-round-9
-  // delete-then-rename shape). commitSwap's phases are interposed on
-  // directly: a reader sees old-or-new at every point, and a hard crash
-  // between the renames leaves the old corpus recoverable (and readable,
-  // via the .bak fallback) rather than gone.
-
-  private def writeCorpus(dir: String, ids: Seq[Long], schemaJson: String): Unit = {
+  test("a write never replaces a committed output and reports whether it committed") {
     import spark.implicits._
-    val in = ids.map(i => (i, s"v$i")).toDF("id", "v").repartition(1)
-    AvroOcf.write(in.select(AvroFunctions.toAvro(
-      struct(col("id"), col("v")), "Swap").as("b")).as[Array[Byte]],
-      schemaJson, dir)
-  }
-
-  private def readIds(dir: String, schemaJson: String): Set[Long] = {
-    import spark.implicits._
-    AvroOcf.readBinary(spark, dir, Some(schemaJson))
+    val in = Seq(1L, 2L).toDF("id")
+    val schemaJson = AvroFunctions.writerSchemaFor(in.schema, "Keep")
+    def bin(ids: Seq[Long]) = ids.toDF("id")
+      .select(AvroFunctions.toAvro(struct(col("id")), "Keep").as("b")).as[Array[Byte]]
+    val out = tempDir("keep") + "/t"
+    assert(AvroOcf.write(bin(Seq(1L, 2L)), schemaJson, out))
+    assert(!AvroOcf.write(bin(Seq(3L)), schemaJson, out),
+      "a second write to a committed output must not commit")
+    val back = AvroOcf.readBinary(spark, out, Some(schemaJson))
       .select(AvroFunctions.fromAvro(col("avro_value"), schemaJson).as("r"))
       .select(col("r.id")).as[Long].collect().toSet
-  }
-
-  private val swapSchema = AvroFunctions.writerSchemaFor(
-    org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("id",
-        org.apache.spark.sql.types.LongType, nullable = false),
-      org.apache.spark.sql.types.StructField("v",
-        org.apache.spark.sql.types.StringType, nullable = true))), "Swap")
-
-  test("overwrite commit exposes old-or-new at every phase, never neither") {
-    val base = tempDir("swap")
-    val out = s"$base/table"
-    writeCorpus(out, Seq(1L, 2L, 3L), swapSchema)
-    val staging = s"$base/staging"
-    writeCorpus(staging, Seq(10L, 11L), swapSchema)
-    val fs = new org.apache.hadoop.fs.Path(out)
-      .getFileSystem(spark.sessionState.newHadoopConf())
-    val phases = collection.mutable.ArrayBuffer.empty[String]
-    AvroOcf.commitSwap(fs, new org.apache.hadoop.fs.Path(staging),
-      new org.apache.hadoop.fs.Path(out), { phase =>
-        phases += phase
-        val visible = readIds(out, swapSchema)
-        if (phase == "old-aside")
-          assert(visible == Set(1L, 2L, 3L),
-            s"mid-swap reader must still see the OLD corpus, saw $visible")
-        else
-          assert(visible == Set(10L, 11L),
-            s"post-install reader must see the NEW corpus, saw $visible")
-      })
-    assert(phases.toSeq == Seq("old-aside", "installed"))
-    assert(readIds(out, swapSchema) == Set(10L, 11L))
-    // the superseded corpus was swept: no .bak sibling survives the commit
-    assert(!new java.io.File(base).listFiles()
-      .exists(_.getName.startsWith(".table.bak-")),
-      "a committed swap must sweep its .bak")
-  }
-
-  test("a crash between the swap renames leaves the old corpus readable; the next commit heals") {
-    val base = tempDir("swapcrash")
-    val out = s"$base/table"
-    writeCorpus(out, Seq(1L, 2L), swapSchema)
-    val staging = s"$base/staging"
-    writeCorpus(staging, Seq(20L, 21L), swapSchema)
-    val fs = new org.apache.hadoop.fs.Path(out)
-      .getFileSystem(spark.sessionState.newHadoopConf())
-    // hard-crash simulation: die after the old corpus moved aside, before
-    // the staged one renamed in (the exact window delete-then-rename turned
-    // into data loss)
-    intercept[RuntimeException] {
-      AvroOcf.commitSwap(fs, new org.apache.hadoop.fs.Path(staging),
-        new org.apache.hadoop.fs.Path(out),
-        phase => if (phase == "old-aside") throw new RuntimeException("crash"))
-    }
-    assert(!new java.io.File(out).exists(), "crash window: out dir is mid-swap")
-    // …yet the reader still sees the old corpus, via the .bak fallback
-    assert(readIds(out, swapSchema) == Set(1L, 2L),
-      "a crash mid-swap must leave the old corpus readable")
-    assert(AvroOcf.embeddedSchema(spark, out).isDefined)
-    // the next successful overwrite installs new data and sweeps the wreck
-    val staging2 = s"$base/staging2"
-    writeCorpus(staging2, Seq(30L, 31L), swapSchema)
-    AvroOcf.commitSwap(fs, new org.apache.hadoop.fs.Path(staging2),
-      new org.apache.hadoop.fs.Path(out))
-    assert(readIds(out, swapSchema) == Set(30L, 31L))
-    assert(!new java.io.File(base).listFiles()
-      .exists(_.getName.startsWith(".table.bak-")),
-      "healing commit must sweep the crashed swap's .bak")
-  }
-
-  test("a failed install rename restores the old corpus in place") {
-    val base = tempDir("swaprestore")
-    val out = s"$base/table"
-    writeCorpus(out, Seq(1L, 2L, 3L), swapSchema)
-    val fs = new org.apache.hadoop.fs.Path(out)
-      .getFileSystem(spark.sessionState.newHadoopConf())
-    // staging path that does not exist => the install rename fails in-process
-    intercept[java.io.IOException] {
-      AvroOcf.commitSwap(fs, new org.apache.hadoop.fs.Path(s"$base/absent"),
-        new org.apache.hadoop.fs.Path(out))
-    }
-    assert(new java.io.File(out).exists(),
-      "failed install must restore the old corpus AT the output path")
-    assert(readIds(out, swapSchema) == Set(1L, 2L, 3L))
+    assert(back == Set(1L, 2L), s"the committed output changed: $back")
+    assert(new java.io.File(out).getParentFile.list().toSeq == Seq("t"),
+      "a skipped write must leave no staging behind")
   }
 }

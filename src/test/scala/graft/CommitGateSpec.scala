@@ -26,11 +26,9 @@ class CommitGateSpec extends AnyFunSuite {
 
   /** Files that may use one of the patterns, with the reason. */
   private val Allowed: Map[(String, String), String] = Map(
-    ("graft/avro/AvroOcf.scala", ".rename(") ->
-      ("its task commit and `.bak` swap replace a caller-named output on " +
-        "Hadoop's FileSystem, a different contract from Commit's"),
     ("graft/LocalFs.scala", ".rename(") ->
-      "defines the `file` scheme's rename rule that AvroOcf's task commit relies on")
+      ("defines the `file` scheme's rename rule, which Hadoop's " +
+        "FileOutputCommitter calls for every df.write"))
 
   /** `src` with comments and string/char literals replaced by spaces
     * (newlines kept, so line numbers still match). */

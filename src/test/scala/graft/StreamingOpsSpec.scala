@@ -2673,11 +2673,13 @@ class StreamingOpsSpec extends SparkSpec {
     assert(IngestPipeline.manifestOf(spark, base)
       .filter(col("doc_id") === 1L && col("admitted")).count() === 1L)
 
-    // CRASH SIMULATION 1: batch 1's pin directory was created but the
-    // parquet write never finished (no _SUCCESS, no footers). The replay
-    // must treat it as absent and rewrite it — not throw on .head.
+    // CRASH SIMULATION 1: batch 1's pin write died inside its staged
+    // attempt (no _SUCCESS, no footers), where a crashed publish leaves
+    // it. The replay must treat the pin as absent and write it — not
+    // throw on .head.
     val wedge = java.nio.file.Paths.get(s"$base/pillarv/batch=1")
-    java.nio.file.Files.createDirectories(wedge)
+    java.nio.file.Files.createDirectories(
+      java.nio.file.Paths.get(s"$base/pillarv/.staging-batch=1/killed-attempt"))
     val docs1 = all.filter(col("doc_id") % 97 =!= 0 &&
       col("doc_id") > 40 && col("doc_id") <= 60)
     IngestPipeline.processBatch(spark, docs1.toDF(), 1L, evalW,
