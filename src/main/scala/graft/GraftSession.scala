@@ -29,6 +29,13 @@ import org.apache.spark.sql.SparkSession
   *    (parquet writes, the commit protocol, Staging, AvroOcf), one for
   *    `FileContext` (the streaming checkpoint log); ForkGateSpec fails if
   *    either goes
+  *  - artifact isolation off: the engine adds no per-session jars or
+  *    artifacts, and with isolation on every session and every stream's
+  *    clone of it runs its tasks under a class loader of its own, so the
+  *    generated-class cache, keyed by loader, missed on every
+  *    `Replication.start` and its 4 whole-stage classes were compiled and
+  *    run cold again. One class loader serves every session and stream
+  *    (ReplicationSpec's codegen gate)
   */
 object GraftSession {
   def builder(master: String, shufflePartitions: Int): SparkSession.Builder =
@@ -46,6 +53,7 @@ object GraftSession {
       .config("spark.sql.optimizer.excludedRules",
         "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate")
       .config("spark.sql.codegen.cache.maxEntries", "5000")
+      .config("spark.sql.artifact.isolation.enabled", "false")
       // the bounded top-k prune (TopPairs) groups by query_id — hundreds
       // of groups per task at bench scale; the default 128-group fallback
       // would silently degrade ObjectHashAggregate to sort-based (a full

@@ -32,10 +32,17 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * the checkpoint WAL (≡ R8 manual offset ack) plus the rename-commit that
   * makes redelivered batches idempotent — upgrading the reference's
   * "at-least-once with committed duplicates" to effective exactly-once.
+  * The source is replayable: [[TopicStream]] records which segments each
+  * batch admitted and Spark's offset log its (segment, row) offsets, so a
+  * replayed batch reads the same row ranges and its commit is skipped.
   * Because commits are atomic renames, a downstream [[CommittedTopicSource]]
   * consumes the target topic with read-committed visibility, so replicators
   * chain A→B→C exactly as the reference's consumers do
   * (`application.yml:10`, `README.adoc:22`).
+  *
+  * A large batch runs on every core: the source plans it as contiguous row
+  * ranges, one task each, and the sink writes task i's rows as part i, so
+  * the target keeps the source's order.
   */
 object Replication {
 

@@ -17,7 +17,7 @@ import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.execution.datasources.OutputWriterFactory
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.graft.OutputMetricsBridge
-import org.apache.spark.sql.types.{BinaryType, StringType, StructField, StructType}
+import org.apache.spark.sql.types.StructType
 
 /** The transport seam of the replication pipeline (SURVEY.md §2.1 R1/R4-R6).
   *
@@ -44,36 +44,26 @@ trait TopicSink extends Serializable {
 }
 
 /** A flat directory of parquet files with a binary `value` column — the shape
-  * [[Replication.stageSource]] produces (an upstream producer's topic). */
+  * [[Replication.stageSource]] produces (an upstream producer's topic).
+  * Streamed by [[TopicStream]]: files in arrival (modification-time) order,
+  * a late file after every row already consumed. */
 final case class FileTopicSource(dir: String, maxFilesPerTrigger: Int = 1)
     extends TopicSource {
   def exists: Boolean = Files.exists(Paths.get(dir))
-  def stream(spark: SparkSession): DataFrame =
-    spark.readStream
-      .schema(StructType(Seq(StructField("value", BinaryType))))
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .parquet(dir)
+  def stream(spark: SparkSession): DataFrame = TopicStream.files(spark, dir, maxFilesPerTrigger)
 }
 
 /** Streaming read of a [[FileTopicSink]]-layout topic with READ-COMMITTED
-  * visibility: batches become visible via the sink's atomic directory rename,
-  * so the file source's per-trigger listing can never observe a half-written
-  * batch — which is what lets replicators chain (A→B→C, the reference's
-  * consumer chain: `application.yml:10`, `README.adoc:22`). `batch` is a
-  * partition column, pruned unless selected. */
+  * visibility: a batch becomes visible as a whole when the sink publishes
+  * its directory, so [[TopicStream]] never lists a half-written batch —
+  * which is what lets replicators chain (A→B→C, the reference's consumer
+  * chain: `application.yml:10`, `README.adoc:22`). Parts stream in batch,
+  * then part, order, with their batch number as column `batch`; a topic
+  * with no `data/` directory yet is an empty topic. */
 final case class CommittedTopicSource(dir: String, maxFilesPerTrigger: Int = 1)
     extends TopicSource {
   def exists: Boolean = Files.exists(Paths.get(dir))
-  def stream(spark: SparkSession): DataFrame = {
-    Files.createDirectories(Paths.get(dir, "data"))
-    spark.readStream
-      .schema(StructType(Seq(
-        StructField("key", StringType),
-        StructField("value", BinaryType),
-        StructField("batch", org.apache.spark.sql.types.LongType))))
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .parquet(s"$dir/data")
-  }
+  def stream(spark: SparkSession): DataFrame = TopicStream.committed(spark, dir, maxFilesPerTrigger)
 }
 
 /** Transactional file-topic sink: each micro-batch is published as

@@ -36,3 +36,18 @@ object OutputMetricsBridge {
       m.setRecordsWritten(m.recordsWritten + records)
     }
 }
+
+/** Bridge into Spark's `private[sql]` streaming relation, so a DSv2
+  * [[org.apache.spark.sql.connector.catalog.Table]] the engine builds
+  * (graft.streaming.TopicStream) streams as is, without a provider looked
+  * up by name and rebuilt from string options. Contains no logic. */
+object StreamBridge {
+  def stream(spark: org.apache.spark.sql.SparkSession,
+             table: org.apache.spark.sql.connector.catalog.Table): DataFrame =
+    org.apache.spark.sql.classic.Dataset.ofRows(
+      spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession],
+      org.apache.spark.sql.catalyst.streaming.StreamingRelationV2(None, table.name(), table,
+        org.apache.spark.sql.util.CaseInsensitiveStringMap.empty(),
+        org.apache.spark.sql.catalyst.types.DataTypeUtils.toAttributes(table.schema()),
+        None, None, None))
+}

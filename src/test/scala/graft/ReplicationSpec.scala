@@ -171,6 +171,29 @@ class ReplicationSpec extends SparkSpec {
     } finally spark.sparkContext.removeSparkListener(listener)
   }
 
+  test("a second stream start compiles no code and runs its tasks under the first start's class loader") {
+    import org.apache.spark.metrics.source.CodegenMetrics
+    val root = Files.createTempDirectory("graft-warm").toString
+    Replication.stageSource(Tables.events(spark, sf).limit(100).coalesce(1), s"$root/topicA",
+      "events-value", s"$root/regA", "Event")
+    def run(tag: String): Seq[Int] = {
+      ReplicationSpec.taskLoaders.clear()
+      Replication.start(spark, FileTopicSource(s"$root/topicA", 1), FileTopicSink(s"$root/$tag"),
+        s"$root/ck-$tag", "events-value", ReplicationSpec.LoaderProbe(s"$root/regA"),
+        FileRegistryRef(s"$root/reg-$tag"), idField = "event_id", availableNow = true)
+        .awaitTermination(120000)
+      assert(Replication.readCommitted(spark, s"$root/$tag").count() === 100)
+      ReplicationSpec.taskLoaders.asScala.toSeq
+    }
+    val first = run("warm")
+    val compiled = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    val second = run("second")
+    assert(CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiled === 0,
+      "a warm stream start must find every generated class in the cache")
+    assert(first.nonEmpty && second.nonEmpty, "each start must open its source registry in a task")
+    assert((first ++ second).distinct.size === 1, s"task class loaders: $first then $second")
+  }
+
   /** key → the body after the frame header, of a replicated target topic. */
   private def targetBodies(targetDir: String): Map[String, Seq[Byte]] =
     Replication.readCommitted(spark, targetDir).select("key", "value").collect()
@@ -488,5 +511,20 @@ class ReplicationSpec extends SparkSpec {
       idField = "event_id", availableNow = true).awaitTermination(120000)
     startBC().awaitTermination(120000)
     assert(Replication.readCommitted(spark, s"$root/topicC").count() === 150)
+  }
+}
+
+object ReplicationSpec {
+  /** Identity of the context class loader of each task that opened a [[LoaderProbe]]. */
+  val taskLoaders = new java.util.concurrent.ConcurrentLinkedQueue[Int]()
+
+  /** A file registry that notes the class loader of the task opening it. */
+  final case class LoaderProbe(root: String) extends graft.avro.RegistryRef {
+    def magic: Byte = WireFormat.GraftMagic
+    def open(): graft.avro.SchemaRegistry = {
+      if (org.apache.spark.TaskContext.get() != null)
+        taskLoaders.add(System.identityHashCode(Thread.currentThread().getContextClassLoader))
+      new FileSchemaRegistry(root)
+    }
   }
 }
